@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every queued event, so
+  * job and task metrics are complete before they are read. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
