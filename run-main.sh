@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly against compiled classes + the Spark jars
 # (avoids the sbt lock so profiles can run alongside an sbt test session).
-# Usage: ./run-main.sh graft.tools.StmtPhaseProfile [args...]
+# Usage: ./run-main.sh graft.tools.PlanDump <sfDir> <outDir> <suffix> <query>...
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

@@ -127,7 +127,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // parsed ONCE: the artifact writes it as a bare JSON number, so a
+    // non-numeric value must fail here, not corrupt the artifact line
+    val cpus: Int = {
+      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim
+      raw.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+    }
     // ambient machine load BEFORE any of our own work exists — the
     // anchor for the requeue threshold (VERDICT r11 #1b): the sweep's
     // own median load is useless as a baseline because a uniformly
@@ -141,7 +147,7 @@ object Bench {
     val (refTotal, refQueries, refSf) = refArtifact(fullPath)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -219,23 +225,21 @@ object Bench {
     // per-statement ROUTE-ADMISSION deltas (VERDICT r13 #5): which
     // incremental route each statement actually took — driver
     // retraction, distributed retraction (and whether its net folded
-    // SCALED), append fold-in, governor denials — so a silent route
+    // SCALED), append fold-in — so a silent route
     // downgrade is visible in every bench artifact, not only under
     // GRAFT_DEBUG_DRIVER_PATCH
     def routeCounters(): Array[Long] = Array(
       graft.core.Ops.rekeyRetractFoldIns.get(),
       graft.core.Ops.rekeyRetractDistFoldIns.get(),
       graft.core.Ops.rekeyRetractScaledNets.get(),
-      graft.core.Ops.rekeyAppendFoldIns.get(),
-      graft.core.Ops.driverRouteDenials.get())
+      graft.core.Ops.rekeyAppendFoldIns.get())
     var stmtRouteMark: Array[Long] = routeCounters()
     graft.sql.GraftSql.stmtProbe = Some { (sql, sec) =>
       val j = listener.jobs.get()
       val rc = routeCounters()
       val rd = rc.zip(stmtRouteMark).map { case (a, b) => a - b }
       val routes = s""""retract_drv":${rd(0)},"retract_dist":${rd(1)},""" +
-        s""""retract_scaled":${rd(2)},"fold_ins":${rd(3)},""" +
-        s""""route_denials":${rd(4)}"""
+        s""""retract_scaled":${rd(2)},"fold_ins":${rd(3)}"""
       stmtBuf.synchronized { stmtBuf += ((sql, sec, j - stmtJobsMark, routes)); () }
       stmtJobsMark = j
       stmtRouteMark = rc
@@ -252,7 +256,6 @@ object Bench {
       drain()
       val l0 = listener.snapshot
       val gc0 = driverGcMs; val cpu0 = procCpuNs
-      val denials0 = graft.core.Ops.driverRouteDenials.get()
       val routes0 = routeCounters()
       val steal0 = stealJiffies
       val loadStart = load1
@@ -270,10 +273,6 @@ object Bench {
       val l1 = listener.snapshot
       def d(k: String): Long = l1(k) - l0(k)
       val env = Seq(
-        // DELTA, like every sibling env metric — the cumulative counter
-        // would attribute all prior denials to each later query
-        "route_denials" ->
-          (graft.core.Ops.driverRouteDenials.get() - denials0).toString,
         // retraction-admission deltas (VERDICT r13 #5): driver vs
         // distributed (and scaled-net) vs append fold-in, per query
         "retract_drv" ->
@@ -321,7 +320,7 @@ object Bench {
     // invocation) for up to a minute, which would defeat the quiet-window
     // requeue (VERDICT r12 advice).
     val selfLoad = math.max(2.0,
-      scala.util.Try(cpus.toInt).getOrElse(4).toDouble / 8.0)
+      cpus.toDouble / 8.0)
     val sweepLoads = results0.flatMap(r => Seq(r.loadStart, r.loadEnd))
     val idleAnchor =
       if (sweepLoads.isEmpty) idle0 else math.min(idle0, sweepLoads.min)
@@ -444,41 +443,6 @@ object Bench {
     val excessStanding = polluted0 && refCommon.exists(rt =>
       rt > 0 && commonTotal(results) > retrigger * rt)
     val requeued = results.count(_.requeue.nonEmpty)
-    // governor degradation twin (VERDICT r10 #4): the driver-route
-    // governor's denial path has only ever run inside specs — exercise
-    // it IN the artifact. One statement flow runs twice: normal, then
-    // with the cost model forced slow (every above-floor driver route
-    // projects over budget and is DENIED to the distributed path). The
-    // artifact records the denial delta and result-hash equality —
-    // degraded and normal routes must be bit-identical.
-    val governorTwin: Option[(Long, Boolean, Double)] =
-      try selected.get("sql_dml").orElse(SparkEntry.queries.get("sql_dml"))
-        .map { fn =>
-          import org.apache.spark.sql.functions._
-          def sig(): (Long, Long) = {
-            val df = fn(spark, sfDir)
-            val r = df.select(
-              coalesce(sum(crc32(to_json(struct(
-                df.columns.sorted.map(col): _*)))), lit(0L)),
-              count(lit(1))).collect()(0)
-            (r.getLong(0), r.getLong(1))
-          }
-          val normal = sig()
-          val d0 = graft.core.Ops.driverRouteDenials.get()
-          graft.core.Ops.driverRouteNprOverride = Some(10000000L) // 10 ms/row
-          val t0 = System.nanoTime()
-          try {
-            val degraded = sig()
-            ((graft.core.Ops.driverRouteDenials.get() - d0),
-              degraded == normal, (System.nanoTime() - t0) / 1e9)
-          } finally graft.core.Ops.driverRouteNprOverride = None
-        }
-      catch {
-        // the twin must never destroy the sweep's artifact: an sql_dml
-        // failure is already recorded as an error by the sweep itself
-        case t: Throwable =>
-          System.err.println(s"[bench] GOVERNOR TWIN FAILED: $t"); None
-      }
     // durable-anchor CC twin (VERDICT r11 #5): the real-cluster survival
     // lever (RELIABLE checkpoint anchors every k rounds) previously ran
     // only in specs — near-dup graphs converge before the default k=8
@@ -582,9 +546,6 @@ object Bench {
       val reasons = requeueReason
         .map { case (n, why) => "\"" + n + "\":\"" + why + "\"" }
         .mkString("{", ",", "}")
-      val gov = governorTwin.map { case (den, eq, sec) =>
-        s"""{"denials":$den,"hash_equal":$eq,"sec":${fmt(sec)}}"""
-      }.getOrElse("null")
       val cc = ccTwin.map { case (n, d, eq, rec) =>
         s"""{"normal_sec":${fmt(n)},"durable_sec":${fmt(d)},"hash_equal":$eq,"recoveries":$rec}"""
       }.getOrElse("null")
@@ -596,7 +557,7 @@ object Bench {
       val warmed = (Tables.names ++ Seq(
         "dedup.shingles", "dedup.shinglesSized", "vectors.quantized"))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"governor_twin":$gov,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),
@@ -633,14 +594,11 @@ object Bench {
     val loadJson = if (loads.isEmpty) "null" else
       s"""{"min":${fmt(loads.min)},"max":${fmt(loads.max)},"median":${fmt(
         medLoad)},"idle0":${fmt(idle0)},"requeue_thr":${fmt(requeueLoad)},"requeued":$requeued,"polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"steal_cs":$stealTotal}"""
-    val govCompact = governorTwin.map { case (den, eq, _) =>
-      s"""{"denials":$den,"hash_equal":$eq}"""
-    }.getOrElse("null")
     val ccCompact = ccTwin.map { case (n, d, eq, rec) =>
       s"""{"normal":${fmt(n)},"durable":${fmt(d)},"hash_equal":$eq,"recoveries":$rec}"""
     }.getOrElse("null")
     def line(qsCompact: String, omittedJson: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"queries":$qsCompact,"omitted_fastest":$omittedJson,"load":$loadJson,"governor_twin":$govCompact,"cc_durable_twin":$ccCompact,"xscale":$xscaleJson,"full":"$fullPath","errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"queries":$qsCompact,"omitted_fastest":$omittedJson,"load":$loadJson,"cc_durable_twin":$ccCompact,"xscale":$xscaleJson,"full":"$fullPath","errors":$errors,"sf":"$sfDir"}"""
     val lineTarget = 1600
     val fixedLen = line("{}", s"""{"n":${ok.size},"sum":${fmt(
       ok.map(_._2).sum)}}""").length

@@ -808,9 +808,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       touched.iterator.map(i => m.chunks(i).rows).sum + upserts.length
     if (Ops.driverPatchEnabled && DriverChunks.supported(m.schema) &&
         patchRows <= Ops.DriverPatchHardRowCap &&
-        driverBytesOk(m, touched) && Ops.driverRouteAdmit(patchRows)) {
-      try return Some(Ops.timedDriverRoute(patchRows)(
-        driverPatch(m, runList, upserts, upsertKbs, deadHex, owner)))
+        driverBytesOk(m, touched)) {
+      try return Some(
+        driverPatch(m, runList, upserts, upsertKbs, deadHex, owner))
       catch { case scala.util.control.NonFatal(e) =>
         Ops.warnDriverPatchFallback(e)
       }
@@ -929,9 +929,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * classification use the same [[RangeBounds]] tests as
     * [[rangeFilter]], so the row set is identical to the scan path's.
     * None when the schema is not driver-readable, the intersecting
-    * chunks exceed the row/byte caps or the measured-throughput
-    * governor, or on any read surprise — callers fall back to the
-    * scan-based range paths. At 100 TB the caps reject all but
+    * chunks exceed the row/byte caps, or on any read surprise — callers
+    * fall back to the scan-based range paths. At 100 TB the caps reject all but
     * metadata-sized ranges before any IO. */
   def readRangeDriver(ref: TableRef, lower: Option[Bound],
       upper: Option[Bound]): Option[Seq[org.apache.spark.sql.Row]] = {
@@ -948,16 +947,16 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     if (hit.isEmpty) return Some(Nil)
     val rows = hit.iterator.map(i => m.chunks(i).rows).sum
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-        !driverBytesOk(m, hit) || !Ops.driverRouteAdmit(rows)) return None
+        !driverBytesOk(m, hit)) return None
     val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
-    try Some(Ops.timedDriverRoute(rows)(Canonical.parIo(hit) { i =>
+    try Some(Canonical.parIo(hit) { i =>
       DriverChunks.readRows(java.nio.file.Paths.get(
         store.chunkPath(m.chunks(i).hash)), m.schema)
         .filter { r =>
           val kb = kEnc(r)
           RangeBounds.passesLow(kb, loB) && RangeBounds.passesHigh(kb, hiB)
         }
-    }.flatten))
+    }.flatten)
     catch { case scala.util.control.NonFatal(e) =>
       Ops.warnDriverPatchFallback(e); None }
   }
@@ -1031,10 +1030,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val rewritten0: Map[Int, Seq[ChunkMeta]] =
       if (runList.isEmpty) Map.empty
       else if (DriverChunks.supported(schema) &&
-          runRows <= Ops.DriverPatchMaxRows && Ops.driverRouteAdmit(runRows)) {
+          runRows <= Ops.DriverPatchMaxRows &&
+          chunkBytes(runList.flatten.map(chunks)).exists(
+            _ <= Ops.DriverPatchMaxBytes)) {
         val kEnc = KeyCodec.rowEncoder(schema, keyCols)
         val tmp = java.nio.file.Files.createTempDirectory("graft-canon-fix-")
-        try Ops.timedDriverRoute(runRows) {
+        try {
           val batch = Vector.newBuilder[(String, java.nio.file.Path)]
           val w = new Canonical.DriverRunWriter(schema, keyCols, target,
             store.chunkCodec, tmp, batch)
@@ -1634,9 +1635,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * so value-insensitive source updates (a price change under a
     * custkey index) splice nothing.
     *
-    * Tri-state result: `None` = route INAPPLICABLE (schema, caps,
-    * governor, or a read surprise) — the caller falls through to the
-    * mini-diff path and its guards; `Some(Some(h))` = patched;
+    * Tri-state result: `None` = route INAPPLICABLE (schema, caps, or a
+    * read surprise) — the caller falls through to the mini-diff path
+    * and its guards; `Some(Some(h))` = patched;
     * `Some(None)` = the EXACT transformed delta was computed and the
     * splice is provably unprofitable (scattered keys / over-cap
     * fan-out) — the mini route would compute the same delta and hit
@@ -1759,9 +1760,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** Byte-admitted SOURCE-row delta between two table versions' changed
     * chunks, read driver-side and diffed by structural row equality:
     * Some((inserted, deleted)) when the schema is driver-diffable, the
-    * changed chunks fit the row/byte caps, the governor admits, and the
-    * reads succeed — None otherwise (callers fall back to their job
-    * paths). Shared by the uniqueKeys splice route and the insert-only
+    * changed chunks fit the row/byte caps, and the reads succeed — None
+    * otherwise (callers fall back to their job paths). Shared by the uniqueKeys splice route and the insert-only
     * aggregate fold-in. */
   private def sourceRowDelta(m: TableMeta, removed: Seq[ChunkMeta],
       added: Seq[ChunkMeta], dbg: (=> String) => Unit)
@@ -1774,11 +1774,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val changed = removed ++ added
     val rows = changed.iterator.map(_.rows).sum
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-        !chunkBytes(changed).exists(_ <= Ops.DriverPatchMaxBytes) ||
-        !Ops.driverRouteAdmit(rows)) {
+        !chunkBytes(changed).exists(_ <= Ops.DriverPatchMaxBytes)) {
       dbg(s"decline: caps (rows=$rows cap=${Ops.adaptiveRowCap(m.schema,
-        Ops.PatchMaxDeltaRows)} bytes=${chunkBytes(changed)} npr=${
-        Ops.driverRouteNprNanos})")
+        Ops.PatchMaxDeltaRows)} bytes=${chunkBytes(changed)})")
       return None
     }
     try {
@@ -1786,8 +1784,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         Canonical.parIo(cs)(c => DriverChunks.readRows(
           java.nio.file.Paths.get(store.chunkPath(c.hash)), m.schema))
           .flatten
-      val (oldR, newR) = Ops.timedDriverRoute(rows)(
-        (rowsOf(removed), rowsOf(added)))
+      val (oldR, newR) = (rowsOf(removed), rowsOf(added))
       Some((Ops.multisetRowDiff(newR, oldR), Ops.multisetRowDiff(oldR, newR)))
     } catch { case NonFatal(e) =>
       Ops.warnDriverPatchFallback(e); None }
@@ -2038,7 +2035,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * integer folds, content-defined chunking makes the decomposition a
     * pure function of the key set, and dead groups vanish exactly as
     * they would from scratch. Everything runs driver-side under the
-    * same caps + governor as the sibling routes; None falls back to
+    * same row/byte caps as the sibling routes; None falls back to
     * the exact mini/rebuild paths. */
   private def rekeyRetract(rp: Ops.RetractPlan, m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
@@ -2099,19 +2096,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val touched = (insT.iterator ++ delT.iterator).map(keyOf)
         .toSeq.distinct
       // the touched groups' PREVIOUS rows, read driver-side from the
-      // key-pruned result chunks under the usual caps + governor
+      // key-pruned result chunks under the usual row/byte caps
       val hit = chunksForKeys(pm, touched)
       val hitRows = hit.iterator.map(_.rows).sum
       if (hitRows > Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows) ||
-          !chunkBytes(hit).exists(_ <= Ops.DriverPatchMaxBytes) ||
-          !Ops.driverRouteAdmit(hitRows)) {
+          !chunkBytes(hit).exists(_ <= Ops.DriverPatchMaxBytes)) {
         dbg(s"decline: touched-region caps (rows=$hitRows)"); return None
       }
       val touchedSet = touched.toSet
-      val prevRows = Ops.timedDriverRoute(hitRows)(
-        Canonical.parIo(hit)(c => DriverChunks.readRows(
-          java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
-          .flatten).filter(r => touchedSet(keyOf(r)))
+      val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
+        java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
+        .flatten.filter(r => touchedSet(keyOf(r)))
       if (anyNull(prevRows)) {
         dbg("decline: NULL previous partial under a non-null contract")
         return None
@@ -2425,17 +2420,15 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               missingRows > Ops.DriverZeroJobMaxRows ||
               missingRows >
                 Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !chunkBytes(missing).exists(_ <= Ops.DriverPatchMaxBytes) ||
-              !Ops.driverRouteAdmit(missingRows))
+              !chunkBytes(missing).exists(_ <= Ops.DriverPatchMaxBytes))
             None
           else try {
             import scala.jdk.CollectionConverters._
-            val rows = Ops.timedDriverRoute(missingRows)(
-              Canonical.parIo(missing) { c =>
-                DriverChunks.readRows(java.nio.file.Paths.get(
-                  store.chunkPath(c.hash)), m.schema)
-                  .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c.hash))
-              }.flatten)
+            val rows = Canonical.parIo(missing) { c =>
+              DriverChunks.readRows(java.nio.file.Paths.get(
+                store.chunkPath(c.hash)), m.schema)
+                .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c.hash))
+            }.flatten
             val schemaG = m.schema.add(org.apache.spark.sql.types.StructField(
               grp, org.apache.spark.sql.types.StringType, nullable = false))
             Some(spark.createDataFrame(rows.asJava, schemaG))
@@ -2588,18 +2581,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           if (!Canonical.driverMaterializeEnabled ||
               !DriverChunks.supported(m.schema) ||
               edgeRows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !edgeBytes.exists(_ <= Ops.DriverPatchMaxBytes) ||
-              !Ops.driverRouteAdmit(edgeRows)) None
+              !edgeBytes.exists(_ <= Ops.DriverPatchMaxBytes)) None
           else try {
             val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
-            Some(Ops.timedDriverRoute(edgeRows)(Canonical.parIo(edgeChunks) { c =>
+            Some(Canonical.parIo(edgeChunks) { c =>
               DriverChunks.readRows(java.nio.file.Paths.get(
                 store.chunkPath(c.hash)), m.schema)
                 .filter { r =>
                   val kb = kEnc(r)
                   passesLow(kb) && passesHigh(kb)
                 }
-            }.flatten))
+            }.flatten)
           } catch { case scala.util.control.NonFatal(e) =>
             Ops.warnDriverPatchFallback(e); None }
         val df = driverRows match {
@@ -3013,10 +3005,8 @@ object Ops {
     * but a failed probe re-runs the fold shuffle, so the bet is only
     * placed when the pre-fold input is moderate. 4M rows ≈ a sub-second
     * shuffle at local[32]; at 100 TB the gate keeps builds on the
-    * straight job path. `@volatile var` as a measurement seam
-    * (tools/IncdAbProfile A/Bs the bet off by setting 0); production
-    * never writes it. */
-  @volatile var ProbeFoldMaxSourceRows: Long = 1L << 22
+    * straight job path. */
+  val ProbeFoldMaxSourceRows: Long = 1L << 22
 
   /** Compressed-byte budget for driver-side chunk splicing/reading —
     * the cap that actually bounds driver memory; the row caps bound
@@ -3094,119 +3084,11 @@ object Ops {
   final case class AlignedInput(ref: TableRef, alignSig: String,
       projection: Seq[org.apache.spark.sql.Column])
 
-  /** Measured driver-route cost governor (VERDICT r9 #2). The zero-job /
-    * fused driver routes are SINGLE-THREADED: on an idle machine they
-    * beat the distributed path by skipping plan compile + scheduling,
-    * but under driver CPU starvation the same byte-admitted work can
-    * cost 5x its idle-machine time while the distributed path still has
-    * every executor thread to average the load over. Every completed
-    * driver-route operation records (rows, nanos); admission projects a
-    * new operation's driver time from the modeled nanos-per-row and
-    * DENIES the route when the projection exceeds
-    * [[DriverRouteBudgetNanos]] — the caller falls back to its
-    * distributed path, which is hash-identical by construction
-    * (RouteFuzzSpec pins the matrix; DriverRouteSpec pins the
-    * degradation itself). Unmeasured (cold) admits: the static row/byte
-    * caps bound the worst case and the first operations seed the model.
-    *
-    * The model is the RATIO of two EWMAs (Σnanos / Σrows, each decayed
-    * with alpha 1/4) rather than an EWMA of per-sample ns/row: per-row
-    * averages of small samples are dominated by FIXED costs (a single
-    * JVM-cold 4k-row read pays codec init + class loading and reads as
-    * ~50 µs/row — measured — which would project every metadata-sized
-    * route over budget), while a ratio-of-sums lets the next large
-    * sample's row mass wash one polluted observation out in one step.
-    * Admission also keeps a WARM-UP window: until
-    * [[DriverRouteWarmupSamples]] observations exist the route is
-    * admitted regardless of the seeded value — a governor cannot govern
-    * from one cold data point, and the static caps still bound the
-    * worst case (a genuinely starved driver locks the governor in after
-    * the window). */
-  @volatile var DriverRouteBudgetNanos: Long =
-    sys.env.get("SPARK_GRAFT_DRIVER_ROUTE_BUDGET_MS")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(1500L) * 1000000L
-  // (EWMA nanos, EWMA rows); (0, 0) = unmeasured
-  private val driverRouteEwma =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long)]((0L, 0L))
-  private val driverRouteSampleCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val DriverRouteWarmupSamples = 4L
-  /** Test seam: forces the observed per-row driver cost (ns/row) —
-    * authoritative over both the warm-up window and the measured model. */
-  @volatile private[graft] var driverRouteNprOverride: Option[Long] = None
-  /** Test seam: back to the unmeasured (cold-admit) state. */
-  private[graft] def resetDriverRouteModel(): Unit = {
-    driverRouteEwma.set((0L, 0L))
-    driverRouteSampleCount.set(0L)
-  }
-  /** Observability: the current modeled driver cost (ns/row; 0 = unmeasured). */
-  private[graft] def driverRouteNprNanos: Long = {
-    val (n, r) = driverRouteEwma.get()
-    if (r <= 0) 0L else n / r
-  }
-  /** Observability: route denials since JVM start. */
-  val driverRouteDenials = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Observability: insert-only delta fold-ins taken since JVM start
     * (both the aggregate-view and the scattered-unique-index variants)
     * — the counter that lets specs and production logs distinguish a
     * fold-in refresh from a mini re-merge or a rebuild. */
   val rekeyAppendFoldIns = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** Below this row count, per-operation FIXED overhead (job submit,
-    * plan compile, file open) dominates per-row cost: samples would
-    * poison the ns/row model (a 5-row collect at ~100 ms reads as
-    * 20 ms/row and would deny everything), and denial would cost the
-    * point-DML zero-job latency for no memory/time safety gain — so
-    * tiny operations neither train nor consult the model. */
-  private val DriverRouteModelFloorRows = 1024L
-  private[graft] def recordDriverRoute(rows: Long, nanos: Long): Unit =
-    if (rows >= DriverRouteModelFloorRows && nanos > 0) {
-      driverRouteSampleCount.incrementAndGet()
-      driverRouteEwma.getAndUpdate { prev: (Long, Long) =>
-        val (n0, r0) = prev
-        if (r0 <= 0) (nanos, rows)
-        else ((n0 * 3 + nanos) / 4, (r0 * 3 + rows) / 4) // EWMAs, alpha 1/4
-      }
-      ()
-    }
-  private[graft] def driverRouteAdmit(rows: Long): Boolean = {
-    if (rows <= DriverRouteModelFloorRows) return true
-    val nprX16 = driverRouteNprOverride.map(_ * 16).getOrElse {
-      // warm-up: admit until the model has enough observations to mean
-      // anything (the override above bypasses this — forced states are
-      // the spec seam, not a measurement)
-      if (driverRouteSampleCount.get() < DriverRouteWarmupSamples)
-        return true
-      val (n, r) = driverRouteEwma.get()
-      if (r <= 0) 0L else n * 16 / r
-    }
-    // rows is capped at DriverPatchHardRowCap (2^20) by every caller,
-    // so the product stays far from Long overflow
-    val ok = nprX16 <= 0 || rows * nprX16 / 16 <= DriverRouteBudgetNanos
-    if (!ok) {
-      driverRouteDenials.incrementAndGet()
-      // denial must not be ABSORBING: a denied route produces no new
-      // samples, so a one-off slow burst (or a tiny-chunk store's high
-      // fixed costs) would pin the model slow forever. Each denial
-      // decays the cost estimate ~6%; after enough denials the route is
-      // retried and the next real sample re-trains the model — the
-      // standard probe-to-recover loop.
-      driverRouteEwma.getAndUpdate { prev: (Long, Long) =>
-        val (n0, r0) = prev
-        if (r0 <= 0) prev else (n0 * 15 / 16, r0)
-      }
-      ()
-    }
-    ok
-  }
-  /** Time `body`, feed the measurement into the cost model. */
-  private[graft] def timedDriverRoute[T](rows: Long)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    recordDriverRoute(rows, System.nanoTime() - t0)
-    r
-  }
-
   /** Driver-patch fallbacks must be OBSERVABLE: a persistent driver-path
     * failure (an exotic codec, an unsupported physical type in an old
     * file) silently degrading every point DML to the job path would be

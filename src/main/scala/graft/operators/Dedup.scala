@@ -175,6 +175,34 @@ object Dedup {
        |WHERE 10*c >= 5*(sa.n + sb.n - c)
        |ORDER BY i, j""".stripMargin
 
+  /** dedup_winnow's (doc_id, n, fp) rows: one per distinct window
+    * fingerprint, with n the doc's distinct-fingerprint count.
+    *
+    * n rides each row (instead of a groupBy(doc_id) re-derived from the
+    * exploded rows, which cost a full-frame shuffle plus two
+    * size-attach joins), and the pair aggregation folds it with max().
+    * n must come from INSIDE the generator's input: aliasing the
+    * fingerprint array as a column makes Catalyst infer `size(arr) > 0`
+    * for the explode and push it below the projections, inlining the
+    * md5 grams into every `slice` window — O(windows × grams) md5s per
+    * document (0.99 s → 274 s at sf0.1). `transform(array(x), a -> …)`
+    * binds the array once, as a let; PlanSpec pins that no md5 reaches
+    * a Filter. The cast keeps n a BIGINT, the schema the oracle pins. */
+  def winnowFingerprints(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.spread(s, Tables(s, dir, "documents"))
+      .withColumn("ts", split(col("text"), " "))
+      .where(size($"ts") >= 6) // >= 4 grams -> >= 1 window
+      .withColumn("grams", expr(
+        "transform(sequence(0, size(ts)-3), i -> substring(md5(concat(ts[i], ' ', ts[i+1], ' ', ts[i+2])), 1, 8))"))
+      .select($"doc_id", inline(expr(
+        """flatten(transform(
+          |  array(array_distinct(transform(sequence(1, size(grams)-3),
+          |    i -> array_min(slice(grams, i, 4))))),
+          |  a -> transform(a, fp ->
+          |    named_struct('n', CAST(size(a) AS BIGINT), 'fp', fp))))""".stripMargin)))
+  }
+
   /** Winnowing fingerprints (the MOSS scheme): hash every 3-token gram
     * (md5 prefix — identical in both engines, and lexicographic min over
     * hex strings is engine-independent), slide a window of 4 gram hashes,
@@ -184,26 +212,7 @@ object Dedup {
     * index as dedup_shingle (integer cross-multiplied threshold). */
   def dedupWinnow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // the per-doc fingerprint count n rides the projection (size of the
-    // distinct array BEFORE the explode) instead of a separate
-    // groupBy(doc_id) aggregation re-derived from the exploded rows —
-    // that shape cost one extra full-frame shuffle plus TWO size-attach
-    // joins after the pair aggregation (guide §2.4 remove shuffles
-    // outright); carrying n per row widens the exploded frame by one
-    // long, and the pair aggregation folds it with max() exactly like
-    // dedup_incremental's sized-index pattern. Identical output: n is a
-    // pure function of doc_id, so max(n over the group) == the join'd n.
-    val fps = Tables.spread(s, Tables(s, dir, "documents"))
-      .withColumn("ts", split(col("text"), " "))
-      .where(size($"ts") >= 6) // >= 4 grams -> >= 1 window
-      .withColumn("grams", expr(
-        "transform(sequence(0, size(ts)-3), i -> substring(md5(concat(ts[i], ' ', ts[i+1], ' ', ts[i+2])), 1, 8))"))
-      .withColumn("fparr", array_distinct(expr(
-        "transform(sequence(1, size(grams)-3), i -> array_min(slice(grams, i, 4)))")))
-      // cast: the former COUNT(*)-derived n was a BIGINT — the schema
-      // the oracle pins — while size() is an int
-      .select($"doc_id", size($"fparr").cast("long").as("n"),
-        explode($"fparr").as("fp"))
+    val fps = winnowFingerprints(s, dir)
       // two consumers (both self-join sides): materialize the
       // fingerprints once — the md5-per-gram projection is the
       // expensive part and would otherwise run 2x. EAGER: the first

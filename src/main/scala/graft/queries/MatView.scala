@@ -946,8 +946,7 @@ object MatView {
       "DELETE-refresh did not take a retraction route")
     // at bench scale the changed chunks are over the driver caps: only
     // the DISTRIBUTED route may have run (at sf0.01 the driver route
-    // fits; a governor denial may still push it distributed — either
-    // retraction is the asserted contract there)
+    // fits; either retraction is the asserted contract there)
     if (n0 > 100000) require(dist > 0,
       "over-cap delete delta must take the DISTRIBUTED retraction")
 

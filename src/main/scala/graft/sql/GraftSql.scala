@@ -573,7 +573,7 @@ object GraftSql {
               // key ranges): byte-admitted range rows read driver-side,
               // SET evaluated on a LocalRelation, spliced through the
               // patch — no rangeFilter materialization, no collect job.
-              // None (over-cap range, governor denial, non-row-local
+              // None (over-cap range, non-row-local
               // SET, any read surprise) falls through to the
               // range-scan + delta-patch chain below.
               (if (GraftSql.pointDmlViaPatch)
@@ -1338,8 +1338,7 @@ object GraftSql {
     val cap = graft.core.Ops.adaptiveRowCap(
       schema, graft.core.Ops.PatchMaxDeltaRows)
     if (!rowBound.exists(_ <= cap) ||
-        !byteBound.exists(_ <= graft.core.Ops.DriverPatchMaxBytes) ||
-        !graft.core.Ops.driverRouteAdmit(rowBound.getOrElse(0L))) return None
+        !byteBound.exists(_ <= graft.core.Ops.DriverPatchMaxBytes)) return None
     try {
       val rows = ops.collectDriverBounded(frame, rowBound).toSeq
       if (rows.isEmpty) return Some(ref)
@@ -1393,7 +1392,7 @@ object GraftSql {
     * the patch. The sql_txn/sql_changes statement flows' range UPDATEs
     * were paying one interpreted collect job each for exactly this row
     * set. None — caller takes the range-scan + delta-patch chain — when
-    * the range is over the driver caps / governor, the SET needs more
+    * the range is over the driver row/byte caps, the SET needs more
     * than row-local columns, or on any surprise. */
   private def rangeUpdateDriver(spark: SparkSession, ops: Ops,
       schema: StructType, entry: graft.core.CatalogEntry, name: String,

@@ -178,6 +178,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Join"), s"spans lost the gram join:\n$p")
   }
 
+  test("dedup_winnow: no md5 in any Filter of the fingerprint plan") {
+    // an md5 inside a Filter means Catalyst inlined the gram hashes into
+    // an inferred generator predicate: O(windows × grams) md5s per doc
+    val p = graft.operators.Dedup.winnowFingerprints(spark, sf)
+      .queryExecution.optimizedPlan
+    val bad = p.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.toString.contains("md5(") => f.condition
+    }
+    assert(bad.isEmpty, s"md5 reached a Filter condition:\n$p")
+    assert(p.toString.contains("md5("), s"probe lost the md5 grams:\n$p")
+  }
+
   test("decontaminate: eval shingles broadcast against the training index, no all-pairs") {
     val p = plan("decontaminate")
     assert(p.contains("BroadcastHashJoin"),

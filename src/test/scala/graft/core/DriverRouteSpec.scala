@@ -5,16 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sql.GraftSql
 
-/** The driver-route governor (VERDICT r9 #2): the single-threaded
-  * zero-job/fused driver routes must degrade GRACEFULLY when the
-  * measured driver throughput says they would blow the latency budget —
-  * route choice flips to the distributed path, results stay
-  * hash-identical. The forced-slow seam stands in for a starved driver
-  * (the round-9 driver-harness divergence this guards against). */
+/** Driver-route admission: the single-threaded zero-job/fused driver
+  * routes run only under the static row and byte caps
+  * ([[Ops.DriverPatchMaxBytes]]). When the caps decline, route choice
+  * flips to the distributed path and results stay hash-identical. */
 class DriverRouteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** A DML flow that exercises every governor-gated route: range UPDATE
+  /** A DML flow that exercises every cap-gated route: range UPDATE
     * (per-chunk transform / delta patch), range DELETE (splice), point
     * DML (driver patch), INSERT…SELECT (delta patch). */
   private def runFlow(): String = {
@@ -33,20 +31,33 @@ class DriverRouteSpec extends AnyFunSuite {
     cat.root("t").tableHash
   }
 
-  test("a measured-slow driver flips to the distributed path, hashes unchanged") {
-    Ops.resetDriverRouteModel() // suite-order independence
-    val fast = runFlow() // cold/normal governor: driver routes admitted
-    val denials0 = Ops.driverRouteDenials.get()
-    // 10 ms/row: any patch beyond ~150 rows projects over the 1.5 s
-    // budget — every bulk driver route must fall back
-    Ops.driverRouteNprOverride = Some(10L * 1000L * 1000L)
-    val slow =
-      try runFlow()
-      finally Ops.driverRouteNprOverride = None
-    assert(slow == fast,
-      "governor-denied driver routes changed the result hash")
-    assert(Ops.driverRouteDenials.get() > denials0,
-      "the forced-slow governor never denied a driver route")
+  /** `runFlow` plus the Spark jobs it launched. */
+  private def flowWithJobs(): (String, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val h = runFlow()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      (h, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a byte budget of 1 flips every driver route to the distributed path, hashes unchanged") {
+    val (driver, driverJobs) = flowWithJobs()
+    val saved = Ops.DriverPatchMaxBytes
+    Ops.DriverPatchMaxBytes = 1L
+    val (distributed, distributedJobs) =
+      try flowWithJobs()
+      finally Ops.DriverPatchMaxBytes = saved
+    assert(distributed == driver,
+      "byte-declined driver routes changed the result hash")
+    assert(distributedJobs > driverJobs,
+      s"byte budget 1 ran no extra Spark jobs ($distributedJobs vs $driverJobs)")
   }
 
   test("readRangeDriver row set equals the rangeFilter scan on composite keys and prefix bounds") {
@@ -82,34 +93,6 @@ class DriverRouteSpec extends AnyFunSuite {
     }
   }
 
-  test("one cold fixed-cost-dominated sample does not pin the governor slow") {
-    Ops.driverRouteNprOverride = None
-    Ops.resetDriverRouteModel()
-    try {
-      // the JVM-cold shape: a 4k-row driver read that paid codec init +
-      // class loading — 220 ms reads as 55 µs/row, which would project
-      // every metadata-sized route over the 1.5 s budget
-      Ops.recordDriverRoute(4000L, 220L * 1000L * 1000L)
-      // warm-up window: routes keep flowing (and keep training) instead
-      // of being denied on one data point
-      assert(Ops.driverRouteAdmit(40000L),
-        "warm-up admission denied on a single cold sample")
-      // three warm large samples wash the poison out of the ratio; the
-      // model is then consulted (past the warm-up window) and must admit
-      (1 to 3).foreach(_ =>
-        Ops.recordDriverRoute(70000L, 40L * 1000L * 1000L))
-      assert(Ops.driverRouteNprNanos < 5000L,
-        s"ratio-of-EWMAs still poisoned: ${Ops.driverRouteNprNanos} ns/row")
-      assert(Ops.driverRouteAdmit(100000L),
-        "post-warm-up admission still denied after recovery")
-      // a genuinely slow SUSTAINED regime still locks the governor in
-      (1 to 8).foreach(_ =>
-        Ops.recordDriverRoute(100000L, 3000L * 1000L * 1000L))
-      assert(!Ops.driverRouteAdmit(100000L),
-        "sustained measured slowness must deny past the warm-up window")
-    } finally { Ops.driverRouteNprOverride = None; Ops.resetDriverRouteModel() }
-  }
-
   test("byte-admitted collect: interpreted and codegen modes hash-identically") {
     // the width-scaled interpreted-vs-codegen crossover (round 14) picks
     // a PLAN EXECUTION MODE, never a result: the same bulk flow
@@ -124,23 +107,5 @@ class DriverRouteSpec extends AnyFunSuite {
       assert(interp === codegen,
         "interpreted vs codegen byte-admitted collects diverged")
     } finally Canonical.InterpretedCollectMaxBytes = saved
-  }
-
-  test("admission math: cold model admits; measured cost gates by projected time") {
-    Ops.driverRouteNprOverride = None
-    Ops.resetDriverRouteModel()
-    try {
-      // cold: no measurement => admit anything under the static caps
-      assert(Ops.driverRouteAdmit(Ops.DriverPatchHardRowCap))
-      // fast measured cost: 1 µs/row => 100k rows project 0.1 s, admit
-      Ops.driverRouteNprOverride = Some(1000L)
-      assert(Ops.driverRouteAdmit(100000L))
-      // slow measured cost: 1 ms/row => 100k rows project 100 s, deny;
-      // a genuinely tiny patch stays admitted (point DML keeps its
-      // zero-job latency even on a loaded machine)
-      Ops.driverRouteNprOverride = Some(1000L * 1000L)
-      assert(!Ops.driverRouteAdmit(100000L))
-      assert(Ops.driverRouteAdmit(64L))
-    } finally Ops.driverRouteNprOverride = None
   }
 }

@@ -271,15 +271,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
 
     store.stats.reset()
     val retracts0 = Ops.rekeyRetractFoldIns.get()
-    // this spec pins the DRIVER retraction specifically (its O(delta)
-    // store-stat bounds are driver-route facts), so the measured-
-    // throughput governor — process-global and poisoned by concurrent
-    // suites or steal — must not be allowed to reroute it (VERDICT r13
-    // #1): force a fast ns/row for the transform's scope
-    Ops.driverRouteNprOverride = Some(1L)
-    val v2 =
-      try ops.transform(merged, rekeyAgg, fold, prev = Some(v1))
-      finally Ops.driverRouteNprOverride = None
+    val v2 = ops.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
     assert(Ops.rekeyRetractFoldIns.get() == retracts0 + 1,
       "delete-delta refresh did not take the retraction route")
@@ -598,13 +590,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       ops4.upsert(base4, ops4.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
     val drv40 = Ops.rekeyRetractFoldIns.get()
-    // pin the governor fast: this leg asserts the DRIVER route
-    // specifically (VERDICT r13 #1 — a load-poisoned global model must
-    // not reroute it mid-assert)
-    Ops.driverRouteNprOverride = Some(1L)
-    val v24 =
-      try ops4.transform(merged4, rekeyAgg, fold, prev = Some(v14))
-      finally Ops.driverRouteNprOverride = None
+    val v24 = ops4.transform(merged4, rekeyAgg, fold, prev = Some(v14))
     assert(Ops.rekeyRetractFoldIns.get() == drv40 + 1,
       "control flow: the same delta under default caps takes the driver route")
     assert(v24.hash == v2.hash,

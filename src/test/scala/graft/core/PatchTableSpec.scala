@@ -14,9 +14,6 @@ import scala.util.Random
   * secondary-index refresh rides. */
 class PatchTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  // this suite pins WHICH route runs (zero jobs = the driver path);
-  // neutralize whatever throughput model earlier suites trained
-  Ops.resetDriverRouteModel()
 
   private val schema = StructType(Seq(
     StructField("k", StringType, nullable = false),

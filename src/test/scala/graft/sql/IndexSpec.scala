@@ -212,14 +212,8 @@ class IndexSpec extends AnyFunSuite {
       .toDF("id", "grp", "pad").createOrReplaceTempView("idx_delta5")
     sess.execute("INSERT INTO t SELECT * FROM idx_delta5")
     val foldIns0 = Ops.rekeyAppendFoldIns.get()
-    // the fold-in's source diff is admitted by the process-global
-    // measured-throughput governor, which concurrent suites or steal
-    // can poison into denying (VERDICT r13 #1) — pin it fast for the
-    // refresh this assert observes
-    Ops.driverRouteNprOverride = Some(1L)
     val Left(df) =
-      (try sess.execute("SELECT id FROM t WHERE grp = 13 ORDER BY id")
-       finally Ops.driverRouteNprOverride = None): @unchecked
+      sess.execute("SELECT id FROM t WHERE grp = 13 ORDER BY id"): @unchecked
     assert(Ops.rekeyAppendFoldIns.get() > foldIns0,
       "scattered narrow-index append refresh did not take the fold-in")
     val want = ((0L until 4000L).filter(i => i * 7919 % 4000 == 13) ++

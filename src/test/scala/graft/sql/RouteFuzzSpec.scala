@@ -91,25 +91,20 @@ class RouteFuzzSpec extends AnyFunSuite {
     Seq(11L, 23L).foreach { seed =>
       val stmts = program(seed)
       // (pointDmlViaPatch, driverPatchEnabled, driverMaterializeEnabled,
-      //  governor-forced-slow, byte-budget-1): the governor config keeps
-      // every route flag ON but forces the measured-throughput governor
-      // to deny bulk driver routes — the degraded-driver mix of paths
-      // (round-10 governor) must hash-converge like any other config;
-      // the byte-budget-1 config declines every byte-admitted driver
-      // diff so refreshes exercise the DISTRIBUTED fold-in and the
-      // DISTRIBUTED retraction (round-13 mergeRetract) across the whole
-      // seeded program
+      //  byte-budget-1): the byte-budget-1 config keeps every route flag
+      // ON but declines every byte-admitted driver route, so DML takes
+      // the job paths and refreshes exercise the DISTRIBUTED fold-in and
+      // the DISTRIBUTED retraction (round-13 mergeRetract) across the
+      // whole seeded program
       val configs = Seq(
-        (true, true, true, false, false), (true, false, true, false, false),
-        (false, true, true, false, false), (true, true, false, false, false),
-        (true, true, true, true, false), (true, true, true, false, true))
+        (true, true, true, false), (true, false, true, false),
+        (false, true, true, false), (true, true, false, false),
+        (true, true, true, true))
       val results = configs.map {
-        case (viaPatch, driverPatch, driverMat, slow, bytes1) =>
+        case (viaPatch, driverPatch, driverMat, bytes1) =>
         GraftSql.pointDmlViaPatch = viaPatch
         Ops.driverPatchEnabled = driverPatch
         Canonical.driverMaterializeEnabled = driverMat
-        Ops.driverRouteNprOverride =
-          if (slow) Some(10L * 1000L * 1000L) else None
         val savedBytes = Ops.DriverPatchMaxBytes
         if (bytes1) Ops.DriverPatchMaxBytes = 1L
         val dist0 = Ops.rekeyRetractDistFoldIns.get()
@@ -134,7 +129,6 @@ class RouteFuzzSpec extends AnyFunSuite {
           GraftSql.pointDmlViaPatch = true
           Ops.driverPatchEnabled = true
           Canonical.driverMaterializeEnabled = true
-          Ops.driverRouteNprOverride = None
           Ops.DriverPatchMaxBytes = savedBytes
         }
       }

@@ -10,9 +10,6 @@ import graft.core._
   * FIXTURES.md §3. */
 class SqlAndSourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  // route-matrix pins below assert WHICH route runs — start from the
-  // unmeasured driver-route model regardless of suite order
-  graft.core.Ops.resetDriverRouteModel()
 
   private def newOps(): (Ops, Catalog) = {
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-sql-"))
@@ -453,11 +450,9 @@ class SqlAndSourcesSpec extends AnyFunSuite {
         // kill group 7 outright (every k ≡ 7 mod 97), thin group 11
         run("DELETE FROM rt WHERE k % 97 = 7")
         run("DELETE FROM rt WHERE k % 97 = 11 AND k % 2 = 0")
-        // route-agnostic assert (VERDICT r13 #1): the retraction
-        // CONTRACT is "either retraction variant fired" — the measured-
-        // throughput governor may deny the driver route under ambient
-        // load and correctly reroute to the DISTRIBUTED retraction, so
-        // pinning the driver counter alone made this assert flaky
+        // route-agnostic assert: the retraction CONTRACT is "either
+        // retraction variant fired" — which one runs is the row/byte
+        // caps' call, pinned by the byte-budget test below
         val r0 = graft.core.Ops.rekeyRetractFoldIns.get() +
           graft.core.Ops.rekeyRetractDistFoldIns.get()
         run("REFRESH MATERIALIZED VIEW rtv")
@@ -531,14 +526,10 @@ class SqlAndSourcesSpec extends AnyFunSuite {
       r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == want3)
   }
 
-  test("DELETE-refresh under a governor denial reroutes to the DISTRIBUTED retraction") {
-    // injection variant (VERDICT r13 #1): a poisoned throughput model
-    // (ambient steal, concurrent suites training the process-global
-    // ns/row estimate slow) denies the DRIVER retraction; the refresh
+  test("DELETE-refresh over the driver byte budget reroutes to the DISTRIBUTED retraction") {
+    // a byte budget of 1 declines the DRIVER retraction; the refresh
     // must reroute to the distributed retraction — not silently fall to
     // a rebuild — and the view must stay exact, group death included.
-    // This is the load shape that made the driver-counter-only asserts
-    // flaky; with the route-agnostic contract it is now pinned.
     val (ops, cat) = newOps()
     def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
     run("CREATE TABLE gd (k bigint PRIMARY KEY, g bigint NOT NULL, " +
@@ -550,15 +541,15 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run("DELETE FROM gd WHERE k % 37 = 5 AND k % 2 = 0") // thin group 5
     val drv0 = graft.core.Ops.rekeyRetractFoldIns.get()
     val dist0 = graft.core.Ops.rekeyRetractDistFoldIns.get()
-    // 10 ms/row: every route above the model floor is denied
-    graft.core.Ops.driverRouteNprOverride = Some(10L * 1000 * 1000)
+    val savedBytes = graft.core.Ops.DriverPatchMaxBytes
+    graft.core.Ops.DriverPatchMaxBytes = 1L
     try run("REFRESH MATERIALIZED VIEW gdv")
-    finally graft.core.Ops.driverRouteNprOverride = None
+    finally graft.core.Ops.DriverPatchMaxBytes = savedBytes
     assert(graft.core.Ops.rekeyRetractDistFoldIns.get() > dist0,
-      "governor denial must reroute the DELETE-refresh to the " +
-        "distributed retraction")
+      "a byte-declined driver route must reroute the DELETE-refresh to " +
+        "the distributed retraction")
     assert(graft.core.Ops.rekeyRetractFoldIns.get() == drv0,
-      "a denied driver route must not also count a driver retraction")
+      "a declined driver route must not also count a driver retraction")
     val Left(df) = run("SELECT g, sv, n FROM gdv ORDER BY g"): @unchecked
     val want = (0L until 20000L)
       .filterNot(k => k % 37 == 3 || (k % 37 == 5 && k % 2 == 0))
@@ -1518,8 +1509,8 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     // (envelope rows + source rows), so a metadata-sized MERGE rides
     // the one-collect driver materialization — this pins that route's
     // result table hash against the full Spark job path
-    def mergedHash(driverRoute: Boolean): String = {
-      graft.core.Canonical.driverMaterializeEnabled = driverRoute
+    def mergedHash(driverMat: Boolean): String = {
+      graft.core.Canonical.driverMaterializeEnabled = driverMat
       try {
         val (ops, cat) = newOps()
         def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
@@ -1534,7 +1525,7 @@ class SqlAndSourcesSpec extends AnyFunSuite {
         cat.root("mr").tableHash
       } finally graft.core.Canonical.driverMaterializeEnabled = true
     }
-    assert(mergedHash(driverRoute = true) == mergedHash(driverRoute = false),
+    assert(mergedHash(driverMat = true) == mergedHash(driverMat = false),
       "MERGE driver-route splice diverged from the job path")
   }
 
