@@ -1,11 +1,11 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
 
 /** Parquet-backed chunk index: the chunk list of a large table stored as
@@ -13,8 +13,9 @@ import org.apache.parquet.schema.MessageTypeParser
   * default granularity has ~1e5–1e6 chunks and re-merges constantly; a
   * multi-megabyte JSON array parsed with a tree parser on every
   * `loadTableMeta` is the wrong driver cost (SCALE.md "parquet-backed
-  * index"). This reader/writer runs driver-side through parquet-hadoop
-  * directly (no Spark job — metadata must stay metadata), streams
+  * index"). This reader/writer runs driver-side on parquet's java.nio
+  * files, as [[DriverChunks]] does (no Spark job — metadata must stay
+  * metadata), streams
   * row-by-row in chunk-key order, and the file is content-addressed by
   * its table's hash, so it is write-once like everything else. */
 object ChunkIndex {
@@ -29,10 +30,9 @@ object ChunkIndex {
       |}""".stripMargin)
 
   def write(file: java.nio.file.Path, chunks: Seq[ChunkMeta]): Unit = {
-    val conf = new Configuration()
     val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(conf)
+      .builder(new LocalOutputFile(file))
+      .withConf(new PlainParquetConfiguration())
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -59,10 +59,8 @@ object ChunkIndex {
     * Call `close()` (or drain fully; exhaustion closes too). */
   def iterate(file: java.nio.file.Path): Iterator[ChunkMeta] with AutoCloseable =
     new Iterator[ChunkMeta] with AutoCloseable {
-      private val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file.toString))
-        .withConf(new Configuration())
-        .build()
+      private val reader = DriverChunks.groupReader(
+        new LocalInputFile(file), new PlainParquetConfiguration())
       private var nextGroup: Group = reader.read()
       private var closed = false
       def close(): Unit = if (!closed) { closed = true; reader.close() }

@@ -1,14 +1,15 @@
 package graft.core
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.{ParquetConfiguration, PlainParquetConfiguration}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{InputFile, LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -23,12 +24,18 @@ import org.apache.spark.sql.types._
   * written here are interchangeable with executor-written ones (the
   * same mixed-codec-store argument as replication).
   *
-  * PRIMITIVE column types only — the DML statement shapes; callers
-  * gate on [[supported]] and fall back to the Spark path for
-  * array/struct/map schemas or any file this module cannot read
-  * (e.g. legacy INT96 timestamps). Columns resolve by positional
+  * PRIMITIVE columns and arrays of them only — the DML statement
+  * shapes; callers gate on [[supported]] and fall back to the Spark
+  * path for struct/map schemas or any file this module cannot read
+  * (a physical type it does not decode). Columns resolve by positional
   * parquet field id (the rename-proof identity chunk writers attach),
-  * with a name fallback for id-less files. */
+  * with a name fallback for id-less files.
+  *
+  * IO is parquet's own java.nio files ([[LocalInputFile]],
+  * [[LocalOutputFile]]), not the Hadoop FileSystem, whose per-call
+  * config parse and `chmod` forks cost more than a small chunk's rows
+  * (SCALE.md "Driver chunk IO"). Chunk paths are local files — the
+  * store's contract. */
 private[core] object DriverChunks {
 
   private def supportedScalar(dt: DataType): Boolean = dt match {
@@ -51,9 +58,10 @@ private[core] object DriverChunks {
     * types [[KeyCodec]] accepts). Throws on anything unexpected — the
     * caller treats any failure as "use the Spark path". */
   def readRows(path: java.nio.file.Path, schema: StructType): Vector[Row] = {
-    val conf = new Configuration(false)
-    val hp = new HPath(path.toUri.toString)
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(hp, conf))
+    val conf = new PlainParquetConfiguration()
+    val in = new LocalInputFile(path)
+    val footer = ParquetFileReader.open(in,
+      ParquetReadOptions.builder(conf).build())
     val fileSchema =
       try footer.getFooter.getFileMetaData.getSchema
       finally footer.close()
@@ -73,8 +81,7 @@ private[core] object DriverChunks {
         val j = fieldIdx(i)
         valueReader(f.dataType, j, fileSchema.getType(j))
     }
-    val reader = ParquetReader.builder(new GroupReadSupport(), hp)
-      .withConf(conf).build()
+    val reader = groupReader(in, conf)
     try {
       val out = Vector.newBuilder[Row]
       var g = reader.read()
@@ -85,6 +92,15 @@ private[core] object DriverChunks {
       out.result()
     } finally reader.close()
   }
+
+  /** A [[Group]] reader over a parquet [[InputFile]]. No public builder
+    * takes both a ReadSupport and an InputFile, hence the subclass. */
+  private[core] def groupReader(in: InputFile,
+      conf: ParquetConfiguration): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](in, conf) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
 
   private def valueReader(dt: DataType, j: Int,
       fileType: Type): Group => Any = {
@@ -308,7 +324,8 @@ private[core] object DriverChunks {
     val mt = messageType(schema)
     val factory = new SimpleGroupFactory(mt)
     val writer: ParquetWriter[Group] = ExampleParquetWriter
-      .builder(new HPath(path.toUri.toString))
+      .builder(new LocalOutputFile(path))
+      .withConf(new PlainParquetConfiguration())
       .withType(mt)
       .withCompressionCodec(CompressionCodecName.valueOf(
         codec.toUpperCase(java.util.Locale.ROOT)))

@@ -83,13 +83,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // every such caller is metadata-sized by construction.
     val (es, bound) = Canonical.onEngine(spark, df, smallShuffle = true,
       interpretedOk = Canonical.interpretedCollectOk(rowBound, df.schema))
-    // deliberately NOT a driver-route cost-model sample: a collect's
-    // wall time includes the plan's own compute (an md5-heavy delta
-    // build spends most of its time per row in expression evaluation),
-    // which says nothing about splice throughput — feeding it in would
-    // deny patches on an idle machine. The model trains on the pure
-    // driver-IO/encode routes (patch, splice, range/edge reads), which
-    // dominate the single-threaded work a starved driver slows down.
     Canonical.withJobDesc(es, "graft:collect")(bound.collect())
   }
 

@@ -169,7 +169,6 @@ final class PackStore(val rootDir: String) extends GraftStore {
           try Files.move(tmp, idx, StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException =>
             Files.deleteIfExists(tmp); () }
-          Files.deleteIfExists(tmp.resolveSibling("." + tmp.getFileName + ".crc"))
         }
         Files.writeString(p, meta.toJsonIndexed)
       } else Files.writeString(p, meta.toJson)

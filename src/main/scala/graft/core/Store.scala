@@ -195,7 +195,6 @@ final class FsStore(val rootDir: String,
           ChunkIndex.write(tmp, meta.chunks)
           try Files.move(tmp, idx, StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp) }
-          Files.deleteIfExists(tmp.resolveSibling("." + tmp.getFileName + ".crc"))
         }
         writeAtomic(p, meta.toJsonIndexed)
       } else writeAtomic(p, meta.toJson)
@@ -414,7 +413,6 @@ final class ObjectStoreSimStore(val rootDir: String) extends GraftStore {
           ChunkIndex.write(tmp, meta.chunks)
           try Files.move(tmp, idx, StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp) }
-          Files.deleteIfExists(tmp.resolveSibling("." + tmp.getFileName + ".crc"))
         }
         putString(p, meta.toJsonIndexed)
       } else putString(p, meta.toJson)

@@ -126,6 +126,10 @@ class StoreContractSpec extends AnyFunSuite {
           java.nio.file.Paths.get(dir, "tables", s"$h.json")))
         assert(envelope.length < 10000, "indexed meta must stay an envelope")
         assert(envelope.contains("chunksIndexed"))
+        // the sidecar write leaves no checksum file beside it
+        val crcs = FsUtil.listDir(java.nio.file.Paths.get(dir, "tables"))
+          .map(_.getFileName.toString).filter(_.endsWith(".crc"))
+        assert(crcs.isEmpty, s"checksum files in tables/: $crcs")
       }
       val loaded = store.loadTableMeta(h)
       assert(loaded == meta, "indexed round-trip must be lossless")
