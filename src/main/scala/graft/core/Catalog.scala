@@ -29,10 +29,25 @@ final case class CatalogEntry(tableHash: String, keyCols: Seq[String],
     notNull: Seq[String] = Nil)
 
 final class Catalog(store: GraftStore) {
+  import Catalog.Parsed
+
+  // the CURRENT root, parsed: reused while the pointer still names it
+  // (a root object is immutable under its hash), so a statement's many
+  // point lookups cost one pointer read each instead of a root load and
+  // JSON parse. Only the current root is held, so a GC'd historical
+  // root is never served from here.
+  @volatile private var cached: Parsed = null
+
+  private def parsedCurrent: Option[Parsed] =
+    store.currentRootHash.map { h =>
+      val c = cached
+      if (c != null && c.hash == h) c
+      else { val p = new Parsed(h, JsonMethods.parse(store.loadRoot(h))); cached = p; p }
+    }
 
   /** loadRepoRoot: missing root ⇒ empty catalog (Repo.hs:84-89). */
   def root: Map[String, CatalogEntry] =
-    store.currentRootHash.map(rootAt).getOrElse(Map.empty)
+    parsedCurrent.map(_.tables).getOrElse(Map.empty)
 
   /** Persisted materialized-view definitions (name → defining SELECT
     * SQL). Stored in the root alongside the tables, so views survive
@@ -40,13 +55,10 @@ final class Catalog(store: GraftStore) {
     * defs), and version with the catalog history — the reference's
     * everything-through-the-repo model (Repo.hs:82). */
   def viewDefs: Map[String, String] =
-    store.currentRootHash.map(viewDefsAt).getOrElse(Map.empty)
+    parsedCurrent.map(_.views).getOrElse(Map.empty)
 
-  def viewDefsAt(rootHash: String): Map[String, String] = {
-    implicit val fmts: Formats = DefaultFormats
-    (JsonMethods.parse(store.loadRoot(rootHash)) \ "views")
-      .extractOpt[Map[String, String]].getOrElse(Map.empty)
-  }
+  def viewDefsAt(rootHash: String): Map[String, String] =
+    new Parsed(rootHash, JsonMethods.parse(store.loadRoot(rootHash))).views
 
   /** Record/replace a view definition; tables untouched. */
   def putViewDef(name: String, selectSql: String): String =
@@ -56,20 +68,8 @@ final class Catalog(store: GraftStore) {
   def dropViewDef(name: String): String =
     statementFull(_ - name, _ - name)
 
-  def rootAt(rootHash: String): Map[String, CatalogEntry] = {
-    implicit val fmts: Formats = DefaultFormats
-    val j = JsonMethods.parse(store.loadRoot(rootHash)) \ "tables"
-    j.extract[Map[String, JValue]].map { case (name, e) =>
-      val schemaJson = JsonMethods.compact(JsonMethods.render(e \ "schema"))
-      val declared = (e \ "declared").extractOpt[Seq[String]].getOrElse {
-        org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-      }
-      name -> CatalogEntry((e \ "table").extract[String],
-        (e \ "keyCols").extract[Seq[String]], schemaJson, declared,
-        (e \ "notnull").extractOpt[Seq[String]].getOrElse(Nil))
-    }
-  }
+  def rootAt(rootHash: String): Map[String, CatalogEntry] =
+    new Parsed(rootHash, JsonMethods.parse(store.loadRoot(rootHash))).tables
 
   /** saveRepoTable: upsert a named table, produce + install a new root
     * (Repo.hs:106-118). Returns the new root hash.
@@ -141,9 +141,10 @@ final class Catalog(store: GraftStore) {
     * section. */
   def statementFull(f: Map[String, CatalogEntry] => Map[String, CatalogEntry],
       g: Map[String, String] => Map[String, String]): String = store.synchronized {
-    val next = f(root)
-    val nextViews = g(viewDefs)
-    val parent = store.currentRootHash
+    val cur = parsedCurrent
+    val next = f(cur.map(_.tables).getOrElse(Map.empty))
+    val nextViews = g(cur.map(_.views).getOrElse(Map.empty))
+    val parent = cur.map(_.hash)
     val tables: JObject = JObject(next.toList.sortBy(_._1).map { case (name, e) =>
       name -> (("table" -> e.tableHash) ~ ("keyCols" -> e.keyCols) ~
         ("declared" -> e.declaredCols) ~ ("notnull" -> e.notNull) ~
@@ -153,7 +154,9 @@ final class Catalog(store: GraftStore) {
       ("views" -> JObject(nextViews.toList.sortBy(_._1).map {
         case (n, s) => n -> (JString(s): JValue) })) ~
       ("parent" -> parent)
-    store.saveRoot(JsonMethods.compact(JsonMethods.render(j)))
+    val h = store.saveRoot(JsonMethods.compact(JsonMethods.render(j)))
+    cached = new Parsed(h, j)
+    h
   }
 
   /** Parent of a root version: None for the first root, and None when
@@ -184,5 +187,25 @@ final class Catalog(store: GraftStore) {
   def checkout(rootHash: String): Unit = {
     store.loadRoot(rootHash) // validate existence
     store.setRootPointer(rootHash)
+  }
+}
+
+object Catalog {
+  /** One root object, parsed once; each section extracted on first use. */
+  private final class Parsed(val hash: String, json: JValue) {
+    private implicit val fmts: Formats = DefaultFormats
+    lazy val tables: Map[String, CatalogEntry] =
+      (json \ "tables").extract[Map[String, JValue]].map { case (name, e) =>
+        val schemaJson = JsonMethods.compact(JsonMethods.render(e \ "schema"))
+        val declared = (e \ "declared").extractOpt[Seq[String]].getOrElse {
+          org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+            .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+        }
+        name -> CatalogEntry((e \ "table").extract[String],
+          (e \ "keyCols").extract[Seq[String]], schemaJson, declared,
+          (e \ "notnull").extractOpt[Seq[String]].getOrElse(Nil))
+      }
+    lazy val views: Map[String, String] =
+      (json \ "views").extractOpt[Map[String, String]].getOrElse(Map.empty)
   }
 }

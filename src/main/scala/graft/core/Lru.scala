@@ -14,10 +14,21 @@ final class Lru[K, V](cap: Int, onEvict: V => Unit = (_: V) => ()) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
       if (this.size > cap) { onEvict(e.getValue); true } else false
   }
-  def getOrElseUpdate(k: K)(mk: => V): V = synchronized {
-    val got = m.get(k)
+  /** `mk` runs OUTSIDE the lock, so builds of different keys (frame
+    * analysis, file stats) proceed concurrently. Values must be pure per
+    * key: two threads racing on one key may both build, and the first
+    * value inserted wins — the loser is dropped without `onEvict`,
+    * since it may share state (e.g. a cached plan) with the winner. */
+  def getOrElseUpdate(k: K)(mk: => V): V = {
+    val got = synchronized(m.get(k))
     if (got != null) got
-    else { val v = mk; m.put(k, v); v }
+    else {
+      val v = mk
+      synchronized {
+        val raced = m.get(k)
+        if (raced != null) raced else { m.put(k, v); v }
+      }
+    }
   }
   def size: Int = synchronized(m.size)
   /** Drop everything, running `onEvict` on each entry (explicit

@@ -65,47 +65,77 @@ final class Views(ops: Ops, catalog: Catalog) {
 
   /** Re-materialize from the source's current catalog version. Cost is
     * zero (memo hit) when the source hash is unchanged, O(touched
-    * chunks) after a delta for key-preserving transforms. A source that
-    * is ITSELF a declared view refreshes first (recursively), so a
-    * single-view refresh of a chained view observes fresh sources —
-    * refreshing an already-fresh source is a memo hit and mints no
-    * root, so over-refreshing costs nothing. */
-  def refresh(view: String): TableRef = refresh(view, Set.empty)
+    * chunks) after a delta for key-preserving transforms. Sources that
+    * are THEMSELVES declared views refresh first, in the same statement
+    * (the [[refreshAll]] scheduler over `view` and its ancestors), so a
+    * chained view observes fresh sources — refreshing an already-fresh
+    * source is a memo hit, so over-refreshing costs nothing. */
+  def refresh(view: String): TableRef = run(Seq(view))(view)
 
-  private def refresh(view: String, visiting: Set[String]): TableRef = {
-    require(!visiting.contains(view), s"view dependency cycle at $view")
-    val t0 = if (Views.debugRefresh) System.nanoTime() else 0L
-    val vs = visiting + view
-    val out = joinDefs.get(view) match {
-      case Some(j) => refreshJoin(view, j, vs)
-      case None =>
-        val d = defs.getOrElse(view,
-          throw new NoSuchElementException(s"undefined view: $view"))
-        val src = sourceRef(view, d.source, vs)
-        // the view's current catalog version is the previous result of
-        // this exact transform — the hint that unlocks O(delta)
-        // refresh-by-patch for uniqueKeys re-keys (secondary indexes)
-        ops.transform(src, d.transform, d.fold, prev = catalog.get(view))
+  /** Refresh every view in one statement over the view dependency DAG
+    * (a view whose source is itself a view starts after that source),
+    * so chained views — a join view over a transform view, a rollup
+    * over a join — observe their sources' CURRENT versions in one pass.
+    * Cycles are rejected. */
+  def refreshAll(): Map[String, TableRef] =
+    run((defs.keys ++ joinDefs.keys).toSeq)
+
+  private def isView(name: String): Boolean =
+    defs.contains(name) || joinDefs.contains(name)
+
+  private def sources(view: String): Seq[String] =
+    joinDefs.get(view).map(j => Seq(j.left, j.right))
+      .orElse(defs.get(view).map(d => Seq(d.source)))
+      .getOrElse(throw new NoSuchElementException(s"undefined view: $view"))
+
+  /** One refresh statement over `targets` and every view they read.
+    * Each view starts as soon as the views it reads have finished, so
+    * independent views overlap their driver planning and Spark jobs,
+    * and each refreshed ref is handed straight to its dependents.
+    * Nothing is committed mid-statement: every view whose ref changed
+    * lands in ONE root ([[Catalog.putAll]]) after all have finished, and
+    * a no-op mints no root (the git equivalent of refusing an empty
+    * commit). Readers never observe a half-refreshed set of views, and
+    * the root does not depend on which view finished first. */
+  private def run(targets: Seq[String]): Map[String, TableRef] = {
+    val deps = scala.collection.mutable.Map.empty[String, Seq[String]]
+    val visiting = scala.collection.mutable.Set.empty[String]
+    def visit(v: String): Unit =
+      if (!deps.contains(v)) {
+        require(visiting.add(v), s"view dependency cycle at $v")
+        val ds = sources(v).filter(isView).distinct
+        ds.foreach(visit)
+        visiting.remove(v)
+        deps(v) = ds
+      }
+    targets.sorted.foreach(visit)
+    // ONE catalog snapshot serves every base-table source and every
+    // view's previous version
+    val snapshot = catalog.root
+    def current(name: String): Option[TableRef] =
+      snapshot.get(name).map(e => TableRef(e.tableHash))
+    val out = Views.schedule[TableRef](ops.spark, deps.toMap) { (view, done) =>
+      def src(name: String): TableRef = done.get(name).orElse(current(name))
+        .getOrElse(throw new NoSuchElementException(
+          s"view $view: missing source table $name"))
+      joinDefs.get(view) match {
+        case Some(j) => refreshJoin(view, j, src(j.left), src(j.right))
+        case None =>
+          val d = defs(view)
+          // the view's current catalog version is the previous result of
+          // this exact transform — the hint that unlocks O(delta)
+          // refresh-by-patch for uniqueKeys re-keys (secondary indexes)
+          ops.transform(src(d.source), d.transform, d.fold,
+            prev = current(view))
+      }
     }
-    // don't mint a new catalog root for a no-op refresh (the git
-    // equivalent of refusing an empty commit)
-    if (!catalog.get(view).contains(out)) catalog.put(view, out)
-    if (Views.debugRefresh)
-      System.err.println(f"[refresh] $view ${(System.nanoTime() - t0) / 1e6}%.1f ms")
+    val changed = out.filter { case (v, ref) => !current(v).contains(ref) }
+    if (changed.nonEmpty) catalog.putAll(changed)
     out
   }
 
-  private def sourceRef(view: String, source: String,
-      visiting: Set[String]): TableRef =
-    if (defs.contains(source) || joinDefs.contains(source))
-      refresh(source, visiting)
-    else catalog.get(source).getOrElse(
-      throw new NoSuchElementException(s"view $view: missing source table $source"))
-
-  private def refreshJoin(view: String, j: JoinDef,
-      visiting: Set[String]): TableRef = {
-    def src(name: String): TableRef = sourceRef(view, name, visiting)
-    val (aRef, bRef) = (src(j.left), src(j.right))
+  private def refreshJoin(view: String, j: JoinDef, aRef: TableRef,
+      bRef: TableRef): TableRef = {
     val (am, bm) = (ops.meta(aRef), ops.meta(bRef))
     require(am.keyCols == bm.keyCols,
       s"join view $view needs identical key columns: ${am.keyCols} vs ${bm.keyCols}")
@@ -167,37 +197,90 @@ final class Views(ops: Ops, catalog: Catalog) {
       outSchema, FoldSpec.FoldCoalesce)
   }
 
-  /** Refresh every view in DEPENDENCY order (a view whose source is
-    * itself a view refreshes after that source), so chained views — a
-    * join view over a transform view, a rollup over a join — observe
-    * their sources' CURRENT versions in one pass. Cycles are rejected. */
-  def refreshAll(): Map[String, TableRef] = {
-    val names = (defs.keys ++ joinDefs.keys).toSeq.sorted
-    def deps(v: String): Seq[String] =
-      (defs.get(v).map(d => Seq(d.source)) orElse
-        joinDefs.get(v).map(j => Seq(j.left, j.right))).getOrElse(Nil)
-        .filter(s => defs.contains(s) || joinDefs.contains(s))
-    val order = scala.collection.mutable.LinkedHashSet.empty[String]
-    val visiting = scala.collection.mutable.Set.empty[String]
-    def visit(v: String): Unit =
-      if (!order.contains(v)) {
-        require(visiting.add(v), s"view dependency cycle at $v")
-        deps(v).foreach(visit)
-        visiting.remove(v)
-        order += v
-      }
-    names.foreach(visit)
-    order.toSeq.map(v => v -> refresh(v)).toMap
-  }
-
   def definitions: Map[String, ViewDef] = defs.toMap
   def joinDefinitions: Map[String, JoinDef] = joinDefs.toMap
 }
 
 object Views {
-  /** Profiling seam: per-view refresh walls to stderr. */
-  private[graft] val debugRefresh: Boolean =
-    sys.env.contains("GRAFT_DEBUG_REFRESH")
+  /** Run `build` once per node of the DAG `deps` (node → the nodes it
+    * reads), each as soon as its dependencies have finished; `build`
+    * gets the results finished so far. While only one node is runnable
+    * it runs inline on the caller thread. Otherwise workers come from a
+    * pool owned by this call, as wide as the runnable nodes (at most
+    * one per processor) — transient, never shared, so nested parallel
+    * IO inside `build` cannot starve it. Each worker runs with the
+    * caller's Spark thread state (local properties, active session), so
+    * job descriptions, job groups and caller tags attribute correctly.
+    * On failure no further node starts; once the in-flight ones have
+    * finished, the first error is rethrown as it was raised. */
+  private[core] def schedule[R](spark: org.apache.spark.sql.SparkSession,
+      deps: Map[String, Seq[String]])
+      (build: (String, Map[String, R]) => R): Map[String, R] = {
+    import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+    import scala.util.{Failure, Success, Try}
+    val session = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(spark)
+    val procs = Runtime.getRuntime.availableProcessors
+    val dependents = deps.toSeq.flatMap { case (v, ds) => ds.map(_ -> v) }
+      .groupMap(_._1)(_._2)
+    val waiting = scala.collection.mutable.Map(
+      deps.toSeq.map { case (v, ds) => v -> ds.size }: _*)
+    val ready = scala.collection.mutable.Queue(
+      deps.collect { case (v, ds) if ds.isEmpty => v }.toSeq.sorted: _*)
+    var done = Map.empty[String, R]
+    var failure: Option[Throwable] = None
+    val finished = new LinkedBlockingQueue[(String, Try[R])]
+    var inFlight = 0
+    var pool: ThreadPoolExecutor = null
+    def complete(v: String, r: Try[R]): Unit = r match {
+      case Success(x) =>
+        done += v -> x
+        dependents.getOrElse(v, Nil).foreach { d =>
+          waiting(d) -= 1
+          if (waiting(d) == 0) ready.enqueue(d)
+        }
+      case Failure(e) => if (failure.isEmpty) failure = Some(e)
+    }
+    try {
+      while ((failure.isEmpty && ready.nonEmpty) || inFlight > 0) {
+        if (failure.isEmpty && ready.size == 1 && inFlight == 0) {
+          val v = ready.dequeue()
+          complete(v, Try(build(v, done)))
+        } else {
+          val width = math.min(ready.size + inFlight, procs)
+          if (pool == null) {
+            val n = new java.util.concurrent.atomic.AtomicInteger
+            pool = new ThreadPoolExecutor(width, procs, 0L, TimeUnit.MILLISECONDS,
+              new LinkedBlockingQueue[Runnable], { (r: Runnable) =>
+                val t = new Thread(r, s"graft-view-refresh-${n.incrementAndGet()}")
+                t.setDaemon(true)
+                t
+              })
+          } else if (width > pool.getCorePoolSize) pool.setCorePoolSize(width)
+          while (failure.isEmpty && ready.nonEmpty && inFlight < procs) {
+            val v = ready.dequeue()
+            val srcs = done
+            org.apache.spark.sql.GraftBridge.submitCaptured(session, pool)(
+              build(v, srcs)).whenComplete { (x: R, e: Throwable) =>
+              finished.put(v -> (if (e == null) Success(x) else Failure(e match {
+                case c: java.util.concurrent.CompletionException
+                  if c.getCause != null => c.getCause
+                case other => other
+              })))
+            }
+            inFlight += 1
+          }
+          val (v, r) = finished.take()
+          inFlight -= 1
+          complete(v, r)
+        }
+      }
+    } finally if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    failure.foreach(throw _)
+    done
+  }
 
   final case class ViewDef(source: String, transform: ColTransform,
       fold: FoldSpec)

@@ -225,6 +225,17 @@ object GraftBridge {
     es
   }
 
+  /** Run `body` on `exec` with the CALLING thread's Spark thread state
+    * installed on the worker: SparkContext local properties (job group,
+    * description, caller tags), `active` as the active session, and the
+    * job artifact state — Spark's own helper for its async command pool
+    * (`SQLExecution.withThreadLocalCaptured`). */
+  def submitCaptured[T](active: SparkSession,
+      exec: java.util.concurrent.ExecutorService)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      active.asInstanceOf[classic.SparkSession], exec)(body)
+
   /** Rebind `df`'s ANALYZED plan to `target`: same rows, but planning
     * and execution — including write commands, which hop to Spark's
     * async command thread pool and re-install their session's conf —
