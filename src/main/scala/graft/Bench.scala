@@ -226,8 +226,7 @@ object Bench {
     // incremental route each statement actually took — driver
     // retraction, distributed retraction (and whether its net folded
     // SCALED), append fold-in — so a silent route
-    // downgrade is visible in every bench artifact, not only under
-    // GRAFT_DEBUG_DRIVER_PATCH
+    // downgrade is visible in every bench artifact
     def routeCounters(): Array[Long] = Array(
       graft.core.Ops.rekeyRetractFoldIns.get(),
       graft.core.Ops.rekeyRetractDistFoldIns.get(),

@@ -19,9 +19,9 @@ import org.apache.spark.sql.types._
   * and an insert/delete only perturbs its own chunk (and possibly one
   * neighbor), the analogue of radix-trie locality.
   *
-  * Scale posture: neither materialization path drivers the boundary
-  * list — both collect only an intrinsic O(shuffle-partitions)
-  * subsample of the boundary keys as range splits and derive chunk
+  * Scale posture: the materializer's job route never collects the
+  * boundary list — it collects only an intrinsic O(shuffle-partitions)
+  * subsample of the boundary keys as range splits and derives chunk
   * membership locally per task, so driver memory is independent of
   * table size.
   */
@@ -53,7 +53,7 @@ object Canonical {
   /** First index i with bs(i) > kb — equivalently the count of sorted
     * boundary keys <= kb, i.e. the chunk/region id of kb. THE one
     * boundary binary search: every path that assigns rows or chunks to
-    * boundary intervals (materialize, grouped materialize, merge region
+    * boundary intervals (materialize, merge region
     * planning, spanning-chunk splits) must use it, or the canonical
     * chunking silently diverges between paths. */
   def boundaryIndex(bs: Array[Array[Byte]], kb: Array[Byte]): Int = {
@@ -122,25 +122,32 @@ object Canonical {
         .putLong(FieldIdKey, i.toLong).build())
     })
 
-  /** Add the key-bytes column via the order-preserving codec. Key
-    * columns are non-null by the table contract (normalizeSchema marks
-    * them so); a null key is reported with a clear error instead of an
-    * opaque encoder failure deep in the job. */
-  def withKeyBytes(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val schema = normalizeSchema(df.schema, keyCols)
+  private val NullKeyError = "null key in key column"
+
+  /** Row → row ++ its key bytes, for rows of `schema`. Key columns are
+    * non-null by the table contract (normalizeSchema marks them so); a
+    * null key is reported with a clear error instead of KeyCodec
+    * silently encoding it as 0x00. */
+  private def keyBytesAppender(schema: StructType,
+      keyCols: Seq[String]): Row => Row = {
     val enc = KeyCodec.rowEncoder(schema, keyCols)
     val keyIdx = keyCols.map(schema.fieldIndex)
-    val outSchema = schema.add(StructField(KB, BinaryType, nullable = false))
-    val outEnc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        keyIdx.foreach { i =>
-          if (r.isNullAt(i)) throw new IllegalArgumentException(
-            s"null key in key column '${schema.fieldNames(i)}' — key columns are non-nullable")
-        }
-        Row.fromSeq(r.toSeq :+ enc(r))
+    r => {
+      keyIdx.foreach { i =>
+        if (r.isNullAt(i)) throw new IllegalArgumentException(
+          s"$NullKeyError '${schema.fieldNames(i)}' — key columns are non-nullable")
       }
-    }(outEnc)
+      Row.fromSeq(r.toSeq :+ enc(r))
+    }
+  }
+
+  /** Append the key-bytes column via the order-preserving codec; every
+    * other column (a group tag included) rides along unchanged. */
+  def withKeyBytes(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val schema = normalizeSchema(df.schema, keyCols)
+    val append = keyBytesAppender(schema, keyCols)
+    df.mapPartitions(_.map(append))(RowEncoder.encoderFor(
+      schema.add(StructField(KB, BinaryType, nullable = false))))
   }
 
   private def listFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
@@ -446,22 +453,6 @@ object Canonical {
     }
   }
 
-  /** Assemble the stats map of one chunkDigests output row. */
-  private def statsOfRow(r: Row, statCols: Seq[String], baseIdx: Int)
-      : Map[String, ColStats] =
-    statCols.zipWithIndex.flatMap { case (c, i) =>
-      val nulls = r.getLong(baseIdx + 4 * i + 2)
-      if (nulls == StatsDropped) None
-      else Some(c -> ColStats(
-        Option(r.getAs[Array[Byte]](baseIdx + 4 * i)).map(Hashing.hex),
-        Option(r.getAs[Array[Byte]](baseIdx + 4 * i + 1)).map(Hashing.hex),
-        nulls,
-        Option(r.getAs[scala.collection.Seq[Array[Byte]]](baseIdx + 4 * i + 3))
-          .map(_.toSeq.map(Hashing.hex))))
-    }.toMap
-
-  /** Materialize df (one row per key, columns already canonical-ordered)
-    * into the store; returns the stored TableMeta. */
   /** ONE-pass row count + split-key sample over the persisted
     * materialization input (replaces the former count-then-collect job
     * pair — one fewer full pass over the data, which at 100 TB is a
@@ -493,7 +484,7 @@ object Canonical {
           val kb = r.getAs[Array[Byte]](kbIdx)
           val h = boundaryHash(kb)
           if (crit(h, sub)) {
-            buf += (((if (gIdx >= 0) r.getString(gIdx) else ""), kb, h))
+            buf += (((if (gIdx >= 0) r.getString(gIdx) else Ungrouped), kb, h))
             if (buf.length > localCap) {
               sub *= 2
               val kept = buf.filter(t => crit(t._3, sub)).toArray
@@ -515,169 +506,216 @@ object Canonical {
     (nRows, keys)
   }
 
-  /** `rowBound`: caller-known upper bound on the input row count (from
+  /** The group key of an ungrouped materialization's one table. */
+  val Ungrouped = ""
+
+  /** Materialize df (one row per key, per group) into the store: THE
+    * canonical chunk writer. Every group value of `groupCol` becomes its
+    * own canonical table in one pass (one write job for ALL groups) —
+    * the chunk-level incremental transform materializes each source
+    * chunk's transformed rows as an independent memoizable sub-table
+    * this way (the per-subtree results of messdb's `sortNode`, in
+    * MessDB/Trie.hs). Without a
+    * group column the whole input is the one group [[Ungrouped]], whose
+    * table is saved and returned even when the input is empty. Returns
+    * group → stored TableMeta.
+    *
+    * `rowBound`: caller-known upper bound on the input row count (from
     * chunk metadata — merges, transforms, and patches know it; bulk
     * ingest does not). Materializations provably SMALL
     * ([[smallJob]]) skip the split-sample job, the input persist, and
-    * run width-1 — for a statement flow of metadata-sized jobs this
+    * run narrow — for a statement flow of metadata-sized jobs this
     * halves the per-materialization job count and strips the fixed
-    * shuffle overhead. Splits and widths only shape tasks: chunk
-    * content is a pure function of the key set, so hashes are
-    * identical either way. */
+    * shuffle overhead. `byteBound`: the input's observed compressed
+    * size, when it is known chunk files. `rowProbe` / `probeFold`: the
+    * optimistic driver-route bets for unknown output sizes (below).
+    * Routes, splits and widths only shape tasks: chunk content is a
+    * pure function of the key set, so hashes are identical either way. */
   def materialize(spark: SparkSession, store: GraftStore, df0: DataFrame,
       keyCols: Seq[String], chunkTargetRows: Long,
+      groupCol: Option[String] = None,
       rowBound: Option[Long] = None,
       byteBound: Option[Long] = None,
       rowProbe: Option[Long] = None,
-      probeFold: Boolean = false): TableMeta = {
+      probeFold: Boolean = false): Map[String, TableMeta] = {
     require(keyCols.nonEmpty, "key columns required")
-    val cols = canonicalColumns(df0.schema, keyCols)
+    val cols = canonicalColumns(
+      StructType(df0.schema.filterNot(f => groupCol.contains(f.name))), keyCols)
     // strip inherited column metadata: projections built over chunk
     // reads carry the SOURCE table's positional field ids, which are
     // stale for this OUTPUT's positions — the hash-pass read below must
     // match the tmp files by name, never by a stale id
-    val df = df0.select(cols.map(c => col(c).as(c, Metadata.empty)): _*)
-    val schemaJson = normalizeSchema(df.schema, keyCols).json
+    val df = df0.select(
+      cols.map(c => col(c).as(c, Metadata.empty)) ++ groupCol.map(col): _*)
+    val dataSchema = StructType(df.schema.filterNot(f => groupCol.contains(f.name)))
+    val schemaJson = normalizeSchema(dataSchema, keyCols).json
+    // grouped materializations label their jobs apart ("graft:write-g")
+    val label = if (groupCol.isDefined) "-g" else ""
+    def driverWrite(rows: Array[Row], kbSchema: StructType) =
+      driverMaterialize(store, rows, kbSchema, dataSchema, schemaJson,
+        groupCol, keyCols, chunkTargetRows)
 
     val small = smallJob(rowBound, chunkTargetRows)
-    // observed-bytes admission — see materializeGrouped
+    // OBSERVED-bytes admission: when the caller knows the input's
+    // compressed size (it read known chunk files), a metadata-sized
+    // materialization takes the ONE-collect-job driver route even when
+    // the row count is above the one-task smallJob rule — at scale the
+    // same statement exceeds the byte budget and runs the job path.
     val bytesOk = byteBound.exists(_ <= Ops.DriverPatchMaxBytes) &&
       rowBound.exists(_ <= Ops.DriverPatchHardRowCap) &&
-      driverMaterializeEnabled && DriverChunks.supported(df.schema)
-    // ZERO-JOB branch (mirrors materializeGrouped's): a driver-admitted
-    // input whose plan folded to a LocalRelation (the driver-read range
-    // edge rewrite, a small CTAS over driver-resident rows) collects
-    // without any job; key bytes encode on the driver with the same
-    // KeyCodec arithmetic the mapPartitions encoder applies.
-    if (bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, df.schema))
-      if (df.queryExecution.analyzed.collectLeaves().forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
-          df.queryExecution.optimizedPlan
-            .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-        try {
-          val norm = normalizeSchema(df.schema, keyCols)
-          val enc = KeyCodec.rowEncoder(norm, keyCols)
-          val kbSchema = norm.add(StructField(KB, BinaryType, nullable = false))
-          // same null-key contract as withKeyBytes: raise clearly rather
-          // than letting KeyCodec silently encode a null key as 0x00
-          val keyIdx = keyCols.map(norm.fieldIndex)
-          val rows: Array[Row] =
-            df.collect().map { r =>
-              keyIdx.foreach { i =>
-                if (r.isNullAt(i)) throw new IllegalArgumentException(
-                  s"null key in key column '${norm.fieldNames(i)}' — key columns are non-nullable")
-              }
-              Row.fromSeq(r.toSeq :+ enc(r))
-            }
-          val got = driverMaterializeRows(store, rows, kbSchema, df.schema,
-            schemaJson, keyCols, chunkTargetRows)
-          got.foreach(return _)
-        } catch {
-          // a null key is USER error, not a driver-route infrastructure
-          // failure: propagate it directly instead of falling back to a
-          // job that would only re-raise the same error from a task
-          case e: IllegalArgumentException
-              if e.getMessage != null &&
-                e.getMessage.startsWith("null key in key column") =>
-            throw e
-          case scala.util.control.NonFatal(e) =>
-            Ops.warnDriverPatchFallback(e)
-        }
+      driverMaterializeEnabled && DriverChunks.supported(dataSchema)
+    val driverOk =
+      bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, dataSchema)
+    // ZERO-JOB route: a driver-admitted input whose plan FOLDED to a
+    // LocalRelation (ConvertToLocalRelation consumes deterministic
+    // Project/Filter over driver-resident rows — the per-chunk
+    // transform's driver-read source, the driver-read range edge
+    // rewrite and a small CTAS take exactly this shape) collects without
+    // any job, and the key bytes encode on the driver with the same
+    // arithmetic the withKeyBytes encoder applies — the kbDf plan below
+    // can never fold (typed mapPartitions), so going through it costs a
+    // parallelize-and-scan job for rows we already hold. The leaf
+    // pre-check on the ANALYZED plan (computed anyway for the
+    // transplant) keeps the extra optimizer pass off non-local inputs.
+    if (driverOk &&
+        df.queryExecution.analyzed.collectLeaves().forall(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
+        df.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
+      try {
+        val schema = normalizeSchema(df.schema, keyCols)
+        val rows = df.collect().map(keyBytesAppender(schema, keyCols))
+        driverWrite(rows, schema.add(StructField(KB, BinaryType, nullable = false)))
+          .foreach(return _)
+      } catch {
+        // a null key is USER error, not a driver-route infrastructure
+        // failure: propagate it directly instead of falling back to a
+        // job that would only re-raise the same error from a task
+        case e: IllegalArgumentException
+            if e.getMessage != null && e.getMessage.startsWith(NullKeyError) =>
+          throw e
+        case scala.util.control.NonFatal(e) =>
+          Ops.warnDriverPatchFallback(e)
       }
+    }
     val kbDf0 = withKeyBytes(df, keyCols)
+    // no persist when a driver route will be attempted: its one collect
+    // is the only read (a rare fallback recomputes — the cheap branch)
     val kbDf = if (small || bytesOk) kbDf0
       else kbDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, df.schema)) {
+    if (driverOk) {
+      // DRIVER route: one collect for ALL groups (none for a row bound
+      // of 0, which asserts the input is empty), then per-group
+      // sort/split/write on the driver; any surprise falls through
       val (es, ekb) = onEngine(spark, kbDf, smallShuffle = true,
-        interpretedOk = interpretedCollectOk(rowBound, df.schema))
-      val got = driverMaterialize(es, store, ekb, df.schema, schemaJson,
-        keyCols, chunkTargetRows, rowBound.get)
-      got.foreach(return _)
+        interpretedOk = interpretedCollectOk(rowBound, dataSchema))
+      val rows: Option[Array[Row]] =
+        if (rowBound.contains(0L)) Some(Array.empty)
+        else try Some(withJobDesc(es, s"graft:collect$label")(ekb.collect()))
+        catch { case scala.util.control.NonFatal(e) =>
+          Ops.warnDriverPatchFallback(e); None }
+      rows.flatMap(driverWrite(_, kbDf.schema)).foreach(return _)
     } else if (rowBound.isEmpty && driverMaterializeEnabled &&
         (probeFold || smallJob(rowProbe, chunkTargetRows)) &&
-        DriverChunks.supported(df.schema)) {
-      // OPTIMISTIC probe (generator size gating) — same bet as the
-      // grouped variant: the output size is unknown (a generator fans
-      // 1→N) but the INPUT is tiny, so try ONE limit-guarded collect
-      // job; over the cap, the bet is off and the job path below
-      // recomputes. This is what lets a small-corpus generator INDEX
-      // BUILD (the full shingle index, not just its minis) run as one
-      // collect + driver-side chunk writes instead of a sample +
-      // multi-file write job pair. (Probe conf — one-job limit — lives
-      // on the engine clone, see GraftBridge.engineSession.)
-      // `probeFold` is the caller's OPPOSITE-direction bet: the input
-      // is a grouped FOLD whose output collapses to the group count
-      // (a retraction's net delta at result granularity — VERDICT r13
-      // #3: the sample + write job pair cost ~570 ms for a 512-row
-      // delta). Over the cap, the same bounded fallback applies.
-      val cap = Ops.adaptiveRowCap(df.schema, Ops.DriverPatchMaxRows)
+        DriverChunks.supported(dataSchema)) {
+      // OPTIMISTIC probe (generator size gating): the output size is
+      // unknown — a generator can fan 1→N — but the INPUT is tiny
+      // (`rowProbe` = source rows, under the small-job rule), so bet the
+      // output fits the driver cap: ONE limit-guarded collect job; over
+      // the cap, the bet is off and the job path below recomputes
+      // (bounded waste, rare by construction). This is what lets a
+      // small-corpus generator INDEX BUILD and the delta minis of a
+      // point ingest run as one collect + driver-side chunk writes
+      // instead of a sample + multi-file write job pair. (Probe conf —
+      // one-job limit — lives on the engine clone, see
+      // GraftBridge.engineSession.) `probeFold` is the caller's
+      // OPPOSITE-direction bet: the input is a grouped FOLD whose output
+      // collapses to the group count (a retraction's net delta at result
+      // granularity — VERDICT r13 #3: the sample + write job pair cost
+      // ~570 ms for a 512-row delta). Over the cap, the same bounded
+      // fallback applies.
+      val cap = Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)
       val probed: Option[Array[Row]] =
-        try Some(withJobDesc(spark, "graft:probe") {
+        try Some(withJobDesc(spark, s"graft:probe$label") {
           val (_, ekb) =
             onEngine(spark, kbDf, smallShuffle = true, interpretedOk = false)
           ekb.limit(cap.toInt + 1).collect()
         })
         catch { case scala.util.control.NonFatal(e) =>
           Ops.warnDriverPatchFallback(e); None }
-      probed.filter(_.length <= cap).foreach { rs =>
-        val got = driverMaterializeRows(store, rs, kbDf.schema, df.schema,
-          schemaJson, keyCols, chunkTargetRows)
-        got.foreach(return _)
-      }
+      probed.filter(_.length <= cap)
+        .foreach(rs => driverWrite(rs, kbDf.schema).foreach(return _))
     }
     try {
       val (es, ekb) = onEngine(spark, kbDf)
-      // 1. range SPLITS: an intrinsic subsample of the boundary keys.
-      //    hash(kb) % (target·sub) == 0 implies hash(kb) % target == 0,
-      //    so every split is a boundary key and chunk intervals nest
-      //    inside split intervals. The driver holds only O(4·nPart)
-      //    split keys — never the full boundary list (which is
-      //    O(rows/target) and was the 100 TB driver-memory ceiling).
-      //    Small jobs skip the pass: no splits, one write task.
+      // 1. range SPLITS: an intrinsic subsample of the (group, boundary
+      //    key) pairs. hash(kb) % (target·sub) == 0 implies
+      //    hash(kb) % target == 0, so every split is a boundary key and
+      //    chunk intervals nest inside split intervals. The driver holds
+      //    only O(4·nPart) split keys — never the full boundary lists
+      //    (which are O(rows/target) and were the 100 TB driver-memory
+      //    ceiling). Small jobs skip the pass: no splits, narrow tasks.
       val target = chunkTargetRows
-      val nPart =
-        if (small) 1 else es.sessionState.conf.numShufflePartitions
+      val nShuffle = es.sessionState.conf.numShufflePartitions
+      val nPart = if (small) 1 else nShuffle
       // one fused pass: row count + subsampled split keys (also
       // materializes the persisted frame for the write pass below)
       val sampled =
         if (small) Array.empty[(String, Array[Byte])]
-        else withJobDesc(spark, "graft:sample")(
-          sampleSplits(ekb, None, target, nPart)._2)
-      val splits: Array[Array[Byte]] = sampled.map(_._2)
-        .sortWith(Hashing.compareBytes(_, _) < 0)
+        else withJobDesc(spark, s"graft:sample$label")(
+          sampleSplits(ekb, groupCol, target, nPart)._2)
+      val splits: Map[String, Array[Array[Byte]]] = sampled
+        .groupBy(_._1)
+        .map { case (g, pairs) =>
+          g -> pairs.map(_._2).sortWith(Hashing.compareBytes(_, _) < 0)
+        }
       val bcS = es.sparkContext.broadcast(splits)
 
-      // 2. partition id = split interval of the key. Hash-shuffling on it
-      //    sends each interval to exactly one task; a split key is a
-      //    boundary key AND a present row, so every interval (except the
-      //    leading "head") STARTS with a boundary row and no chunk ever
-      //    crosses a task — each chunk becomes exactly one file below.
-      //    Small jobs coalesce instead: no exchange at all, one task.
-      val partIdUdf = udf { (kb: Array[Byte]) => boundaryIndex(bcS.value, kb) }
-
+      // 2. partition id = split interval of the key within its group.
+      //    Hash-shuffling on (group, id) sends each interval to exactly
+      //    one task; a split key is a boundary key AND a present row, so
+      //    every interval (except the leading "head") STARTS with a
+      //    boundary row and no chunk ever crosses a task — each chunk
+      //    becomes exactly one file below.
+      val partIdUdf = udf { (g: String, kb: Array[Byte]) =>
+        boundaryIndex(bcS.value.getOrElse(g, Array.empty[Array[Byte]]), kb)
+      }
+      val groupCols = groupCol.toSeq.map(col)
       val tmpDir = Files.createTempDirectory("graft-canon-").toString
-      val parted0 = ekb.withColumn(PART, partIdUdf(col(KB)))
-      val parted = (if (small) parted0.coalesce(1)
-        else parted0.repartition(nPart, col(PART)))
-        .sortWithinPartitions(col(PART), col(KB))
+      val parted0 = ekb.withColumn(PART,
+        partIdUdf(groupCols.headOption.getOrElse(lit(Ungrouped)), col(KB)))
+      val parted = (groupCol match {
+          // small ungrouped jobs coalesce: no exchange at all, one task
+          case None if small => parted0.coalesce(1)
+          // small GROUPED jobs still parallelize across groups: hashing
+          // on the group column alone keeps every group inside one task
+          // (the 1-file-per-chunk invariant) while spreading the
+          // encode+write work — a per-chunk mini pass with dozens of
+          // groups was a single-threaded straggler under coalesce(1).
+          // Width capped low: the rows are small by definition, the win
+          // is concurrency of parquet writer setup, not data parallelism.
+          case Some(g) if small =>
+            parted0.repartition(math.min(nShuffle, SmallGroupedWidth), col(g))
+          case _ => parted0.repartition(nPart, groupCols :+ col(PART): _*)
+        }).sortWithinPartitions(groupCols ++ Seq(col(PART), col(KB)): _*)
       // 3. ONE fused write+digest job: the tagging pass streams each
-      //    task's rows in (interval, key) order — a boundary key opens a
-      //    new chunk — and computes the per-chunk canonical digest (and
-      //    zone maps) from each row's canonical bytes AS the row flows to
-      //    the parquet writer; finished digests reach the driver through
-      //    an accumulator. Chunk CONTENT stays a pure function of the key
-      //    set (tags only name temp dirs), the digested bytes are the
-      //    same rb stream the former read-back pass produced, and result
-      //    tasks report accumulator updates exactly once — so hashes are
-      //    unchanged while the former full re-read of every
-      //    materialization disappears.
+      //    task's rows in (group, interval, key) order — a (group,
+      //    interval) change or a boundary key opens a new chunk — and
+      //    computes the per-chunk canonical digest (and zone maps) from
+      //    each row's canonical bytes AS the row flows to the parquet
+      //    writer; finished digests reach the driver through an
+      //    accumulator. Chunk CONTENT stays a pure function of the key
+      //    set (tags only name temp dirs), and result tasks report
+      //    accumulator updates exactly once — so no read-back pass over
+      //    the written files is needed.
       val inSchema = parted.schema
       val kbI = inSchema.fieldIndex(KB)
       val pI = inSchema.fieldIndex(PART)
-      val rbEnc = KeyCodec.rowEncoderSliced(StructType(df.schema.fields), cols)
-      val statCols = statColumns(df.schema, keyCols)
+      val gI = groupCol.map(inSchema.fieldIndex).getOrElse(-1)
+      val rbEnc = KeyCodec.rowEncoderSliced(dataSchema, cols)
+      val statCols = statColumns(dataSchema, keyCols)
       val statPos = statCols.map(cols.indexOf).toArray
-      val statDts = statCols.map(df.schema(_).dataType).toArray
+      val statDts = statCols.map(dataSchema(_).dataType).toArray
       val dataIdx = cols.map(inSchema.fieldIndex)
       val acc = es.sparkContext
         .collectionAccumulator[FusedDigest]("graft-chunk-digests")
@@ -685,15 +723,20 @@ object Canonical {
         inSchema.add(StructField(CHUNK, StringType, nullable = false)))
       val tagged = parted.mapPartitions { base =>
         val st = new DigestState(statCols, statPos, statDts)
-        var curP = -1; var ord = -1; var tag = ""; var open = false
-        def flush(): Unit = if (open) { acc.add(st.result("", tag)); open = false }
+        var curG: String = null; var curP = -1; var ord = -1
+        var tag = ""; var open = false
+        def flush(): Unit =
+          if (open) { acc.add(st.result(curG, tag)); open = false }
         new Iterator[Row] {
           def hasNext: Boolean = { val h = base.hasNext; if (!h) flush(); h }
           def next(): Row = {
             val r = base.next()
+            val g = if (gI < 0) Ungrouped else r.getString(gI)
             val p = r.getInt(pI)
             val kb = r.getAs[Array[Byte]](kbI)
-            if (p != curP) { flush(); curP = p; ord = -1; tag = s"$p-head" }
+            if (g != curG || p != curP) {
+              flush(); curG = g; curP = p; ord = -1; tag = s"$p-head"
+            }
             if (isBoundaryKey(kb, target)) { flush(); ord += 1; tag = s"$p-$ord" }
             if (!open) { st.reset(); open = true }
             val proj = Row.fromSeq(dataIdx.map(i => r.get(i)))
@@ -706,41 +749,68 @@ object Canonical {
       // positional field ids with EXPLICIT metadata: inherited metadata
       // (e.g. stale ids riding a projection from a chunk read) must
       // never reach the files — the id IS the position in THIS schema
-      withJobDesc(spark, "graft:write") {
+      withJobDesc(spark, s"graft:write$label") {
         tagged.select(cols.zipWithIndex.map { case (c, i) =>
             col(c).as(c, new MetadataBuilder().putLong(FieldIdKey, i.toLong).build())
-          } :+ col(CHUNK): _*)
+          } ++ groupCols :+ col(CHUNK): _*)
           .write.mode("overwrite")
           // one file per chunk is a format invariant; don't let a session
           // maxRecordsPerFile split chunk files
           .option("maxRecordsPerFile", 0)
           .option("compression", store.chunkCodec)
-          .partitionBy(CHUNK).parquet(tmpDir)
+          .partitionBy(groupCol.toSeq :+ CHUNK: _*).parquet(tmpDir)
       }
 
-      // 4. commit chunk files into the content-addressed store — ONE
-      //    batched commit for the whole materialization (object-store
-      //    backends turn this into a single commit op, not N renames)
+      // 4. commit every group's chunk files into the content-addressed
+      //    store in ONE batch (object-store backends turn this into a
+      //    single commit op, not N renames)
       import scala.jdk.CollectionConverters._
       val batch = Vector.newBuilder[(String, java.nio.file.Path)]
-      val metas = acc.value.asScala.toArray.map { d =>
-        val dir = Paths.get(tmpDir, s"$CHUNK=${d.tag}")
-        val files = listFiles(dir).filter(_.toString.endsWith(".parquet"))
-        require(files.length == 1,
-          s"expected exactly one file per chunk, got ${files.length} for chunk ${d.tag}")
-        batch += ((d.hash, files.head))
-        ChunkMeta(d.hash, d.minKey, d.maxKey, d.rows, d.stats)
-      }.sortWith((a, b) => Hashing.compareBytes(a.minKey, b.minKey) < 0)
-      store.saveChunks(batch.result())
-
+      val chunks = acc.value.asScala.toSeq.groupBy(_.group).map { case (g, ds) =>
+        val dir = groupCol.fold(Paths.get(tmpDir)) { gc =>
+          // group values become partition directory names; only accept
+          // characters Spark's path escaping leaves untouched so the
+          // constructed read-back path cannot diverge (all callers pass
+          // hex hashes; richer values need escapePathName-aware listing)
+          require(g.matches("[A-Za-z0-9_-]+"), s"group value '$g' is not path-safe")
+          Paths.get(tmpDir, s"$gc=$g")
+        }
+        g -> ds.map { d =>
+          val files = listFiles(dir.resolve(s"$CHUNK=${d.tag}"))
+            .filter(_.toString.endsWith(".parquet"))
+          require(files.length == 1,
+            s"expected exactly one file per chunk, got ${files.length} for chunk ($g, ${d.tag})")
+          batch += ((d.hash, files.head))
+          ChunkMeta(d.hash, d.minKey, d.maxKey, d.rows, d.stats)
+        }
+      }
+      val out = commit(store, groupCol.isDefined, schemaJson, keyCols, target,
+        chunks, batch.result())
       deleteRecursively(Paths.get(tmpDir))
-      val meta = TableMeta(schemaJson, keyCols, chunkTargetRows, metas.toSeq)
-      store.saveTableMeta(meta)
-      meta
+      out
     } finally {
       if (!small) kbDf.unpersist()
       ()
     }
+  }
+
+  /** Store one materialization: ALL its chunk files in one batched
+    * commit, then the per-group metas (a meta must never be readable
+    * before its chunks are durable). An ungrouped materialization always
+    * yields its [[Ungrouped]] table, empty or not. */
+  private def commit(store: GraftStore, grouped: Boolean, schemaJson: String,
+      keyCols: Seq[String], target: Long,
+      chunks: Map[String, Seq[ChunkMeta]],
+      batch: Seq[(String, java.nio.file.Path)]): Map[String, TableMeta] = {
+    val groups =
+      if (grouped) chunks else Map(Ungrouped -> chunks.getOrElse(Ungrouped, Nil))
+    val out = groups.map { case (g, cs) =>
+      g -> TableMeta(schemaJson, keyCols, target,
+        cs.sortWith((a, b) => Hashing.compareBytes(a.minKey, b.minKey) < 0))
+    }
+    store.saveChunks(batch)
+    out.values.foreach(store.saveTableMeta)
+    out
   }
 
   /** Engine-internal actions run with AQE disabled: every
@@ -821,231 +891,6 @@ object Canonical {
   private[core] val SmallGroupedWidth = 8
   private[core] def smallJob(rowBound: Option[Long], target: Long): Boolean =
     rowBound.exists(_ <= math.max(2 * target, SmallJobRows))
-
-  /** Grouped materialization: like [[materialize]], but the input carries
-    * a group column and every group becomes its own canonical table in
-    * one pass (one write job + one hash job for ALL groups). Used by the
-    * chunk-level incremental transform, where each source chunk's
-    * transformed rows are materialized as an independent memoizable
-    * sub-table (the per-subtree results of sortNode,
-    * /root/reference/messdb-base/src/MessDB/Trie.hs:467-470). */
-  def materializeGrouped(spark: SparkSession, store: GraftStore,
-      df0: DataFrame, groupCol: String, keyCols: Seq[String],
-      chunkTargetRows: Long,
-      rowBound: Option[Long] = None,
-      rowProbe: Option[Long] = None,
-      byteBound: Option[Long] = None): Map[String, TableMeta] = {
-    val cols = canonicalColumns(
-      StructType(df0.schema.filterNot(_.name == groupCol)), keyCols)
-    // strip inherited metadata (stale field ids) — see materialize
-    val df = df0.select(cols.map(c => col(c).as(c, Metadata.empty)) :+
-      col(groupCol): _*)
-    val dataSchema = StructType(df.schema.filterNot(_.name == groupCol))
-    val schemaJson = normalizeSchema(dataSchema, keyCols).json
-
-    val small = smallJob(rowBound, chunkTargetRows)
-    // OBSERVED-bytes admission: when the caller knows the input's
-    // compressed size (it read known chunk files), a metadata-sized
-    // materialization takes the ONE-collect-job driver route even when
-    // the row count is above the one-task smallJob rule — at scale the
-    // same statement exceeds the byte budget and runs the job path.
-    val bytesOk = byteBound.exists(_ <= Ops.DriverPatchMaxBytes) &&
-      rowBound.exists(_ <= Ops.DriverPatchHardRowCap) &&
-      driverMaterializeEnabled && DriverChunks.supported(dataSchema)
-    // ZERO-JOB route: a driver-admitted input whose plan FOLDED to a
-    // LocalRelation (ConvertToLocalRelation consumes deterministic
-    // Project/Filter over driver-resident rows — the per-chunk
-    // transform's driver-read source takes exactly this shape) collects
-    // without any job, and the key bytes encode on the driver with the
-    // same KeyCodec arithmetic the mapPartitions encoder applies — the
-    // kbDf plan below can never fold (typed mapPartitions), so going
-    // through it costs a parallelize-and-scan job for rows we already
-    // hold. Any surprise (incl. the null-key guard, raised cleanly by
-    // the standard path) falls through.
-    if (bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, dataSchema))
-      // leaf pre-check on the ANALYZED plan (computed anyway for the
-      // transplant) keeps the extra optimizer pass off non-local
-      // driver-route inputs — only all-local-leaf plans can fold
-      if (df.queryExecution.analyzed.collectLeaves().forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
-          df.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-        try {
-          val enc = KeyCodec.rowEncoder(normalizeSchema(dataSchema, keyCols), keyCols)
-          val gIdx = df.schema.fieldIndex(groupCol)
-          val dIdx = dataSchema.fieldNames.map(df.schema.fieldIndex)
-          val kbSchema = normalizeSchema(dataSchema, keyCols)
-            .add(StructField(groupCol, StringType))
-            .add(StructField(KB, BinaryType, nullable = false))
-          val rows: Array[Row] = df.collect().map { r =>
-            val data = Row.fromSeq(dIdx.map(i => r.get(i)).toSeq)
-            Row.fromSeq(data.toSeq :+ r.getString(gIdx) :+ enc(data))
-          }
-          val got = driverMaterializeGroupedRows(spark, store, rows, kbSchema,
-            dataSchema, schemaJson, groupCol, keyCols, chunkTargetRows)
-          got.foreach(return _)
-        } catch { case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e) }
-      }
-    val kbDf0 = withKeyBytesKeeping(df, keyCols, groupCol)
-    // no persist when a driver route will be attempted: its one collect
-    // is the only read (a rare fallback recomputes — the cheap branch)
-    val kbDf = if (small || bytesOk) kbDf0
-      else kbDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, dataSchema)) {
-      val (es, ekb) = onEngine(spark, kbDf, smallShuffle = true,
-        interpretedOk = interpretedCollectOk(rowBound, dataSchema))
-      val got = driverMaterializeGrouped(es, store, ekb, dataSchema,
-        schemaJson, groupCol, keyCols, chunkTargetRows, rowBound.get)
-      got.foreach(return _)
-    } else if (rowBound.isEmpty && driverMaterializeEnabled &&
-        smallJob(rowProbe, chunkTargetRows) &&
-        DriverChunks.supported(dataSchema)) {
-      // OPTIMISTIC probe (generator-transform size gating): the output
-      // size is unknown — a generator can fan 1→N — but the INPUT is
-      // tiny (`rowProbe` = source rows, under the small-job rule), so
-      // bet the output fits the driver cap: ONE limit-guarded collect
-      // job; over the cap, the bet is off and the standard path below
-      // recomputes (bounded waste, rare by construction). Probe conf
-      // (one-job limit: all partitions in the first pass, not
-      // incremental-limit's partition doubling) rides the thread-local
-      // driver-route override.
-      val cap = Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)
-      val probed: Option[Array[Row]] =
-        try Some(withJobDesc(spark, "graft:probe-g") {
-          val (_, ekb) =
-            onEngine(spark, kbDf, smallShuffle = true, interpretedOk = false)
-          ekb.limit(cap.toInt + 1).collect()
-        })
-        catch { case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e); None }
-      probed.filter(_.length <= cap).foreach { rs =>
-        val got = driverMaterializeGroupedRows(spark, store, rs, kbDf.schema,
-          dataSchema, schemaJson, groupCol, keyCols, chunkTargetRows)
-        got.foreach(return _)
-      }
-    }
-    try {
-      val (es, ekb) = onEngine(spark, kbDf)
-      // same fused one-pass sampled-split scheme as [[materialize]],
-      // compounded with the group: the driver holds an
-      // O(shuffle-partitions) subsample of (group, boundary-key) pairs,
-      // never the full per-group boundary lists. Chunk membership is
-      // derived locally per task. Small jobs skip the pass (see
-      // materialize).
-      val target = chunkTargetRows
-      val nPart =
-        if (small) 1 else es.sessionState.conf.numShufflePartitions
-      val sampled =
-        if (small) Array.empty[(String, Array[Byte])]
-        else withJobDesc(spark, "graft:sample-g")(
-          sampleSplits(ekb, Some(groupCol), target, nPart)._2)
-      val splits: Map[String, Array[Array[Byte]]] = sampled
-        .groupBy(_._1)
-        .map { case (g, pairs) =>
-          g -> pairs.map(_._2).sortWith(Hashing.compareBytes(_, _) < 0)
-        }
-      val bcS = es.sparkContext.broadcast(splits)
-      val partIdUdf = udf { (g: String, kb: Array[Byte]) =>
-        boundaryIndex(bcS.value.getOrElse(g, Array.empty[Array[Byte]]), kb)
-      }
-
-      val tmpDir = Files.createTempDirectory("graft-canon-g-").toString
-      val parted0 = ekb.withColumn(PART, partIdUdf(col(groupCol), col(KB)))
-      // small GROUPED jobs still parallelize across groups: hashing on
-      // the group column alone keeps every group inside one task (the
-      // 1-file-per-chunk invariant) while spreading the encode+write
-      // work — a per-chunk mini pass with dozens of groups was a
-      // single-threaded straggler under coalesce(1). Width capped low:
-      // the rows are small by definition, the win is concurrency of
-      // parquet writer setup, not data parallelism.
-      val parted = (if (small)
-          parted0.repartition(
-            math.min(es.sessionState.conf.numShufflePartitions,
-              SmallGroupedWidth), col(groupCol))
-        else parted0.repartition(nPart, col(groupCol), col(PART)))
-        .sortWithinPartitions(col(groupCol), col(PART), col(KB))
-      // fused write+digest job, exactly as in [[materialize]] but with
-      // the group in the chunk scope: a (group, interval) change or a
-      // boundary key closes the running digest
-      val inSchema = parted.schema
-      val kbI = inSchema.fieldIndex(KB)
-      val pI = inSchema.fieldIndex(PART)
-      val gI = inSchema.fieldIndex(groupCol)
-      val rbEnc = KeyCodec.rowEncoderSliced(dataSchema, cols)
-      val statCols = statColumns(dataSchema, keyCols)
-      val statPos = statCols.map(cols.indexOf).toArray
-      val statDts = statCols.map(dataSchema(_).dataType).toArray
-      val dataIdx = cols.map(inSchema.fieldIndex)
-      val acc = es.sparkContext
-        .collectionAccumulator[FusedDigest]("graft-chunk-digests")
-      val tagEnc = RowEncoder.encoderFor(
-        inSchema.add(StructField(CHUNK, StringType, nullable = false)))
-      val tagged = parted.mapPartitions { base =>
-        val st = new DigestState(statCols, statPos, statDts)
-        var curG: String = null; var curP = -1; var ord = -1
-        var tag = ""; var open = false
-        def flush(): Unit =
-          if (open) { acc.add(st.result(curG, tag)); open = false }
-        new Iterator[Row] {
-          def hasNext: Boolean = { val h = base.hasNext; if (!h) flush(); h }
-          def next(): Row = {
-            val r = base.next()
-            val g = r.getString(gI); val p = r.getInt(pI)
-            val kb = r.getAs[Array[Byte]](kbI)
-            if (g != curG || p != curP) {
-              flush(); curG = g; curP = p; ord = -1; tag = s"$p-head"
-            }
-            if (isBoundaryKey(kb, target)) { flush(); ord += 1; tag = s"$p-$ord" }
-            if (!open) { st.reset(); open = true }
-            val proj = Row.fromSeq(dataIdx.map(i => r.get(i)))
-            val (rb, ends) = rbEnc(proj)
-            st.update(kb, rb, ends)
-            Row.fromSeq(r.toSeq :+ tag)
-          }
-        }
-      }(tagEnc)
-      // positional field ids, explicit metadata (see materialize)
-      withJobDesc(spark, "graft:write-g") {
-        tagged.select(cols.zipWithIndex.map { case (c, i) =>
-            col(c).as(c, new MetadataBuilder().putLong(FieldIdKey, i.toLong).build())
-          } ++ Seq(col(groupCol), col(CHUNK)): _*)
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 0) // format invariant: 1 file/chunk
-          .option("compression", store.chunkCodec)
-          .partitionBy(groupCol, CHUNK).parquet(tmpDir)
-      }
-
-      import scala.jdk.CollectionConverters._
-      val batch = Vector.newBuilder[(String, java.nio.file.Path)]
-      val out = acc.value.asScala.toArray.groupBy(_.group).map { case (g, ds) =>
-        // group values become partition directory names; only accept
-        // characters Spark's path escaping leaves untouched so the
-        // constructed read-back path cannot diverge (all callers pass
-        // hex hashes; richer values need escapePathName-aware listing)
-        require(g.matches("[A-Za-z0-9_-]+"),
-          s"group value '$g' is not path-safe")
-        val metas = ds.map { d =>
-          val dir = Paths.get(tmpDir, s"$groupCol=$g", s"$CHUNK=${d.tag}")
-          val files = listFiles(dir).filter(_.toString.endsWith(".parquet"))
-          require(files.length == 1, s"expected 1 file for ($g, ${d.tag})")
-          batch += ((d.hash, files.head))
-          ChunkMeta(d.hash, d.minKey, d.maxKey, d.rows, d.stats)
-        }.sortWith((a, b) => Hashing.compareBytes(a.minKey, b.minKey) < 0)
-        val meta = TableMeta(schemaJson, keyCols, chunkTargetRows, metas.toSeq)
-        g -> meta
-      }
-      // one batched chunk commit for ALL groups, then the metas (a meta
-      // must never be readable before its chunks are durable)
-      store.saveChunks(batch.result())
-      out.values.foreach(store.saveTableMeta)
-      deleteRecursively(Paths.get(tmpDir))
-      out
-    } finally {
-      if (!small) kbDf.unpersist()
-      ()
-    }
-  }
 
   /** Driver-side canonical chunk writer: splits key-sorted rows at
     * boundary keys (first segment = the run head), digests each chunk
@@ -1147,120 +992,39 @@ object Canonical {
         Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)) &&
       DriverChunks.supported(dataSchema)
 
-  /** Driver route of [[materialize]]: collect the (data ++ kb) rows,
-    * sort by key bytes, split at boundary keys, write chunks driver-side.
-    * None — caller falls through to the Spark route — on any surprise. */
-  private def driverMaterialize(spark: SparkSession, store: GraftStore,
-      kbDf: DataFrame, dataSchema0: StructType, schemaJson: String,
-      keyCols: Seq[String], target: Long,
-      rowBound: Long): Option[TableMeta] =
+  /** Driver route of [[materialize]] over collected (data [++ group] ++
+    * kb) rows: per group, sort by key bytes and hand the run to a
+    * [[DriverRunWriter]] (groups write concurrently), then one
+    * [[commit]]. None — the caller falls through to the job route — on
+    * any surprise. */
+  private def driverMaterialize(store: GraftStore, rows: Array[Row],
+      kbSchema: StructType, dataSchema: StructType, schemaJson: String,
+      groupCol: Option[String], keyCols: Seq[String],
+      target: Long): Option[Map[String, TableMeta]] =
     try {
-      // a row bound of 0 asserts the input is empty — no job at all
-      val rows: Array[Row] =
-        if (rowBound == 0L) Array.empty
-        else withJobDesc(spark, "graft:collect")(kbDf.collect())
-      driverMaterializeRows(store, rows, kbDf.schema, dataSchema0,
-        schemaJson, keyCols, target)
-    } catch { case scala.util.control.NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
-
-  /** [[driverMaterialize]] over already-collected (data ++ kb) rows —
-    * shared by the known-bound route and the optimistic probe route. */
-  private def driverMaterializeRows(store: GraftStore, rows: Array[Row],
-      kbSchema: StructType, dataSchema0: StructType, schemaJson: String,
-      keyCols: Seq[String], target: Long): Option[TableMeta] =
-    try {
-      val schema = normalizeSchema(dataSchema0, keyCols)
+      val schema = normalizeSchema(dataSchema, keyCols)
+      val gIdx = groupCol.map(kbSchema.fieldIndex)
       val kbIdx = kbSchema.fieldIndex(KB)
       val n = schema.length
-      val pairs = rows.map(r =>
-          (Row.fromSeq(r.toSeq.take(n)), r.getAs[Array[Byte]](kbIdx)))
-      java.util.Arrays.sort(pairs,
-        (a: (Row, Array[Byte]), b: (Row, Array[Byte])) =>
-          Hashing.compareBytes(a._2, b._2))
       val tmp = Files.createTempDirectory("graft-driver-mat-")
       try {
         val batch = Vector.newBuilder[(String, java.nio.file.Path)]
         val w = new DriverRunWriter(schema, keyCols, target,
           store.chunkCodec, tmp, batch)
-        val metas = w.writeRun(pairs.toSeq)
-        store.saveChunks(batch.result())
-        val meta = TableMeta(schemaJson, keyCols, target, metas)
-        store.saveTableMeta(meta)
-        Some(meta)
-      } finally deleteRecursively(tmp)
-    } catch { case scala.util.control.NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
-
-  /** Driver route of [[materializeGrouped]]: one collect for ALL groups,
-    * then per-group sort/split/write on the driver. */
-  private def driverMaterializeGrouped(spark: SparkSession,
-      store: GraftStore, kbDf: DataFrame, dataSchema: StructType,
-      schemaJson: String, groupCol: String, keyCols: Seq[String],
-      target: Long, rowBound: Long): Option[Map[String, TableMeta]] = {
-    val rows: Array[Row] =
-      if (rowBound == 0L) Array.empty
-      else
-        try withJobDesc(spark, "graft:collect-g")(kbDf.collect())
-        catch { case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e); return None }
-    driverMaterializeGroupedRows(spark, store, rows, kbDf.schema,
-      dataSchema, schemaJson, groupCol, keyCols, target)
-  }
-
-  /** [[driverMaterializeGrouped]] over already-collected (data ++ group
-    * ++ kb) rows — shared by the known-bound route and the optimistic
-    * probe route. */
-  private def driverMaterializeGroupedRows(spark: SparkSession,
-      store: GraftStore, rows: Array[Row],
-      kbSchema: StructType, dataSchema: StructType,
-      schemaJson: String, groupCol: String, keyCols: Seq[String],
-      target: Long): Option[Map[String, TableMeta]] =
-    try {
-      val schema = normalizeSchema(dataSchema, keyCols)
-      val gIdx = kbSchema.fieldIndex(groupCol)
-      val kbIdx = kbSchema.fieldIndex(KB)
-      val n = schema.length
-      val tmp = Files.createTempDirectory("graft-driver-mat-g-")
-      try {
-        val batch = Vector.newBuilder[(String, java.nio.file.Path)]
-        val w = new DriverRunWriter(schema, keyCols, target,
-          store.chunkCodec, tmp, batch)
-        val out = parIo(rows.groupBy(_.getString(gIdx)).toSeq) {
-          case (g, rs) =>
-            val pairs = rs.map(r =>
-              (Row.fromSeq(r.toSeq.take(n)), r.getAs[Array[Byte]](kbIdx)))
-            java.util.Arrays.sort(pairs,
-              (a: (Row, Array[Byte]), b: (Row, Array[Byte])) =>
-                Hashing.compareBytes(a._2, b._2))
-            val metas = w.writeRun(pairs.toSeq)
-            g -> TableMeta(schemaJson, keyCols, target, metas)
+        val groups = rows.groupBy(r => gIdx.fold(Ungrouped)(r.getString))
+        val chunks = parIo(groups.toSeq) { case (g, rs) =>
+          val pairs = rs.map(r =>
+            (Row.fromSeq(r.toSeq.take(n)), r.getAs[Array[Byte]](kbIdx)))
+          java.util.Arrays.sort(pairs,
+            (a: (Row, Array[Byte]), b: (Row, Array[Byte])) =>
+              Hashing.compareBytes(a._2, b._2))
+          g -> w.writeRun(pairs.toSeq)
         }.toMap
-        store.saveChunks(batch.result())
-        out.values.foreach(store.saveTableMeta)
-        Some(out)
+        Some(commit(store, groupCol.isDefined, schemaJson, keyCols, target,
+          chunks, batch.result()))
       } finally deleteRecursively(tmp)
     } catch { case scala.util.control.NonFatal(e) =>
       Ops.warnDriverPatchFallback(e); None }
-
-  /** withKeyBytes preserving an extra column outside the canonical set. */
-  private[core] def withKeyBytesKeeping(df: DataFrame, keyCols: Seq[String],
-      keep: String): DataFrame = {
-    val dataSchema = StructType(df.schema.filterNot(_.name == keep))
-    val enc = KeyCodec.rowEncoder(normalizeSchema(dataSchema, keyCols), keyCols)
-    val keepIdx = df.schema.fieldIndex(keep)
-    val dataIdx = dataSchema.fieldNames.map(df.schema.fieldIndex)
-    val outSchema = normalizeSchema(dataSchema, keyCols)
-      .add(StructField(keep, StringType))
-      .add(StructField(KB, BinaryType, nullable = false))
-    val outEnc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val data = Row.fromSeq(dataIdx.map(i => r.get(i)).toSeq)
-        Row.fromSeq(data.toSeq :+ r.getString(keepIdx) :+ enc(data))
-      }
-    }(outEnc)
-  }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.exists(p)) {

@@ -104,7 +104,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
     val meta = Canonical.materialize(spark, store,
       castValues(folded, df.schema, valueCols), keyCols, chunkTargetRows,
-      rowBound = rb, byteBound = bb)
+      rowBound = rb, byteBound = bb)(Canonical.Ungrouped)
     TableRef(meta.tableHash)
   }
 
@@ -139,7 +139,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val df = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val meta = Canonical.materialize(spark, store, df, keyCols,
-      chunkTargetRows, rowBound = Some(0L))
+      chunkTargetRows, rowBound = Some(0L))(Canonical.Ungrouped)
     TableRef(meta.tableHash)
   }
 
@@ -337,7 +337,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         castValues(folded, schema, valueCols), keyCols, target,
         rowBound = Some(flatRows),
         byteBound = chunkBytes(refs.flatMap(r =>
-          store.chunkStream(r.hash)().toSeq)))
+          store.chunkStream(r.hash)().toSeq)))(Canonical.Ungrouped)
     }
 
     // ---- split spanning chunks into per-region pieces (memoized) ----
@@ -383,12 +383,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         }
         val src = scanChunkSubset(schemaJson, keyCols, target, toSplit)
           .withColumn(grp, fileToHash(input_file_name()))
-        val tagged = Canonical.withKeyBytesKeeping(src, keyCols, grp)
+        val tagged = Canonical.withKeyBytes(src, keyCols)
           .withColumn(grp,
             concat_ws("-", col(grp), pieceIdx(col(grp), col(Canonical.KB))))
           .drop(Canonical.KB)
-        Canonical.materializeGrouped(spark, store, tagged, grp, keyCols, target,
-          rowBound = Some(toSplit.map(_.rows).sum))
+        Canonical.materialize(spark, store, tagged, keyCols, target,
+          groupCol = Some(grp), rowBound = Some(toSplit.map(_.rows).sum))
           .map { case (g, m) =>
             val i = g.lastIndexOf('-')
             val h = g.substring(0, i)
@@ -490,15 +490,16 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // empty table below so refreshes reuse the death too
         val folded = dropDeadOn.map(l => folded0.where(col(l) =!= 0L))
           .getOrElse(folded0)
-        val subMetas = Canonical.materializeGrouped(spark, store,
-          castValues(folded, schema, valueCols), grp, keyCols, target,
+        val subMetas = Canonical.materialize(spark, store,
+          castValues(folded, schema, valueCols), keyCols, target,
+          groupCol = Some(grp),
           rowBound = Some(miss.flatMap(_._1).map(_._2.rows).sum),
           byteBound = chunkBytes(miss.flatMap(_._1).map(_._2)))
         subMetas.foreach { case (op, m) => store.memoPut(op, m.tableHash) }
         // an ABSENT region output is only legitimate on the retraction
         // path (every group in the region died under the liveness
         // filter); a PLAIN merge can never empty a region, so there a
-        // missing op is a materializeGrouped bug — memoizing it as the
+        // missing op is a materialize bug — memoizing it as the
         // empty table would turn that bug into silent permanent data
         // loss via the memo. Fail fast instead (the old behavior).
         if (dropDeadOn.isDefined)
@@ -677,8 +678,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         .drop(Canonical.KB)
       val folded = tagged.groupBy(col(grp) +: keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-      val subMetas = Canonical.materializeGrouped(spark, store,
-        castValues(folded, schema, valueCols), grp, keyCols, target,
+      val subMetas = Canonical.materialize(spark, store,
+        castValues(folded, schema, valueCols), keyCols, target,
+        groupCol = Some(grp),
         rowBound = Some(readRows),
         byteBound = chunkBytes(bySrc.valuesIterator.flatten.toSeq))
       // a region whose participants have no rows inside it (a spanning
@@ -755,7 +757,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(upserts.toSeq), m.schema)
       return Some(TableRef(Canonical.materialize(spark, store, df, m.keyCols,
-        m.chunkTargetRows, rowBound = Some(upserts.length.toLong)).tableHash))
+        m.chunkTargetRows, rowBound = Some(upserts.length.toLong))(
+        Canonical.Ungrouped).tableHash))
     }
     // owner chunk of a key: the run it belongs to under the boundary rule
     // — the last chunk starting at or before it (keys before the first
@@ -816,11 +819,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val isDead = udf { (kb: Array[Byte]) => bcDead.value(Hashing.hex(kb)) }
     val fileToRun = Canonical.fileTagUdf(spark, touched.iterator.map(i =>
       store.chunkPath(m.chunks(i).hash) -> runOfChunk(i)).toMap)
-    val kept = Canonical.withKeyBytesKeeping(
+    val kept = Canonical.withKeyBytes(
       scanChunkSubset(m.schemaJson, m.keyCols, m.chunkTargetRows,
           touched.iterator.map(i => m.chunks(i)).toSeq)
         .withColumn(grp, fileToRun(input_file_name())),
-      m.keyCols, grp)
+      m.keyCols)
       .where(!isDead(col(Canonical.KB)))
       .drop(Canonical.KB)
     // upsert rows are tagged with their owner's run on the driver (the
@@ -833,8 +836,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val upDf = spark.createDataFrame(
       spark.sparkContext.parallelize(upRows.toSeq), upSchema)
     val patched = kept.unionByName(upDf)
-    val runMetas: Map[String, TableMeta] = Canonical.materializeGrouped(
-      spark, store, patched, grp, m.keyCols, m.chunkTargetRows,
+    val runMetas: Map[String, TableMeta] = Canonical.materialize(
+      spark, store, patched, m.keyCols, m.chunkTargetRows,
+      groupCol = Some(grp),
       rowBound = Some(touched.iterator.map(i => m.chunks(i).rows).sum +
         upserts.length),
       byteBound = chunkBytes(touched.iterator.map(m.chunks(_)).toSeq))
@@ -858,10 +862,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   }
 
   /** Observed compressed size of `chunks` (file stats, no read) — the
-    * byte bound callers hand to [[Canonical.materialize]]/
-    * [[Canonical.materializeGrouped]] when the input is known chunk
-    * files. None on any stat surprise (callers then skip the
-    * byte-admitted driver route). */
+    * byte bound callers hand to [[Canonical.materialize]] when the
+    * input is known chunk files. None on any stat surprise (callers
+    * then skip the byte-admitted driver route). */
   private def chunkBytes(chunks: Seq[ChunkMeta]): Option[Long] =
     try Some(chunks.iterator.map(c => java.nio.file.Files.size(
       java.nio.file.Paths.get(store.chunkPath(c.hash)))).sum)
@@ -1055,8 +1058,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         val df = scanChunkSubset(schemaJson, keyCols, target,
             runList.flatten.map(i => chunks(i)))
           .withColumn(grp, fileToRun(input_file_name()))
-        val metas = Canonical.materializeGrouped(spark, store, df, grp,
-          keyCols, target, rowBound = Some(runRows))
+        val metas = Canonical.materialize(spark, store, df, keyCols, target,
+          groupCol = Some(grp), rowBound = Some(runRows))
         runList.map(idxs => idxs.head -> metas(s"r${idxs.head}").chunks).toMap
       }
     val rewritten = memoHit ++ memoize(rewritten0)
@@ -1255,7 +1258,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // rejects before any bet is placed)
       rowBound = if (t.generator || aggProbe) None else Some(srcRows),
       rowProbe = if (t.generator) Some(srcRows) else None,
-      probeFold = aggProbe).tableHash
+      probeFold = aggProbe)(Canonical.Ungrouped).tableHash
   }
 
   /** The incremental re-key path splits one fold into per-chunk partial
@@ -1427,8 +1430,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
         val casted = castValues(folded,
           StructType(projected.schema.filterNot(_.name == grp)), valueCols)
-        val metas = Canonical.materializeGrouped(spark, store, casted, grp,
+        val metas = Canonical.materialize(spark, store, casted,
           t.outKeyCols, target,
+          groupCol = Some(grp),
           rowBound = if (t.generator) None
             else Some(missing.map(_.rows).sum),
           // generator output size is unknown, but a tiny INPUT makes
@@ -1640,16 +1644,13 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       fold: FoldSpec, removed: Seq[ChunkMeta], added: Seq[ChunkMeta],
       prev: TableRef, pm: TableMeta): Option[Option[String]] = {
     import scala.util.control.NonFatal
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_DEBUG_DRIVER_PATCH"))
-        System.err.println(s"[src-diff-patch] $msg")
     // the transformed delta is re-diffed below, so structural equality
     // must also be safe on the RESULT schema
     if (!Ops.driverDiffable(pm.schema)) {
-      dbg("decline: result schema not driver-diffable"); return None
+      return None
     }
     try {
-      val (insSrc, delSrc) = sourceRowDelta(m, removed, added, dbg)
+      val (insSrc, delSrc) = sourceRowDelta(m, removed, added)
         .getOrElse(return None)
       // rows identical, chunks merely re-cut: the transform output is
       // unchanged by definition
@@ -1679,19 +1680,15 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // rebuild — the mini route caps its diff sides separately and can
       // still admit shapes this sum-capped path cannot
       val insT0 = transformed(insSrc).getOrElse {
-        dbg("decline: transformed delta above the result-schema cap")
         return None
       }
       val delT0 = transformed(delSrc).getOrElse {
-        dbg("decline: transformed delta above the result-schema cap")
         return None
       }
       // re-diff at the TRANSFORMED level: a source update the transform
       // is insensitive to yields identical rows on both sides
       val insT = Ops.multisetRowDiff(insT0, delT0)
       val delT = Ops.multisetRowDiff(delT0, insT0)
-      dbg(s"srcDelta ins=${insSrc.length} del=${delSrc.length} " +
-        s"→ transformed ins=${insT.length} del=${delT.length}")
       if (insT.isEmpty && delT.isEmpty) return Some(Some(prev.hash))
       val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
       def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = kIdx.map(r.get)
@@ -1702,7 +1699,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // more than half the result's chunks mean the rebuild writes less
       val out = patchTableBounded(prev, insT, delKeys,
         Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
-      dbg(s"patchTableBounded → ${out.isDefined}")
       out match {
         case Some(h) => Some(Some(h))
         case None if delT.isEmpty &&
@@ -1728,13 +1724,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             val deltaMeta = Canonical.materialize(spark, store,
               spark.createDataFrame(insT.asJava, pm.schema),
               pm.keyCols, pm.chunkTargetRows,
-              rowBound = Some(insT.length.toLong))
+              rowBound = Some(insT.length.toLong))(Canonical.Ungrouped)
             if (deltaMeta.schemaJson != pm.schemaJson) {
-              dbg("rebuild: delta schema diverged from the result's")
               Some(None)
             } else {
-              dbg(s"fold-in: ${insT.length} scattered appended keys " +
-                "merged into the previous result")
               Ops.rekeyAppendFoldIns.incrementAndGet()
               Some(Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)),
                 fold).hash))
@@ -1757,19 +1750,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * otherwise (callers fall back to their job paths). Shared by the uniqueKeys splice route and the insert-only
     * aggregate fold-in. */
   private def sourceRowDelta(m: TableMeta, removed: Seq[ChunkMeta],
-      added: Seq[ChunkMeta], dbg: (=> String) => Unit)
+      added: Seq[ChunkMeta])
       : Option[(Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row])] = {
     import scala.util.control.NonFatal
     if (!Canonical.driverMaterializeEnabled) return None
     if (!Ops.driverDiffable(m.schema)) {
-      dbg("decline: source schema not driver-diffable"); return None
+      return None
     }
     val changed = removed ++ added
     val rows = changed.iterator.map(_.rows).sum
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
         !chunkBytes(changed).exists(_ <= Ops.DriverPatchMaxBytes)) {
-      dbg(s"decline: caps (rows=$rows cap=${Ops.adaptiveRowCap(m.schema,
-        Ops.PatchMaxDeltaRows)} bytes=${chunkBytes(changed)})")
       return None
     }
     try {
@@ -1808,9 +1799,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   private def rekeyDeltaFoldIn(m: TableMeta, t: ColTransform,
       fold: FoldSpec, prev: TableRef, target: Long): Option[String] = {
     import scala.util.control.NonFatal
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_DEBUG_DRIVER_PATCH"))
-        System.err.println(s"[rekey-append] $msg")
     def tryLoad(h: String): Option[TableMeta] =
       try Some(store.loadTableMeta(h)) catch { case NonFatal(_) => None }
     for {
@@ -1839,7 +1827,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // instead of paying the driver reads and the multiset diff
         else if (added.iterator.map(_.rows).sum <=
             removed.iterator.map(_.rows).sum && retractPlan.isEmpty) {
-          dbg("decline: no net row growth and fold not retractable")
           None
         }
         else {
@@ -1862,13 +1849,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
                 // transforms; a generator's output is unknown — use the
                 // optimistic tiny-input probe, exactly like the build
                 rowBound = if (t.generator) None else Some(insRows),
-                rowProbe = if (t.generator) Some(insRows) else None)
+                rowProbe = if (t.generator) Some(insRows) else None)(Canonical.Ungrouped)
               if (deltaMeta.schemaJson != pm.schemaJson) {
-                dbg("decline: delta schema diverged from the result's")
                 None
               } else {
-                dbg(s"fold-in: $insRows appended rows → " +
-                  s"${deltaMeta.chunks.map(_.rows).sum} delta groups")
                 Ops.rekeyAppendFoldIns.incrementAndGet()
                 Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold)
                   .hash)
@@ -1876,13 +1860,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             } catch { case NonFatal(e) =>
               Ops.warnDriverPatchFallback(e); None }
 
-          sourceRowDelta(m, removed, added, dbg) match {
+          sourceRowDelta(m, removed, added) match {
             case Some((insSrc, delSrc)) =>
               if (delSrc.nonEmpty) retractPlan match {
                 case Some(rp) =>
-                  rekeyRetract(rp, m, t, fold, prev, pm, insSrc, delSrc, dbg)
+                  rekeyRetract(rp, m, t, fold, prev, pm, insSrc, delSrc)
                 case None =>
-                  dbg("decline: delta has deletes, fold not retractable")
                   None
               }
               else if (insSrc.isEmpty) Some(prev.hash)
@@ -1915,7 +1898,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               // these variants never touch driver memory
               if (!Canonical.driverMaterializeEnabled ||
                   !Ops.driverDiffable(m.schema)) {
-                dbg("decline: schema unsafe for distributed set-op diff")
                 None
               } else try {
                 val addedDf = readSourceChunks(m, added)
@@ -1929,13 +1911,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
                     rekeyRetractDistributed(rp, m, t, fold, prev, pm,
                       addedDf, removedDf,
                       added.iterator.map(_.rows).sum +
-                        removed.iterator.map(_.rows).sum, dbg)
+                        removed.iterator.map(_.rows).sum)
                   case None =>
                     val hasDeletes = removed.nonEmpty &&
                       !removedDf.exceptAll(addedDf).limit(1).isEmpty
                     if (hasDeletes) {
-                      dbg("decline: distributed diff found deletes, " +
-                        "fold not retractable")
                       None
                     } else foldIn(addedDf.exceptAll(removedDf),
                       added.iterator.map(_.rows).sum)
@@ -1982,7 +1962,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
       val analyzed = empty.select(t.columns: _*).queryExecution.analyzed
-      val plan = analyzed match {
+      analyzed match {
         case p: Project =>
           val vals = p.projectList
             .filterNot(ne => t.outKeyCols.contains(ne.name))
@@ -2001,21 +1981,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             .map(l => Ops.RetractPlan(l, inverts))
         case _ => None
       }
-      if (plan.isEmpty && sys.env.contains("GRAFT_DEBUG_DRIVER_PATCH")) {
-        val detail = analyzed match {
-          case p: Project =>
-            p.projectList.filterNot(ne => t.outKeyCols.contains(ne.name))
-              .map(ne => s"${ne.name}(nullable=${ne.nullable}," +
-                s"declared=${t.nonNullContribs.contains(ne.name)}," +
-                s"invert=${fold.invertContrib(ne.name).isDefined}," +
-                s"lit1=${ne.isInstanceOf[Alias] &&
-                  ne.asInstanceOf[Alias].child == Literal(1L)})")
-              .mkString("; ")
-          case other => s"not a Project: ${other.getClass.getSimpleName}"
-        }
-        System.err.println(s"[retract-spec] declined for ${t.key}: $detail")
-      }
-      plan
     }
 
   /** Delete-aware O(delta) refresh of an aggregate view (the RETRACTION
@@ -2033,14 +1998,13 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   private def rekeyRetract(rp: Ops.RetractPlan, m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
       insSrc: Seq[org.apache.spark.sql.Row],
-      delSrc: Seq[org.apache.spark.sql.Row],
-      dbg: (=> String) => Unit): Option[String] = {
+      delSrc: Seq[org.apache.spark.sql.Row]): Option[String] = {
     import scala.util.control.NonFatal
     import scala.jdk.CollectionConverters._
     // the transformed delta and the previous result rows are diffed /
     // partitioned by structural equality below
     if (!Ops.driverDiffable(pm.schema)) {
-      dbg("decline: result schema not driver-diffable"); return None
+      return None
     }
     try {
       val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
@@ -2058,11 +2022,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         if (out.length > cap) None else Some(out.toSeq)
       }
       val insT0 = contribs(insSrc).getOrElse {
-        dbg("decline: retraction delta above the result-schema cap")
         return None
       }
       val delT0 = contribs(delSrc).getOrElse {
-        dbg("decline: retraction delta above the result-schema cap")
         return None
       }
       // re-diff at the contribution level: an update the view is
@@ -2081,7 +2043,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       def anyNull(rs: Iterable[org.apache.spark.sql.Row]): Boolean =
         rs.exists(r => invIdx.exists(r.isNullAt))
       if (anyNull(insT) || anyNull(delT)) {
-        dbg("decline: NULL contribution under a non-null contract")
         return None
       }
       val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
@@ -2094,14 +2055,13 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val hitRows = hit.iterator.map(_.rows).sum
       if (hitRows > Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows) ||
           !chunkBytes(hit).exists(_ <= Ops.DriverPatchMaxBytes)) {
-        dbg(s"decline: touched-region caps (rows=$hitRows)"); return None
+        return None
       }
       val touchedSet = touched.toSet
       val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
         java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
         .flatten.filter(r => touchedSet(keyOf(r)))
       if (anyNull(prevRows)) {
-        dbg("decline: NULL previous partial under a non-null contract")
         return None
       }
       // invert the deleted contributions (fold-declared, per column)
@@ -2125,8 +2085,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*))
       val liveIdx = pm.schema.fieldIndex(rp.livenessCol)
       val (live, dead) = newRows.partition(r => r.getLong(liveIdx) != 0L)
-      dbg(s"retract: ins=${insT.length} del=${delT.length} " +
-        s"groups=${touched.length} dead=${dead.length}")
       val out = patchTableBounded(prev, live.toSeq,
         dead.iterator.map(keyOf).toSeq,
         Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
@@ -2169,13 +2127,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * under the same documented contract as uniqueKeys. */
   private def rekeyRetractDistributed(rp: Ops.RetractPlan, m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      addedDf: DataFrame, removedDf: DataFrame, changedRows: Long,
-      dbg: (=> String) => Unit): Option[String] = {
+      addedDf: DataFrame, removedDf: DataFrame,
+      changedRows: Long): Option[String] = {
     import scala.util.control.NonFatal
     // contribution frames are diffed by SQL set-op equality — same
     // fp/binary-free rule as the driver route's structural diff
     if (!Ops.driverDiffable(pm.schema)) {
-      dbg("decline: result schema unsafe for distributed set-op diff")
       return None
     }
     try {
@@ -2212,7 +2169,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels")).head())
         val nullHit = !probeRow.isNullAt(0) && probeRow.getLong(0) == 1L
         if (nullHit) {
-          dbg("decline: NULL contribution under a non-null contract")
           return None
         }
         // delete-bearing vs insert-only, answered on the CACHED net —
@@ -2262,9 +2218,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             val maxRow = net.agg(max(abs(col(tag)))).head()
             val maxMult = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
             if (maxMult > Ops.RetractMaxExpandMultiplicity) {
-              dbg(s"decline: net multiplicity $maxMult above the " +
-                s"expansion cap ${Ops.RetractMaxExpandMultiplicity} " +
-                "and the fold declares no scaleContrib")
               return None
             }
             (net.where(col(tag) > 0L)
@@ -2294,21 +2247,16 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           castValues(folded, pm.schema, valueCols), pm.keyCols,
           pm.chunkTargetRows,
           rowBound = if (deltaProbe) None else Some(changedRows),
-          probeFold = deltaProbe)
+          probeFold = deltaProbe)(Canonical.Ungrouped)
         if (deltaMeta.schemaJson != pm.schemaJson) {
-          dbg("decline: delta schema diverged from the result's")
           None
         } else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
         else if (!hasDeletes) {
           // insert-only delta: no group can die — plain region merge,
           // sharing memo namespace with the sibling fold-in route
-          dbg(s"fold-in (via net): ${deltaMeta.chunks.map(_.rows).sum} " +
-            "appended delta groups merged into the previous result")
           Ops.rekeyAppendFoldIns.incrementAndGet()
           Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
         } else {
-          dbg(s"distributed retract: ${deltaMeta.chunks.map(_.rows).sum} " +
-            s"net delta groups → mergeRetract")
           Ops.rekeyRetractDistFoldIns.incrementAndGet()
           // counted HERE (not at net construction) so the counter means
           // "a distributed RETRACTION folded its net scaled" — an
@@ -2435,8 +2383,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         }
         val df = t.rowFilter.map(df0.where).getOrElse(df0)
         val projected = df.select(t.columns :+ col(grp): _*)
-        val metas = Canonical.materializeGrouped(spark, store, projected, grp,
+        val metas = Canonical.materialize(spark, store, projected,
           t.outKeyCols, m.chunkTargetRows,
+          groupCol = Some(grp),
           rowBound = Some(missing.map(_.rows).sum),
           byteBound = chunkBytes(missing))
         metas.foreach { case (srcHash, sub) =>
@@ -2601,7 +2550,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // boundary assumptions of later merges)
         Canonical.materialize(spark, store, df, m.keyCols, m.chunkTargetRows,
           rowBound = Some(edgeRows),
-          byteBound = driverRows.flatMap(_ => edgeBytes)).chunks
+          byteBound = driverRows.flatMap(_ => edgeBytes))(Canonical.Ungrouped).chunks
       }
     // canonical-form repair: an edge rewrite can remove the boundary
     // key that started the chunk AFTER the cut — fuse (see
@@ -3087,7 +3036,7 @@ object Ops {
     * file) silently degrading every point DML to the job path would be
     * an invisible latency regression. Warn ONCE per cause signature
     * (class + message) so production logs show the degradation without
-    * flooding; `GRAFT_DEBUG_DRIVER_PATCH` logs every occurrence. */
+    * flooding. */
   private val warnedPatchCauses =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] def warnDriverPatchFallback(e: Throwable): Unit = {
@@ -3095,8 +3044,6 @@ object Ops {
     if (warnedPatchCauses.add(sig))
       System.err.println(
         s"[graft] WARN driver-patch fell back to the Spark job path: $e")
-    else if (sys.env.contains("GRAFT_DEBUG_DRIVER_PATCH"))
-      System.err.println(s"[driver-patch fallback] $e")
   }
 }
 

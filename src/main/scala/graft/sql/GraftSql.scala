@@ -295,10 +295,6 @@ object GraftSql {
     * bet before any index read happens). */
   val MaxProbeFanout: Long = 4096L
 
-  /** Dev-only per-statement wall profiling (SPARK_GRAFT_PROFILE=1) —
-    * the driver never sets it. */
-  private val profileStatements = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
-
   /** Tool-installable per-statement probe: called once per executed
     * top-level statement with (statement text, wall seconds). Installed
     * by [[graft.Bench]] while timing the statement-flow queries so the
@@ -312,19 +308,11 @@ object GraftSql {
   def execute(spark: SparkSession, ops: Ops, catalog: Catalog,
       sqlText: String): Either[DataFrame, String] = {
     val probe = stmtProbe
-    if (!profileStatements && probe.isEmpty)
-      executeImpl(spark, ops, catalog, sqlText)
+    if (probe.isEmpty) executeImpl(spark, ops, catalog, sqlText)
     else {
       val t0 = System.nanoTime()
       try executeImpl(spark, ops, catalog, sqlText)
-      finally {
-        val sec = (System.nanoTime() - t0) / 1e9
-        probe.foreach(_(sqlText, sec))
-        if (profileStatements) {
-          val head = sqlText.trim.replaceAll("\\s+", " ").take(72)
-          println(f"[gsql] $sec%6.2f s  $head")
-        }
-      }
+      finally probe.foreach(_(sqlText, (System.nanoTime() - t0) / 1e9))
     }
   }
 

@@ -72,6 +72,31 @@ class EdgeCaseSpec extends AnyFunSuite {
       s"wanted the explicit null-key error, got: $e")
   }
 
+  test("null KEY is rejected on the grouped materialization, on every route") {
+    val schema = StructType(Seq(
+      StructField("k", StringType, nullable = true),
+      StructField("v", LongType, nullable = false),
+      StructField("g", StringType, nullable = false)))
+    val rows = Seq(Row("a", 1L, "g0"), Row(null, 2L, "g0"), Row("b", 3L, "g1"))
+    val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-edge-"))
+    // a LocalRelation input takes the zero-job driver route, a
+    // distributed one the collect driver route, and no row bound the job
+    // route
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val distributed =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    Seq(("zero-job", local, Some(3L)), ("collect", distributed, Some(3L)),
+        ("job", distributed, None)).foreach { case (route, df, bound) =>
+      val e = intercept[Exception](Canonical.materialize(spark, store, df,
+        Seq("k"), 8, groupCol = Some("g"), rowBound = bound))
+      assert(causes(e).exists(c =>
+        Option(c.getMessage).exists(_.contains("null key in key column"))),
+        s"$route route: wanted the explicit null-key error, got: $e")
+    }
+  }
+
   test("binary keys with embedded zeros") {
     val schema = StructType(Seq(
       StructField("k", BinaryType, nullable = false),
