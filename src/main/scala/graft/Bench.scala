@@ -2,6 +2,38 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+  /** Run-level hypervisor steal at which a run counts as heavily
+    * contended: 10,000 cs = 100 s of stolen CPU. */
+  private[graft] val HeavyStealCs = 10000L
+
+  /** How contended a run was, 0 (quiet) to 1 (heavy): run-level steal
+    * scaled up to [[HeavyStealCs]]. A majority-STEAL requeue set (≥8 of
+    * 16) is treated as full contention even under the cs cliff — steal
+    * takes whole cores in bursts the run total can understate. (The
+    * LOAD-flagged count is deliberately NOT a signal: the load
+    * threshold saturates its budget on measurably quiet runs — every
+    * r13/r14 quiet artifact spent 13–15 flags on "load" at <15 s steal
+    * — so keying on budget exhaustion would pin the trigger tight
+    * permanently.) */
+  private def contentionFrac(stealCs: Long, stealFlagged: Int): Double =
+    if (stealFlagged >= 8) 1.0
+    else math.min(stealCs, HeavyStealCs).toDouble / HeavyStealCs
+
+  /** The pollution gate. A run is polluted when it recorded heavy
+    * steal ([[HeavyStealCs]] or more), whatever its ratio: the r15
+    * 8-core run took 110,000 cs of steal and still passed the ratio
+    * test at 1.05×. Otherwise it is polluted when its total over the
+    * queries it shares with the reference (`commonTotal` against
+    * `refCommon`) exceeds a contention-INTERPOLATED trigger (VERDICT
+    * r13 #4: the r13 driver sweep evaded both the 1.25× ratio and the
+    * steal cliff at once, 1.248× with 7,091 cs, and self-reported clean
+    * while 25% inflated): the trigger tightens linearly from the quiet
+    * 1.25× to the heavy-steal 1.10× with [[contentionFrac]]. */
+  private[graft] def loadPolluted(commonTotal: Double,
+      refCommon: Option[Double], stealCs: Long, stealFlagged: Int): Boolean =
+    stealCs >= HeavyStealCs || refCommon.exists(rt => rt > 0 &&
+      commonTotal > (1.25 - 0.15 * contentionFrac(stealCs, stealFlagged)) * rt)
+
   /** Listener accumulating executor-side metrics fleet-wide: job/task
     * counts, task run/CPU/GC time, spill bytes. Bench samples the
     * counters before/after each query's runs, so BENCH_FULL.json can
@@ -370,11 +402,12 @@ object Bench {
     // The comparison is honest by construction (VERDICT r12 #4 + advice):
     // only the INTERSECTION of query sets is compared (a query added
     // this round would otherwise inflate the total against an old
-    // reference), and the gate stands down entirely when the reference
-    // artifact's scale factor differs from this run's. The trigger
-    // tightens to 1.10× when the run itself recorded heavy hypervisor
-    // steal (VERDICT r12 #2: 250 s of steal adds ~12% — under the old
-    // 1.25× trigger with zero load-flagged queries).
+    // reference), and the ratio test stands down entirely when the
+    // reference artifact's scale factor differs from this run's. The
+    // trigger tightens to 1.10× when the run itself recorded heavy
+    // hypervisor steal (VERDICT r12 #2: 250 s of steal adds ~12% — under
+    // the old 1.25× trigger with zero load-flagged queries), and heavy
+    // steal alone marks the run polluted ([[loadPolluted]]).
     val commonNames = {
       val here = results1.iterator.filter(_.v >= 0).map(_.name).toSet
       // a query whose REFERENCE value is -1 (errored in that run) must
@@ -393,25 +426,10 @@ object Bench {
         case (n, v) if commonNames(n) && v >= 0 => v }.sum)
     def stealSoFar: Long =
       if (stealRun0 < 0) 0L else math.max(0L, stealJiffies - stealRun0)
-    // contention-INTERPOLATED trigger (VERDICT r13 #4): the r13 driver
-    // sweep evaded both the 1.25× ratio and the 10,000 cs steal cliff
-    // at once (1.248× with 7,091 cs) and self-reported clean while 25%
-    // inflated. The trigger now tightens linearly from the quiet 1.25×
-    // to the heavy-steal 1.10× as run-level steal goes 0 → 10,000 cs.
-    // A majority-STEAL requeue set (≥8 of 16) is treated as full
-    // contention even under the cs cliff — steal takes whole cores in
-    // bursts the run total can understate. (The LOAD-flagged count is
-    // deliberately NOT a signal: the load threshold saturates its
-    // budget on measurably quiet runs — every r13/r14 quiet artifact
-    // spent 13–15 flags on "load" at <15 s steal — so keying on budget
-    // exhaustion would pin the trigger tight permanently.)
-    def contentionFrac: Double =
-      if (stealFlagged.size >= 8) 1.0
-      else math.min(stealSoFar, 10000L).toDouble / 10000.0
-    def trigger: Double = 1.25 - 0.15 * contentionFrac
-    def retrigger: Double = 1.20 - 0.15 * contentionFrac
-    val polluted0 = refCommon.exists(rt =>
-      rt > 0 && commonTotal(results1) > trigger * rt)
+    def retrigger: Double =
+      1.20 - 0.15 * contentionFrac(stealSoFar, stealFlagged.size)
+    val polluted0 = loadPolluted(commonTotal(results1), refCommon,
+      stealSoFar, stealFlagged.size)
     var results: Seq[QR] = results1
     var pollutionRequeues = 0
     if (polluted0) {
@@ -435,7 +453,6 @@ object Bench {
         pass += 1
       }
     }
-    val loadPolluted = polluted0
     // post-recovery excess that PERSISTS is not proven to be the
     // machine: label it standing so a genuine code regression across a
     // round boundary never hides behind "load_polluted" (VERDICT r12 #4)
@@ -556,7 +573,7 @@ object Bench {
       val warmed = (Tables.names ++ Seq(
         "dedup.shingles", "dedup.shinglesSized", "vectors.quantized"))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$polluted0,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),
@@ -592,7 +609,7 @@ object Bench {
       if (stealRun0 < 0) -1L else stealJiffies - stealRun0
     val loadJson = if (loads.isEmpty) "null" else
       s"""{"min":${fmt(loads.min)},"max":${fmt(loads.max)},"median":${fmt(
-        medLoad)},"idle0":${fmt(idle0)},"requeue_thr":${fmt(requeueLoad)},"requeued":$requeued,"polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"steal_cs":$stealTotal}"""
+        medLoad)},"idle0":${fmt(idle0)},"requeue_thr":${fmt(requeueLoad)},"requeued":$requeued,"polluted":$polluted0,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"steal_cs":$stealTotal}"""
     val ccCompact = ccTwin.map { case (n, d, eq, rec) =>
       s"""{"normal":${fmt(n)},"durable":${fmt(d)},"hash_equal":$eq,"recoveries":$rec}"""
     }.getOrElse("null")

@@ -93,13 +93,12 @@ object Canonical {
     }
   }
 
-  /** Canonical nullability: key columns non-null, value columns nullable —
-    * aggregation/union plans flip nullability flags incidentally, and the
-    * canonical form must not depend on plan history. */
-  /** Canonical logical schema: key columns non-null, and NO column
-    * metadata — schemaJson is part of the table identity, so incidental
-    * metadata (source parquet annotations, the positional field ids the
-    * chunk writer attaches below) must never leak into it. */
+  /** Canonical logical schema: key columns non-null, value columns
+    * nullable, and NO column metadata — aggregation/union plans flip
+    * nullability flags incidentally, and schemaJson is part of the table
+    * identity, so neither plan history nor incidental metadata (source
+    * parquet annotations, the positional field ids the chunk writer
+    * attaches below) may leak into it. */
   def normalizeSchema(schema: StructType, keyCols: Seq[String]): StructType =
     StructType(schema.fields.map(f => f.copy(
       nullable = !keyCols.contains(f.name), metadata = Metadata.empty)))
@@ -153,16 +152,6 @@ object Canonical {
   private def listFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
     FsUtil.listDir(dir)
 
-  /** Per-chunk digest with CONSTANT task memory: input rows carry
-    * (groupKeyCols..., kb, rb); rows are shuffled by group, sorted
-    * within partitions by (group, rb) — rb is the canonical row bytes
-    * with the key bytes as prefix, so rb order == key order — and a
-    * single pass folds each consecutive group into (minkb, maxkb, rows,
-    * sha256 of the concatenated sorted rb). Replaces the former
-    * `sort_array(collect_list(rb))` aggregation, which buffered a whole
-    * chunk (up to the 64–256 MB scale-guidance sizes) in one
-    * aggregation buffer. The digested bytes are identical, so chunk
-    * hashes are unchanged. */
   // ---- value-column zone maps -------------------------------------------
 
   /** Value columns that get zone maps: scalar types with an
@@ -185,9 +174,6 @@ object Canonical {
   private[core] def statColumns(schema: StructType, keyCols: Seq[String]): Seq[String] =
     schema.fields.toSeq.filterNot(f => keyCols.contains(f.name))
       .filter(f => statableType(f.dataType)).map(_.name).take(MaxStatCols)
-  /** The oversize sentinel in chunkDigests output: nulls == -1 means
-    * "no stats for this column in this chunk". */
-  private[core] val StatsDropped = -1L
   /** Chunk-dictionary cap ([[ColStats.dictHex]]): a stat column holding
     * at most this many distinct non-null values in a chunk records the
     * complete value set. 8 values × ≤64 B × ≤16 columns ≤ 8 KB of
@@ -195,123 +181,6 @@ object Canonical {
     * covering the categorical columns (status flags, enum codes,
     * partition-ish labels) where the [min,max] envelope never prunes. */
   private[core] val DictMaxValues = 8
-
-  /** Per-chunk digests + zone maps in ONE sorted pass. Stats come FREE
-    * out of the row bytes: `rb` is the concatenation of the per-column
-    * encodings, and the input's `ends` column carries each column's end
-    * offset, so the pass slices a stat column's encoding out of rb
-    * in place — no re-encoding, no duplicated bytes through the
-    * shuffle, and min/max candidates compare by offset (an allocation
-    * only when a new extreme is retained). `statPos` gives each stat
-    * column's position in the canonical column order; output appends
-    * per stat column (smin_i, smax_i, snulls_i). A null value encodes
-    * as the single byte 0x00; values over MaxStatBytes drop the
-    * column's stats for the chunk (StatsDropped sentinel). */
-  private[core] def chunkDigests(df: DataFrame, groupCols: Seq[String],
-      statPos: Array[Int] = Array.empty, width: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val nPart =
-      if (width > 0) width else spark.sessionState.conf.numShufflePartitions
-    val nStats = statPos.length
-    val inSchema = df.schema
-    val gIdx = groupCols.map(inSchema.fieldIndex)
-    val kbIdx = inSchema.fieldIndex("kb")
-    val rbIdx = inSchema.fieldIndex("rb")
-    val endsIdx = if (nStats == 0) -1 else inSchema.fieldIndex("ends")
-    val outSchema = StructType(
-      groupCols.map(c => inSchema(c)) ++ Seq(
-        StructField("minkb", BinaryType), StructField("maxkb", BinaryType),
-        StructField("rows", LongType), StructField("hash", StringType)) ++
-      (0 until nStats).flatMap(i => Seq(
-        StructField(s"smin$i", BinaryType), StructField(s"smax$i", BinaryType),
-        StructField(s"snulls$i", LongType),
-        StructField(s"sdict$i", ArrayType(BinaryType)))))
-    val enc = RowEncoder.encoderFor(outSchema)
-    // unsigned lexicographic compare of rb[from,to) vs a retained extreme
-    def cmpRange(rb: Array[Byte], from: Int, to: Int, other: Array[Byte]): Int = {
-      val n = math.min(to - from, other.length)
-      var i = 0
-      while (i < n) {
-        val a = rb(from + i) & 0xff; val b = other(i) & 0xff
-        if (a != b) return a - b
-        i += 1
-      }
-      (to - from) - other.length
-    }
-    df.repartition(nPart, groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols.map(col) :+ col("rb")): _*)
-      .mapPartitions { it =>
-        val base = it.buffered
-        new Iterator[Row] {
-          def hasNext: Boolean = base.hasNext
-          def next(): Row = {
-            val key: Seq[Any] = gIdx.map(base.head.get)
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            var minKb: Array[Byte] = null
-            var maxKb: Array[Byte] = null
-            var n = 0L
-            val mins = Array.fill[Array[Byte]](nStats)(null)
-            val maxs = Array.fill[Array[Byte]](nStats)(null)
-            val nulls = Array.fill[Long](nStats)(0L)
-            val dead = Array.fill[Boolean](nStats)(false)
-            // chunk dictionary: distinct encodings up to DictMaxValues,
-            // then the column's dictionary (only) goes dead
-            val dicts = Array.fill(nStats)(
-              new scala.collection.mutable.ArrayBuffer[Array[Byte]](DictMaxValues))
-            val dictDead = Array.fill[Boolean](nStats)(false)
-            while (base.hasNext && gIdx.map(base.head.get) == key) {
-              val r = base.next()
-              val rb = r.getAs[Array[Byte]](rbIdx)
-              md.update(rb)
-              val kb = r.getAs[Array[Byte]](kbIdx)
-              if (minKb == null) minKb = kb
-              maxKb = kb
-              n += 1
-              if (nStats > 0) {
-                val ends = r.getAs[scala.collection.Seq[Int]](endsIdx)
-                var i = 0
-                while (i < nStats) {
-                  if (!dead(i)) {
-                    val p = statPos(i)
-                    val from = if (p == 0) 0 else ends(p - 1)
-                    val to = ends(p)
-                    if (to - from == 1 && rb(from) == 0) nulls(i) += 1
-                    else if (to - from > MaxStatBytes) dead(i) = true
-                    else {
-                      if (mins(i) == null || cmpRange(rb, from, to, mins(i)) < 0)
-                        mins(i) = java.util.Arrays.copyOfRange(rb, from, to)
-                      if (maxs(i) == null || cmpRange(rb, from, to, maxs(i)) > 0)
-                        maxs(i) = java.util.Arrays.copyOfRange(rb, from, to)
-                      if (!dictDead(i)) {
-                        val buf = dicts(i)
-                        var j = 0
-                        while (j < buf.length && cmpRange(rb, from, to, buf(j)) != 0)
-                          j += 1
-                        if (j == buf.length) {
-                          if (buf.length >= DictMaxValues) dictDead(i) = true
-                          else buf += java.util.Arrays.copyOfRange(rb, from, to)
-                        }
-                      }
-                    }
-                  }
-                  i += 1
-                }
-              }
-            }
-            val statOut = (0 until nStats).flatMap { i =>
-              if (dead(i)) Seq(null, null, StatsDropped, null)
-              else Seq(mins(i), maxs(i), nulls(i),
-                // sorted for a canonical meta encoding (insertion order
-                // is already deterministic — rows arrive rb-sorted —
-                // but the sorted set is the natural identity)
-                if (dictDead(i)) null
-                else dicts(i).sortWith(Hashing.compareBytes(_, _) < 0).toSeq)
-            }
-            Row.fromSeq(key ++ Seq(minKb, maxKb, n, Hashing.hex(md.digest())) ++ statOut)
-          }
-        }
-      }(enc)
-  }
 
   /** One finished chunk digest as produced executor-side by the FUSED
     * write+digest pass: chunk identity fields plus the temp-dir tag that
@@ -321,12 +190,12 @@ object Canonical {
       minKey: String, maxKey: String, rows: Long, hash: String,
       stats: Map[String, ColStats])
 
-  /** Mutable per-chunk digest accumulation for the fused pass — the
-    * same arithmetic as [[chunkDigests]]'s per-group loop (sha-256 over
-    * concatenated canonical row bytes in key order; zone-map min/max by
-    * unsigned compare over rb slices; null markers; MaxStatBytes drop;
-    * DictMaxValues dictionary), so fused and standalone digests are
-    * byte-identical. */
+  /** Mutable per-chunk digest accumulation — THE digest kernel, shared
+    * by the fused write pass, the driver chunk writer and
+    * [[Ops.verifyTable]]: sha-256 over concatenated canonical row bytes
+    * in key order; zone-map min/max by unsigned compare over rb slices;
+    * null markers; the MaxStatBytes drop; the DictMaxValues dictionary;
+    * exact sums. */
   private[core] final class DigestState(statCols: Seq[String],
       statPos: Array[Int],
       statDts: Array[org.apache.spark.sql.types.DataType] = Array.empty) {
@@ -529,10 +398,12 @@ object Canonical {
     * shuffle overhead. `byteBound`: the input's observed compressed
     * size, when it is known chunk files. `rowProbe` / `probeFold`: the
     * optimistic driver-route bets for unknown output sizes (below).
-    * Routes, splits and widths only shape tasks: chunk content is a
-    * pure function of the key set, so hashes are identical either way. */
-  def materialize(spark: SparkSession, store: GraftStore, df0: DataFrame,
-      keyCols: Seq[String], chunkTargetRows: Long,
+    * `routes`: the calling [[Ops]]'s route switches and driver byte
+    * budget. Routes, splits and widths only shape tasks: chunk content
+    * is a pure function of the key set, so hashes are identical either
+    * way. */
+  def materialize(spark: SparkSession, store: GraftStore, routes: Routes,
+      df0: DataFrame, keyCols: Seq[String], chunkTargetRows: Long,
       groupCol: Option[String] = None,
       rowBound: Option[Long] = None,
       byteBound: Option[Long] = None,
@@ -561,11 +432,11 @@ object Canonical {
     // materialization takes the ONE-collect-job driver route even when
     // the row count is above the one-task smallJob rule — at scale the
     // same statement exceeds the byte budget and runs the job path.
-    val bytesOk = byteBound.exists(_ <= Ops.DriverPatchMaxBytes) &&
+    val bytesOk = byteBound.exists(_ <= routes.driverMaxBytes) &&
       rowBound.exists(_ <= Ops.DriverPatchHardRowCap) &&
-      driverMaterializeEnabled && DriverChunks.supported(dataSchema)
-    val driverOk =
-      bytesOk || driverMaterializeOk(rowBound, chunkTargetRows, dataSchema)
+      routes.driverMaterialize && DriverChunks.supported(dataSchema)
+    val driverOk = bytesOk ||
+      driverMaterializeOk(routes, rowBound, chunkTargetRows, dataSchema)
     // ZERO-JOB route: a driver-admitted input whose plan FOLDED to a
     // LocalRelation (ConvertToLocalRelation consumes deterministic
     // Project/Filter over driver-resident rows — the per-chunk
@@ -608,14 +479,14 @@ object Canonical {
       // of 0, which asserts the input is empty), then per-group
       // sort/split/write on the driver; any surprise falls through
       val (es, ekb) = onEngine(spark, kbDf, smallShuffle = true,
-        interpretedOk = interpretedCollectOk(rowBound, dataSchema))
+        interpretedOk = interpretedCollectOk(routes, rowBound, dataSchema))
       val rows: Option[Array[Row]] =
         if (rowBound.contains(0L)) Some(Array.empty)
         else try Some(withJobDesc(es, s"graft:collect$label")(ekb.collect()))
         catch { case scala.util.control.NonFatal(e) =>
           Ops.warnDriverPatchFallback(e); None }
       rows.flatMap(driverWrite(_, kbDf.schema)).foreach(return _)
-    } else if (rowBound.isEmpty && driverMaterializeEnabled &&
+    } else if (rowBound.isEmpty && routes.driverMaterialize &&
         (probeFold || smallJob(rowProbe, chunkTargetRows)) &&
         DriverChunks.supported(dataSchema)) {
       // OPTIMISTIC probe (generator size gating): the output size is
@@ -826,13 +697,14 @@ object Canonical {
     * Engine conf lives on a THROWAWAY SESSION CLONE
     * ([[GraftBridge.engineSession]]), never on the user's session: a
     * thread-scoped `SQLConf.withExistingConf` override does not survive
-    * the hop to Spark's async command-execution thread pool (measured,
-    * tools/WriteProbe), and the former session-global flip let a
-    * concurrent query on another thread observe AQE off — or restore a
-    * stale value under interleaving (round-7 verdict #1). The frame is
-    * rebound to the clone ([[GraftBridge.transplant]]), so its write
-    * commands read the clone's conf wherever they execute; the user
-    * session's conf is never touched (pinned two-threaded in
+    * the hop to Spark's async command-execution thread pool (the write
+    * commands run under `SQLExecution.withThreadLocalCaptured`, which
+    * re-installs the session's own conf), and the former session-global
+    * flip let a concurrent query on another thread observe AQE off — or
+    * restore a stale value under interleaving (round-7 verdict #1). The
+    * frame is rebound to the clone ([[GraftBridge.transplant]]), so its
+    * write commands read the clone's conf wherever they execute; the
+    * user session's conf is never touched (pinned two-threaded in
     * EngineConfIsolationSpec). */
   private[core] def onEngine(spark: SparkSession, df: DataFrame,
       smallShuffle: Boolean = false, interpretedOk: Boolean = true)
@@ -941,39 +813,29 @@ object Canonical {
   }
 
 
-  /** Test seam + production gate for the ZERO-SHUFFLE driver
-    * materialization below. Always true in production; specs flip it to
-    * pin driver-route == Spark-route hash equality. */
-  @volatile private[graft] var driverMaterializeEnabled = true
-
-  /** Interpreted-vs-codegen crossover for the BYTE-ADMITTED driver-route
-    * collects: the interpreted discipline (see [[onEngine]]) exists
-    * because a metadata-sized frame's data work is dwarfed by janino
-    * compilation per plan shape — but the byte budget admits up to
-    * [[Ops.DriverPatchHardRowCap]] (1M) rows, and above ~64Ki rows the
-    * interpreted evaluation of the collect's own plan (key-encode UDF +
-    * the ingest fold) loses to paying one codegen compile. Measured
-    * with tools/CtasProfile (A/B interleaved, 2×3 reps, sf0.1/
-    * local[32]): a 600k-row × ~80 B/row CTAS collect halves under
-    * codegen (job 2.1–2.8 s vs 3.6–6.6 s across both runs) while a
-    * 600k-row-bound × 24 B/row aggregated ingest consistently favors
-    * interpreted (its per-row work is a narrow hash-agg probe; the
-    * compile cost of the two-level fold plan dominates) — so the edge
-    * is a BYTE threshold scaled by estimated row width (the
-    * [[Ops.adaptiveRowCap]] idiom), not a row count: 16 MB of
-    * estimated row bytes sits between the two measured points.
-    * `var` as a measurement seam (tools/CtasProfile A/Bs it);
-    * production never writes it. */
-  @volatile private[graft] var InterpretedCollectMaxBytes: Long = 16L << 20
-
   /** The byte-admitted collect sites' interpreted admission: estimated
-    * row bytes (row bound × schema width) under the measured crossover.
+    * row bytes (row bound × schema width) at or under
+    * [[Routes.interpretedCollectMaxBytes]]. The interpreted discipline
+    * (see [[onEngine]]) exists because a metadata-sized frame's data
+    * work is dwarfed by janino compilation per plan shape — but the
+    * byte budget admits up to [[Ops.DriverPatchHardRowCap]] (1M) rows,
+    * and above ~64Ki rows the interpreted evaluation of the collect's
+    * own plan (key-encode UDF + the ingest fold) loses to paying one
+    * codegen compile. Measured A/B interleaved, 2×3 reps, sf0.1 at
+    * local[32] (OPTIMIZATION_r14.md): a 600k-row × ~80 B/row CTAS
+    * collect halves under codegen (job 2.1–2.8 s vs 3.6–6.6 s across
+    * both runs) while a 600k-row-bound × 24 B/row aggregated ingest
+    * consistently favors interpreted (its per-row work is a narrow
+    * hash-agg probe; the compile cost of the two-level fold plan
+    * dominates) — so the edge is a BYTE threshold scaled by estimated
+    * row width (the [[Ops.adaptiveRowCap]] idiom), not a row count:
+    * 16 MB of estimated row bytes sits between the two measured points.
     * Unknown bounds stay interpreted — every such caller is
     * metadata-sized by construction. */
-  private[graft] def interpretedCollectOk(rowBound: Option[Long],
-      schema: StructType): Boolean =
-    rowBound.forall(r =>
-      r * math.max(16, schema.defaultSize) <= InterpretedCollectMaxBytes)
+  private[graft] def interpretedCollectOk(routes: Routes,
+      rowBound: Option[Long], schema: StructType): Boolean =
+    rowBound.forall(r => r * math.max(16, schema.defaultSize) <=
+      routes.interpretedCollectMaxBytes)
 
   /** A small materialization whose schema the driver writer handles and
     * whose caller-known row bound fits the driver cap takes the DRIVER
@@ -985,9 +847,9 @@ object Canonical {
     * deltas). Chunk bytes and hashes are identical to the Spark route:
     * same boundary rule, same [[DigestState]] arithmetic, same
     * [[DriverChunks]] writer the patch path already pins. */
-  private def driverMaterializeOk(rowBound: Option[Long], target: Long,
-      dataSchema: StructType): Boolean =
-    driverMaterializeEnabled && smallJob(rowBound, target) &&
+  private def driverMaterializeOk(routes: Routes, rowBound: Option[Long],
+      target: Long, dataSchema: StructType): Boolean =
+    routes.driverMaterialize && smallJob(rowBound, target) &&
       rowBound.exists(_ <=
         Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)) &&
       DriverChunks.supported(dataSchema)

@@ -27,7 +27,8 @@ final case class Bound(prefix: Seq[Any], inclusive: Boolean)
   */
 final class Ops(val spark: SparkSession, val store: GraftStore,
     val chunkTargetRows: Long = Ops.DefaultChunkTargetRows,
-    val registry: FuncRegistry = new FuncRegistry) {
+    val registry: FuncRegistry = new FuncRegistry,
+    private[graft] val routes: Routes = Routes.Default) {
 
   import FoldSpec.SRC
 
@@ -62,11 +63,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       fold: FoldSpec = FoldSpec.FoldLast): TableRef =
     fromDataFrameBounded(df, keyCols, fold, None, None)
 
-  /** [[fromDataFrame]] with caller-known size bounds: a row-local
-    * projection over a chunk-backed scan (the range-UPDATE delta) knows
-    * its row/byte upper bounds from the source chunk metadata, which
-    * admits the one-collect-job driver materialization when the input
-    * is metadata-sized (see [[Canonical.materialize]]). */
   /** Collect a BYTE-ADMITTED frame under the engine's driver-route
     * discipline: AQE off, narrow shuffle, interpreted expressions (a
     * provably tiny frame's data work is dwarfed by janino compilation
@@ -82,10 +78,16 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // codegen compile. Unknown bounds keep the interpreted default —
     // every such caller is metadata-sized by construction.
     val (es, bound) = Canonical.onEngine(spark, df, smallShuffle = true,
-      interpretedOk = Canonical.interpretedCollectOk(rowBound, df.schema))
+      interpretedOk = Canonical.interpretedCollectOk(routes, rowBound,
+        df.schema))
     Canonical.withJobDesc(es, "graft:collect")(bound.collect())
   }
 
+  /** [[fromDataFrame]] with caller-known size bounds: a row-local
+    * projection over a chunk-backed scan (the range-UPDATE delta) knows
+    * its row/byte upper bounds from the source chunk metadata, which
+    * admits the one-collect-job driver materialization when the input
+    * is metadata-sized (see [[Canonical.materialize]]). */
   def fromDataFrameBounded(df: DataFrame, keyCols: Seq[String],
       fold: FoldSpec, rowBound: Option[Long],
       byteBound: Option[Long]): TableRef = {
@@ -96,13 +98,14 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // one-collect driver route. The fold below never raises row count.
     val (rb, bb) =
       if (rowBound.isEmpty && byteBound.isEmpty)
-        org.apache.spark.sql.GraftBridge.rowLocalScanBounds(df)
+        org.apache.spark.sql.GraftBridge.rowLocalScanBounds(df,
+          routes.driverMaxBytes)
       else (rowBound, byteBound)
     val valueCols = df.columns.filterNot(keyCols.contains).toSeq
     val folded = df.withColumn(SRC, monotonically_increasing_id())
       .groupBy(keyCols.map(col): _*)
       .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-    val meta = Canonical.materialize(spark, store,
+    val meta = Canonical.materialize(spark, store, routes,
       castValues(folded, df.schema, valueCols), keyCols, chunkTargetRows,
       rowBound = rb, byteBound = bb)(Canonical.Ungrouped)
     TableRef(meta.tableHash)
@@ -138,7 +141,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   def emptyTable(schema: StructType, keyCols: Seq[String]): TableRef = {
     val df = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val meta = Canonical.materialize(spark, store, df, keyCols,
+    val meta = Canonical.materialize(spark, store, routes, df, keyCols,
       chunkTargetRows, rowBound = Some(0L))(Canonical.Ungrouped)
     TableRef(meta.tableHash)
   }
@@ -333,7 +336,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // counter reaches 0 has no remaining source rows — drop it
       val folded = dropDeadOn.map(l => folded0.where(col(l) =!= 0L))
         .getOrElse(folded0)
-      return Canonical.materialize(spark, store,
+      return Canonical.materialize(spark, store, routes,
         castValues(folded, schema, valueCols), keyCols, target,
         rowBound = Some(flatRows),
         byteBound = chunkBytes(refs.flatMap(r =>
@@ -387,7 +390,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .withColumn(grp,
             concat_ws("-", col(grp), pieceIdx(col(grp), col(Canonical.KB))))
           .drop(Canonical.KB)
-        Canonical.materialize(spark, store, tagged, keyCols, target,
+        Canonical.materialize(spark, store, routes, tagged, keyCols, target,
           groupCol = Some(grp), rowBound = Some(toSplit.map(_.rows).sum))
           .map { case (g, m) =>
             val i = g.lastIndexOf('-')
@@ -490,7 +493,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // empty table below so refreshes reuse the death too
         val folded = dropDeadOn.map(l => folded0.where(col(l) =!= 0L))
           .getOrElse(folded0)
-        val subMetas = Canonical.materialize(spark, store,
+        val subMetas = Canonical.materialize(spark, store, routes,
           castValues(folded, schema, valueCols), keyCols, target,
           groupCol = Some(grp),
           rowBound = Some(miss.flatMap(_._1).map(_._2.rows).sum),
@@ -678,7 +681,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         .drop(Canonical.KB)
       val folded = tagged.groupBy(col(grp) +: keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-      val subMetas = Canonical.materialize(spark, store,
+      val subMetas = Canonical.materialize(spark, store, routes,
         castValues(folded, schema, valueCols), keyCols, target,
         groupCol = Some(grp),
         rowBound = Some(readRows),
@@ -756,8 +759,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       if (upserts.isEmpty) return Some(prev)
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(upserts.toSeq), m.schema)
-      return Some(TableRef(Canonical.materialize(spark, store, df, m.keyCols,
-        m.chunkTargetRows, rowBound = Some(upserts.length.toLong))(
+      return Some(TableRef(Canonical.materialize(spark, store, routes, df,
+        m.keyCols, m.chunkTargetRows, rowBound = Some(upserts.length.toLong))(
         Canonical.Ungrouped).tableHash))
     }
     // owner chunk of a key: the run it belongs to under the boundary rule
@@ -802,7 +805,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // against the Spark path's hashes).
     val patchRows =
       touched.iterator.map(i => m.chunks(i).rows).sum + upserts.length
-    if (Ops.driverPatchEnabled && DriverChunks.supported(m.schema) &&
+    if (routes.driverPatch && DriverChunks.supported(m.schema) &&
         patchRows <= Ops.DriverPatchHardRowCap &&
         driverBytesOk(m, touched)) {
       try return Some(
@@ -837,7 +840,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       spark.sparkContext.parallelize(upRows.toSeq), upSchema)
     val patched = kept.unionByName(upDf)
     val runMetas: Map[String, TableMeta] = Canonical.materialize(
-      spark, store, patched, m.keyCols, m.chunkTargetRows,
+      spark, store, routes, patched, m.keyCols, m.chunkTargetRows,
       groupCol = Some(grp),
       rowBound = Some(touched.iterator.map(i => m.chunks(i).rows).sum +
         upserts.length),
@@ -876,7 +879,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * is needlessly denied the zero-job path. Observed width comes from
     * the chunks themselves: compressed file size (one stat per touched
     * chunk, no read). The work is admitted when the touched bytes fit
-    * [[Ops.DriverPatchMaxBytes]]; any stat surprise declines to the job
+    * `routes.driverMaxBytes`; any stat surprise declines to the job
     * path. */
   private def driverBytesOk(m: TableMeta, chunkIdxs: Iterable[Int]): Boolean =
     try {
@@ -885,7 +888,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       while (it.hasNext) {
         total += java.nio.file.Files.size(java.nio.file.Paths.get(
           store.chunkPath(m.chunks(it.next()).hash)))
-        if (total > Ops.DriverPatchMaxBytes) return false
+        if (total > routes.driverMaxBytes) return false
       }
       true
     } catch { case scala.util.control.NonFatal(_) => false }
@@ -1028,7 +1031,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       else if (DriverChunks.supported(schema) &&
           runRows <= Ops.DriverPatchMaxRows &&
           chunkBytes(runList.flatten.map(chunks)).exists(
-            _ <= Ops.DriverPatchMaxBytes)) {
+            _ <= routes.driverMaxBytes)) {
         val kEnc = KeyCodec.rowEncoder(schema, keyCols)
         val tmp = java.nio.file.Files.createTempDirectory("graft-canon-fix-")
         try {
@@ -1058,8 +1061,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         val df = scanChunkSubset(schemaJson, keyCols, target,
             runList.flatten.map(i => chunks(i)))
           .withColumn(grp, fileToRun(input_file_name()))
-        val metas = Canonical.materialize(spark, store, df, keyCols, target,
-          groupCol = Some(grp), rowBound = Some(runRows))
+        val metas = Canonical.materialize(spark, store, routes, df, keyCols,
+          target, groupCol = Some(grp), rowBound = Some(runRows))
         runList.map(idxs => idxs.head -> metas(s"r${idxs.head}").chunks).toMap
       }
     val rewritten = memoHit ++ memoize(rewritten0)
@@ -1249,7 +1252,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val aggProbe = !t.uniqueKeys && !t.generator &&
       !Canonical.smallJob(Some(srcRows), target) &&
       srcRows <= Ops.ProbeFoldMaxSourceRows
-    Canonical.materialize(spark, store, out,
+    Canonical.materialize(spark, store, routes, out,
       t.outKeyCols, target,
       // generator transforms can exceed the source row count — size
       // gating must treat their output as unknown; a TINY source still
@@ -1430,7 +1433,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
         val casted = castValues(folded,
           StructType(projected.schema.filterNot(_.name == grp)), valueCols)
-        val metas = Canonical.materialize(spark, store, casted,
+        val metas = Canonical.materialize(spark, store, routes, casted,
           t.outKeyCols, target,
           groupCol = Some(grp),
           rowBound = if (t.generator) None
@@ -1721,7 +1724,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           // rebuild's full source rescan is avoided.
           try {
             import scala.jdk.CollectionConverters._
-            val deltaMeta = Canonical.materialize(spark, store,
+            val deltaMeta = Canonical.materialize(spark, store, routes,
               spark.createDataFrame(insT.asJava, pm.schema),
               pm.keyCols, pm.chunkTargetRows,
               rowBound = Some(insT.length.toLong))(Canonical.Ungrouped)
@@ -1753,14 +1756,14 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       added: Seq[ChunkMeta])
       : Option[(Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row])] = {
     import scala.util.control.NonFatal
-    if (!Canonical.driverMaterializeEnabled) return None
+    if (!routes.driverMaterialize) return None
     if (!Ops.driverDiffable(m.schema)) {
       return None
     }
     val changed = removed ++ added
     val rows = changed.iterator.map(_.rows).sum
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-        !chunkBytes(changed).exists(_ <= Ops.DriverPatchMaxBytes)) {
+        !chunkBytes(changed).exists(_ <= routes.driverMaxBytes)) {
       return None
     }
     try {
@@ -1842,7 +1845,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
                 .filterNot(t.outKeyCols.contains).toSeq
               val folded = projected.groupBy(t.outKeyCols.map(col): _*)
                 .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-              val deltaMeta = Canonical.materialize(spark, store,
+              val deltaMeta = Canonical.materialize(spark, store, routes,
                 castValues(folded, projected.schema, valueCols),
                 t.outKeyCols, target,
                 // fold output ≤ projected rows ≤ delta rows for 1→1
@@ -1892,11 +1895,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               // delta materialization + the result merge — versus the
               // mini path's changed-chunk minis PLUS a re-merge of
               // EVERY mini when the appended group keys scatter.
-              // driverMaterializeEnabled doubles as the route-matrix
+              // routes.driverMaterialize doubles as the route-matrix
               // master switch (specs force it off to exercise the
               // reference mini/job paths) — honor it here even though
               // these variants never touch driver memory
-              if (!Canonical.driverMaterializeEnabled ||
+              if (!routes.driverMaterialize ||
                   !Ops.driverDiffable(m.schema)) {
                 None
               } else try {
@@ -2054,7 +2057,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val hit = chunksForKeys(pm, touched)
       val hitRows = hit.iterator.map(_.rows).sum
       if (hitRows > Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows) ||
-          !chunkBytes(hit).exists(_ <= Ops.DriverPatchMaxBytes)) {
+          !chunkBytes(hit).exists(_ <= routes.driverMaxBytes)) {
         return None
       }
       val touchedSet = touched.toSet
@@ -2243,7 +2246,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         val deltaProbe =
           !Canonical.smallJob(Some(changedRows), pm.chunkTargetRows) &&
           changedRows <= Ops.ProbeFoldMaxSourceRows
-        val deltaMeta = Canonical.materialize(spark, store,
+        val deltaMeta = Canonical.materialize(spark, store, routes,
           castValues(folded, pm.schema, valueCols), pm.keyCols,
           pm.chunkTargetRows,
           rowBound = if (deltaProbe) None else Some(changedRows),
@@ -2348,7 +2351,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // rejects first.
         val missingRows = missing.iterator.map(_.rows).sum
         val driverDf: Option[DataFrame] =
-          if (!Ops.driverPatchEnabled || !DriverChunks.supported(m.schema) ||
+          if (!routes.driverPatch || !DriverChunks.supported(m.schema) ||
               // zero-job crossover (VERDICT r13 #3, measured): the
               // LocalRelation fold runs the filter + projection + key
               // encode INTERPRETED on one driver thread — unbeatable for
@@ -2361,7 +2364,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               missingRows > Ops.DriverZeroJobMaxRows ||
               missingRows >
                 Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !chunkBytes(missing).exists(_ <= Ops.DriverPatchMaxBytes))
+              !chunkBytes(missing).exists(_ <= routes.driverMaxBytes))
             None
           else try {
             import scala.jdk.CollectionConverters._
@@ -2383,7 +2386,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         }
         val df = t.rowFilter.map(df0.where).getOrElse(df0)
         val projected = df.select(t.columns :+ col(grp): _*)
-        val metas = Canonical.materialize(spark, store, projected,
+        val metas = Canonical.materialize(spark, store, routes, projected,
           t.outKeyCols, m.chunkTargetRows,
           groupCol = Some(grp),
           rowBound = Some(missing.map(_.rows).sum),
@@ -2520,10 +2523,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // to the parquet scan + rangePredicate pair (DriverChunks
         // round-trip pinned; KeyCodec byte order IS the typed key order).
         val driverRows: Option[Seq[org.apache.spark.sql.Row]] =
-          if (!Canonical.driverMaterializeEnabled ||
+          if (!routes.driverMaterialize ||
               !DriverChunks.supported(m.schema) ||
               edgeRows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !edgeBytes.exists(_ <= Ops.DriverPatchMaxBytes)) None
+              !edgeBytes.exists(_ <= routes.driverMaxBytes)) None
           else try {
             val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
             Some(Canonical.parIo(edgeChunks) { c =>
@@ -2548,8 +2551,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // edge rewrite keeps the TABLE's chunk granularity (passthrough
         // chunks are cut at it; a mixed-granularity meta would break the
         // boundary assumptions of later merges)
-        Canonical.materialize(spark, store, df, m.keyCols, m.chunkTargetRows,
-          rowBound = Some(edgeRows),
+        Canonical.materialize(spark, store, routes, df, m.keyCols,
+          m.chunkTargetRows, rowBound = Some(edgeRows),
           byteBound = driverRows.flatMap(_ => edgeBytes))(Canonical.Ungrouped).chunks
       }
     // canonical-form repair: an edge rewrite can remove the boundary
@@ -2780,7 +2783,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     if (present.nonEmpty) {
       val cols = m.schema.fieldNames.toSeq
       val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
-      val rEnc = KeyCodec.rowEncoder(m.schema, cols)
+      val rbEnc = KeyCodec.rowEncoderSliced(m.schema, cols)
+      val statCols = Canonical.statColumns(m.schema, m.keyCols)
+      val statPos = statCols.map(cols.indexOf).toArray
+      val statDts = statCols.map(m.schema(_).dataType).toArray
       val byPath = present.map(c => store.chunkPath(c.hash) -> c.hash).toMap
       val bc = spark.sparkContext.broadcast(byPath)
       val fileOf = udf { (f: String) =>
@@ -2792,29 +2798,57 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       val rowSchema = StructType(Seq(StructField("_f", StringType),
-        StructField("kb", BinaryType), StructField("rb", BinaryType)))
+        StructField("kb", BinaryType), StructField("rb", BinaryType),
+        StructField("ends", ArrayType(IntegerType, containsNull = false))))
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(rowSchema)
       val fIdx = hashed.schema.fieldIndex("_f")
       val cIdx = cols.map(hashed.schema.fieldIndex)
       val perRow = hashed.mapPartitions { it =>
         it.map { r =>
           val proj = Row.fromSeq(cIdx.map(i => r.get(i)))
-          Row(r.getString(fIdx), kEnc(proj), rEnc(proj))
+          val (rb, ends) = rbEnc(proj)
+          Row(r.getString(fIdx), kEnc(proj), rb, ends.toSeq)
         }
       }(enc)
-      val actual = Canonical.chunkDigests(perRow, Seq("_f")).collect()
-        .map(r => r.getString(0) -> r).toMap
+      // one sorted pass per chunk file: rb leads with the key bytes, so
+      // rb order is key order — each file's rows fold through the same
+      // DigestState the chunk writers use, tagged with the file's hash
+      val actual = perRow
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("_f"))
+        .sortWithinPartitions(col("_f"), col("rb"))
+        .rdd.mapPartitions { it =>
+          val st = new Canonical.DigestState(statCols, statPos, statDts)
+          val rows = it.buffered
+          new Iterator[Canonical.FusedDigest] {
+            def hasNext: Boolean = rows.hasNext
+            def next(): Canonical.FusedDigest = {
+              val f = rows.head.getString(0)
+              st.reset()
+              while (rows.hasNext && rows.head.getString(0) == f) {
+                val r = rows.next()
+                st.update(r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2),
+                  r.getSeq[Int](3).toArray)
+              }
+              st.result(Canonical.Ungrouped, f)
+            }
+          }
+        }.collect().map(d => d.tag -> d).toMap
       present.foreach { c =>
+        val id = c.hash.take(8)
         actual.get(c.hash) match {
-          case None => problems += s"chunk ${c.hash.take(8)} produced no rows"
-          case Some(r) =>
-            if (r.getAs[String]("hash") != c.hash)
-              problems += s"chunk ${c.hash.take(8)} content hash mismatch"
-            if (r.getAs[Long]("rows") != c.rows)
-              problems += s"chunk ${c.hash.take(8)} row count ${r.getAs[Long]("rows")} != ${c.rows}"
-            if (Hashing.hex(r.getAs[Array[Byte]]("minkb")) != c.minKeyHex ||
-                Hashing.hex(r.getAs[Array[Byte]]("maxkb")) != c.maxKeyHex)
-              problems += s"chunk ${c.hash.take(8)} key range mismatch"
+          case None => problems += s"chunk $id produced no rows"
+          case Some(d) =>
+            if (d.hash != c.hash) problems += s"chunk $id content hash mismatch"
+            if (d.rows != c.rows)
+              problems += s"chunk $id row count ${d.rows} != ${c.rows}"
+            if (d.minKey != c.minKeyHex || d.maxKey != c.maxKeyHex)
+              problems += s"chunk $id key range mismatch"
+            // a meta may omit a column's stats (reads as "cannot
+            // prune"); any stats it carries must be the chunk's own
+            c.stats.foreach { case (n, s) =>
+              if (!d.stats.get(n).contains(s))
+                problems += s"chunk $id zone map mismatch on column $n"
+            }
         }
       }
     }
@@ -2921,10 +2955,6 @@ object Ops {
     * = a 512 KB array per net row, far under task memory. */
   val RetractMaxExpandMultiplicity: Long = 1L << 16
 
-  /** Test seam: lets specs force the Spark patch path to pin
-    * driver-path == job-path hash equality. Always true in production. */
-  @volatile private[graft] var driverPatchEnabled = true
-
   /** Row cap for the ZERO-JOB driver patch ([[Ops.patchTableBounded]]'s
     * fast path): total rows of the touched runs + upserts. Under it, a
     * point DML reads, splices, and writes its chunk runs entirely on
@@ -2949,14 +2979,6 @@ object Ops {
     * shuffle at local[32]; at 100 TB the gate keeps builds on the
     * straight job path. */
   val ProbeFoldMaxSourceRows: Long = 1L << 22
-
-  /** Compressed-byte budget for driver-side chunk splicing/reading —
-    * the cap that actually bounds driver memory; the row caps bound
-    * per-row object overhead. 64 MB compressed is a few hundred MB of
-    * row objects at typical codecs — comfortably inside any driver.
-    * `@volatile var` as a test seam (specs shrink it to pin the
-    * byte-gated fallback); production never writes it. */
-  @volatile var DriverPatchMaxBytes: Long = 64L << 20
 
   /** Row ceiling independent of width (driver Row-object overhead
     * dominates below ~100 B/row; 1M rows ≈ low hundreds of MB). */

@@ -116,9 +116,9 @@ object Sketches {
     // group — deliberately NOT the r14 tagged-union single chain. That
     // rewrite halved the sequential AQE stage-chain count but pushed
     // 2× the rows through the heaviest stage (the first distinct) and
-    // added the pivot's exchange; the quiet interleaved A/B
-    // (tools/KmvProfile, 8 reps, 2–80 cs steal) has the two-chain shape
-    // faster in 8/8 reps (min 2.20 s vs 2.45 s, ~12%), corroborating
+    // added the pivot's exchange; a quiet interleaved A/B of the two
+    // shapes in one process (8 reps, 2–80 cs steal) had the two-chain
+    // shape faster in 8/8 reps (min 2.20 s vs 2.45 s, ~12%), corroborating
     // the driver's r14 measurement (1.39 → 2.00 s). Under AQE the two
     // chains' independent stages also overlap, so the "sequential
     // chain" premise of the union shape was wrong.

@@ -283,12 +283,6 @@ object GraftSql {
     *    copy), `CHECKOUT '<root>'` (move the whole pointer; the
     *    abandoned chain stays reachable by hash).
     */
-  /** Test seam: route point DML (VALUES inserts, full-PK deletes and
-    * updates) through the point patch (always true in production;
-    * specs flip it to cross-check against the legacy scan/merge
-    * paths). */
-  private[graft] var pointDmlViaPatch = true
-
   /** Cap on the PRODUCT of per-position IN-list candidates an index
     * probe may carry — above it the candidate space is combinatorial
     * and the probe is skipped at plan time (the scan path is the better
@@ -338,7 +332,8 @@ object GraftSql {
         // a row-local CTAS over one bounded leaf (graft scan, cached
         // relation, small parquet) is metadata-sized → one-job driver
         // materialization; anything unbounded takes the job chain
-        val (rb, bb) = org.apache.spark.sql.GraftBridge.rowLocalScanBounds(df)
+        val (rb, bb) = org.apache.spark.sql.GraftBridge.rowLocalScanBounds(df,
+          ops.routes.driverMaxBytes)
         Right(catalog.put(name, ops.fromDataFrameBounded(df, keyCols,
           graft.core.FoldSpec.FoldLast, rb, bb),
           declared = Some(df.columns.toSeq)))
@@ -404,7 +399,7 @@ object GraftSql {
         // Ops.patchTable — point-INSERT latency in milliseconds.
         // Results hash-converge with the merge path (pinned in
         // PatchTableSpec / SqlAndSourcesSpec).
-        val isValues = GraftSql.pointDmlViaPatch &&
+        val isValues = ops.routes.pointDml &&
           query.trim.toLowerCase.startsWith("values")
         val merged =
           if (isValues) {
@@ -428,7 +423,7 @@ object GraftSql {
             // delta's keys scatter over more than half the chunks, the
             // delta materializes and merges through the job chain
             val (rb, bb) = org.apache.spark.sql.GraftBridge
-              .rowLocalScanBounds(guarded)
+              .rowLocalScanBounds(guarded, ops.routes.driverMaxBytes)
             val ref = graft.core.TableRef(entry.tableHash)
             deltaViaPatch(ops, schema, entry, ref, guarded, rb, bb)
               .getOrElse {
@@ -461,7 +456,7 @@ object GraftSql {
         // guard the view-refresh path uses; on decline we fall through
         // to the range/transform/rebuild chain below.
         val pointPatched: Option[graft.core.TableRef] =
-          (if (GraftSql.pointDmlViaPatch)
+          (if (ops.routes.pointDml)
             parseKeyPoints(spark, schema, entry.keyCols, cond) else None) match {
             case Some(keys) if keys.nonEmpty && keys.length <= 10000 =>
               val bound = math.max(8, ops.meta(ref).chunks.length / 2)
@@ -550,7 +545,7 @@ object GraftSql {
           // splice back through the point patch — the zero-job
           // point-DML triad completed (INSERT VALUES, point DELETE,
           // point UPDATE). Falls back on any surprise.
-          else (if (GraftSql.pointDmlViaPatch)
+          else (if (ops.routes.pointDml)
               parseKeyPoints(spark, schema, entry.keyCols, cond) else None)
             .filter(ks => ks.nonEmpty && ks.lengthCompare(1000) <= 0)
             .flatMap(ks =>
@@ -564,7 +559,7 @@ object GraftSql {
               // None (over-cap range, non-row-local
               // SET, any read surprise) falls through to the
               // range-scan + delta-patch chain below.
-              (if (GraftSql.pointDmlViaPatch)
+              (if (ops.routes.pointDml)
                 rangeUpdateDriver(spark, ops, schema, entry, name, ref,
                   lo, hi, sets)
               else None).getOrElse(try {
@@ -1322,11 +1317,11 @@ object GraftSql {
       entry: graft.core.CatalogEntry, ref: graft.core.TableRef,
       frame: DataFrame, rowBound: Option[Long],
       byteBound: Option[Long]): Option[graft.core.TableRef] = {
-    if (!GraftSql.pointDmlViaPatch) return None
+    if (!ops.routes.pointDml) return None
     val cap = graft.core.Ops.adaptiveRowCap(
       schema, graft.core.Ops.PatchMaxDeltaRows)
     if (!rowBound.exists(_ <= cap) ||
-        !byteBound.exists(_ <= graft.core.Ops.DriverPatchMaxBytes)) return None
+        !byteBound.exists(_ <= ops.routes.driverMaxBytes)) return None
     try {
       val rows = ops.collectDriverBounded(frame, rowBound).toSeq
       if (rows.isEmpty) return Some(ref)

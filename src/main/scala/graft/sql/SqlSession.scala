@@ -45,7 +45,8 @@ final class SqlSession(spark: SparkSession, baseOps: Ops, val catalog: Catalog) 
           throw new GraftSql.SqlException("transaction already open (no nesting)")
         val ts = Txn.begin(baseOps.store)
         txn = Some((ts,
-          new Ops(spark, ts, baseOps.chunkTargetRows, baseOps.registry),
+          new Ops(spark, ts, baseOps.chunkTargetRows, baseOps.registry,
+            baseOps.routes),
           new Catalog(ts)))
         Right(ts.startPtr.getOrElse(""))
       }

@@ -54,12 +54,13 @@ object GraftBridge {
     *    and in-memory bytes from its computed statistics;
     *  - a raw parquet relation small enough to stat: bytes from the
     *    file index, exact rows from the parquet footers (read only
-    *    when the relation is already inside the driver byte budget —
-    *    at scale the byte check rejects before any footer opens).
+    *    when the relation is within `maxFooterBytes`, the caller's
+    *    driver byte budget — at scale the byte check rejects before
+    *    any footer opens).
     * (None, None) when the plan can raise cardinality (join,
     * generator, union) or the leaf is anything else — callers then
     * skip the byte-admitted driver route. */
-  def rowLocalScanBounds(df: DataFrame)
+  def rowLocalScanBounds(df: DataFrame, maxFooterBytes: Long)
       : (Option[Long], Option[Long]) = {
     import org.apache.spark.sql.catalyst.plans.logical._
     def leaf(p: LogicalPlan): (Option[Long], Option[Long]) = p match {
@@ -104,7 +105,7 @@ object GraftBridge {
             val bytes = loc.sizeInBytes
             val files = loc.inputFiles
             val rows =
-              if (bytes > graft.core.Ops.DriverPatchMaxBytes ||
+              if (bytes > maxFooterBytes ||
                   files.length > 64) None
               else parquetRowCount(files)
             (rows, Some(bytes))
@@ -214,8 +215,8 @@ object GraftBridge {
     * Cloning snapshots the user conf at call time, so session time
     * zone, ANSI mode, and shuffle partitions all carry into the engine
     * plan. Cost: one lazy SessionState clone per materialization —
-    * ~1.4 ms measured (tools/CloneProbe) against a multi-job statement
-    * flow. */
+    * ~1.4 ms measured (mean of 50 clones at local[4]) against a
+    * multi-job statement flow. */
   def engineSession(spark: SparkSession): SparkSession = {
     val es = spark.asInstanceOf[classic.SparkSession].cloneSession()
     es.conf.set("spark.sql.adaptive.enabled", "false")
@@ -278,11 +279,11 @@ object GraftBridge {
     }
 
   /** Run `body` with conf overrides visible to planning done on the
-    * calling thread (`SQLConf.withExistingConf`). CAVEAT (measured,
-    * tools/WriteProbe): write commands execute on Spark's async
-    * command thread pool (`SQLExecution.withThreadLocalCaptured`),
-    * which does NOT carry this thread-local — engine write jobs run on
-    * a [[engineSession]] clone instead. */
+    * calling thread (`SQLConf.withExistingConf`). CAVEAT: write
+    * commands execute on Spark's async command thread pool
+    * (`SQLExecution.withThreadLocalCaptured`), which does NOT carry this
+    * thread-local — engine write jobs run on a [[engineSession]] clone
+    * instead. */
   def withConfOverrides[T](spark: SparkSession,
       overrides: Map[String, String])(body: => T): T = {
     val conf = spark.sessionState.conf.clone()

@@ -7,32 +7,14 @@ import graft.sql.GraftSql
 
 /** Driver-route admission: the single-threaded zero-job/fused driver
   * routes run only under the static row and byte caps
-  * ([[Ops.DriverPatchMaxBytes]]). When the caps decline, route choice
+  * ([[Routes.driverMaxBytes]]). When the caps decline, route choice
   * flips to the distributed path and results stay hash-identical. */
 class DriverRouteSpec extends AnyFunSuite {
+  import DriverRouteSpec.runFlow
   private lazy val spark = TestSpark.spark
 
-  /** A DML flow that exercises every cap-gated route: range UPDATE
-    * (per-chunk transform / delta patch), range DELETE (splice), point
-    * DML (driver patch), INSERT…SELECT (delta patch). */
-  private def runFlow(): String = {
-    val store = new FsStore(
-      graft.core.FsUtil.tempStoreDir("graft-route-gov-"))
-    val ops = new Ops(spark, store, 64)
-    val cat = new Catalog(store)
-    def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
-    run("CREATE TABLE t (k bigint PRIMARY KEY, g bigint NOT NULL, v bigint)")
-    run("INSERT INTO t SELECT id AS k, id % 7 AS g, id * 3 AS v FROM range(0, 4000)")
-    run("UPDATE t SET v = v + 1 WHERE k >= 500 AND k < 2500")
-    run("DELETE FROM t WHERE k >= 1000 AND k < 1400")
-    run("UPDATE t SET v = v * 2 WHERE k IN (3, 77, 3999)")
-    run("INSERT INTO t SELECT k + 10000, g, v FROM t WHERE k % 16 = 0")
-    run("DELETE FROM t WHERE g = 5 AND v % 3 = 0")
-    cat.root("t").tableHash
-  }
-
   /** `runFlow` plus the Spark jobs it launched. */
-  private def flowWithJobs(): (String, Int) = {
+  private def flowWithJobs(routes: Routes): (String, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -41,19 +23,16 @@ class DriverRouteSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val h = runFlow()
+      val h = runFlow(spark, routes)
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       (h, jobs.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("a byte budget of 1 flips every driver route to the distributed path, hashes unchanged") {
-    val (driver, driverJobs) = flowWithJobs()
-    val saved = Ops.DriverPatchMaxBytes
-    Ops.DriverPatchMaxBytes = 1L
+    val (driver, driverJobs) = flowWithJobs(Routes.Default)
     val (distributed, distributedJobs) =
-      try flowWithJobs()
-      finally Ops.DriverPatchMaxBytes = saved
+      flowWithJobs(Routes(driverMaxBytes = 1L))
     assert(distributed == driver,
       "byte-declined driver routes changed the result hash")
     assert(distributedJobs > driverJobs,
@@ -98,14 +77,33 @@ class DriverRouteSpec extends AnyFunSuite {
     // a PLAN EXECUTION MODE, never a result: the same bulk flow
     // materialized entirely interpreted (threshold = MaxValue) and
     // entirely codegen (threshold = 0) must produce the same table hash
-    val saved = Canonical.InterpretedCollectMaxBytes
-    try {
-      Canonical.InterpretedCollectMaxBytes = Long.MaxValue
-      val interp = runFlow()
-      Canonical.InterpretedCollectMaxBytes = 0L
-      val codegen = runFlow()
-      assert(interp === codegen,
-        "interpreted vs codegen byte-admitted collects diverged")
-    } finally Canonical.InterpretedCollectMaxBytes = saved
+    val interp =
+      runFlow(spark, Routes(interpretedCollectMaxBytes = Long.MaxValue))
+    val codegen = runFlow(spark, Routes(interpretedCollectMaxBytes = 0L))
+    assert(interp === codegen,
+      "interpreted vs codegen byte-admitted collects diverged")
+  }
+}
+
+object DriverRouteSpec {
+  /** A DML flow that exercises every cap-gated route: range UPDATE
+    * (per-chunk transform / delta patch), range DELETE (splice), point
+    * DML (driver patch), INSERT…SELECT (delta patch). Returns the final
+    * table hash. */
+  def runFlow(spark: org.apache.spark.sql.SparkSession,
+      routes: Routes): String = {
+    val store = new FsStore(
+      graft.core.FsUtil.tempStoreDir("graft-route-gov-"))
+    val ops = new Ops(spark, store, 64, routes = routes)
+    val cat = new Catalog(store)
+    def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+    run("CREATE TABLE t (k bigint PRIMARY KEY, g bigint NOT NULL, v bigint)")
+    run("INSERT INTO t SELECT id AS k, id % 7 AS g, id * 3 AS v FROM range(0, 4000)")
+    run("UPDATE t SET v = v + 1 WHERE k >= 500 AND k < 2500")
+    run("DELETE FROM t WHERE k >= 1000 AND k < 1400")
+    run("UPDATE t SET v = v * 2 WHERE k IN (3, 77, 3999)")
+    run("INSERT INTO t SELECT k + 10000, g, v FROM t WHERE k % 16 = 0")
+    run("DELETE FROM t WHERE g = 5 AND v % 3 = 0")
+    cat.root("t").tableHash
   }
 }

@@ -89,8 +89,9 @@ class EdgeCaseSpec extends AnyFunSuite {
       if (t == null) Nil else t +: causes(t.getCause)
     Seq(("zero-job", local, Some(3L)), ("collect", distributed, Some(3L)),
         ("job", distributed, None)).foreach { case (route, df, bound) =>
-      val e = intercept[Exception](Canonical.materialize(spark, store, df,
-        Seq("k"), 8, groupCol = Some("g"), rowBound = bound))
+      val e = intercept[Exception](Canonical.materialize(spark, store,
+        Routes.Default, df, Seq("k"), 8, groupCol = Some("g"),
+        rowBound = bound))
       assert(causes(e).exists(c =>
         Option(c.getMessage).exists(_.contains("null key in key column"))),
         s"$route route: wanted the explicit null-key error, got: $e")
@@ -190,6 +191,33 @@ class EdgeCaseSpec extends AnyFunSuite {
     Files.copy(p1, p0, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val problems = ops.verifyTable(ref)
     assert(problems.nonEmpty, "corruption must be detected")
+  }
+
+  test("verifyTable: a meta whose chunk carries a wrong zone-map min is reported") {
+    val schema = StructType(Seq(
+      StructField("k", StringType, nullable = false),
+      StructField("v", LongType, nullable = false)))
+    val dir = graft.core.FsUtil.tempStoreDir("graft-edge-zone-")
+    val ops = new Ops(spark, new FsStore(dir), 16)
+    val rows = (0 until 200).map(i => Row(f"key$i%04d", i.toLong))
+    val ref = ops.fromDataFrame(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema),
+      Seq("k"))
+    assert(ops.verifyTable(ref).isEmpty, "fresh table must verify")
+    // stats are not part of the table hash: the tampered meta keeps the
+    // table's identity, so it replaces the saved meta file in place
+    val m = ops.meta(ref)
+    val c0 = m.chunks.head
+    val v0 = c0.stats("v")
+    assert(v0.minHex != v0.maxHex)
+    val bad = m.copy(chunks = c0.copy(stats =
+      c0.stats.updated("v", v0.copy(minHex = v0.maxHex))) +: m.chunks.tail)
+    assert(bad.tableHash == ref.hash)
+    Files.delete(java.nio.file.Paths.get(dir, "tables", s"${ref.hash}.json"))
+    ops.store.saveTableMeta(bad)
+    val problems = ops.verifyTable(ref)
+    assert(problems.exists(_.contains("zone map mismatch on column v")),
+      s"wrong zone-map min not reported: $problems")
   }
 
   test("empty tables flow through scan, join views, and replication") {

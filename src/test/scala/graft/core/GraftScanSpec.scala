@@ -451,38 +451,39 @@ class GraftScanSpec extends AnyFunSuite {
     val m = ops.meta(ref)
     val scan = ops.scan(ref)
     val bridge = org.apache.spark.sql.GraftBridge
+    val maxBytes = Routes.Default.driverMaxBytes
 
     // bare scan / projection / filter chains: bounded by the table
-    val (r1, b1) = bridge.rowLocalScanBounds(scan)
+    val (r1, b1) = bridge.rowLocalScanBounds(scan, maxBytes)
     assert(r1.contains(1000L) && b1.exists(_ > 0))
     val (r2, b2) = bridge.rowLocalScanBounds(
-      scan.where(col("k") % 7 === 0).select((col("v") * 2).as("w"), col("k")))
+      scan.where(col("k") % 7 === 0).select((col("v") * 2).as("w"), col("k")), maxBytes)
     assert(r2.contains(1000L) && b2 == b1)
 
     // cardinality-raising or multi-source plans: unbounded
     assert(bridge.rowLocalScanBounds(
-      scan.as("a").join(scan.as("b"), "k"))._1.isEmpty)
-    assert(bridge.rowLocalScanBounds(scan.unionAll(scan))._1.isEmpty)
+      scan.as("a").join(scan.as("b"), "k"), maxBytes)._1.isEmpty)
+    assert(bridge.rowLocalScanBounds(scan.unionAll(scan), maxBytes)._1.isEmpty)
     // grouped aggregation cannot raise cardinality: bounded by its input
     // (round 8 — admits agg-CTAS to the driver route)
     assert(bridge.rowLocalScanBounds(
-      scan.groupBy(col("k") % 10).count())._1.contains(1000L))
+      scan.groupBy(col("k") % 10).count(), maxBytes)._1.contains(1000L))
     // ... and a GLOBAL aggregate is exactly one row
     assert(bridge.rowLocalScanBounds(
-      scan.agg(org.apache.spark.sql.functions.sum(col("v"))))._1.contains(1L))
+      scan.agg(org.apache.spark.sql.functions.sum(col("v"))), maxBytes)._1.contains(1L))
     assert(bridge.rowLocalScanBounds(scan.select(
       org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.array(col("k"), col("v")))))._1.isEmpty)
+        org.apache.spark.sql.functions.array(col("k"), col("v")))), maxBytes)._1.isEmpty)
     // a driver-resident local relation is trivially bounded (round 8)
     import spark.implicits._
     assert(bridge.rowLocalScanBounds(
-      Seq((1L, 2L)).toDF("k", "v"))._1.contains(1L))
+      Seq((1L, 2L)).toDF("k", "v"), maxBytes)._1.contains(1L))
 
     // the bound admits the driver route end-to-end: an INSERT..SELECT
     // delta shape built with these bounds hash-equals the job path
     val delta = scan.where(col("k") < 10)
       .select((col("k") + 5000).as("k"), col("v"))
-    val (rb, bb) = bridge.rowLocalScanBounds(delta)
+    val (rb, bb) = bridge.rowLocalScanBounds(delta, maxBytes)
     assert(rb.contains(1000L) && bb.isDefined)
     val viaBounded = ops.fromDataFrameBounded(delta, Seq("k"),
       FoldSpec.FoldLast, rb, bb)
@@ -493,15 +494,16 @@ class GraftScanSpec extends AnyFunSuite {
 
   test("rowLocalScanBounds: materialized cache and small parquet leaves are bounded") {
     val bridge = org.apache.spark.sql.GraftBridge
+    val maxBytes = Routes.Default.driverMaxBytes
 
     // a MATERIALIZED InMemoryRelation: exact rows + in-memory bytes
     val cached = spark.range(0, 500).selectExpr("id AS k", "id * 3 AS v").cache()
     try {
-      assert(bridge.rowLocalScanBounds(cached)._1.isEmpty,
+      assert(bridge.rowLocalScanBounds(cached, maxBytes)._1.isEmpty,
         "an unmaterialized cache has no row count yet")
       cached.count() // materialize
       val (cr, cb) = bridge.rowLocalScanBounds(
-        cached.where(col("k") % 2 === 0).select(col("k")))
+        cached.where(col("k") % 2 === 0).select(col("k")), maxBytes)
       assert(cr.contains(500L) && cb.exists(_ > 0))
     } finally cached.unpersist()
 
@@ -510,11 +512,11 @@ class GraftScanSpec extends AnyFunSuite {
     spark.range(0, 700).selectExpr("id AS k", "id * 5 AS v")
       .repartition(3).write.mode("overwrite").parquet(dir)
     val pq = spark.read.parquet(dir)
-    val (pr, pb) = bridge.rowLocalScanBounds(pq.where(col("k") < 10))
+    val (pr, pb) = bridge.rowLocalScanBounds(pq.where(col("k") < 10), maxBytes)
     assert(pr.contains(700L), s"parquet footer rows: $pr")
     assert(pb.exists(_ > 0))
     // cardinality-raising plans over the same leaves stay unbounded
-    assert(bridge.rowLocalScanBounds(pq.unionAll(pq))._1.isEmpty)
+    assert(bridge.rowLocalScanBounds(pq.unionAll(pq), maxBytes)._1.isEmpty)
     // and a bounded-leaf CTAS hash-equals the plain build
     val ops = newOps()
     val viaBounded = ops.fromDataFrameBounded(pq, Seq("k"),

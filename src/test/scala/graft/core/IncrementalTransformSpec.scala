@@ -226,11 +226,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val base3 = ops3.fromDataFrame(df(rows), Seq("k"))
     val v13 = ops3.transform(base3, rekeySum, FoldSpec.FoldSum)
     val merged3 = ops3.upsert(base3, ops3.fromDataFrame(df(delta), Seq("k")))
-    Canonical.driverMaterializeEnabled = false
-    val v23 =
-      try ops3.transform(merged3, rekeySum, FoldSpec.FoldSum,
-        prev = Some(v13))
-      finally Canonical.driverMaterializeEnabled = true
+    val v23 = new Ops(spark, store3, 64,
+      routes = Routes(driverMaterialize = false))
+      .transform(merged3, rekeySum, FoldSpec.FoldSum, prev = Some(v13))
     assert(v23.hash == v2.hash,
       "fold-in route diverged from the mini-merge route")
   }
@@ -302,10 +300,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged3 = ops3.patchTable(
       ops3.upsert(base3, ops3.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
-    Canonical.driverMaterializeEnabled = false
-    val v23 =
-      try ops3.transform(merged3, rekeyAgg, fold, prev = Some(v13))
-      finally Canonical.driverMaterializeEnabled = true
+    val v23 = new Ops(spark, store3, 64,
+      routes = Routes(driverMaterialize = false))
+      .transform(merged3, rekeyAgg, fold, prev = Some(v13))
     assert(v23.hash == v2.hash,
       "retraction route diverged from the mini-merge route")
   }
@@ -382,12 +379,10 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val delta = (12000 until 12040).map(i => f"k$i%05d" -> (i * 7).toLong)
     val merged = ops.upsert(base, ops.fromDataFrame(df(delta), Seq("k")))
 
-    val savedBytes = Ops.DriverPatchMaxBytes
-    Ops.DriverPatchMaxBytes = 1L // declines every byte-admitted route
+    // a byte budget of 1 declines every byte-admitted route
+    val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
     store.stats.reset()
-    val v2 =
-      try ops.transform(merged, rekeySum, FoldSpec.FoldSum, prev = Some(v1))
-      finally Ops.DriverPatchMaxBytes = savedBytes
+    val v2 = bytes1.transform(merged, rekeySum, FoldSpec.FoldSum, prev = Some(v1))
     val snap = store.stats.snapshot
     // still no per-chunk mini walk (~180 memoGets here)
     assert(snap("memoHits") + snap("memoMisses") <= 60,
@@ -426,13 +421,11 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val delKeys: Set[String] = ((0 until 20000).map(i => f"k$i%05d") ++
       (30000 until 40000).map(i => f"k$i%05d")).toSet
     val merged = ops.patchTable(base, Nil, delKeys.toSeq.sorted.map(Seq(_)))
-    val savedBytes = Ops.DriverPatchMaxBytes
-    Ops.DriverPatchMaxBytes = 1L // force the over-cap distributed path
+    // a byte budget of 1 forces the over-cap distributed path
+    val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
     val dist0 = Ops.rekeyRetractDistFoldIns.get()
     val scaled0 = Ops.rekeyRetractScaledNets.get()
-    val v2 =
-      try ops.transform(merged, rekeyConst, fold, prev = Some(v1))
-      finally Ops.DriverPatchMaxBytes = savedBytes
+    val v2 = bytes1.transform(merged, rekeyConst, fold, prev = Some(v1))
     assert(Ops.rekeyRetractDistFoldIns.get() == dist0 + 1,
       "purge did not take the distributed retraction")
     assert(Ops.rekeyRetractScaledNets.get() == scaled0 + 1,
@@ -478,13 +471,11 @@ class IncrementalTransformSpec extends AnyFunSuite {
     assert(70000L > Ops.RetractMaxExpandMultiplicity)
     val delKeys = (0 until 70000).map(i => f"k$i%05d")
     val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
-    val savedBytes = Ops.DriverPatchMaxBytes
-    Ops.DriverPatchMaxBytes = 1L // force past the driver routes
+    // a byte budget of 1 forces past the driver routes
+    val bytes1 = new Ops(spark, store, 512, routes = Routes(driverMaxBytes = 1L))
     val dist0 = Ops.rekeyRetractDistFoldIns.get()
     val scaled0 = Ops.rekeyRetractScaledNets.get()
-    val v2 =
-      try ops.transform(merged, rekeyConst, foldXor, prev = Some(v1))
-      finally Ops.DriverPatchMaxBytes = savedBytes
+    val v2 = bytes1.transform(merged, rekeyConst, foldXor, prev = Some(v1))
     assert(Ops.rekeyRetractDistFoldIns.get() == dist0,
       "over-cap non-linear purge must DECLINE the distributed retraction")
     assert(Ops.rekeyRetractScaledNets.get() == scaled0,
@@ -535,14 +526,12 @@ class IncrementalTransformSpec extends AnyFunSuite {
       ops.upsert(base, ops.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
 
-    val savedBytes = Ops.DriverPatchMaxBytes
-    Ops.DriverPatchMaxBytes = 1L // force the over-cap path
+    // a byte budget of 1 forces the over-cap path
+    val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
     val dist0 = Ops.rekeyRetractDistFoldIns.get()
     val drv0 = Ops.rekeyRetractFoldIns.get()
     store.stats.reset()
-    val v2 =
-      try ops.transform(merged, rekeyAgg, fold, prev = Some(v1))
-      finally Ops.DriverPatchMaxBytes = savedBytes
+    val v2 = bytes1.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
     assert(Ops.rekeyRetractDistFoldIns.get() == dist0 + 1,
       "over-cap delete delta did not take the DISTRIBUTED retraction")
@@ -575,10 +564,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged3 = ops3.patchTable(
       ops3.upsert(base3, ops3.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
-    Canonical.driverMaterializeEnabled = false
-    val v23 =
-      try ops3.transform(merged3, rekeyAgg, fold, prev = Some(v13))
-      finally Canonical.driverMaterializeEnabled = true
+    val v23 = new Ops(spark, store3, 64,
+      routes = Routes(driverMaterialize = false))
+      .transform(merged3, rekeyAgg, fold, prev = Some(v13))
     assert(v23.hash == v2.hash,
       "distributed retraction diverged from the mini-merge route")
     // ... and the driver retraction route (same inputs, default caps)

@@ -161,10 +161,8 @@ class PatchTableSpec extends AnyFunSuite {
     val ops2 = newOps()
     val base2 = rich(ops2, 400)
     assert(base1.hash == base2.hash)
-    Ops.driverPatchEnabled = false
-    val sparkRes =
-      try ops2.patchTable(base2, ups, dels)
-      finally Ops.driverPatchEnabled = true
+    val sparkRes = new Ops(spark, ops2.store, 16,
+      routes = Routes(driverPatch = false)).patchTable(base2, ups, dels)
     assert(driverRes.hash == sparkRes.hash,
       "driver patch and Spark patch must converge")
 
@@ -206,12 +204,9 @@ class PatchTableSpec extends AnyFunSuite {
     val ops2 = newOps()
     val base2 = build(ops2, 300)
     assert(base1.hash == base2.hash)
-    Ops.driverPatchEnabled = false
-    Canonical.driverMaterializeEnabled = false
-    val sparkRes =
-      try ops2.patchTable(base2, ups, dels)
-      finally { Ops.driverPatchEnabled = true
-        Canonical.driverMaterializeEnabled = true }
+    val sparkRes = new Ops(spark, ops2.store, 16,
+      routes = Routes(driverPatch = false, driverMaterialize = false))
+      .patchTable(base2, ups, dels)
     assert(driverRes.hash == sparkRes.hash,
       "driver and Spark routes must converge on array schemas")
 
@@ -274,19 +269,17 @@ class PatchTableSpec extends AnyFunSuite {
 
     // WIDE rows: shrink the byte budget so the same patch shape is
     // byte-rejected — the job path runs (jobs > 0) and converges
-    val prev = Ops.DriverPatchMaxBytes
     val ops2 = newOps()
     val base2 = ops2.fromDataFrame(
       df((0 until 300).map(i => (f"k$i%05d", i.toLong))), Seq("k"))
-    try {
-      Ops.DriverPatchMaxBytes = 16
-      val (p2, n2) = jobsDuring("pt-adaptive-wide-") {
-        ops2.patchTable(base2, Seq(Row("k00009", 99L)), Nil)
-      }
-      assert(n2 > 0, "byte-rejected patch must fall back to the job path")
-      val want2 = (0 until 300).map(i => (f"k$i%05d", if (i == 9) 99L else i.toLong))
-      assert(p2.hash == ops2.fromDataFrame(df(want2), Seq("k")).hash)
-    } finally Ops.DriverPatchMaxBytes = prev
+    val bytes16 = new Ops(spark, ops2.store, 16,
+      routes = Routes(driverMaxBytes = 16))
+    val (p2, n2) = jobsDuring("pt-adaptive-wide-") {
+      bytes16.patchTable(base2, Seq(Row("k00009", 99L)), Nil)
+    }
+    assert(n2 > 0, "byte-rejected patch must fall back to the job path")
+    val want2 = (0 until 300).map(i => (f"k$i%05d", if (i == 9) 99L else i.toLong))
+    assert(p2.hash == bytes16.fromDataFrame(df(want2), Seq("k")).hash)
   }
 
 }

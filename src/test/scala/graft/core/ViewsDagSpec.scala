@@ -134,17 +134,16 @@ class ViewsDagSpec extends AnyFunSuite {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.caller"))))
     }
-    val prevBytes = Ops.DriverPatchMaxBytes
+    // distributed routes only, so the refresh launches Spark jobs
+    val distributed = new Ops(spark, ops.store, ops.chunkTargetRows,
+      routes = Routes(driverMaxBytes = 1))
     org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.caller", tag)
     try {
-      // distributed routes only, so the refresh launches Spark jobs
-      Ops.DriverPatchMaxBytes = 1
-      GraftSql.execute(spark, ops, cat, "REFRESH ALL")
+      GraftSql.execute(spark, distributed, cat, "REFRESH ALL")
       org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
     } finally {
-      Ops.DriverPatchMaxBytes = prevBytes
       sc.setLocalProperty("graft.test.caller", null)
       sc.removeSparkListener(listener)
     }

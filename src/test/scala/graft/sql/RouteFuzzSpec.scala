@@ -15,9 +15,9 @@ import graft.core._
 class RouteFuzzSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def newOps(): (Ops, Catalog) = {
+  private def newOps(routes: Routes = Routes.Default): (Ops, Catalog) = {
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-fuzz-"))
-    (new Ops(spark, store, 64), new Catalog(store))
+    (new Ops(spark, store, 64, routes = routes), new Catalog(store))
   }
 
   /** ~40 statements over t(k PK, g NOT NULL, v nullable): point and
@@ -73,9 +73,9 @@ class RouteFuzzSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def runProgram(stmts: Seq[String])
+  private def runProgram(stmts: Seq[String], routes: Routes)
       : (String, Seq[(Long, Long, Any)], String) = {
-    val (ops, cat) = newOps()
+    val (ops, cat) = newOps(routes)
     GraftSql.execute(spark, ops, cat,
       "CREATE TABLE t (k bigint PRIMARY KEY, g bigint NOT NULL, v bigint)")
     stmts.foreach(GraftSql.execute(spark, ops, cat, _))
@@ -90,8 +90,8 @@ class RouteFuzzSpec extends AnyFunSuite {
   test("seeded DML programs hash-converge across every route config") {
     Seq(11L, 23L).foreach { seed =>
       val stmts = program(seed)
-      // (pointDmlViaPatch, driverPatchEnabled, driverMaterializeEnabled,
-      //  byte-budget-1): the byte-budget-1 config keeps every route flag
+      // (pointDml, driverPatch, driverMaterialize, byte-budget-1): the
+      // byte-budget-1 config keeps every route flag
       // ON but declines every byte-admitted driver route, so DML takes
       // the job paths and refreshes exercise the DISTRIBUTED fold-in and
       // the DISTRIBUTED retraction (round-13 mergeRetract) across the
@@ -102,35 +102,25 @@ class RouteFuzzSpec extends AnyFunSuite {
         (true, true, true, true))
       val results = configs.map {
         case (viaPatch, driverPatch, driverMat, bytes1) =>
-        GraftSql.pointDmlViaPatch = viaPatch
-        Ops.driverPatchEnabled = driverPatch
-        Canonical.driverMaterializeEnabled = driverMat
-        val savedBytes = Ops.DriverPatchMaxBytes
-        if (bytes1) Ops.DriverPatchMaxBytes = 1L
+        val routes = Routes(pointDml = viaPatch, driverPatch = driverPatch,
+          driverMaterialize = driverMat,
+          driverMaxBytes = if (bytes1) 1L else Routes.Default.driverMaxBytes)
         val dist0 = Ops.rekeyRetractDistFoldIns.get()
         val scaled0 = Ops.rekeyRetractScaledNets.get()
-        try {
-          val r = runProgram(stmts)
-          if (bytes1) {
-            assert(Ops.rekeyRetractDistFoldIns.get() > dist0,
-              s"seed $seed: byte-budget-1 config never took the " +
-                "distributed retraction")
-            // reconcile (VERDICT r13 #5): the fuzz views fold SUM/COUNT/
-            // HIST — all LINEAR — so every distributed retraction here
-            // must fold its net SCALED, never via row expansion
-            assert(Ops.rekeyRetractScaledNets.get() - scaled0 ==
-              Ops.rekeyRetractDistFoldIns.get() - dist0,
-              s"seed $seed: a linear-fold retraction fell off the " +
-                "scaled-net path")
-          }
-          r
+        val r = runProgram(stmts, routes)
+        if (bytes1) {
+          assert(Ops.rekeyRetractDistFoldIns.get() > dist0,
+            s"seed $seed: byte-budget-1 config never took the " +
+              "distributed retraction")
+          // reconcile (VERDICT r13 #5): the fuzz views fold SUM/COUNT/
+          // HIST — all LINEAR — so every distributed retraction here
+          // must fold its net SCALED, never via row expansion
+          assert(Ops.rekeyRetractScaledNets.get() - scaled0 ==
+            Ops.rekeyRetractDistFoldIns.get() - dist0,
+            s"seed $seed: a linear-fold retraction fell off the " +
+              "scaled-net path")
         }
-        finally {
-          GraftSql.pointDmlViaPatch = true
-          Ops.driverPatchEnabled = true
-          Canonical.driverMaterializeEnabled = true
-          Ops.DriverPatchMaxBytes = savedBytes
-        }
+        r
       }
       assert(results.map(_._2).distinct.length == 1,
         s"seed $seed: routes disagree on rows")

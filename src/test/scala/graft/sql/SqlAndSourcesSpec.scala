@@ -11,9 +11,9 @@ import graft.core._
 class SqlAndSourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def newOps(): (Ops, Catalog) = {
+  private def newOps(routes: Routes = Routes.Default): (Ops, Catalog) = {
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-sql-"))
-    (new Ops(spark, store, 64), new Catalog(store))
+    (new Ops(spark, store, 64, routes = routes), new Catalog(store))
   }
 
   test("CREATE TABLE: PK/NOT NULL/type names (SQL/Schema.hs fixtures)") {
@@ -346,8 +346,8 @@ class SqlAndSourcesSpec extends AnyFunSuite {
       "UPDATE t SET v = -7 WHERE k = 999999999",
       "DELETE FROM t WHERE k >= 1200 AND k < 1300",
       "UPDATE t SET v = 0 WHERE g = 11")
-    def runProgram(): (String, Seq[(Long, Long, Long)]) = {
-      val (ops, cat) = newOps()
+    def runProgram(routes: Routes): (String, Seq[(Long, Long, Long)]) = {
+      val (ops, cat) = newOps(routes)
       GraftSql.execute(spark, ops, cat,
         "CREATE TABLE t (k bigint PRIMARY KEY, g bigint NOT NULL, v bigint NOT NULL)")
       program.foreach(GraftSql.execute(spark, ops, cat, _))
@@ -357,10 +357,7 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     }
     val routes = Seq((true, true), (true, false), (false, true), (false, false))
     val results = routes.map { case (viaPatch, driver) =>
-      GraftSql.pointDmlViaPatch = viaPatch
-      Ops.driverPatchEnabled = driver
-      try runProgram()
-      finally { GraftSql.pointDmlViaPatch = true; Ops.driverPatchEnabled = true }
+      runProgram(Routes(pointDml = viaPatch, driverPatch = driver))
     }
     assert(results.map(_._2).distinct.length == 1, "routes disagree on rows")
     assert(results.map(_._1).distinct.length == 1,
@@ -541,10 +538,9 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run("DELETE FROM gd WHERE k % 37 = 5 AND k % 2 = 0") // thin group 5
     val drv0 = graft.core.Ops.rekeyRetractFoldIns.get()
     val dist0 = graft.core.Ops.rekeyRetractDistFoldIns.get()
-    val savedBytes = graft.core.Ops.DriverPatchMaxBytes
-    graft.core.Ops.DriverPatchMaxBytes = 1L
-    try run("REFRESH MATERIALIZED VIEW gdv")
-    finally graft.core.Ops.DriverPatchMaxBytes = savedBytes
+    GraftSql.execute(spark, new Ops(spark, ops.store, ops.chunkTargetRows,
+      routes = Routes(driverMaxBytes = 1L)), cat,
+      "REFRESH MATERIALIZED VIEW gdv")
     assert(graft.core.Ops.rekeyRetractDistFoldIns.get() > dist0,
       "a byte-declined driver route must reroute the DELETE-refresh to " +
         "the distributed retraction")
@@ -1510,20 +1506,17 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     // the one-collect driver materialization — this pins that route's
     // result table hash against the full Spark job path
     def mergedHash(driverMat: Boolean): String = {
-      graft.core.Canonical.driverMaterializeEnabled = driverMat
-      try {
-        val (ops, cat) = newOps()
-        def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
-        run("CREATE TABLE mr (k bigint PRIMARY KEY, v bigint NOT NULL, s text)")
-        run("INSERT INTO mr SELECT id, id * 3, 'base' FROM range(0, 600)")
-        run("""MERGE INTO mr AS t USING (
-            SELECT id * 2 AS sk, id AS sv FROM range(100, 400)
-          ) AS s ON t.k = s.sk
-          WHEN MATCHED AND s.sv % 5 = 0 THEN DELETE
-          WHEN MATCHED THEN UPDATE SET v = t.v + s.sv
-          WHEN NOT MATCHED AND s.sv % 3 != 1 THEN INSERT (k, v, s) VALUES (s.sk, s.sv, 'new')""")
-        cat.root("mr").tableHash
-      } finally graft.core.Canonical.driverMaterializeEnabled = true
+      val (ops, cat) = newOps(Routes(driverMaterialize = driverMat))
+      def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+      run("CREATE TABLE mr (k bigint PRIMARY KEY, v bigint NOT NULL, s text)")
+      run("INSERT INTO mr SELECT id, id * 3, 'base' FROM range(0, 600)")
+      run("""MERGE INTO mr AS t USING (
+          SELECT id * 2 AS sk, id AS sv FROM range(100, 400)
+        ) AS s ON t.k = s.sk
+        WHEN MATCHED AND s.sv % 5 = 0 THEN DELETE
+        WHEN MATCHED THEN UPDATE SET v = t.v + s.sv
+        WHEN NOT MATCHED AND s.sv % 3 != 1 THEN INSERT (k, v, s) VALUES (s.sk, s.sv, 'new')""")
+      cat.root("mr").tableHash
     }
     assert(mergedHash(driverMat = true) == mergedHash(driverMat = false),
       "MERGE driver-route splice diverged from the job path")
@@ -1536,20 +1529,16 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     // result table — the wide-string-source safety the measured bound
     // exists for
     def mergedHash(maxBytes: Long): String = {
-      val saved = graft.core.Ops.DriverPatchMaxBytes
-      graft.core.Ops.DriverPatchMaxBytes = maxBytes
-      try {
-        val (ops, cat) = newOps()
-        def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
-        run("CREATE TABLE mb (k bigint PRIMARY KEY, v bigint NOT NULL, s text)")
-        run("INSERT INTO mb SELECT id, id * 2, repeat('x', 64) FROM range(0, 400)")
-        run("""MERGE INTO mb AS t USING (
-            SELECT id * 3 AS sk, repeat('y', 64) AS sv FROM range(50, 250)
-          ) AS s ON t.k = s.sk
-          WHEN MATCHED THEN UPDATE SET s = s.sv
-          WHEN NOT MATCHED THEN INSERT (k, v, s) VALUES (s.sk, 0, s.sv)""")
-        cat.root("mb").tableHash
-      } finally graft.core.Ops.DriverPatchMaxBytes = saved
+      val (ops, cat) = newOps(Routes(driverMaxBytes = maxBytes))
+      def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+      run("CREATE TABLE mb (k bigint PRIMARY KEY, v bigint NOT NULL, s text)")
+      run("INSERT INTO mb SELECT id, id * 2, repeat('x', 64) FROM range(0, 400)")
+      run("""MERGE INTO mb AS t USING (
+          SELECT id * 3 AS sk, repeat('y', 64) AS sv FROM range(50, 250)
+        ) AS s ON t.k = s.sk
+        WHEN MATCHED THEN UPDATE SET s = s.sv
+        WHEN NOT MATCHED THEN INSERT (k, v, s) VALUES (s.sk, 0, s.sv)""")
+      cat.root("mb").tableHash
     }
     assert(mergedHash(64L << 20) == mergedHash(1L),
       "byte-gated MERGE splice diverged from the driver route")
