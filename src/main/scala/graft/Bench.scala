@@ -256,13 +256,11 @@ object Bench {
     var stmtJobsMark = 0L
     // per-statement ROUTE-ADMISSION deltas (VERDICT r13 #5): which
     // incremental route each statement actually took — driver
-    // retraction, distributed retraction (and whether its net folded
-    // SCALED), append fold-in — so a silent route
+    // retraction, distributed retraction, append fold-in — so a silent route
     // downgrade is visible in every bench artifact
     def routeCounters(): Array[Long] = Array(
       graft.core.Ops.rekeyRetractFoldIns.get(),
       graft.core.Ops.rekeyRetractDistFoldIns.get(),
-      graft.core.Ops.rekeyRetractScaledNets.get(),
       graft.core.Ops.rekeyAppendFoldIns.get())
     var stmtRouteMark: Array[Long] = routeCounters()
     graft.sql.GraftSql.stmtProbe = Some { (sql, sec) =>
@@ -270,7 +268,7 @@ object Bench {
       val rc = routeCounters()
       val rd = rc.zip(stmtRouteMark).map { case (a, b) => a - b }
       val routes = s""""retract_drv":${rd(0)},"retract_dist":${rd(1)},""" +
-        s""""retract_scaled":${rd(2)},"fold_ins":${rd(3)}"""
+        s""""fold_ins":${rd(2)}"""
       stmtBuf.synchronized { stmtBuf += ((sql, sec, j - stmtJobsMark, routes)); () }
       stmtJobsMark = j
       stmtRouteMark = rc
@@ -305,15 +303,13 @@ object Bench {
       def d(k: String): Long = l1(k) - l0(k)
       val env = Seq(
         // retraction-admission deltas (VERDICT r13 #5): driver vs
-        // distributed (and scaled-net) vs append fold-in, per query
+        // distributed vs append fold-in, per query
         "retract_drv" ->
           (graft.core.Ops.rekeyRetractFoldIns.get() - routes0(0)).toString,
         "retract_dist" ->
           (graft.core.Ops.rekeyRetractDistFoldIns.get() - routes0(1)).toString,
-        "retract_scaled" ->
-          (graft.core.Ops.rekeyRetractScaledNets.get() - routes0(2)).toString,
         "fold_ins" ->
-          (graft.core.Ops.rekeyAppendFoldIns.get() - routes0(3)).toString,
+          (graft.core.Ops.rekeyAppendFoldIns.get() - routes0(2)).toString,
         "jobs" -> d("jobs").toString,
         "tasks" -> d("tasks").toString,
         "task_run_s" -> fmt(d("run_ms") / 1e3),

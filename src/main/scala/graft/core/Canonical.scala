@@ -121,7 +121,7 @@ object Canonical {
         .putLong(FieldIdKey, i.toLong).build())
     })
 
-  private val NullKeyError = "null key in key column"
+  private[core] val NullKeyError = "null key in key column"
 
   /** Row → row ++ its key bytes, for rows of `schema`. Key columns are
     * non-null by the table contract (normalizeSchema marks them so); a
@@ -453,21 +453,11 @@ object Canonical {
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
         df.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-      try {
+      Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
         val schema = normalizeSchema(df.schema, keyCols)
         val rows = df.collect().map(keyBytesAppender(schema, keyCols))
         driverWrite(rows, schema.add(StructField(KB, BinaryType, nullable = false)))
-          .foreach(return _)
-      } catch {
-        // a null key is USER error, not a driver-route infrastructure
-        // failure: propagate it directly instead of falling back to a
-        // job that would only re-raise the same error from a task
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.startsWith(NullKeyError) =>
-          throw e
-        case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e)
-      }
+      }.foreach(return _)
     }
     val kbDf0 = withKeyBytes(df, keyCols)
     // no persist when a driver route will be attempted: its one collect
@@ -482,9 +472,8 @@ object Canonical {
         interpretedOk = interpretedCollectOk(routes, rowBound, dataSchema))
       val rows: Option[Array[Row]] =
         if (rowBound.contains(0L)) Some(Array.empty)
-        else try Some(withJobDesc(es, s"graft:collect$label")(ekb.collect()))
-        catch { case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e); None }
+        else Ops.routeOr(Option.empty[Array[Row]])(
+          Some(withJobDesc(es, s"graft:collect$label")(ekb.collect())))
       rows.flatMap(driverWrite(_, kbDf.schema)).foreach(return _)
     } else if (rowBound.isEmpty && routes.driverMaterialize &&
         (probeFold || smallJob(rowProbe, chunkTargetRows)) &&
@@ -495,8 +484,8 @@ object Canonical {
       // output fits the driver cap: ONE limit-guarded collect job; over
       // the cap, the bet is off and the job path below recomputes
       // (bounded waste, rare by construction). This is what lets a
-      // small-corpus generator INDEX BUILD and the delta minis of a
-      // point ingest run as one collect + driver-side chunk writes
+      // small-corpus generator INDEX BUILD and the per-chunk minis of
+      // a point ingest run as one collect + driver-side chunk writes
       // instead of a sample + multi-file write job pair. (Probe conf —
       // one-job limit — lives on the engine clone, see
       // GraftBridge.engineSession.) `probeFold` is the caller's
@@ -507,13 +496,12 @@ object Canonical {
       // fallback applies.
       val cap = Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)
       val probed: Option[Array[Row]] =
-        try Some(withJobDesc(spark, s"graft:probe$label") {
-          val (_, ekb) =
-            onEngine(spark, kbDf, smallShuffle = true, interpretedOk = false)
-          ekb.limit(cap.toInt + 1).collect()
-        })
-        catch { case scala.util.control.NonFatal(e) =>
-          Ops.warnDriverPatchFallback(e); None }
+        Ops.routeOr(Option.empty[Array[Row]])(
+          Some(withJobDesc(spark, s"graft:probe$label") {
+            val (_, ekb) =
+              onEngine(spark, kbDf, smallShuffle = true, interpretedOk = false)
+            ekb.limit(cap.toInt + 1).collect()
+          }))
       probed.filter(_.length <= cap)
         .foreach(rs => driverWrite(rs, kbDf.schema).foreach(return _))
     }
@@ -863,7 +851,7 @@ object Canonical {
       kbSchema: StructType, dataSchema: StructType, schemaJson: String,
       groupCol: Option[String], keyCols: Seq[String],
       target: Long): Option[Map[String, TableMeta]] =
-    try {
+    Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
       val schema = normalizeSchema(dataSchema, keyCols)
       val gIdx = groupCol.map(kbSchema.fieldIndex)
       val kbIdx = kbSchema.fieldIndex(KB)
@@ -885,8 +873,7 @@ object Canonical {
         Some(commit(store, groupCol.isDefined, schemaJson, keyCols, target,
           chunks, batch.result()))
       } finally deleteRecursively(tmp)
-    } catch { case scala.util.control.NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
+    }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.exists(p)) {

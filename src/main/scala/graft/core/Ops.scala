@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -808,11 +808,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     if (routes.driverPatch && DriverChunks.supported(m.schema) &&
         patchRows <= Ops.DriverPatchHardRowCap &&
         driverBytesOk(m, touched)) {
-      try return Some(
-        driverPatch(m, runList, upserts, upsertKbs, deadHex, owner))
-      catch { case scala.util.control.NonFatal(e) =>
-        Ops.warnDriverPatchFallback(e)
-      }
+      Ops.routeOr(Option.empty[TableRef])(Some(
+        driverPatch(m, runList, upserts, upsertKbs, deadHex, owner)))
+        .foreach(r => return Some(r))
     }
     val runOfChunk: Map[Int, String] = runList.zipWithIndex.flatMap {
       case (idxs, r) => idxs.map(_ -> s"r$r")
@@ -948,16 +946,14 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
         !driverBytesOk(m, hit)) return None
     val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
-    try Some(Canonical.parIo(hit) { i =>
+    Ops.routeOr(Option.empty[Seq[Row]])(Some(Canonical.parIo(hit) { i =>
       DriverChunks.readRows(java.nio.file.Paths.get(
         store.chunkPath(m.chunks(i).hash)), m.schema)
         .filter { r =>
           val kb = kEnc(r)
           RangeBounds.passesLow(kb, loB) && RangeBounds.passesHigh(kb, hiB)
         }
-    }.flatten)
-    catch { case scala.util.control.NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
+    }.flatten))
   }
 
   private def deleteTmpDir(tmp: java.nio.file.Path): Unit =
@@ -1214,7 +1210,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * sub-results): the generic path for order-sensitive folds, and the
     * from-scratch BUILD of combinable re-keys (where writing per-chunk
     * minis first would double the build IO for reuse the patch path
-    * never needs — it computes delta minis on demand). */
+    * never needs — it splices row deltas). */
   private def transformDirect(m: TableMeta, t: ColTransform,
       fold: FoldSpec, target: Long): String = {
     val src0 = Canonical.withKeyBytes(scanMeta(m), m.keyCols)
@@ -1305,22 +1301,18 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         m.tableHash)
       resultHash
     }
-    // 1. O(delta) patch FIRST: it needs only the CHANGED chunks' minis,
-    //    computed on demand inside patchAgainstPrevious — minis of
-    //    unchanged chunks are never materialized at all.
+    // 1. O(delta) patch FIRST: it splices the row-level delta of the
+    //    CHANGED source chunks onto the previous result — no minis.
     if (t.uniqueKeys) prev.foreach { p =>
-      patchAgainstPrevious(m, t, fold, p, miniOp, target)
+      patchAgainstPrevious(m, t, fold, p, target)
         .foreach(h => return finish(h))
     }
     // 2. uniqueKeys build/rebuild: ONE direct materialization, no mini
     //    tables written — HALF the IO of the former minis-then-merge
     //    flow (which for a re-key always degenerates to the flat
-    //    shuffle anyway). Refreshes stay O(delta): the patch path above
-    //    computes just the delta's minis on demand from the
-    //    still-present old chunk objects; when it declines (wide or
-    //    scattered delta), the rebuild IS the cheapest plan.
-    //    Bit-identical either way: rekeyCombinable admits only folds
-    //    whose partial folds are bit-stable, and the chunk
+    //    shuffle anyway). Refreshes stay O(delta) through the patch
+    //    above; when it declines (wide or scattered delta), the rebuild
+    //    IS the cheapest plan. Bit-identical either way: the chunk
     //    decomposition is a pure function of the key set. (Non-unique
     //    re-keys — aggregate views — keep eager minis: their O(delta)
     //    refresh runs through the piece/region-memoized merge, which
@@ -1357,7 +1349,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     //     missing minis on demand in one batched job and memoizes them
     //     (the cost moves from EVERY build to the first refresh that
     //     actually needs the substrate). Non-invertible views (MIN/MAX/
-    //     KMV members, or no liveness column) keep eager minis: their
+    //     KMV members, no liveness column, or a fold that is not
+    //     linear) keep eager minis: their
     //     update/delete refreshes have no fold-in route, so the memoized
     //     minis + region memos ARE their O(delta) story. Bit-identical
     //     either way: rekeyCombinable admits only bit-stable partial
@@ -1439,8 +1432,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           rowBound = if (t.generator) None
             else Some(missing.map(_.rows).sum),
           // generator output size is unknown, but a tiny INPUT makes
-          // the optimistic driver probe the right bet (delta minis of
-          // a point ingest)
+          // the optimistic driver probe the right bet (the changed
+          // chunks' minis of a point ingest)
           rowProbe = if (t.generator) Some(missing.map(_.rows).sum)
             else None,
           byteBound = if (t.generator) None else chunkBytes(missing))
@@ -1460,321 +1453,168 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
 
   /** Reverse memo key: which SOURCE version produced `resultHash` under
     * this transform — written after every re-key refresh, consumed by
-    * [[patchAgainstPrevious]]. Write-once is fine: any source mapping to
-    * the same result serves equally as "previous" (its minis reproduce
-    * exactly the result's rows under the uniqueKeys contract). */
+    * [[previousVersion]]. Write-once is fine: any source mapping to the
+    * same result serves equally as "previous" (its rows reproduce
+    * exactly the result's rows). */
   private def rekeyRevOp(t: ColTransform, fold: FoldSpec, target: Long,
       resultHash: String): String =
     Hashing.opHash(Seq("graft-op-rekey-src-v1", t.key, fold.key,
       target.toString, resultHash))
 
-  /** O(delta) refresh of a uniqueKeys re-key: diff the replaced source
-    * chunks' minis (old vs new — O(changed chunks) data, structural
-    * sharing skips everything else), collect the tiny row-level delta,
-    * and [[patchTable]] it onto the previous result. Returns None — fall
-    * back to the mini merge — when any precondition fails: no reverse
-    * memo, missing mini memos (GC), shape drift, or a delta above the
-    * driver-resident caps. The result is bit-identical to the merge path
-    * (same rows; content-defined chunking makes the chunk decomposition
-    * a pure function of the key set). */
-  private def patchAgainstPrevious(m: TableMeta, t: ColTransform,
-      fold: FoldSpec, prev: TableRef, miniOp: String => String,
-      target: Long): Option[String] = {
+  /** What changed since the previous refresh of a re-key — the common
+    * prelude of [[patchAgainstPrevious]] and [[rekeyDeltaFoldIn]]:
+    * `prev`'s own meta, and the source chunks removed and added since
+    * the source version the reverse memo maps `prev` to. None — no
+    * incremental route applies — when the reverse memo is missing, a
+    * meta is unreadable (GC), or the source shape or either granularity
+    * drifted. */
+  private def previousVersion(m: TableMeta, t: ColTransform,
+      fold: FoldSpec, prev: TableRef, target: Long)
+      : Option[Ops.PreviousVersion] = {
     import scala.util.control.NonFatal
     def tryLoad(h: String): Option[TableMeta] =
       try Some(store.loadTableMeta(h)) catch { case NonFatal(_) => None }
     for {
-      s1Hash <- store.memoGet(
-        rekeyRevOp(t, fold, target, prev.hash))
+      s1Hash <- store.memoGet(rekeyRevOp(t, fold, target, prev.hash))
       m1 <- tryLoad(s1Hash)
       if m1.schemaJson == m.schemaJson && m1.keyCols == m.keyCols &&
         m1.chunkTargetRows == m.chunkTargetRows
       pm <- tryLoad(prev.hash)
       if pm.chunkTargetRows == target
-      result <- {
-        val c2 = m.chunks.iterator.map(_.hash).toSet
-        val c1 = m1.chunks.iterator.map(_.hash).toSet
-        val removed = m1.chunks.filterNot(c => c2(c.hash)).distinctBy(_.hash)
-        val added = m.chunks.filterNot(c => c1(c.hash)).distinctBy(_.hash)
-        lazy val viaSourceDiff =
-          patchViaSourceDiff(m, t, fold, removed, added, prev, pm)
-        if (removed.isEmpty && added.isEmpty) Some(prev.hash)
-        else if (removed.length + added.length > Ops.PatchMaxChangedChunks)
-          None
-        // tri-state: Some(Some(h)) = patched; Some(None) = the exact
-        // transformed delta was computed and the splice is provably
-        // unprofitable (the mini route would compute the SAME delta and
-        // hit the SAME guards — skip straight to the rebuild);
-        // None = route inapplicable, fall through to the mini path
-        else if (viaSourceDiff.isDefined) viaSourceDiff.get
-        else if ({
-          // wide-delta guard: patching pays only when the delta is a
-          // small fraction of the source — above a quarter of the
-          // source rows, the single-pass rebuild reads and writes less
-          // than mini-diff + run splicing. (The source-row diff route
-          // above escapes this trade entirely when the changed chunks
-          // are byte-admitted: it reads them once, writes no minis, and
-          // splices only the row-level delta.)
-          val srcDelta = (removed ++ added).iterator.map(_.rows).sum
-          val srcTotal = m.chunks.iterator.map(_.rows).sum
-          4 * srcDelta > srcTotal
-        }) None
-        else {
-          def minis(cs: Seq[ChunkMeta]): Option[Seq[TableMeta]] = {
-            val ms = cs.map(c => store.memoGet(miniOp(c.hash)).flatMap(tryLoad))
-            if (ms.forall(_.isDefined)) Some(ms.flatten) else None
-          }
-          for {
-            // compute the delta's missing minis on demand in one batched
-            // job (REPLACED old chunks' objects are still in the
-            // content-addressed store; if GC swept them, fall back)
-            _ <- (try {
-              computeMinis(m.schema, m.keyCols, t, fold, target,
-                removed ++ added, miniOp)
-              Some(())
-            } catch { case NonFatal(_) => None })
-            remM <- minis(removed)
-            addM <- minis(added)
-            h <- {
-              // width-adaptive delta cap: these rows are collected to
-              // the driver, so the budget is bytes, not rows
-              val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows)
-                .toInt
-              def applyDelta(ins: Seq[org.apache.spark.sql.Row],
-                  delRows: Seq[org.apache.spark.sql.Row])
-                  : Option[String] = {
-                val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
-                def keyOf(row: org.apache.spark.sql.Row): Seq[Any] =
-                  kIdx.map(row.get)
-                val insKeys = ins.iterator.map(keyOf).toSet
-                val delKeys = delRows.iterator.map(keyOf)
-                  .filterNot(insKeys).toSeq.distinct
-                // scattered-delta guard: bail to the rebuild when the
-                // delta's keys touch more than half the chunks
-                patchTableBounded(prev, ins, delKeys,
-                  Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
-              }
-              // DRIVER diff first: the delta minis of a point ingest
-              // are a few hundred rows — reading them through
-              // DriverChunks and diffing in memory runs ZERO Spark
-              // jobs where the exceptAll pair launched four. Structural
-              // row equality needs comparable field types (no binary
-              // array-equals trap, no fp NaN/-0.0 hashing divergence);
-              // anything else — or any read surprise — takes the Spark
-              // diff below, bit-identical either way.
-              val miniRows =
-                (addM.iterator ++ remM.iterator).map(_.rows).sum
-              val driverDiffed: Option[(Seq[org.apache.spark.sql.Row],
-                  Seq[org.apache.spark.sql.Row])] =
-                if (miniRows <= cap && Ops.driverDiffable(pm.schema))
-                  try {
-                    def rowsOf(ms: Seq[TableMeta])
-                        : Seq[org.apache.spark.sql.Row] =
-                      Canonical.parIo(ms.flatMap(_.chunks))(c =>
-                        DriverChunks.readRows(java.nio.file.Paths.get(
-                          store.chunkPath(c.hash)), pm.schema)).flatten
-                    val aR = rowsOf(addM); val rR = rowsOf(remM)
-                    Some((Ops.multisetRowDiff(aR, rR),
-                      Ops.multisetRowDiff(rR, aR)))
-                  } catch { case NonFatal(e) =>
-                    Ops.warnDriverPatchFallback(e); None }
-                else None
-              driverDiffed match {
-                case Some((ins, del)) => applyDelta(ins, del)
-                case None =>
-                  def readAll(ms: Seq[TableMeta]): DataFrame = {
-                    // RAW read, not scanChunkSubset: two minis may
-                    // contain IDENTICAL chunk content (same folded rows
-                    // from different source chunks), and this multiset
-                    // diff needs every copy — duplicate paths double-
-                    // read under spark.read (verified), while the
-                    // file-index scan dedupes by hash
-                    val paths =
-                      ms.flatMap(_.chunks).map(c => store.chunkPath(c.hash))
-                    if (paths.isEmpty) spark.createDataFrame(
-                      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                      pm.schema)
-                    else spark.read.schema(Canonical.withFieldIds(pm.schema))
-                      .parquet(paths: _*)
-                      .select(pm.schema.fieldNames.map(n => col(n)
-                        .as(n, org.apache.spark.sql.types.Metadata.empty)): _*)
-                  }
-                  val a = readAll(addM); val r = readAll(remM)
-                  // row-level diff: rows identical in the old and new
-                  // minis (the vast majority — only the source delta's
-                  // rows differ) drop out, so the collected delta is
-                  // O(source delta rows)
-                  val ins = a.exceptAll(r).limit(cap + 1).collect()
-                  if (ins.length > cap) None
-                  else {
-                    val del = r.exceptAll(a).limit(cap + 1).collect()
-                    if (del.length > cap) None
-                    else applyDelta(ins.toSeq, del.toSeq)
-                  }
-              }
-            }
-          } yield h
-        }
-      }
-    } yield result
+    } yield {
+      val c2 = m.chunks.iterator.map(_.hash).toSet
+      val c1 = m1.chunks.iterator.map(_.hash).toSet
+      Ops.PreviousVersion(pm,
+        removed = m1.chunks.filterNot(c => c2(c.hash)).distinctBy(_.hash),
+        added = m.chunks.filterNot(c => c1(c.hash)).distinctBy(_.hash))
+    }
   }
 
-  /** SOURCE-row driver-diff patch: when a uniqueKeys re-key's changed
-    * source chunks are byte-admitted, diff their ROWS directly (old vs
-    * new versions, read through [[DriverChunks]]), map only the tiny
-    * row-level delta through the row-local transform, and splice it
-    * onto the previous result — no mini tables are computed or written
-    * and no Spark job runs for non-generator transforms (the local
-    * delta plan folds to a LocalRelation). This is the route that keeps
-    * a SMALL row delta scattered across MANY chunks — a one-row-per-
-    * chunk DML changes every chunk hash while leaving almost every row
-    * identical — from tripping the chunk-level wide-delta guard into a
-    * full index rebuild. Exactness: transform∘diff == diff∘transform
+  /** O(delta) refresh of a uniqueKeys re-key: the row-level delta of
+    * the changed source chunks, mapped through the row-local transform
+    * and spliced onto the previous result ([[spliceUnique]]) — no mini
+    * tables are computed or written. The delta comes from the driver
+    * when the changed chunks are byte-admitted ([[sourceRowDelta]]: no
+    * Spark job for non-generator transforms, since the delta plan folds
+    * to a LocalRelation), otherwise from one distributed net
+    * ([[Ops.rowNet]]) over the changed chunks' contributions; either
+    * way at most [[Ops.PatchMaxDeltaRows]] (width-adapted) rows per side
+    * reach the driver. A small row delta scattered over MANY chunks — a
+    * one-row-per-chunk DML changes every chunk hash while leaving almost
+    * every row identical — therefore splices instead of rebuilding.
+    * None — the caller rebuilds — when no previous version applies, too
+    * many chunks changed, the delta is wide or over the caps, or the
+    * splice does not pay. Exactness: transform∘diff == diff∘transform
     * under the uniqueKeys contract (no other source row can produce a
-    * delta row's output keys), and the transformed delta is re-diffed
-    * so value-insensitive source updates (a price change under a
-    * custkey index) splice nothing.
-    *
-    * Tri-state result: `None` = route INAPPLICABLE (schema, caps, or a
-    * read surprise) — the caller falls through to the mini-diff path
-    * and its guards; `Some(Some(h))` = patched;
-    * `Some(None)` = the EXACT transformed delta was computed and the
-    * splice is provably unprofitable (scattered keys / over-cap
-    * fan-out) — the mini route would compute the same delta and hit
-    * the same guards, so the caller should skip it and rebuild. At
-    * 100 TB the byte budget rejects wide chunk deltas before any IO. */
-  private def patchViaSourceDiff(m: TableMeta, t: ColTransform,
-      fold: FoldSpec, removed: Seq[ChunkMeta], added: Seq[ChunkMeta],
-      prev: TableRef, pm: TableMeta): Option[Option[String]] = {
-    import scala.util.control.NonFatal
-    // the transformed delta is re-diffed below, so structural equality
-    // must also be safe on the RESULT schema
-    if (!Ops.driverDiffable(pm.schema)) {
-      return None
-    }
-    try {
-      val (insSrc, delSrc) = sourceRowDelta(m, removed, added)
-        .getOrElse(return None)
-      // rows identical, chunks merely re-cut: the transform output is
-      // unchanged by definition
-      if (insSrc.isEmpty && delSrc.isEmpty) return Some(Some(prev.hash))
-      // map the source delta through the row-local transform, projected
-      // into the RESULT's column order; a filter/projection over a
-      // LocalRelation folds at plan time, so the collect launches no job
-      // — and a GENERATOR delta (explode) runs its one local-scan task
-      // interpreted on the engine clone, skipping janino compilation of
-      // a per-statement plan shape for provably tiny data. The collect
-      // is LIMIT-guarded: a generator's fan-out is unbounded by the
-      // source delta, and the row cap must reject BEFORE the rows land
-      // in driver memory, not after.
-      val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
-      def transformed(rs: Seq[org.apache.spark.sql.Row])
-          : Option[Seq[org.apache.spark.sql.Row]] = {
-        if (rs.isEmpty) return Some(Nil)
-        import scala.jdk.CollectionConverters._
-        val df0 = spark.createDataFrame(rs.asJava, m.schema)
-        val df1 = t.rowFilter.map(df0.where).getOrElse(df0)
-        val out = collectDriverBounded(df1.select(t.columns: _*)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)
-          .limit(cap + 1))
-        if (out.length > cap) None else Some(out.toSeq)
-      }
-      // over-cap transformed delta: INAPPLICABLE (fall through), not
-      // rebuild — the mini route caps its diff sides separately and can
-      // still admit shapes this sum-capped path cannot
-      val insT0 = transformed(insSrc).getOrElse {
-        return None
-      }
-      val delT0 = transformed(delSrc).getOrElse {
-        return None
-      }
-      // re-diff at the TRANSFORMED level: a source update the transform
-      // is insensitive to yields identical rows on both sides
-      val insT = Ops.multisetRowDiff(insT0, delT0)
-      val delT = Ops.multisetRowDiff(delT0, insT0)
-      if (insT.isEmpty && delT.isEmpty) return Some(Some(prev.hash))
-      val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
-      def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = kIdx.map(r.get)
-      val insKeys = insT.iterator.map(keyOf).toSet
-      val delKeys = delT.iterator.map(keyOf).filterNot(insKeys)
-        .toSeq.distinct
-      // same scattered-delta guard as the mini route: keys touching
-      // more than half the result's chunks mean the rebuild writes less
-      val out = patchTableBounded(prev, insT, delKeys,
-        Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
-      out match {
-        case Some(h) => Some(Some(h))
-        case None if delT.isEmpty &&
-            // economics guard: the fold-in reads the PREVIOUS RESULT
-            // (region merge) where the rebuild rescans the SOURCE —
-            // it only pays when the result is the smaller side. A
-            // narrow secondary index over a wide fact table folds in
-            // (the rebuild would rescan the corpus for a metadata-sized
-            // append); a generator index BIGGER than its source (the
-            // shingle case — measured 2× slower here) keeps the rebuild.
-            (for {
-              pb <- chunkBytes(pm.chunks); mb <- chunkBytes(m.chunks)
-            } yield pb < mb).getOrElse(false) =>
-          // scattered INSERT-only delta: fold the delta table into the
-          // previous result through the region-memoized merge instead
-          // of rebuilding — the uniqueKeys contract makes the delta's
-          // output keys DISJOINT from prev's (a pre-existing key would
-          // mean two source rows for one output key), so the merge is
-          // collision-free and rewrites only the dirty regions, and the
-          // rebuild's full source rescan is avoided.
-          try {
-            import scala.jdk.CollectionConverters._
-            val deltaMeta = Canonical.materialize(spark, store, routes,
-              spark.createDataFrame(insT.asJava, pm.schema),
-              pm.keyCols, pm.chunkTargetRows,
-              rowBound = Some(insT.length.toLong))(Canonical.Ungrouped)
-            if (deltaMeta.schemaJson != pm.schemaJson) {
-              Some(None)
-            } else {
-              Ops.rekeyAppendFoldIns.incrementAndGet()
-              Some(Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)),
-                fold).hash))
+    * delta row's output keys), every diff is under the canonical row
+    * identity, and content-defined chunking makes the spliced result's
+    * decomposition a pure function of its key set. */
+  private def patchAgainstPrevious(m: TableMeta, t: ColTransform,
+      fold: FoldSpec, prev: TableRef, target: Long): Option[String] =
+    previousVersion(m, t, fold, prev, target).flatMap { pv =>
+      val pm = pv.result
+      val changed = pv.removed ++ pv.added
+      if (changed.isEmpty) Some(prev.hash)
+      else if (changed.length > Ops.PatchMaxChangedChunks) None
+      else {
+        val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
+        // driver: the source-row delta through the transform, re-diffed:
+        // a source update the transform is insensitive to (a price
+        // change under a custkey index) splices nothing
+        def viaDriver: Option[Ops.RowDelta] =
+          sourceRowDelta(m, pv.removed, pv.added).flatMap {
+            case (insSrc, delSrc) => Ops.routeOr(Option.empty[Ops.RowDelta]) {
+              for {
+                ins <- driverContributions(t, m, pm, insSrc, cap)
+                del <- driverContributions(t, m, pm, delSrc, cap)
+              } yield Ops.multisetRowDiff(pm.schema, ins, del)
             }
-          } catch { case NonFatal(e) =>
-            Ops.warnDriverPatchFallback(e); Some(None) }
-        // delete/update delta whose splice declined: the mini route
-        // would splice the identical delta under the identical guard —
-        // a decline here is FINAL, rebuild
-        case None => Some(None)
+          }
+        // distributed: behind the wide-delta guard — above a quarter of
+        // the source rows the single-pass rebuild reads and writes less.
+        // Result rows are unique (the uniqueKeys contract), so every net
+        // is ±1 and its sign alone says which side a row is on.
+        def viaNet: Option[Ops.RowDelta] =
+          if (4 * changed.iterator.map(_.rows).sum >
+              m.chunks.iterator.map(_.rows).sum) None
+          else Ops.routeOr(Option.empty[Ops.RowDelta]) {
+            val n = pm.schema.length
+            val net = Ops.rowNet(
+              contributions(t, pm, readSourceChunks(m, pv.added)),
+              contributions(t, pm, readSourceChunks(m, pv.removed)))
+              .limit(2 * cap + 1).collect()
+            val (ins, del) = net.toSeq.partition(_.getLong(n) > 0L)
+            if (ins.length > cap || del.length > cap) None
+            else Some((ins.map(r => Row.fromSeq(r.toSeq.take(n))),
+              del.map(r => Row.fromSeq(r.toSeq.take(n)))))
+          }
+        viaDriver.orElse(viaNet).flatMap { case (ins, del) =>
+          spliceUnique(m, fold, prev, pm, ins, del)
+        }
       }
-    } catch { case NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
+    }
+
+  /** Splice a uniqueKeys re-key's delta onto its previous result `prev`
+    * (meta `pm`): upsert `ins`, delete the keys of `del` (a key both
+    * deleted and upserted is simply replaced). A delta whose keys touch
+    * more than half the result's chunks does not pay as a splice; an
+    * INSERT-only one then folds into `prev` through the region-memoized
+    * merge when the result is smaller than its source `m` — the
+    * uniqueKeys contract makes the delta's keys DISJOINT from prev's,
+    * so the merge is collision-free and rewrites only the dirty
+    * regions, where the rebuild would rescan the source. (A narrow
+    * secondary index over a wide fact table folds in; a generator
+    * index BIGGER than its source — the shingle case, measured 2×
+    * slower — keeps the rebuild.) None: the caller rebuilds. */
+  private def spliceUnique(m: TableMeta, fold: FoldSpec, prev: TableRef,
+      pm: TableMeta, ins: Seq[Row], del: Seq[Row]): Option[String] = {
+    if (ins.isEmpty && del.isEmpty) return Some(prev.hash)
+    val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
+    patchTableBounded(prev, ins, del.map(r => kIdx.map(r.get)),
+      Some(math.max(8, pm.chunks.length / 2))).map(_.hash).orElse {
+      val resultSmaller = (for {
+        pb <- chunkBytes(pm.chunks); mb <- chunkBytes(m.chunks)
+      } yield pb < mb).getOrElse(false)
+      if (del.nonEmpty || !resultSmaller) None
+      else Ops.routeOr(Option.empty[String]) {
+        import scala.jdk.CollectionConverters._
+        val deltaMeta = Canonical.materialize(spark, store, routes,
+          spark.createDataFrame(ins.asJava, pm.schema),
+          pm.keyCols, pm.chunkTargetRows,
+          rowBound = Some(ins.length.toLong))(Canonical.Ungrouped)
+        if (deltaMeta.schemaJson != pm.schemaJson) None
+        else {
+          Ops.rekeyAppendFoldIns.incrementAndGet()
+          Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
+        }
+      }
+    }
   }
 
   /** Byte-admitted SOURCE-row delta between two table versions' changed
-    * chunks, read driver-side and diffed by structural row equality:
-    * Some((inserted, deleted)) when the schema is driver-diffable, the
-    * changed chunks fit the row/byte caps, and the reads succeed — None
-    * otherwise (callers fall back to their job paths). Shared by the uniqueKeys splice route and the insert-only
-    * aggregate fold-in. */
+    * chunks, read driver-side and diffed under the canonical row
+    * identity ([[Ops.multisetRowDiff]]): Some((inserted, deleted)) when
+    * the changed chunks fit the row/byte caps and the reads succeed —
+    * None otherwise (callers fall back to their distributed paths).
+    * Shared by the uniqueKeys splice and the aggregate fold-in and
+    * retraction. */
   private def sourceRowDelta(m: TableMeta, removed: Seq[ChunkMeta],
-      added: Seq[ChunkMeta])
-      : Option[(Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row])] = {
-    import scala.util.control.NonFatal
+      added: Seq[ChunkMeta]): Option[Ops.RowDelta] = {
     if (!routes.driverMaterialize) return None
-    if (!Ops.driverDiffable(m.schema)) {
-      return None
-    }
     val changed = removed ++ added
     val rows = changed.iterator.map(_.rows).sum
     if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-        !chunkBytes(changed).exists(_ <= routes.driverMaxBytes)) {
+        !chunkBytes(changed).exists(_ <= routes.driverMaxBytes) ||
+        !DriverChunks.supported(m.schema)) {
       return None
     }
-    try {
-      def rowsOf(cs: Seq[ChunkMeta]): Seq[org.apache.spark.sql.Row] =
+    Ops.routeOr(Option.empty[Ops.RowDelta]) {
+      def rowsOf(cs: Seq[ChunkMeta]): Seq[Row] =
         Canonical.parIo(cs)(c => DriverChunks.readRows(
           java.nio.file.Paths.get(store.chunkPath(c.hash)), m.schema))
           .flatten
-      val (oldR, newR) = (rowsOf(removed), rowsOf(added))
-      Some((Ops.multisetRowDiff(newR, oldR), Ops.multisetRowDiff(oldR, newR)))
-    } catch { case NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
+      Some(Ops.multisetRowDiff(m.schema, rowsOf(added), rowsOf(removed)))
+    }
   }
 
   /** Row-delta fold-in for NON-unique combinable re-keys (aggregate
@@ -1788,7 +1628,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * makes the decomposition a pure function of the key set; pinned by
     * the MV incremental==from-scratch hash specs). A delta WITH deletes
     * takes the RETRACTION variant ([[rekeyRetract]]) when the fold is
-    * invertible and the view carries a liveness column
+    * invertible and linear and the view carries a liveness column
     * ([[retractionSpec]]): deleted contributions fold in NEGATED, and a
     * group whose liveness reaches 0 is deleted — the classic
     * counting-IVM rule, exact because inversion is bit-exact for the
@@ -1800,143 +1640,108 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * preconditions fail, the delta shape is inadmissible, or any read
     * surprises. */
   private def rekeyDeltaFoldIn(m: TableMeta, t: ColTransform,
-      fold: FoldSpec, prev: TableRef, target: Long): Option[String] = {
-    import scala.util.control.NonFatal
-    def tryLoad(h: String): Option[TableMeta] =
-      try Some(store.loadTableMeta(h)) catch { case NonFatal(_) => None }
-    for {
-      s1Hash <- store.memoGet(rekeyRevOp(t, fold, target, prev.hash))
-      m1 <- tryLoad(s1Hash)
-      if m1.schemaJson == m.schemaJson && m1.keyCols == m.keyCols &&
-        m1.chunkTargetRows == m.chunkTargetRows
-      pm <- tryLoad(prev.hash)
-      if pm.chunkTargetRows == target
-      result <- {
-        val c2 = m.chunks.iterator.map(_.hash).toSet
-        val c1 = m1.chunks.iterator.map(_.hash).toSet
-        val removed = m1.chunks.filterNot(c => c2(c.hash)).distinctBy(_.hash)
-        val added = m.chunks.filterNot(c => c1(c.hash)).distinctBy(_.hash)
-        // static retraction admission (cached empty-frame analysis — no
-        // IO): invertible fold members + a liveness column + non-null
-        // contributions; None means deletes must take the general paths
-        lazy val retractPlan = retractionSpec(m, t, fold)
-        if (removed.isEmpty && added.isEmpty) Some(prev.hash)
-        else if (removed.length + added.length > Ops.PatchMaxChangedChunks)
-          None
-        // metadata pre-check before ANY chunk IO: an insert-only delta
-        // strictly grows the changed region's row count (updates keep it
-        // equal, deletes shrink it) — flows that can take NEITHER the
-        // append fold-in NOR the retraction decline for free here
-        // instead of paying the driver reads and the multiset diff
-        else if (added.iterator.map(_.rows).sum <=
-            removed.iterator.map(_.rows).sum && retractPlan.isEmpty) {
-          None
-        }
-        else {
-          // fold the appended-rows FRAME through the transform into a
-          // delta table at the result's granularity, then merge it into
-          // the previous result — the common tail of both the driver and
-          // the distributed variants
-          def foldIn(insDf: DataFrame, insRows: Long): Option[String] =
-            try {
-              val df1 = t.rowFilter.map(insDf.where).getOrElse(insDf)
-              val projected = df1.select(t.columns: _*)
-              val valueCols = projected.columns
-                .filterNot(t.outKeyCols.contains).toSeq
-              val folded = projected.groupBy(t.outKeyCols.map(col): _*)
-                .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-              val deltaMeta = Canonical.materialize(spark, store, routes,
-                castValues(folded, projected.schema, valueCols),
-                t.outKeyCols, target,
-                // fold output ≤ projected rows ≤ delta rows for 1→1
-                // transforms; a generator's output is unknown — use the
-                // optimistic tiny-input probe, exactly like the build
-                rowBound = if (t.generator) None else Some(insRows),
-                rowProbe = if (t.generator) Some(insRows) else None)(Canonical.Ungrouped)
-              if (deltaMeta.schemaJson != pm.schemaJson) {
-                None
-              } else {
-                Ops.rekeyAppendFoldIns.incrementAndGet()
-                Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold)
-                  .hash)
-              }
-            } catch { case NonFatal(e) =>
-              Ops.warnDriverPatchFallback(e); None }
-
-          sourceRowDelta(m, removed, added) match {
-            case Some((insSrc, delSrc)) =>
-              if (delSrc.nonEmpty) retractPlan match {
-                case Some(rp) =>
-                  rekeyRetract(rp, m, t, fold, prev, pm, insSrc, delSrc)
-                case None =>
-                  None
-              }
-              else if (insSrc.isEmpty) Some(prev.hash)
-              else {
-                import scala.jdk.CollectionConverters._
-                foldIn(spark.createDataFrame(insSrc.asJava, m.schema),
-                  insSrc.length.toLong)
-              }
-            case None =>
-              // (a non-retractable fold with no net row growth never
-              // reaches here — the metadata pre-check above declined
-              // before any IO)
-              // DISTRIBUTED variants — the 100 TB path: changed chunks
-              // above the driver byte budget diff as FRAMES. One
-              // limit(1) job proves no row was deleted (exceptAll is
-              // exactly the multiset difference), then the appended
-              // rows fold in without ever landing on the driver; a
-              // delta WITH deletes takes the distributed RETRACTION
-              // ([[rekeyRetractDistributed]]) when the fold admits it.
-              // Gated on the same fp/binary-free schema rule as the
-              // driver diff: SQL set-op equality normalizes NaN/-0.0,
-              // which would let a bit-level value change masquerade as
-              // a no-op. Cost: ~two scans of the changed chunks + the
-              // delta materialization + the result merge — versus the
-              // mini path's changed-chunk minis PLUS a re-merge of
-              // EVERY mini when the appended group keys scatter.
-              // routes.driverMaterialize doubles as the route-matrix
-              // master switch (specs force it off to exercise the
-              // reference mini/job paths) — honor it here even though
-              // these variants never touch driver memory
-              if (!routes.driverMaterialize ||
-                  !Ops.driverDiffable(m.schema)) {
-                None
-              } else try {
-                val addedDf = readSourceChunks(m, added)
-                val removedDf = readSourceChunks(m, removed)
-                retractPlan match {
-                  case Some(rp) =>
-                    // retractable fold: skip the source-level delete
-                    // probe entirely — the contribution NET (one fused
-                    // shuffle) answers insert-only vs delete-bearing on
-                    // cached data and handles BOTH shapes
-                    rekeyRetractDistributed(rp, m, t, fold, prev, pm,
-                      addedDf, removedDf,
-                      added.iterator.map(_.rows).sum +
-                        removed.iterator.map(_.rows).sum)
-                  case None =>
-                    val hasDeletes = removed.nonEmpty &&
-                      !removedDf.exceptAll(addedDf).limit(1).isEmpty
-                    if (hasDeletes) {
-                      None
-                    } else foldIn(addedDf.exceptAll(removedDf),
-                      added.iterator.map(_.rows).sum)
-                }
-              } catch { case NonFatal(e) =>
-                Ops.warnDriverPatchFallback(e); None }
+      fold: FoldSpec, prev: TableRef, target: Long): Option[String] =
+    previousVersion(m, t, fold, prev, target).flatMap { pv =>
+      val (pm, removed, added) = (pv.result, pv.removed, pv.added)
+      // static retraction admission (cached empty-frame analysis — no
+      // IO): invertible, linear fold members + a liveness column +
+      // non-null contributions; None means deletes must take the
+      // general paths
+      lazy val retractPlan = retractionSpec(m, t, fold)
+      val addedRows = added.iterator.map(_.rows).sum
+      val removedRows = removed.iterator.map(_.rows).sum
+      if (removed.isEmpty && added.isEmpty) Some(prev.hash)
+      else if (removed.length + added.length > Ops.PatchMaxChangedChunks)
+        None
+      // metadata pre-check before ANY chunk IO: an insert-only delta
+      // strictly grows the changed region's row count (updates keep it
+      // equal, deletes shrink it) — flows that can take NEITHER the
+      // append fold-in NOR the retraction decline for free here
+      // instead of paying the reads and the diff
+      else if (addedRows <= removedRows && retractPlan.isEmpty) None
+      else {
+        // fold the appended-rows FRAME through the transform into a
+        // delta table at the result's granularity, then merge it into
+        // the previous result — the common tail of both the driver and
+        // the distributed variants
+        def foldIn(insDf: DataFrame, insRows: Long): Option[String] =
+          Ops.routeOr(Option.empty[String]) {
+            val df1 = t.rowFilter.map(insDf.where).getOrElse(insDf)
+            val projected = df1.select(t.columns: _*)
+            val valueCols = projected.columns
+              .filterNot(t.outKeyCols.contains).toSeq
+            val folded = projected.groupBy(t.outKeyCols.map(col): _*)
+              .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
+            val deltaMeta = Canonical.materialize(spark, store, routes,
+              castValues(folded, projected.schema, valueCols),
+              t.outKeyCols, target,
+              // fold output ≤ projected rows ≤ delta rows for 1→1
+              // transforms; a generator's output is unknown — use the
+              // optimistic tiny-input probe, exactly like the build
+              rowBound = if (t.generator) None else Some(insRows),
+              rowProbe = if (t.generator) Some(insRows) else None)(Canonical.Ungrouped)
+            if (deltaMeta.schemaJson != pm.schemaJson) None
+            else {
+              Ops.rekeyAppendFoldIns.incrementAndGet()
+              Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold)
+                .hash)
+            }
           }
+
+        sourceRowDelta(m, removed, added) match {
+          case Some((insSrc, delSrc)) =>
+            if (delSrc.nonEmpty) retractPlan.flatMap(rp =>
+              rekeyRetract(rp, m, t, fold, prev, pm, insSrc, delSrc))
+            else if (insSrc.isEmpty) Some(prev.hash)
+            else {
+              import scala.jdk.CollectionConverters._
+              foldIn(spark.createDataFrame(insSrc.asJava, m.schema),
+                insSrc.length.toLong)
+            }
+          // DISTRIBUTED variants — the 100 TB path: changed chunks above
+          // the driver byte budget diff as FRAMES, netted in one shuffle
+          // ([[Ops.rowNet]]); a delta WITH deletes takes the distributed
+          // RETRACTION ([[rekeyRetractDistributed]]) when the fold admits
+          // it. Cost: ~two scans of the changed chunks + the delta
+          // materialization + the result merge — versus the mini path's
+          // changed-chunk minis PLUS a re-merge of EVERY mini when the
+          // appended group keys scatter. routes.driverMaterialize
+          // doubles as the route-matrix master switch (specs force it
+          // off to exercise the reference mini/job paths) — honor it
+          // here even though these variants never touch driver memory
+          case None if routes.driverMaterialize =>
+            Ops.routeOr(Option.empty[String]) {
+              val addedDf = readSourceChunks(m, added)
+              val removedDf = readSourceChunks(m, removed)
+              retractPlan match {
+                case Some(rp) =>
+                  // retractable fold: the contribution NET answers
+                  // insert-only vs delete-bearing and handles BOTH
+                  rekeyRetractDistributed(rp, m, t, fold, prev, pm,
+                    addedDf, removedDf, addedRows + removedRows)
+                case None =>
+                  // source rows are unique by key, so every net is ±1:
+                  // one limit(1) job proves no row was deleted, and the
+                  // positive side IS the appended rows
+                  val net = Ops.rowNet(addedDf, removedDf)
+                  if (removed.nonEmpty &&
+                      !net.where(col(Ops.NetCol) < 0L).limit(1).isEmpty) None
+                  else foldIn(net.drop(Ops.NetCol), addedRows)
+              }
+            }
+          case None => None
         }
       }
-    } yield result
-  }
+    }
 
   /** Static retraction admission for the delete-aware fold-in
     * ([[rekeyRetract]]) — a cached empty-frame analysis, no IO:
     *
     *  - every VALUE column's fold member is INVERTIBLE
     *    ([[FoldSpec.invertContrib]]: SUM/COUNT negate, HIST negates bin
-    *    counts; MIN/MAX/KMV cannot retract);
+    *    counts; MIN/MAX/KMV cannot retract) and LINEAR
+    *    ([[FoldSpec.scaleContrib]]), so a net delta row of multiplicity
+    *    M folds as ONE scaled contribution;
     *  - every value column's contribution is provably NON-NULL in the
     *    analyzed projection — NULL-skipping folds (sum) revert to NULL,
     *    not 0, when the last non-null contribution is retracted, which
@@ -1963,7 +1768,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
       import org.apache.spark.sql.catalyst.plans.logical.Project
       val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+        spark.sparkContext.emptyRDD[Row], m.schema)
       val analyzed = empty.select(t.columns: _*).queryExecution.analyzed
       analyzed match {
         case p: Project =>
@@ -1980,7 +1785,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           // re-derives it from the catalog entry)
           liveness.filter(_ => vals.forall(ne =>
             (!ne.nullable || t.nonNullContribs.contains(ne.name)) &&
-              inverts.contains(ne.name)))
+              inverts.contains(ne.name) &&
+              fold.scaleContrib(ne.name, lit(1L)).isDefined))
             .map(l => Ops.RetractPlan(l, inverts))
         case _ => None
       }
@@ -2000,40 +1806,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * the exact mini/rebuild paths. */
   private def rekeyRetract(rp: Ops.RetractPlan, m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      insSrc: Seq[org.apache.spark.sql.Row],
-      delSrc: Seq[org.apache.spark.sql.Row]): Option[String] = {
-    import scala.util.control.NonFatal
-    import scala.jdk.CollectionConverters._
-    // the transformed delta and the previous result rows are diffed /
-    // partitioned by structural equality below
-    if (!Ops.driverDiffable(pm.schema)) {
-      return None
-    }
-    try {
+      insSrc: Seq[Row], delSrc: Seq[Row]): Option[String] =
+    Ops.routeOr(Option.empty[String]) {
+      import scala.jdk.CollectionConverters._
       val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
-      // per-row CONTRIBUTIONS (rowFilter + projection, result column
-      // order) — plan folds over the LocalRelation, limit-guarded like
-      // patchViaSourceDiff's transform
-      def contribs(rs: Seq[org.apache.spark.sql.Row])
-          : Option[Seq[org.apache.spark.sql.Row]] = {
-        if (rs.isEmpty) return Some(Nil)
-        val df0 = spark.createDataFrame(rs.asJava, m.schema)
-        val df1 = t.rowFilter.map(df0.where).getOrElse(df0)
-        val out = collectDriverBounded(df1.select(t.columns: _*)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)
-          .limit(cap + 1))
-        if (out.length > cap) None else Some(out.toSeq)
-      }
-      val insT0 = contribs(insSrc).getOrElse {
-        return None
-      }
-      val delT0 = contribs(delSrc).getOrElse {
-        return None
-      }
+      val insT0 = driverContributions(t, m, pm, insSrc, cap)
+        .getOrElse(return None)
+      val delT0 = driverContributions(t, m, pm, delSrc, cap)
+        .getOrElse(return None)
       // re-diff at the contribution level: an update the view is
       // insensitive to cancels out entirely
-      val insT = Ops.multisetRowDiff(insT0, delT0)
-      val delT = Ops.multisetRowDiff(delT0, insT0)
+      val (insT, delT) = Ops.multisetRowDiff(pm.schema, insT0, delT0)
       if (insT.isEmpty && delT.isEmpty) return Some(prev.hash)
       // belt for the caller-declared non-null contract: a NULL observed
       // in any inverted column (delta or previous partials) means the
@@ -2043,30 +1826,27 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // the declaration is a contract)
       val invIdx = rp.inverts.keysIterator
         .map(pm.schema.fieldIndex).toArray
-      def anyNull(rs: Iterable[org.apache.spark.sql.Row]): Boolean =
+      def anyNull(rs: Iterable[Row]): Boolean =
         rs.exists(r => invIdx.exists(r.isNullAt))
-      if (anyNull(insT) || anyNull(delT)) {
-        return None
-      }
+      if (anyNull(insT) || anyNull(delT)) return None
+      // groups are identified by their canonical key bytes
       val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
-      def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = kIdx.map(r.get)
-      val touched = (insT.iterator ++ delT.iterator).map(keyOf)
-        .toSeq.distinct
+      val keyId = Ops.rowIdentity(pm.schema, pm.keyCols)
+      val touchedRows = (insT.iterator ++ delT.iterator).toSeq
+        .distinctBy(keyId)
       // the touched groups' PREVIOUS rows, read driver-side from the
       // key-pruned result chunks under the usual row/byte caps
-      val hit = chunksForKeys(pm, touched)
+      val hit = chunksForKeys(pm, touchedRows.map(r => kIdx.map(r.get)))
       val hitRows = hit.iterator.map(_.rows).sum
       if (hitRows > Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows) ||
           !chunkBytes(hit).exists(_ <= routes.driverMaxBytes)) {
         return None
       }
-      val touchedSet = touched.toSet
+      val touched = touchedRows.iterator.map(keyId).toSet
       val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
         java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
-        .flatten.filter(r => touchedSet(keyOf(r)))
-      if (anyNull(prevRows)) {
-        return None
-      }
+        .flatten.filter(r => touched(keyId(r)))
+      if (anyNull(prevRows)) return None
       // invert the deleted contributions (fold-declared, per column)
       val delInv =
         if (delT.isEmpty) Nil
@@ -2089,20 +1869,41 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val liveIdx = pm.schema.fieldIndex(rp.livenessCol)
       val (live, dead) = newRows.partition(r => r.getLong(liveIdx) != 0L)
       val out = patchTableBounded(prev, live.toSeq,
-        dead.iterator.map(keyOf).toSeq,
+        dead.iterator.map(r => kIdx.map(r.get)).toSeq,
         Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
       if (out.isDefined) Ops.rekeyRetractFoldIns.incrementAndGet(): Unit
       out
-    } catch { case NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
-  }
+    }
+
+  /** A re-key's per-row CONTRIBUTIONS to its result `pm`: `t`'s
+    * rowFilter and projection over source rows, in the result's column
+    * order — the rows every refresh diff compares. */
+  private def contributions(t: ColTransform, pm: TableMeta,
+      df: DataFrame): DataFrame =
+    t.rowFilter.map(df.where).getOrElse(df).select(t.columns: _*)
+      .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)
+
+  /** [[contributions]] of driver-resident source rows (schema of `m`),
+    * collected over a LocalRelation — no job for non-generator
+    * transforms — and LIMIT-guarded: a generator's fan-out is unbounded
+    * by the source delta, so the cap rejects before the rows land. None
+    * above `cap` rows. */
+  private def driverContributions(t: ColTransform, m: TableMeta,
+      pm: TableMeta, rs: Seq[Row], cap: Int): Option[Seq[Row]] =
+    if (rs.isEmpty) Some(Nil)
+    else {
+      import scala.jdk.CollectionConverters._
+      val out = collectDriverBounded(contributions(t, pm,
+        spark.createDataFrame(rs.asJava, m.schema)).limit(cap + 1))
+      if (out.length > cap) None else Some(out.toSeq)
+    }
 
   /** A table version's changed chunks as a frame in the table's own
     * schema (field-id read metadata stripped) — shared by the
     * distributed fold-in/retraction variants. */
   private def readSourceChunks(m: TableMeta, cs: Seq[ChunkMeta]): DataFrame =
     if (cs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+      spark.sparkContext.emptyRDD[Row], m.schema)
     else scanChunkSubset(m.schemaJson, m.keyCols, m.chunkTargetRows, cs)
       .select(m.schema.fieldNames.map(nm => col(nm)
         .as(nm, org.apache.spark.sql.types.Metadata.empty)): _*)
@@ -2110,54 +1911,35 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** DISTRIBUTED delete-aware refresh (VERDICT r12 #1) — the over-cap
     * mirror of [[rekeyRetract]]: when the changed source chunks exceed
     * the driver byte budget, the retraction runs entirely as frames.
-    * Contributions of the added/removed chunk versions diff as one
-    * multiset difference per side (a per-row transform commutes with
-    * multiset diff, so diffing AT the contribution level equals the
-    * driver route's src-diff-then-re-diff — value-insensitive updates
-    * cancel identically), the deleted side folds in through the
-    * fold-declared inversion projection, one shuffle builds the NET
-    * delta table at result granularity, and [[mergeRetract]] folds it
-    * into the previous result rewriting only dirty regions and deleting
-    * liveness-0 groups. Bit-identical to from-scratch by the same
-    * argument as the driver route (inversion bit-exact, content-defined
-    * chunking a pure function of the key set). This is the plan that
-    * survives a retention purge touching MANY groups across FEW result
-    * regions at 100 TB: cost is O(changed source chunks + dirty result
-    * regions), with no driver-resident rows at any point. The NULL belt
-    * covers the DELTA contributions (one limit-1 job); previous partials
-    * ride the caller's non-null contract, which the SQL layer enforces
-    * at write time (guardNotNull) — a lying core-level caller falls
-    * under the same documented contract as uniqueKeys. */
+    * Contributions of the added/removed chunk versions net in one
+    * shuffle ([[Ops.rowNet]]; a per-row transform commutes with multiset
+    * diff, so netting AT the contribution level equals the driver
+    * route's src-diff-then-re-diff — value-insensitive updates cancel
+    * identically), the deleted side folds in through the fold-declared
+    * inversion projection, each net row folds ONCE scaled by its
+    * multiplicity (the admitted folds are linear), one shuffle builds
+    * the NET delta table at result granularity, and [[mergeRetract]]
+    * folds it into the previous result rewriting only dirty regions and
+    * deleting liveness-0 groups. Bit-identical to from-scratch by the
+    * same argument as the driver route (inversion and scaling
+    * bit-exact, content-defined chunking a pure function of the key
+    * set). This is the plan that survives a retention purge touching
+    * MANY groups across FEW result regions at 100 TB: cost is
+    * O(changed source chunks + dirty result regions), with no
+    * driver-resident rows at any point. The NULL belt covers the DELTA
+    * contributions (one limit-1 job); previous partials ride the
+    * caller's non-null contract, which the SQL layer enforces at write
+    * time (guardNotNull) — a lying core-level caller falls under the
+    * same documented contract as uniqueKeys. */
   private def rekeyRetractDistributed(rp: Ops.RetractPlan, m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
       addedDf: DataFrame, removedDf: DataFrame,
-      changedRows: Long): Option[String] = {
-    import scala.util.control.NonFatal
-    // contribution frames are diffed by SQL set-op equality — same
-    // fp/binary-free rule as the driver route's structural diff
-    if (!Ops.driverDiffable(pm.schema)) {
-      return None
-    }
-    try {
-      def contribs(df: DataFrame): DataFrame = {
-        val df1 = t.rowFilter.map(df.where).getOrElse(df)
-        df1.select(t.columns: _*)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)
-      }
-      // BOTH multiset differences in ONE shuffle: tag added contributions
-      // +1 and removed ones -1, group by the whole row, keep non-zero
-      // nets — `net > 0` expanded by its multiplicity IS
-      // added.exceptAll(removed) and `net < 0` the reverse (exceptAll is
-      // exactly the positive part of the count difference), for half the
-      // changed-chunk scans of the two set-op calls
-      val tag = "_graft_net"
+      changedRows: Long): Option[String] =
+    Ops.routeOr(Option.empty[String]) {
+      val tag = Ops.NetCol
       val allCols = pm.schema.fieldNames.toIndexedSeq
-      val net = contribs(addedDf).withColumn(tag, lit(1L))
-        .union(contribs(removedDf).withColumn(tag, lit(-1L)))
-        .groupBy(allCols.map(col): _*)
-        .agg(sum(col(tag)).as(tag))
-        .where(col(tag) =!= 0L)
-        .persist()
+      val net = Ops.rowNet(contributions(t, pm, addedDf),
+        contributions(t, pm, removedDf)).persist()
       try {
         // ONE probe job over the net (which also materializes the
         // persist): the NULL belt for the delta side of the non-null
@@ -2171,66 +1953,31 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               .otherwise(0L)).as("nulls"),
             max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels")).head())
         val nullHit = !probeRow.isNullAt(0) && probeRow.getLong(0) == 1L
-        if (nullHit) {
-          return None
-        }
-        // delete-bearing vs insert-only, answered on the CACHED net —
-        // retractable folds never pay the source-level exceptAll probe
+        if (nullHit) return None
         val hasDeletes = !probeRow.isNullAt(1) && probeRow.getLong(1) == 1L
         val valueCols = pm.schema.fieldNames.toSeq
           .filterNot(pm.keyCols.contains)
-        // multiplicity handling (VERDICT r13 #2): |net| is the number of
-        // IDENTICAL contribution rows a net row stands for — and for a
-        // count-shaped view every contribution in a group is the same
-        // (g, 1) row, so a retention purge of M rows nets to ONE row
-        // with multiplicity M. Re-expanding that to M rows builds an
-        // O(M) array in a single task (multi-GB for a skewed group at
-        // 100 TB) on exactly the path this route exists for. The
-        // admitted folds are LINEAR ([[FoldSpec.scaleContrib]]:
-        // SUM/COUNT/HIST bin counts), so each net row folds as ONE
-        // contribution scaled by its multiplicity — bit-identical to the
-        // expansion, and a count-only purge costs O(distinct groups)
-        // instead of O(deleted rows).
+        // |net| is the number of IDENTICAL contribution rows a net row
+        // stands for — for a count-shaped view every contribution in a
+        // group is the same (g, 1) row, so a retention purge of M rows
+        // nets to ONE row with multiplicity M. The admitted folds are
+        // LINEAR ([[retractionSpec]]), so each net row folds as ONE
+        // contribution scaled by its multiplicity: a count-only purge
+        // costs O(distinct groups), not O(deleted rows).
         val mult = "_graft_mult"
-        val scaleExprs: Option[Seq[Column]] = {
-          val es = allCols.map { n =>
-            if (pm.keyCols.contains(n)) Some(col(n))
-            else fold.scaleContrib(n, col(mult))
-          }
-          if (es.forall(_.isDefined)) Some(es.map(_.get)) else None
-        }
-        val (insT, delInv) = scaleExprs match {
-          case Some(exprs) =>
-            val ins = net.where(col(tag) > 0L)
-              .withColumnRenamed(tag, mult)
-              .select(exprs: _*)
-            // inversion first (a per-row projection), then the same
-            // scaling by |net| — the linear folds commute the two
-            val del = net.where(col(tag) < 0L)
-              .select(allCols.map(n =>
-                rp.inverts.getOrElse(n, col(n)).as(n)) :+
-                (-col(tag)).as(mult): _*)
-              .select(exprs: _*)
-            (ins, del)
-          case None =>
-            // an invertible-but-not-declared-linear fold keeps the exact
-            // expansion, BOUNDED: above the cap the single-task array is
-            // the OOM shape scaling exists to avoid — decline to the
-            // exact mini/rebuild paths instead (one tiny agg job on the
-            // cached net)
-            val maxRow = net.agg(max(abs(col(tag)))).head()
-            val maxMult = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-            if (maxMult > Ops.RetractMaxExpandMultiplicity) {
-              return None
-            }
-            (net.where(col(tag) > 0L)
-              .withColumn(tag, explode(sequence(lit(1L), col(tag))))
-              .select(allCols.map(col): _*),
-             net.where(col(tag) < 0L)
-              .withColumn(tag, explode(sequence(lit(1L), -col(tag))))
-              .select(allCols.map(n =>
-                rp.inverts.getOrElse(n, col(n)).as(n)): _*))
-        }
+        val scaled = allCols.map(n =>
+          if (pm.keyCols.contains(n)) col(n)
+          else fold.scaleContrib(n, col(mult)).get)
+        val insT = net.where(col(tag) > 0L)
+          .withColumnRenamed(tag, mult)
+          .select(scaled: _*)
+        // inversion first (a per-row projection), then the same scaling
+        // by |net| — the linear folds commute the two
+        val delInv = net.where(col(tag) < 0L)
+          .select(allCols.map(n =>
+            rp.inverts.getOrElse(n, col(n)).as(n)) :+
+            (-col(tag)).as(mult): _*)
+          .select(scaled: _*)
         val folded = (if (hasDeletes) insT.union(delInv) else insT)
           .groupBy(pm.keyCols.map(col): _*)
           .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
@@ -2251,9 +1998,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           pm.chunkTargetRows,
           rowBound = if (deltaProbe) None else Some(changedRows),
           probeFold = deltaProbe)(Canonical.Ungrouped)
-        if (deltaMeta.schemaJson != pm.schemaJson) {
-          None
-        } else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
+        if (deltaMeta.schemaJson != pm.schemaJson) None
+        else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
         else if (!hasDeletes) {
           // insert-only delta: no group can die — plain region merge,
           // sharing memo namespace with the sibling fold-in route
@@ -2261,21 +2007,13 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
         } else {
           Ops.rekeyRetractDistFoldIns.incrementAndGet()
-          // counted HERE (not at net construction) so the counter means
-          // "a distributed RETRACTION folded its net scaled" — an
-          // insert-only delta also builds scaled nets but lands on the
-          // append fold-in above
-          if (scaleExprs.isDefined)
-            Ops.rekeyRetractScaledNets.incrementAndGet(): Unit
           Some(mergeRetract(prev, TableRef(deltaMeta.tableHash), fold,
             rp.livenessCol).hash)
         }
       } finally {
         net.unpersist(): Unit
       }
-    } catch { case NonFatal(e) =>
-      Ops.warnDriverPatchFallback(e); None }
-  }
+    }
 
   /** Chunk-level transform: per-chunk memo lookups, one batched Spark job
     * for all missing chunks, results spliced in key order (keys are
@@ -2366,7 +2104,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
                 Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
               !chunkBytes(missing).exists(_ <= routes.driverMaxBytes))
             None
-          else try {
+          else Ops.routeOr(Option.empty[DataFrame]) {
             import scala.jdk.CollectionConverters._
             val rows = Canonical.parIo(missing) { c =>
               DriverChunks.readRows(java.nio.file.Paths.get(
@@ -2376,8 +2114,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
             val schemaG = m.schema.add(org.apache.spark.sql.types.StructField(
               grp, org.apache.spark.sql.types.StringType, nullable = false))
             Some(spark.createDataFrame(rows.asJava, schemaG))
-          } catch { case scala.util.control.NonFatal(e) =>
-            Ops.warnDriverPatchFallback(e); None }
+          }
         val df0 = driverDf.getOrElse {
           val fileToHash = Canonical.fileTagUdf(spark,
             missing.map(c => store.chunkPath(c.hash) -> c.hash).toMap)
@@ -2527,7 +2264,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
               !DriverChunks.supported(m.schema) ||
               edgeRows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
               !edgeBytes.exists(_ <= routes.driverMaxBytes)) None
-          else try {
+          else Ops.routeOr(Option.empty[Seq[Row]]) {
             val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
             Some(Canonical.parIo(edgeChunks) { c =>
               DriverChunks.readRows(java.nio.file.Paths.get(
@@ -2537,8 +2274,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
                   passesLow(kb) && passesHigh(kb)
                 }
             }.flatten)
-          } catch { case scala.util.control.NonFatal(e) =>
-            Ops.warnDriverPatchFallback(e); None }
+          }
         val df = driverRows match {
           case Some(rows) =>
             import scala.jdk.CollectionConverters._
@@ -2902,11 +2638,12 @@ object Ops {
     * consistent (merge derives granularity from the tables). */
   val DefaultChunkTargetRows: Long = 1L << 20
 
-  /** Caps for the refresh-by-patch path ([[Ops.patchAgainstPrevious]]).
-    * Changed-chunk cap bounds the mini-diff read (O(changed × chunk
-    * rows)); delta-row cap bounds the driver-resident patch. Above
-    * either, the refresh falls back to the mini merge — the bulk path
-    * is the right plan for bulk deltas anyway. */
+  /** Caps for the incremental re-key refreshes
+    * ([[Ops.patchAgainstPrevious]], [[Ops.rekeyDeltaFoldIn]]).
+    * Changed-chunk cap bounds the delta read (O(changed × chunk rows));
+    * delta-row cap bounds the driver-resident delta. Above either, the
+    * refresh falls back to the rebuild or the mini merge — the bulk
+    * path is the right plan for bulk deltas anyway. */
   val PatchMaxChangedChunks: Int = 1024
   val PatchMaxDeltaRows: Int = 65536
 
@@ -2927,6 +2664,12 @@ object Ops {
     * analysis), safe to share across sessions and stores. */
   private[core] final case class RetractPlan(livenessCol: String,
       inverts: Map[String, org.apache.spark.sql.Column])
+
+  /** The previous refresh of a re-key, as [[Ops.previousVersion]] finds
+    * it: its result meta, and the source chunks removed and added
+    * since. */
+  private[core] final case class PreviousVersion(result: TableMeta,
+      removed: Seq[ChunkMeta], added: Seq[ChunkMeta])
   private[core] val retractCache =
     new Lru[(String, String, String), Option[RetractPlan]](512)
 
@@ -2939,21 +2682,6 @@ object Ops {
     * deltas folded in as frames via [[Ops.mergeRetract]]). */
   private[graft] val rekeyRetractDistFoldIns =
     new java.util.concurrent.atomic.AtomicLong
-
-  /** Observability counter: distributed retractions whose net delta
-    * folded via multiplicity SCALING ([[FoldSpec.scaleContrib]]) rather
-    * than row expansion — the O(distinct groups) path for count-shaped
-    * purges (VERDICT r13 #2). */
-  private[graft] val rekeyRetractScaledNets =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** Expansion cap for the distributed retraction's NON-linear fallback
-    * (a fold with invertContrib but no scaleContrib): a net row's
-    * multiplicity re-expands via a single-task sequence() array, so
-    * above this the route declines to the exact paths instead of
-    * building the multi-GB array scaling exists to avoid. 64 Ki longs
-    * = a 512 KB array per net row, far under task memory. */
-  val RetractMaxExpandMultiplicity: Long = 1L << 16
 
   /** Row cap for the ZERO-JOB driver patch ([[Ops.patchTableBounded]]'s
     * fast path): total rows of the touched runs + upserts. Under it, a
@@ -2984,50 +2712,64 @@ object Ops {
     * dominates below ~100 B/row; 1M rows ≈ low hundreds of MB). */
   val DriverPatchHardRowCap: Long = 1L << 20
 
-  /** Schemas whose Rows the driver can diff by STRUCTURAL equality:
-    * driver-readable, and no field type with equality/hashing pitfalls
-    * (binary arrays compare by reference; fp NaN/-0.0 hash unlike SQL
-    * semantics). */
-  private[core] def driverDiffable(
-      schema: org.apache.spark.sql.types.StructType): Boolean = {
-    import org.apache.spark.sql.types._
-    // recursive: an array<double> value column has the same NaN/-0.0
-    // structural-equality hazards as a top-level double. Leaves are an
-    // ALLOWLIST — an unknown (future) type never silently passes the
-    // structural-equality gate just because DriverChunks happens to
-    // accept it; maps recurse into key and value types.
-    def ok(dt: DataType): Boolean = dt match {
-      case BinaryType | FloatType | DoubleType => false
-      case ArrayType(e, _) => ok(e)
-      case MapType(k, v, _) => ok(k) && ok(v)
-      case s: StructType => s.fields.forall(f => ok(f.dataType))
-      case BooleanType | ByteType | ShortType | IntegerType | LongType |
-          StringType | DateType | TimestampType | TimestampNTZType |
-          NullType => true
-      case _: DecimalType => true
-      case _ => false
-    }
-    DriverChunks.supported(schema) && schema.fields.forall(f => ok(f.dataType))
+  /** Row identity of every refresh diff: the canonical bytes of the
+    * row's `cols` (all of them for whole rows, the key columns for
+    * keys) — the encoding [[Canonical.DigestState]] hashes — so two rows
+    * are the same exactly when a table hash cannot tell them apart:
+    * -0.0 and 0.0 differ, NaNs are one value, binary values compare by
+    * content. */
+  private[core] def rowIdentity(schema: StructType,
+      cols: Seq[String]): Row => java.nio.ByteBuffer = {
+    val enc = KeyCodec.rowEncoder(schema, cols)
+    r => java.nio.ByteBuffer.wrap(enc(r))
   }
 
-  /** Multiset difference `xs ∖ ys` on STRUCTURAL row equality — each
-    * `ys` occurrence cancels one matching `xs` row. Callers must gate
-    * on [[driverDiffable]]: structural equality is only SQL-faithful
-    * without binary arrays and fp NaN/-0.0 fields (recursively). */
-  private[core] def multisetRowDiff(xs: Seq[org.apache.spark.sql.Row],
-      ys: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] = {
-    val counts = scala.collection.mutable.HashMap.empty[Seq[Any], Int]
-    ys.foreach { y =>
-      val k = y.toSeq
-      counts.update(k, counts.getOrElse(k, 0) + 1)
+  /** Rows added and rows removed. */
+  private[core] type RowDelta = (Seq[Row], Seq[Row])
+
+  /** Multiset delta of two row collections of `schema` under
+    * [[rowIdentity]]: (`added` ∖ `removed`, `removed` ∖ `added`), each
+    * occurrence cancelling one identical row of the other side. */
+  private[core] def multisetRowDiff(schema: StructType, added: Seq[Row],
+      removed: Seq[Row]): RowDelta = {
+    val id = rowIdentity(schema, schema.fieldNames.toIndexedSeq)
+    val net = scala.collection.mutable.LinkedHashMap
+      .empty[java.nio.ByteBuffer, (Row, Int)]
+    def count(rs: Seq[Row], d: Int): Unit = rs.foreach { r =>
+      val k = id(r)
+      net.update(k, net.get(k).fold((r, d)) { case (r0, n) => (r0, n + d) })
     }
-    xs.filter { x =>
-      val k = x.toSeq
-      counts.get(k) match {
-        case Some(c) if c > 0 => counts.update(k, c - 1); false
-        case _ => true
-      }
-    }
+    count(added, 1); count(removed, -1)
+    def side(sign: Int): Seq[Row] = net.valuesIterator
+      .flatMap { case (r, n) => Iterator.fill(sign * n)(r) }.toVector
+    (side(1), side(-1))
+  }
+
+  /** The signed-multiplicity column of [[rowNet]]. */
+  private[core] val NetCol = "_graft_net"
+
+  /** Distributed [[multisetRowDiff]]: two frames of one schema netted
+    * under [[rowIdentity]] in ONE shuffle — each row tagged +1 (added)
+    * or −1 (removed) and grouped on its canonical bytes, zero nets
+    * dropped. Returns the schema's columns plus [[NetCol]]: > 0 for
+    * rows added, < 0 for rows removed, |net| copies each. */
+  private[core] def rowNet(added: DataFrame, removed: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructField}
+    val schema = StructType(added.schema.fields.map(_.copy(nullable = true)))
+    val cols = schema.fieldNames.toIndexedSeq
+    val rb = "_graft_rb"
+    val enc = KeyCodec.rowEncoder(schema, cols)
+    val tagged = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
+      schema.add(StructField(rb, BinaryType, nullable = false))
+        .add(StructField(NetCol, LongType, nullable = false)))
+    def tag(df: DataFrame, sign: Long): DataFrame =
+      df.mapPartitions(_.map(r => Row.fromSeq(r.toSeq :+ enc(r) :+ sign)))(
+        tagged)
+    tag(added, 1L).union(tag(removed, -1L))
+      .groupBy(col(rb))
+      .agg(sum(col(NetCol)).as(NetCol), cols.map(c => first(col(c)).as(c)): _*)
+      .where(col(NetCol) =!= 0L)
+      .select(cols.map(col) :+ col(NetCol): _*)
   }
 
   /** Width-adaptive row cap for sites that know only a row count (no
@@ -3053,20 +2795,39 @@ object Ops {
     * — the counter that lets specs and production logs distinguish a
     * fold-in refresh from a mini re-merge or a rebuild. */
   val rekeyAppendFoldIns = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** Driver-patch fallbacks must be OBSERVABLE: a persistent driver-path
-    * failure (an exotic codec, an unsupported physical type in an old
-    * file) silently degrading every point DML to the job path would be
-    * an invisible latency regression. Warn ONCE per cause signature
-    * (class + message) so production logs show the degradation without
-    * flooding. */
-  private val warnedPatchCauses =
+  /** The one catch of every driver and incremental route: `route`'s
+    * failure falls back to `fallback` (the next route), and must be
+    * OBSERVABLE — a persistent driver-path failure (an exotic codec, an
+    * unsupported physical type in an old file) silently degrading every
+    * point DML to the job path would be an invisible latency
+    * regression, so it is warned ONCE per cause signature (class +
+    * message). A USER error raised by the input itself — a null key, a
+    * NOT NULL violation — is not a route failure: it propagates,
+    * unwrapped from the task failure that carried it, since every other
+    * route would only raise it again. */
+  private[graft] def routeOr[T](fallback: => T)(route: => T): T =
+    try route catch { case scala.util.control.NonFatal(e) =>
+      userError(e).foreach(throw _)
+      val sig = e.getClass.getName + ":" + String.valueOf(e.getMessage)
+      if (warnedRouteCauses.add(sig))
+        System.err.println(
+          s"[graft] WARN driver-patch fell back to the Spark job path: $e")
+      fallback
+    }
+  private val warnedRouteCauses =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def warnDriverPatchFallback(e: Throwable): Unit = {
-    val sig = e.getClass.getName + ":" + String.valueOf(e.getMessage)
-    if (warnedPatchCauses.add(sig))
-      System.err.println(
-        s"[graft] WARN driver-patch fell back to the Spark job path: $e")
-  }
+
+  /** The user error in `e`'s cause chain, if any: the null-key
+    * rejection of [[Canonical.withKeyBytes]] or a `raise_error` (the SQL
+    * layer's NOT NULL guard). */
+  private def userError(e: Throwable): Option[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).find {
+      case i: IllegalArgumentException =>
+        Option(i.getMessage).exists(_.startsWith(Canonical.NullKeyError))
+      case s: org.apache.spark.SparkThrowable =>
+        s.getCondition == "USER_RAISED_EXCEPTION"
+      case _ => false
+    }
 }
 
 /** Projection-style transform: named output columns (aliased), a subset of

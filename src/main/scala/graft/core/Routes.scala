@@ -19,8 +19,12 @@ package graft.core
   *   transform may read, splice and write touched chunk runs on the
   *   driver (zero Spark jobs).
   * @param driverMaterialize [[Canonical.materialize]] may collect a
-  *   metadata-sized input once and write its chunks on the driver; also
-  *   gates the incremental re-key routes built on that collect.
+  *   metadata-sized input once and write its chunks on the driver. Also
+  *   the switch of the re-key refreshes' source-row delta: off, an
+  *   aggregate view refresh takes neither the driver nor the
+  *   distributed fold-in and retraction (it re-merges per-chunk minis,
+  *   the reference route), and an index refresh splices the delta of
+  *   the distributed row net ([[Ops.rowNet]]) instead of the driver's.
   * @param driverMaxBytes compressed-byte budget of every driver-side
   *   chunk read, splice and collect — the cap that bounds driver
   *   memory (the row caps bound per-row object overhead). 64 MB

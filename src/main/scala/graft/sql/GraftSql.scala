@@ -1322,7 +1322,7 @@ object GraftSql {
       schema, graft.core.Ops.PatchMaxDeltaRows)
     if (!rowBound.exists(_ <= cap) ||
         !byteBound.exists(_ <= ops.routes.driverMaxBytes)) return None
-    try {
+    graft.core.Ops.routeOr(Option.empty[graft.core.TableRef]) {
       val rows = ops.collectDriverBounded(frame, rowBound).toSeq
       if (rows.isEmpty) return Some(ref)
       val kEnc = graft.core.KeyCodec.rowEncoder(schema, entry.keyCols)
@@ -1337,8 +1337,7 @@ object GraftSql {
       // check still falls back to ONE grouped job when the touched
       // chunks outgrow the driver budget
       ops.patchTableBounded(ref, lastWins, Nil, None)
-    } catch { case scala.util.control.NonFatal(e) =>
-      graft.core.Ops.warnDriverPatchFallback(e); None }
+    }
   }
 
   /** ZERO-JOB point UPDATE: read the addressed rows driver-side
@@ -1352,7 +1351,7 @@ object GraftSql {
       schema: StructType, entry: graft.core.CatalogEntry, name: String,
       ref: graft.core.TableRef, keys: Seq[Seq[Any]],
       sets: Map[String, String]): Option[graft.core.TableRef] =
-    try {
+    graft.core.Ops.routeOr(Option.empty[graft.core.TableRef]) {
       val current = ops.readKeysDriver(ref, keys).getOrElse(return None)
       if (current.isEmpty) return Some(ref) // nothing addressed: no-op
       import scala.jdk.CollectionConverters._
@@ -1364,8 +1363,7 @@ object GraftSql {
       }.toIndexedSeq: _*)
       val rows = guardNotNull(updated, entry, name).collect().toSeq
       Some(ops.patchTable(ref, rows, Nil))
-    } catch { case scala.util.control.NonFatal(e) =>
-      graft.core.Ops.warnDriverPatchFallback(e); None }
+    }
 
   /** ZERO-JOB range UPDATE — [[pointUpdate]] generalized to leading-key
     * ranges: read the range's rows driver-side
@@ -1382,7 +1380,7 @@ object GraftSql {
       ref: graft.core.TableRef, lo: Option[graft.core.Bound],
       hi: Option[graft.core.Bound],
       sets: Map[String, String]): Option[graft.core.TableRef] =
-    try {
+    graft.core.Ops.routeOr(Option.empty[graft.core.TableRef]) {
       val current = ops.readRangeDriver(ref, lo, hi).getOrElse(return None)
       if (current.isEmpty) return Some(ref) // empty range: no-op
       import scala.jdk.CollectionConverters._
@@ -1394,8 +1392,7 @@ object GraftSql {
       }.toIndexedSeq: _*)
       val rows = guardNotNull(updated, entry, name).collect().toSeq
       Some(ops.patchTable(ref, rows, Nil))
-    } catch { case scala.util.control.NonFatal(e) =>
-      graft.core.Ops.warnDriverPatchFallback(e); None }
+    }
 
   /** Recognize `cond` as literal POINT key(s): an equality on EVERY key
     * column (one key tuple), or — for single-column keys — one IN-list

@@ -365,7 +365,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
 
   test("append fold-in, distributed variant: changed chunks over the driver byte budget still fold in") {
     // shrinking the driver byte budget declines the source-row diff;
-    // the set-op variant (exceptAll emptiness proof + frame fold-in)
+    // the distributed variant (row-net emptiness proof + frame fold-in)
     // must take over — the 100 TB append path, where the changed
     // chunks never fit driver memory
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyad-"))
@@ -396,17 +396,65 @@ class IncrementalTransformSpec extends AnyFunSuite {
       "distributed append fold-in must hash-equal the from-scratch build")
   }
 
+  test("aggregate view over a source with an fp column: an INSERT refresh folds in on the driver and distributed routes, hash-equals from-scratch") {
+    // the refresh diffs source rows under the canonical row identity, so
+    // a float8 column the view never projects (and whose -0.0/NaN values
+    // structural or SQL set-op equality would conflate) must not push
+    // the refresh off the fold-in routes onto the per-chunk mini walk
+    val fpSchema = StructType(Seq(
+      StructField("k", StringType, nullable = false),
+      StructField("v", LongType, nullable = false),
+      StructField("d", DoubleType, nullable = true)))
+    def fpDf(rows: Seq[(String, Long)]): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.map {
+        case (k, v) =>
+          val d: java.lang.Double = v % 5 match {
+            case 0 => -0.0
+            case 1 => 0.0
+            case 2 => Double.NaN
+            case 3 => null
+            case _ => v * 0.5
+          }
+          Row(k, v, d)
+      }, 4), fpSchema)
+    val rekeySum = ColTransform("rekey_sum_fp_src_v1", Seq("g"),
+      Seq(concat(lit("g"), reverse(substring(col("k"), 2, 4))).as("g"),
+        col("v")))
+    val rows = (0 until 12000).map(i => f"k$i%05d" -> i.toLong)
+    val delta = (12000 until 12040).map(i => f"k$i%05d" -> (i * 7).toLong)
+    val ops2 = new Ops(spark,
+      new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyfp2-")), 64)
+    val scratch = ops2.transform(
+      ops2.fromDataFrame(fpDf(rows ++ delta), Seq("k")), rekeySum,
+      FoldSpec.FoldSum)
+    Seq(Routes.Default, Routes(driverMaxBytes = 1L)).foreach { routes =>
+      val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyfp-"))
+      val ops = new Ops(spark, store, 64, routes = routes)
+      val base = ops.fromDataFrame(fpDf(rows), Seq("k"))
+      val v1 = ops.transform(base, rekeySum, FoldSpec.FoldSum)
+      val merged = ops.upsert(base, ops.fromDataFrame(fpDf(delta), Seq("k")))
+      val foldIns0 = Ops.rekeyAppendFoldIns.get()
+      store.stats.reset()
+      val v2 = ops.transform(merged, rekeySum, FoldSpec.FoldSum,
+        prev = Some(v1))
+      val snap = store.stats.snapshot
+      // the mini path does one memoGet per source chunk (~190 here)
+      assert(snap("memoHits") + snap("memoMisses") <= 150,
+        s"$routes: fp-source append refresh walked the mini memos: $snap")
+      assert(Ops.rekeyAppendFoldIns.get() > foldIns0,
+        s"$routes: fp-source append refresh did not fold in")
+      assert(v2.hash == scratch.hash,
+        s"$routes: fp-source fold-in must hash-equal the from-scratch build")
+    }
+  }
+
   test("distributed retraction scales net multiplicities: a skewed identical-contribution purge folds without row expansion") {
     // VERDICT r13 #2: in a count-shaped view every contribution in a
     // group is the IDENTICAL row, so purging M rows of one group nets
-    // to a single row with multiplicity M — the old
-    // explode(sequence(1, M)) re-expansion built an O(M) single-task
-    // array (multi-GB for a skewed group at 100 TB; sequence() hard-
-    // errors past ~2.1B). The admitted folds are linear, so the net row
-    // must fold ONCE, scaled by M (FoldSpec.scaleContrib) — asserted
-    // via the scaled-nets counter (the expansion code is no longer on
-    // this path at any M), with group death and from-scratch hash
-    // equality preserved.
+    // to a single row with multiplicity M. The admitted folds are
+    // linear, so the net row folds ONCE, scaled by M
+    // (FoldSpec.scaleContrib) — no row expansion exists on this path —
+    // with group death and from-scratch hash equality preserved.
     val rekeyConst = ColTransform("rekey_const_v1", Seq("g"),
       Seq(when(col("k") < lit("k30000"), lit("a")).otherwise(lit("b")).as("g"),
         lit(1L).as("cnt"), lit(7L).as("v")))
@@ -424,12 +472,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     // a byte budget of 1 forces the over-cap distributed path
     val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
     val dist0 = Ops.rekeyRetractDistFoldIns.get()
-    val scaled0 = Ops.rekeyRetractScaledNets.get()
     val v2 = bytes1.transform(merged, rekeyConst, fold, prev = Some(v1))
     assert(Ops.rekeyRetractDistFoldIns.get() == dist0 + 1,
       "purge did not take the distributed retraction")
-    assert(Ops.rekeyRetractScaledNets.get() == scaled0 + 1,
-      "identical-contribution purge did not take the SCALED net path")
     val got = ops.scan(v2).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set(("a", 10000L, 70000L)),
@@ -445,15 +490,15 @@ class IncrementalTransformSpec extends AnyFunSuite {
   }
 
   test("non-linear invertible fold declines the expansion above the 64Ki multiplicity cap — exact fallback, hash-equal") {
-    // VERDICT r14 #8: an invertible fold that declares NO linearity
-    // (scaleContrib = None) keeps the exact explode-expansion only
-    // UNDER Ops.RetractMaxExpandMultiplicity; above it the single-task
-    // O(M) array is the OOM shape scaling exists to avoid, so the
-    // distributed retraction must DECLINE — cleanly, to the exact
-    // mini/rebuild fallback — rather than expand. XOR is the canonical
-    // such fold: self-inverse (x ⊕ x = 0, so invert = identity
-    // satisfies fold(xs ++ invert(ys)) == fold(xs ∖ ys) bit-exactly),
-    // but fold(n copies of x) is x·(n mod 2) — no declared scale.
+    // An invertible fold that declares NO linearity (scaleContrib =
+    // None) is not admitted to retraction at all: a net row of
+    // multiplicity M could only fold by expanding M rows, the
+    // single-task O(M) array scaling exists to avoid. The refresh must
+    // DECLINE — cleanly, to the exact mini/rebuild fallback. XOR is the
+    // canonical such fold: self-inverse (x ⊕ x = 0, so invert =
+    // identity satisfies fold(xs ++ invert(ys)) == fold(xs ∖ ys)
+    // bit-exactly), but fold(n copies of x) is x·(n mod 2) — no
+    // declared scale.
     val foldXor = FoldSpec.FoldByColumn(Seq(
       "cnt" -> FoldSpec.FoldSum,
       "v" -> FoldSpec.CombinableFold("fold_xor_test_v1", c => bit_xor(c),
@@ -467,19 +512,15 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val base = ops.fromDataFrame(df(rows), Seq("k"))
     val v1 = ops.transform(base, rekeyConst, foldXor)
     // purge 70000 identical (a, 1, 7) contributions — one net row with
-    // multiplicity 70000 > RetractMaxExpandMultiplicity (64Ki)
-    assert(70000L > Ops.RetractMaxExpandMultiplicity)
+    // multiplicity 70000
     val delKeys = (0 until 70000).map(i => f"k$i%05d")
     val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
     // a byte budget of 1 forces past the driver routes
     val bytes1 = new Ops(spark, store, 512, routes = Routes(driverMaxBytes = 1L))
     val dist0 = Ops.rekeyRetractDistFoldIns.get()
-    val scaled0 = Ops.rekeyRetractScaledNets.get()
     val v2 = bytes1.transform(merged, rekeyConst, foldXor, prev = Some(v1))
     assert(Ops.rekeyRetractDistFoldIns.get() == dist0,
       "over-cap non-linear purge must DECLINE the distributed retraction")
-    assert(Ops.rekeyRetractScaledNets.get() == scaled0,
-      "a fold without scaleContrib must never take the scaled path")
     // the fallback is exact: group a (k < k70000) is fully purged and
     // must die; group b (5000 untouched rows) survives — compare the
     // whole result against a from-scratch build of the surviving rows
@@ -499,7 +540,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
   test("distributed retraction: over-cap delete delta folds in as frames, group death, three-route hash equality") {
     // VERDICT r12 #1: a delete delta whose changed chunks exceed the
     // driver byte budget must take the DISTRIBUTED retraction
-    // (contribution frames diffed via exceptAll, deleted side inverted,
+    // (contribution frames netted in one shuffle, deleted side inverted,
     // one net-delta shuffle, mergeRetract dropping liveness-0 groups) —
     // the retention-purge-at-100TB shape — instead of declining to the
     // O(groups × chunks) mini re-merge. Same scattered-group data as

@@ -102,8 +102,15 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("O(delta) maintenance: a 1-row DML refreshes a many-chunk index with bounded chunk writes and no full-index shuffle") {
+    // the default routes splice a driver-side delta; a byte budget of 1
+    // splices the distributed row net instead
+    Seq(Routes.Default, Routes(driverMaxBytes = 1L)).foreach(routes =>
+      oDeltaMaintenance(routes))
+  }
+
+  private def oDeltaMaintenance(routes: Routes): Unit = {
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-idx3-"))
-    val ops = new Ops(spark, store, 16)
+    val ops = new Ops(spark, store, 16, routes = routes)
     val cat = new Catalog(store)
     val sess = new SqlSession(spark, ops, cat)
     sess.execute("CREATE TABLE t (id bigint PRIMARY KEY, grp bigint NOT NULL)")
@@ -123,7 +130,7 @@ class IndexSpec extends AnyFunSuite {
       "SELECT id FROM t WHERE grp = 13 ORDER BY id"): @unchecked
     val saves = store.stats.snapshot("chunkSaves")
     assert(saves <= 12,
-      s"index refresh after a point DML wrote $saves chunks of $idxChunks — not O(delta)")
+      s"$routes: index refresh after a point DML wrote $saves chunks of $idxChunks — not O(delta)")
     assert(df.collect().map(_.getLong(0)).toSeq ==
       ((0L until 8000L).filter(_ % 97 == 13) :+ 9001L))
     // and the patched index hash-equals a from-scratch rebuild
@@ -138,7 +145,40 @@ class IndexSpec extends AnyFunSuite {
     sess2.execute("CREATE INDEX t_grp ON t (grp)")
     sess2.execute("SELECT id FROM t WHERE grp = 13")
     assert(cat2.get("t_grp").get.hash == patchedHash,
-      "patched index diverged from the from-scratch rebuild")
+      s"$routes: patched index diverged from the from-scratch rebuild")
+  }
+
+  test("float8 index: a 0.0 → -0.0 update refreshes to the from-scratch index on the driver and distributed routes") {
+    // -0.0 and 0.0 are different values to the canonical encoding (and
+    // so to every table hash), but equal under SQL set-op and boxed
+    // structural equality: a refresh diff that used either would see
+    // no change and keep the stale +0.0 index key
+    def build(sess: SqlSession): Unit = {
+      sess.execute("CREATE TABLE t (id bigint PRIMARY KEY, d float8 NOT NULL)")
+      sess.execute("INSERT INTO t SELECT id, CAST(id % 25 AS double) * 0.5 " +
+        "AS d FROM range(0, 4000)")
+    }
+    val store0 = new FsStore(graft.core.FsUtil.tempStoreDir("graft-idx6b-"))
+    val cat0 = new Catalog(store0)
+    val sess0 = new SqlSession(spark, new Ops(spark, store0, 16), cat0)
+    build(sess0)
+    sess0.execute("UPDATE t SET d = -d WHERE id = 50")
+    sess0.execute("CREATE INDEX t_d ON t (d)")
+    val scratchHash = cat0.get("t_d").get.hash
+    Seq(Routes.Default, Routes(driverMaxBytes = 1L)).foreach { routes =>
+      val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-idx6-"))
+      val cat = new Catalog(store)
+      val sess = new SqlSession(spark,
+        new Ops(spark, store, 16, routes = routes), cat)
+      build(sess)
+      sess.execute("CREATE INDEX t_d ON t (d)")
+      sess.execute("UPDATE t SET d = -d WHERE id = 50")
+      sess.execute("REFRESH ALL")
+      assert(cat.root("t").tableHash == cat0.root("t").tableHash,
+        s"$routes: source tables differ")
+      assert(cat.get("t_d").get.hash == scratchHash,
+        s"$routes: refreshed float8 index diverged from the from-scratch build")
+    }
   }
 
   test("scattered small DML: refresh splices by source-row diff instead of rebuilding the index") {
