@@ -255,20 +255,22 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long, String)]
     var stmtJobsMark = 0L
     // per-statement ROUTE-ADMISSION deltas (VERDICT r13 #5): which
-    // incremental route each statement actually took — driver
-    // retraction, distributed retraction, append fold-in — so a silent route
-    // downgrade is visible in every bench artifact
-    def routeCounters(): Array[Long] = Array(
-      graft.core.Ops.rekeyRetractFoldIns.get(),
-      graft.core.Ops.rekeyRetractDistFoldIns.get(),
-      graft.core.Ops.rekeyAppendFoldIns.get())
-    var stmtRouteMark: Array[Long] = routeCounters()
+    // variant of the counting-IVM fold-in each statement or query took
+    // — driver or distributed — so a silent route downgrade (to the
+    // mini path or a rebuild) is visible in every bench artifact
+    def foldInCounters(): Array[Long] = Array(
+      graft.core.Ops.driverFoldIns.get(),
+      graft.core.Ops.distributedFoldIns.get())
+    def foldInFields(since: Array[Long],
+        now: Array[Long] = foldInCounters()): Seq[(String, String)] =
+      Seq("fold_in_drv", "fold_in_dist").zip(now).zip(since)
+        .map { case ((k, v), v0) => k -> (v - v0).toString }
+    var stmtRouteMark: Array[Long] = foldInCounters()
     graft.sql.GraftSql.stmtProbe = Some { (sql, sec) =>
       val j = listener.jobs.get()
-      val rc = routeCounters()
-      val rd = rc.zip(stmtRouteMark).map { case (a, b) => a - b }
-      val routes = s""""retract_drv":${rd(0)},"retract_dist":${rd(1)},""" +
-        s""""fold_ins":${rd(2)}"""
+      val rc = foldInCounters()
+      val routes = foldInFields(stmtRouteMark, rc)
+        .map { case (k, v) => s""""$k":$v""" }.mkString(",")
       stmtBuf.synchronized { stmtBuf += ((sql, sec, j - stmtJobsMark, routes)); () }
       stmtJobsMark = j
       stmtRouteMark = rc
@@ -285,14 +287,14 @@ object Bench {
       drain()
       val l0 = listener.snapshot
       val gc0 = driverGcMs; val cpu0 = procCpuNs
-      val routes0 = routeCounters()
+      val routes0 = foldInCounters()
       val steal0 = stealJiffies
       val loadStart = load1
       val (v, runs) =
         try timeQuery(() => {
           stmtBuf.synchronized { stmtBuf.clear() }
           stmtJobsMark = listener.jobs.get()
-          stmtRouteMark = routeCounters()
+          stmtRouteMark = foldInCounters()
           fn(spark, sfDir).count(); ()
         })
         catch { case _: Throwable => (-1.0, Seq.empty[Double]) }
@@ -301,15 +303,7 @@ object Bench {
       val stealD = if (steal0 < 0) -1L else stealJiffies - steal0
       val l1 = listener.snapshot
       def d(k: String): Long = l1(k) - l0(k)
-      val env = Seq(
-        // retraction-admission deltas (VERDICT r13 #5): driver vs
-        // distributed vs append fold-in, per query
-        "retract_drv" ->
-          (graft.core.Ops.rekeyRetractFoldIns.get() - routes0(0)).toString,
-        "retract_dist" ->
-          (graft.core.Ops.rekeyRetractDistFoldIns.get() - routes0(1)).toString,
-        "fold_ins" ->
-          (graft.core.Ops.rekeyAppendFoldIns.get() - routes0(2)).toString,
+      val env = foldInFields(routes0) ++ Seq(
         "jobs" -> d("jobs").toString,
         "tasks" -> d("tasks").toString,
         "task_run_s" -> fmt(d("run_ms") / 1e3),

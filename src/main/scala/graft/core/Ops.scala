@@ -1129,24 +1129,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
 
   // ---- transform (O2) --------------------------------------------------
 
-  /** Column-level transform spec: Ops controls the projection so the
-    * source-order index survives for deterministic collision folds.
-    *
-    * Key-preserving transforms take the chunk-level incremental path:
-    * each source chunk's transform is memoized independently
-    * (sortNode's per-subtree memoization, Trie.hs:467-470), so
-    * re-transforming a table after a small upsert recomputes only the
-    * chunks the upsert touched.
-    *
-    * RE-KEYING transforms with a combinable fold (sum/min/max) are also
-    * incremental: each source chunk is transformed + pre-folded into a
-    * memoized mini-table, and the minis feed the region-memoized merge —
-    * the sortNode per-subtree sort + mergeNodes structure
-    * (Trie.hs:446-470,297-430). After a small source upsert, only the
-    * touched chunks' minis recompute, and only output regions whose
-    * participant set changed re-merge. Order-sensitive re-keying folds
-    * (fold_to_last collisions depend on source order) stay at
-    * whole-table memo granularity. */
   /** Metadata-only column rename — O(1), zero Spark jobs: chunk identity
     * is over row VALUE bytes (name-free), so the renamed table points at
     * the SAME chunk objects; reads stay correct in BOTH directions
@@ -1174,14 +1156,34 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     TableRef(out.tableHash)
   }
 
-  /** `prev`: the caller's previous RESULT of this same transform (e.g. a
+  /** Column-level transform spec: Ops controls the projection so the
+    * source-order index survives for deterministic collision folds.
+    *
+    * Key-preserving transforms take the chunk-level incremental path:
+    * each source chunk's transform is memoized independently
+    * (sortNode's per-subtree memoization, Trie.hs:467-470), so
+    * re-transforming a table after a small upsert recomputes only the
+    * chunks the upsert touched.
+    *
+    * RE-KEYING transforms with a combinable fold (sum/min/max) are also
+    * incremental: each source chunk is transformed + pre-folded into a
+    * memoized mini-table, and the minis feed the region-memoized merge —
+    * the sortNode per-subtree sort + mergeNodes structure
+    * (Trie.hs:446-470,297-430). After a small source upsert, only the
+    * touched chunks' minis recompute, and only output regions whose
+    * participant set changed re-merge. Order-sensitive re-keying folds
+    * (fold_to_last collisions depend on source order) stay at
+    * whole-table memo granularity.
+    *
+    * `prev`: the caller's previous RESULT of this same transform (e.g. a
     * materialized view's current catalog version). Purely an execution
     * hint — results are identical with or without it — that unlocks the
-    * O(delta) patch path for [[ColTransform.uniqueKeys]] re-keys: the
-    * new result is derived from `prev` by a targeted chunk patch instead
-    * of a re-merge of every per-chunk mini (which for a re-key is the
-    * degenerate full-shuffle regime — every mini spans the whole output
-    * key space). */
+    * O(delta) routes of a re-key: the new result is derived from `prev`
+    * — by a targeted chunk patch for [[ColTransform.uniqueKeys]] re-keys,
+    * by the counting-IVM fold-in ([[rekeyDeltaFoldIn]]) for aggregate
+    * views — instead of a re-merge of every per-chunk mini (which for a
+    * re-key is the degenerate full-shuffle regime — every mini spans the
+    * whole output key space). */
   def transform(ref: TableRef, t: ColTransform, fold: FoldSpec,
       prev: Option[TableRef] = None): TableRef = {
     // load the meta ONCE per call — with parquet-indexed chunk lists a
@@ -1319,18 +1321,18 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     //    NEEDS the full mini set.)
     if (t.uniqueKeys)
       return finish(transformDirect(m, t, fold, target))
-    // 2b. Row-delta fold-in (non-unique re-keys — aggregate views):
-    //     when the row-level source delta is a pure APPEND, the new
-    //     result is fold_merge(previous result, fold(delta rows)); when
-    //     it has DELETES and every fold member is INVERTIBLE with a
-    //     liveness column (see retractionSpec), deleted contributions
-    //     fold in NEGATED and fully-retracted groups are deleted — both
-    //     cost O(delta + touched result regions), NOT the O(groups ×
-    //     chunks) full mini re-merge a group-scattered delta forces
-    //     below. At 100 TB this prices streaming-append AND
-    //     delete/update aggregate maintenance by the RESULT table, not
-    //     the fact table. Non-invertible folds (MIN/MAX/KMV) with
-    //     deletes fall through to the exact general paths.
+    // 2b. Counting-IVM fold-in (non-unique re-keys — aggregate views):
+    //     the row-level source delta folds into the previous result —
+    //     inserted contributions as they are, deleted ones negated,
+    //     liveness-0 groups deleted — on the driver when the changed
+    //     chunks are byte-admitted, else distributed. An append has
+    //     nothing to retract, so any combinable fold takes it; deletes
+    //     need an invertible, linear fold with a liveness column (see
+    //     retractionSpec). Cost O(delta + touched result regions), NOT
+    //     the O(groups × chunks) full mini re-merge a group-scattered
+    //     delta forces below: at 100 TB aggregate maintenance is priced
+    //     by the RESULT table, not the fact table. Non-invertible folds
+    //     (MIN/MAX/KMV) with deletes fall through to the exact mini path.
     prev.foreach { p =>
       rekeyDeltaFoldIn(m, t, fold, p, target)
         .foreach(h => return finish(h))
@@ -1342,16 +1344,16 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     //     and the n-way mini merge of a first build degenerates to the
     //     flat shuffle anyway (every mini spans the whole group space).
     //     Refreshes keep their O(delta) contract WITHOUT the mini
-    //     substrate: appends take the fold-in, deletes/updates the
-    //     retraction (driver or distributed) — the routes that never
-    //     touch minis — and the rare declines (NULL-contract trip,
-    //     scattered-splice guard) fall to the mini path, which computes
+    //     substrate: appends, deletes and updates take the fold-in
+    //     (driver or distributed) — the routes that never touch minis
+    //     — and the rare declines (a NULL-contract trip, a delta over
+    //     both variants' caps) fall to the mini path, which computes
     //     missing minis on demand in one batched job and memoizes them
     //     (the cost moves from EVERY build to the first refresh that
     //     actually needs the substrate). Non-invertible views (MIN/MAX/
     //     KMV members, no liveness column, or a fold that is not
     //     linear) keep eager minis: their
-    //     update/delete refreshes have no fold-in route, so the memoized
+    //     update/delete refreshes cannot take the fold-in, so the memoized
     //     minis + region memos ARE their O(delta) story. Bit-identical
     //     either way: rekeyCombinable admits only bit-stable partial
     //     folds and the chunk decomposition is a pure function of the
@@ -1584,7 +1586,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           rowBound = Some(ins.length.toLong))(Canonical.Ungrouped)
         if (deltaMeta.schemaJson != pm.schemaJson) None
         else {
-          Ops.rekeyAppendFoldIns.incrementAndGet()
+          Ops.distributedFoldIns.incrementAndGet()
           Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
         }
       }
@@ -1596,8 +1598,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * identity ([[Ops.multisetRowDiff]]): Some((inserted, deleted)) when
     * the changed chunks fit the row/byte caps and the reads succeed —
     * None otherwise (callers fall back to their distributed paths).
-    * Shared by the uniqueKeys splice and the aggregate fold-in and
-    * retraction. */
+    * Shared by the uniqueKeys splice and the aggregate fold-in. */
   private def sourceRowDelta(m: TableMeta, removed: Seq[ChunkMeta],
       added: Seq[ChunkMeta]): Option[Ops.RowDelta] = {
     if (!routes.driverMaterialize) return None
@@ -1617,125 +1618,69 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     }
   }
 
-  /** Row-delta fold-in for NON-unique combinable re-keys (aggregate
-    * views): when the row-level source delta between the previous
-    * refresh's source and the current one is a pure APPEND, the new
-    * result is `merge(previous result, fold(delta rows))` — the
-    * admitted folds are commutative/associative with bit-stable
-    * partials (the [[rekeyCombinable]] contract), and with no deleted
-    * rows no group can vanish or need inversion, so the fold-in is
-    * bit-identical to the from-scratch rekey (content-defined chunking
-    * makes the decomposition a pure function of the key set; pinned by
-    * the MV incremental==from-scratch hash specs). A delta WITH deletes
-    * takes the RETRACTION variant ([[rekeyRetract]]) when the fold is
-    * invertible and linear and the view carries a liveness column
-    * ([[retractionSpec]]): deleted contributions fold in NEGATED, and a
-    * group whose liveness reaches 0 is deleted — the classic
-    * counting-IVM rule, exact because inversion is bit-exact for the
-    * admitted integer folds. Cost either way is O(delta + result
-    * regions the delta keys touch) — a group-scattered delta no longer
-    * re-merges every per-chunk mini (O(groups × chunks)); at 100 TB
-    * this prices streaming aggregate maintenance by the RESULT table,
-    * not the fact table. None (fall through to the mini path) when
-    * preconditions fail, the delta shape is inadmissible, or any read
-    * surprises. */
+  /** Counting-IVM fold-in of an aggregate view (a NON-unique combinable
+    * re-key): the new result is the previous one with the row-level
+    * source delta folded in — inserted contributions as they are,
+    * deleted ones NEGATED, and a group whose liveness counter reaches 0
+    * deleted. An append is the case with nothing to retract, so every
+    * combinable fold admits it; a delta WITH deletes needs the
+    * retraction admission ([[retractionSpec]]: invertible, linear
+    * members and a liveness column). Exact either way: the admitted
+    * folds are commutative/associative with bit-stable partials (the
+    * [[rekeyCombinable]] contract), inversion is bit-exact for the
+    * admitted integer folds, and content-defined chunking makes the
+    * decomposition a pure function of the key set (pinned by the
+    * incremental == from-scratch hash specs).
+    *
+    * One rule, two variants, tried in order: the DRIVER fold-in
+    * ([[foldInDriver]]) when the changed source chunks are
+    * byte-admitted, then the DISTRIBUTED fold-in ([[foldInDistributed]]),
+    * which reuses the driver's delta when the driver already read it.
+    * Cost is O(delta + result regions the delta keys touch), not the
+    * O(groups × chunks) mini re-merge a group-scattered delta forces:
+    * at 100 TB aggregate maintenance is priced by the RESULT table, not
+    * the fact table. None (the mini path) when no previous version
+    * applies, the delta is inadmissible, or a variant declines for
+    * good. */
   private def rekeyDeltaFoldIn(m: TableMeta, t: ColTransform,
       fold: FoldSpec, prev: TableRef, target: Long): Option[String] =
     previousVersion(m, t, fold, prev, target).flatMap { pv =>
       val (pm, removed, added) = (pv.result, pv.removed, pv.added)
-      // static retraction admission (cached empty-frame analysis — no
-      // IO): invertible, linear fold members + a liveness column +
-      // non-null contributions; None means deletes must take the
-      // general paths
+      // static retraction admission (cached empty-frame analysis — no IO)
       lazy val retractPlan = retractionSpec(m, t, fold)
       val addedRows = added.iterator.map(_.rows).sum
       val removedRows = removed.iterator.map(_.rows).sum
       if (removed.isEmpty && added.isEmpty) Some(prev.hash)
-      else if (removed.length + added.length > Ops.PatchMaxChangedChunks)
-        None
-      // metadata pre-check before ANY chunk IO: an insert-only delta
-      // strictly grows the changed region's row count (updates keep it
-      // equal, deletes shrink it) — flows that can take NEITHER the
-      // append fold-in NOR the retraction decline for free here
-      // instead of paying the reads and the diff
-      else if (addedRows <= removedRows && retractPlan.isEmpty) None
+      else if (removed.length + added.length > Ops.PatchMaxChangedChunks ||
+          // metadata pre-check before ANY chunk IO: an insert-only delta
+          // strictly grows the changed region's row count (updates keep
+          // it equal, deletes shrink it), so a fold that cannot retract
+          // declines here for free instead of paying the reads and diff
+          (addedRows <= removedRows && retractPlan.isEmpty) ||
+          // routes.driverMaterialize doubles as the route-matrix master
+          // switch (specs force it off to exercise the reference mini
+          // path): honored by both variants, though the distributed one
+          // never touches driver memory
+          !routes.driverMaterialize) None
       else {
-        // fold the appended-rows FRAME through the transform into a
-        // delta table at the result's granularity, then merge it into
-        // the previous result — the common tail of both the driver and
-        // the distributed variants
-        def foldIn(insDf: DataFrame, insRows: Long): Option[String] =
-          Ops.routeOr(Option.empty[String]) {
-            val df1 = t.rowFilter.map(insDf.where).getOrElse(insDf)
-            val projected = df1.select(t.columns: _*)
-            val valueCols = projected.columns
-              .filterNot(t.outKeyCols.contains).toSeq
-            val folded = projected.groupBy(t.outKeyCols.map(col): _*)
-              .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-            val deltaMeta = Canonical.materialize(spark, store, routes,
-              castValues(folded, projected.schema, valueCols),
-              t.outKeyCols, target,
-              // fold output ≤ projected rows ≤ delta rows for 1→1
-              // transforms; a generator's output is unknown — use the
-              // optimistic tiny-input probe, exactly like the build
-              rowBound = if (t.generator) None else Some(insRows),
-              rowProbe = if (t.generator) Some(insRows) else None)(Canonical.Ungrouped)
-            if (deltaMeta.schemaJson != pm.schemaJson) None
-            else {
-              Ops.rekeyAppendFoldIns.incrementAndGet()
-              Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold)
-                .hash)
-            }
-          }
-
-        sourceRowDelta(m, removed, added) match {
-          case Some((insSrc, delSrc)) =>
-            if (delSrc.nonEmpty) retractPlan.flatMap(rp =>
-              rekeyRetract(rp, m, t, fold, prev, pm, insSrc, delSrc))
-            else if (insSrc.isEmpty) Some(prev.hash)
-            else {
-              import scala.jdk.CollectionConverters._
-              foldIn(spark.createDataFrame(insSrc.asJava, m.schema),
-                insSrc.length.toLong)
-            }
-          // DISTRIBUTED variants — the 100 TB path: changed chunks above
-          // the driver byte budget diff as FRAMES, netted in one shuffle
-          // ([[Ops.rowNet]]); a delta WITH deletes takes the distributed
-          // RETRACTION ([[rekeyRetractDistributed]]) when the fold admits
-          // it. Cost: ~two scans of the changed chunks + the delta
-          // materialization + the result merge — versus the mini path's
-          // changed-chunk minis PLUS a re-merge of EVERY mini when the
-          // appended group keys scatter. routes.driverMaterialize
-          // doubles as the route-matrix master switch (specs force it
-          // off to exercise the reference mini/job paths) — honor it
-          // here even though these variants never touch driver memory
-          case None if routes.driverMaterialize =>
-            Ops.routeOr(Option.empty[String]) {
-              val addedDf = readSourceChunks(m, added)
-              val removedDf = readSourceChunks(m, removed)
-              retractPlan match {
-                case Some(rp) =>
-                  // retractable fold: the contribution NET answers
-                  // insert-only vs delete-bearing and handles BOTH
-                  rekeyRetractDistributed(rp, m, t, fold, prev, pm,
-                    addedDf, removedDf, addedRows + removedRows)
-                case None =>
-                  // source rows are unique by key, so every net is ±1:
-                  // one limit(1) job proves no row was deleted, and the
-                  // positive side IS the appended rows
-                  val net = Ops.rowNet(addedDf, removedDf)
-                  if (removed.nonEmpty &&
-                      !net.where(col(Ops.NetCol) < 0L).limit(1).isEmpty) None
-                  else foldIn(net.drop(Ops.NetCol), addedRows)
-              }
-            }
-          case None => None
+        val delta = sourceRowDelta(m, removed, added)
+        def distributed: Option[String] = {
+          import scala.jdk.CollectionConverters._
+          def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, m.schema)
+          foldInDistributed(retractPlan, t, fold, prev, pm,
+            delta.fold(readSourceChunks(m, added))(d => local(d._1)),
+            delta.fold(readSourceChunks(m, removed))(d => local(d._2)),
+            delta.fold(addedRows + removedRows)(d =>
+              (d._1.length + d._2.length).toLong))
         }
+        delta.fold(distributed)(d =>
+          foldInDriver(retractPlan, m, t, fold, prev, pm, d)(distributed))
       }
     }
 
-  /** Static retraction admission for the delete-aware fold-in
-    * ([[rekeyRetract]]) — a cached empty-frame analysis, no IO:
+  /** Static retraction admission — what a delta WITH deletes needs to
+    * take the counting-IVM fold-in ([[rekeyDeltaFoldIn]]) — a cached
+    * empty-frame analysis, no IO:
     *
     *  - every VALUE column's fold member is INVERTIBLE
     *    ([[FoldSpec.invertContrib]]: SUM/COUNT negate, HIST negates bin
@@ -1792,39 +1737,42 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       }
     }
 
-  /** Delete-aware O(delta) refresh of an aggregate view (the RETRACTION
-    * route — VERDICT r11 #2): deleted source rows fold in with their
-    * contributions NEGATED, inserted rows as-is, the previous result's
-    * TOUCHED group rows participate as the partial folds they are
-    * (the combinable contract), and a group whose liveness counter
-    * reaches 0 is deleted. The patched result is bit-identical to the
-    * from-scratch rekey: inversion is bit-exact for the admitted
-    * integer folds, content-defined chunking makes the decomposition a
-    * pure function of the key set, and dead groups vanish exactly as
-    * they would from scratch. Everything runs driver-side under the
-    * same row/byte caps as the sibling routes; None falls back to
-    * the exact mini/rebuild paths. */
-  private def rekeyRetract(rp: Ops.RetractPlan, m: TableMeta,
+  /** DRIVER variant of the counting-IVM fold-in ([[rekeyDeltaFoldIn]]):
+    * the byte-admitted source delta `src` maps to contributions and
+    * re-diffs on the driver, the touched groups' PREVIOUS rows are read
+    * from the key-pruned result chunks, and ONE small fold over
+    * {previous partials} ∪ {inserted} ∪ {inverted deleted} — the
+    * previous rows participate as the partial folds they are (the
+    * combinable contract) — splices onto `prev` through
+    * [[patchTableBounded]] (zero jobs under the driver caps), deleting
+    * the groups whose liveness reached 0. A decline the distributed
+    * variant can still take — contributions, touched result rows or
+    * touched result chunks over the driver caps, any failure — hands
+    * over to `orDistributed`; deletes without the retraction admission
+    * `rp`, or a NULL the non-null contract rules out, decline for good
+    * (None: the exact mini path). */
+  private def foldInDriver(rp: Option[Ops.RetractPlan], m: TableMeta,
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      insSrc: Seq[Row], delSrc: Seq[Row]): Option[String] =
-    Ops.routeOr(Option.empty[String]) {
+      src: Ops.RowDelta)(orDistributed: => Option[String]): Option[String] =
+    Ops.routeOr(orDistributed) {
       import scala.jdk.CollectionConverters._
       val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
-      val insT0 = driverContributions(t, m, pm, insSrc, cap)
-        .getOrElse(return None)
-      val delT0 = driverContributions(t, m, pm, delSrc, cap)
-        .getOrElse(return None)
+      val insT0 = driverContributions(t, m, pm, src._1, cap)
+        .getOrElse(return orDistributed)
+      val delT0 = driverContributions(t, m, pm, src._2, cap)
+        .getOrElse(return orDistributed)
       // re-diff at the contribution level: an update the view is
       // insensitive to cancels out entirely
       val (insT, delT) = Ops.multisetRowDiff(pm.schema, insT0, delT0)
       if (insT.isEmpty && delT.isEmpty) return Some(prev.hash)
-      // belt for the caller-declared non-null contract: a NULL observed
-      // in any inverted column (delta or previous partials) means the
-      // declaration lied somewhere — decline to the exact paths rather
-      // than compute wrong NULL semantics (this cannot catch a
-      // historical NULL outside the touched rows, which is exactly why
-      // the declaration is a contract)
-      val invIdx = rp.inverts.keysIterator
+      val retract = if (delT.isEmpty) None else Some(rp.getOrElse(return None))
+      // belt for the caller-declared non-null contract of a retraction:
+      // a NULL observed in any inverted column (delta or previous
+      // partials) means the declaration lied somewhere — decline to the
+      // exact paths rather than compute wrong NULL semantics (this
+      // cannot catch a historical NULL outside the touched rows, which
+      // is exactly why the declaration is a contract)
+      val invIdx = retract.toSeq.flatMap(_.inverts.keys)
         .map(pm.schema.fieldIndex).toArray
       def anyNull(rs: Iterable[Row]): Boolean =
         rs.exists(r => invIdx.exists(r.isNullAt))
@@ -1835,12 +1783,15 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val touchedRows = (insT.iterator ++ delT.iterator).toSeq
         .distinctBy(keyId)
       // the touched groups' PREVIOUS rows, read driver-side from the
-      // key-pruned result chunks under the usual row/byte caps
+      // key-pruned result chunks under the usual row/byte caps; a splice
+      // over more than half the result's chunks does not pay (each hit
+      // chunk is a chunk the splice rewrites, so this is checked before
+      // any read)
       val hit = chunksForKeys(pm, touchedRows.map(r => kIdx.map(r.get)))
-      val hitRows = hit.iterator.map(_.rows).sum
-      if (hitRows > Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows) ||
+      val maxTouched = math.max(8, pm.chunks.length / 2)
+      if (hit.length > maxTouched || hit.iterator.map(_.rows).sum > cap ||
           !chunkBytes(hit).exists(_ <= routes.driverMaxBytes)) {
-        return None
+        return orDistributed
       }
       val touched = touchedRows.iterator.map(keyId).toSet
       val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
@@ -1848,31 +1799,30 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         .flatten.filter(r => touched(keyId(r)))
       if (anyNull(prevRows)) return None
       // invert the deleted contributions (fold-declared, per column)
-      val delInv =
-        if (delT.isEmpty) Nil
-        else collectDriverBounded(
-          spark.createDataFrame(delT.asJava, pm.schema)
-            .select(pm.schema.fieldNames.toIndexedSeq.map(n =>
-              rp.inverts.getOrElse(n, col(n))): _*)).toSeq
-      // ONE small fold over {previous partials} ∪ {inserted} ∪
-      // {inverted deleted} — combinability folds partials and raw
-      // contributions alike, bit-exactly
+      val delInv = retract.fold(Seq.empty[Row])(r => collectDriverBounded(
+        spark.createDataFrame(delT.asJava, pm.schema)
+          .select(pm.schema.fieldNames.toIndexedSeq.map(n =>
+            r.inverts.getOrElse(n, col(n))): _*)).toSeq)
       val valueCols = pm.schema.fieldNames.toSeq
         .filterNot(pm.keyCols.contains)
-      val df = spark.createDataFrame(
+      val folded = spark.createDataFrame(
         (prevRows ++ insT ++ delInv).asJava, pm.schema)
-      val folded = df.groupBy(pm.keyCols.map(col): _*)
+        .groupBy(pm.keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
       val newRows = collectDriverBounded(
         castValues(folded, pm.schema, valueCols)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*))
-      val liveIdx = pm.schema.fieldIndex(rp.livenessCol)
-      val (live, dead) = newRows.partition(r => r.getLong(liveIdx) != 0L)
-      val out = patchTableBounded(prev, live.toSeq,
-        dead.iterator.map(r => kIdx.map(r.get)).toSeq,
-        Some(math.max(8, pm.chunks.length / 2))).map(_.hash)
-      if (out.isDefined) Ops.rekeyRetractFoldIns.incrementAndGet(): Unit
-      out
+          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)).toSeq
+      val (live, dead) = retract.fold((newRows, Seq.empty[Row])) { r =>
+        val liveIdx = pm.schema.fieldIndex(r.livenessCol)
+        newRows.partition(_.getLong(liveIdx) != 0L)
+      }
+      patchTableBounded(prev, live, dead.map(r => kIdx.map(r.get)),
+        Some(maxTouched)) match {
+        case Some(out) =>
+          Ops.driverFoldIns.incrementAndGet()
+          Some(out.hash)
+        case None => orDistributed
+      }
     }
 
   /** A re-key's per-row CONTRIBUTIONS to its result `pm`: `t`'s
@@ -1899,8 +1849,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     }
 
   /** A table version's changed chunks as a frame in the table's own
-    * schema (field-id read metadata stripped) — shared by the
-    * distributed fold-in/retraction variants. */
+    * schema (field-id read metadata stripped) — the input of the
+    * distributed fold-in when the driver holds no delta. */
   private def readSourceChunks(m: TableMeta, cs: Seq[ChunkMeta]): DataFrame =
     if (cs.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], m.schema)
@@ -1908,32 +1858,29 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       .select(m.schema.fieldNames.map(nm => col(nm)
         .as(nm, org.apache.spark.sql.types.Metadata.empty)): _*)
 
-  /** DISTRIBUTED delete-aware refresh (VERDICT r12 #1) — the over-cap
-    * mirror of [[rekeyRetract]]: when the changed source chunks exceed
-    * the driver byte budget, the retraction runs entirely as frames.
-    * Contributions of the added/removed chunk versions net in one
-    * shuffle ([[Ops.rowNet]]; a per-row transform commutes with multiset
-    * diff, so netting AT the contribution level equals the driver
-    * route's src-diff-then-re-diff — value-insensitive updates cancel
-    * identically), the deleted side folds in through the fold-declared
-    * inversion projection, each net row folds ONCE scaled by its
-    * multiplicity (the admitted folds are linear), one shuffle builds
-    * the NET delta table at result granularity, and [[mergeRetract]]
-    * folds it into the previous result rewriting only dirty regions and
-    * deleting liveness-0 groups. Bit-identical to from-scratch by the
-    * same argument as the driver route (inversion and scaling
-    * bit-exact, content-defined chunking a pure function of the key
-    * set). This is the plan that survives a retention purge touching
-    * MANY groups across FEW result regions at 100 TB: cost is
-    * O(changed source chunks + dirty result regions), with no
-    * driver-resident rows at any point. The NULL belt covers the DELTA
-    * contributions (one limit-1 job); previous partials ride the
+  /** DISTRIBUTED variant of the counting-IVM fold-in
+    * ([[rekeyDeltaFoldIn]]), for deltas over the driver caps: the
+    * contributions of the added and removed source rows net in one
+    * shuffle ([[Ops.rowNet]]; a per-row transform commutes with
+    * multiset diff, so value-insensitive updates cancel as on the
+    * driver), each net row folds ONCE — scaled by its multiplicity in
+    * a LINEAR member ([[FoldSpec.scaleContrib]]), as it is in an
+    * idempotent one — the deleted side through the fold-declared
+    * inversion, one shuffle builds the net delta table at result
+    * granularity, and the region merge folds it into `prev` rewriting
+    * only dirty regions ([[mergeRetract]] for a delta with deletes,
+    * which also drops liveness-0 groups). ONE probe job over the net
+    * answers insert-only vs delete-bearing, the NULL belt of a
+    * retraction's delta contributions (previous partials ride the
     * caller's non-null contract, which the SQL layer enforces at write
-    * time (guardNotNull) — a lying core-level caller falls under the
-    * same documented contract as uniqueKeys. */
-  private def rekeyRetractDistributed(rp: Ops.RetractPlan, m: TableMeta,
+    * time — guardNotNull) and whether any net row stands for more than
+    * one contribution, which a member neither linear nor idempotent
+    * (XOR) cannot fold: it declines then. Cost: O(changed source rows +
+    * dirty result regions), with no driver-resident rows the driver
+    * variant did not already hold. */
+  private def foldInDistributed(rp: Option[Ops.RetractPlan],
       t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      addedDf: DataFrame, removedDf: DataFrame,
+      addedDf: => DataFrame, removedDf: => DataFrame,
       changedRows: Long): Option[String] =
     Ops.routeOr(Option.empty[String]) {
       val tag = Ops.NetCol
@@ -1941,44 +1888,41 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val net = Ops.rowNet(contributions(t, pm, addedDf),
         contributions(t, pm, removedDf)).persist()
       try {
-        // ONE probe job over the net (which also materializes the
-        // persist): the NULL belt for the delta side of the non-null
-        // contract AND the delete-bearing/insert-only answer — the two
-        // limit(1) probes this fuses each paid a full job's fixed cost
-        // at bench scale
-        val invCols = rp.inverts.keysIterator.toSeq
+        val invNull = rp.toSeq.flatMap(_.inverts.keys)
+          .map(col(_).isNull).foldLeft(lit(false))(_ || _)
         val probeRow = Canonical.withJobDesc(spark, "graft:retract-net")(
           net.agg(
-            max(when(invCols.map(col(_).isNull).reduce(_ || _), 1L)
-              .otherwise(0L)).as("nulls"),
-            max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels")).head())
-        val nullHit = !probeRow.isNullAt(0) && probeRow.getLong(0) == 1L
-        if (nullHit) return None
-        val hasDeletes = !probeRow.isNullAt(1) && probeRow.getLong(1) == 1L
-        val valueCols = pm.schema.fieldNames.toSeq
-          .filterNot(pm.keyCols.contains)
+            max(when(invNull, 1L).otherwise(0L)).as("nulls"),
+            max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels"),
+            max(abs(col(tag))).as("mult")).head())
+        // an empty net: the view's contributions did not change
+        if (probeRow.isNullAt(2)) return Some(prev.hash)
+        val hasDeletes = probeRow.getLong(1) == 1L
+        val retract = rp.filter(_ => hasDeletes)
+        if (hasDeletes && (retract.isEmpty || probeRow.getLong(0) == 1L))
+          return None
         // |net| is the number of IDENTICAL contribution rows a net row
         // stands for — for a count-shaped view every contribution in a
         // group is the same (g, 1) row, so a retention purge of M rows
-        // nets to ONE row with multiplicity M. The admitted folds are
-        // LINEAR ([[retractionSpec]]), so each net row folds as ONE
-        // contribution scaled by its multiplicity: a count-only purge
-        // costs O(distinct groups), not O(deleted rows).
+        // nets to ONE row with multiplicity M, folded as one scaled
+        // contribution: O(distinct groups), not O(deleted rows)
         val mult = "_graft_mult"
         val scaled = allCols.map(n =>
-          if (pm.keyCols.contains(n)) col(n)
-          else fold.scaleContrib(n, col(mult)).get)
+          if (pm.keyCols.contains(n)) Some(col(n))
+          else fold.scaleContrib(n, col(mult))
+            .orElse(Option.when(Ops.idempotentMember(fold, n))(col(n))))
+        if (probeRow.getLong(2) > 1L && scaled.contains(None)) return None
+        val proj = scaled.zip(allCols).map { case (c, n) => c.getOrElse(col(n)) }
         val insT = net.where(col(tag) > 0L)
-          .withColumnRenamed(tag, mult)
-          .select(scaled: _*)
+          .withColumnRenamed(tag, mult).select(proj: _*)
         // inversion first (a per-row projection), then the same scaling
         // by |net| — the linear folds commute the two
-        val delInv = net.where(col(tag) < 0L)
-          .select(allCols.map(n =>
-            rp.inverts.getOrElse(n, col(n)).as(n)) :+
-            (-col(tag)).as(mult): _*)
-          .select(scaled: _*)
-        val folded = (if (hasDeletes) insT.union(delInv) else insT)
+        val valueCols = allCols.filterNot(pm.keyCols.contains)
+        val folded = retract.fold(insT)(r => insT.union(
+          net.where(col(tag) < 0L)
+            .select(allCols.map(n => r.inverts.getOrElse(n, col(n)).as(n)) :+
+              (-col(tag)).as(mult): _*)
+            .select(proj: _*)))
           .groupBy(pm.keyCols.map(col): _*)
           .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
         // probeFold: the delta collapses to the touched GROUP count —
@@ -1989,26 +1933,24 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // cached, so the re-run is the shuffle alone) — the source-rows
         // guard keeps that bounded waste off genuinely huge deltas, and
         // a small-job-qualified bound keeps its cheaper ONE-job path
-        // (same crossover as the direct build).
+        // (same crossover as the direct build). A generator's output is
+        // not bounded by its source rows: it bets on the tiny input.
         val deltaProbe =
           !Canonical.smallJob(Some(changedRows), pm.chunkTargetRows) &&
           changedRows <= Ops.ProbeFoldMaxSourceRows
         val deltaMeta = Canonical.materialize(spark, store, routes,
           castValues(folded, pm.schema, valueCols), pm.keyCols,
           pm.chunkTargetRows,
-          rowBound = if (deltaProbe) None else Some(changedRows),
+          rowBound = if (deltaProbe || t.generator) None else Some(changedRows),
+          rowProbe = Option.when(t.generator)(changedRows),
           probeFold = deltaProbe)(Canonical.Ungrouped)
         if (deltaMeta.schemaJson != pm.schemaJson) None
         else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
-        else if (!hasDeletes) {
-          // insert-only delta: no group can die — plain region merge,
-          // sharing memo namespace with the sibling fold-in route
-          Ops.rekeyAppendFoldIns.incrementAndGet()
-          Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
-        } else {
-          Ops.rekeyRetractDistFoldIns.incrementAndGet()
-          Some(mergeRetract(prev, TableRef(deltaMeta.tableHash), fold,
-            rp.livenessCol).hash)
+        else {
+          Ops.distributedFoldIns.incrementAndGet()
+          val delta = TableRef(deltaMeta.tableHash)
+          Some(retract.fold(merge(Seq(prev, delta), fold))(r =>
+            mergeRetract(prev, delta, fold, r.livenessCol)).hash)
         }
       } finally {
         net.unpersist(): Unit
@@ -2082,7 +2024,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // ConvertToLocalRelation then folds the filter + projection +
         // key-byte encode INTO the relation at optimization time, so
         // the grouped materialization's collect never launches a job
-        // (the pointUpdate mechanism, generalized). Row content is
+        // (the driver point-UPDATE mechanism, generalized). Row content is
         // byte-identical to the parquet scan (DriverChunks round-trip
         // pinned in PatchTableSpec), so sub-result hashes are unchanged.
         // Any surprise falls back to the scan; at scale the byte budget
@@ -2673,15 +2615,25 @@ object Ops {
   private[core] val retractCache =
     new Lru[(String, String, String), Option[RetractPlan]](512)
 
-  /** Observability counter: delete-aware retraction fold-ins taken
-    * (specs pin the route fires; the bench env rows make it auditable). */
-  private[graft] val rekeyRetractFoldIns =
+  /** Observability counters, one per variant of the counting-IVM
+    * fold-in ([[Ops.rekeyDeltaFoldIn]]): aggregate-view deltas the
+    * DRIVER variant spliced, and deltas the DISTRIBUTED variant merged
+    * in as a table — which also counts a uniqueKeys index's insert-only
+    * delta merged in when its splice does not pay
+    * ([[Ops.spliceUnique]]). Specs pin the route a refresh took;
+    * graft.Bench reports them per query and statement. */
+  private[graft] val driverFoldIns = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val distributedFoldIns =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** Observability counter: DISTRIBUTED retractions (over-cap delete
-    * deltas folded in as frames via [[Ops.mergeRetract]]). */
-  private[graft] val rekeyRetractDistFoldIns =
-    new java.util.concurrent.atomic.AtomicLong
+  /** Whether value column `name` folds under an IDEMPOTENT member
+    * (fold(n copies of x) == x): MIN, MAX, KMV, bitwise OR/AND. */
+  private[core] def idempotentMember(fold: FoldSpec, name: String): Boolean =
+    fold match {
+      case FoldSpec.FoldByColumn(ms) =>
+        ms.exists { case (c, f) => c == name && idempotentMember(f, name) }
+      case f => f.idempotent
+    }
 
   /** Row cap for the ZERO-JOB driver patch ([[Ops.patchTableBounded]]'s
     * fast path): total rows of the touched runs + upserts. Under it, a
@@ -2790,11 +2742,6 @@ object Ops {
   final case class AlignedInput(ref: TableRef, alignSig: String,
       projection: Seq[org.apache.spark.sql.Column])
 
-  /** Observability: insert-only delta fold-ins taken since JVM start
-    * (both the aggregate-view and the scattered-unique-index variants)
-    * — the counter that lets specs and production logs distinguish a
-    * fold-in refresh from a mini re-merge or a rebuild. */
-  val rekeyAppendFoldIns = new java.util.concurrent.atomic.AtomicLong(0L)
   /** The one catch of every driver and incremental route: `route`'s
     * failure falls back to `fallback` (the next route), and must be
     * OBSERVABLE — a persistent driver-path failure (an exotic codec, an

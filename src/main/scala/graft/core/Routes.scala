@@ -21,10 +21,11 @@ package graft.core
   * @param driverMaterialize [[Canonical.materialize]] may collect a
   *   metadata-sized input once and write its chunks on the driver. Also
   *   the switch of the re-key refreshes' source-row delta: off, an
-  *   aggregate view refresh takes neither the driver nor the
-  *   distributed fold-in and retraction (it re-merges per-chunk minis,
-  *   the reference route), and an index refresh splices the delta of
-  *   the distributed row net ([[Ops.rowNet]]) instead of the driver's.
+  *   aggregate view refresh takes neither variant of the counting-IVM
+  *   fold-in — the driver one nor the distributed one — and re-merges
+  *   per-chunk minis (the reference route), and an index refresh
+  *   splices the delta of the distributed row net ([[Ops.rowNet]])
+  *   instead of the driver's.
   * @param driverMaxBytes compressed-byte budget of every driver-side
   *   chunk read, splice and collect — the cap that bounds driver
   *   memory (the row caps bound per-row object overhead). 64 MB

@@ -826,11 +826,11 @@ object MatView {
     run("INSERT INTO ord_rt SELECT o_orderkey + 900000000, o_custkey, " +
       "price_c + 7 FROM ord_rt WHERE o_orderkey % 64 = 3")
     run("DELETE FROM ord_rt WHERE o_orderkey >= 1000 AND o_orderkey < 9000")
-    val retracts0 = graft.core.Ops.rekeyRetractFoldIns.get()
+    val retracts0 = graft.core.Ops.driverFoldIns.get()
     store.stats.reset()
     run("REFRESH MATERIALIZED VIEW bucket_rt")
     val saves = store.stats.snapshot("chunkSaves")
-    require(graft.core.Ops.rekeyRetractFoldIns.get() > retracts0,
+    require(graft.core.Ops.driverFoldIns.get() > retracts0,
       "DELETE-refresh did not take the retraction route")
     // the purge + append touch two contiguous result regions (stage +
     // post stage each rewrite a few runs); a mini re-merge or rebuild
@@ -937,11 +937,11 @@ object MatView {
     run("INSERT INTO li_rd SELECT lk + 1099511627776, l_partkey, " +
       "price_c + 3 FROM li_rd WHERE lk % 1024 = 5")
     run("DELETE FROM li_rd WHERE lk % 512 = 70 OR l_partkey % 5 = 2")
-    val dist0 = graft.core.Ops.rekeyRetractDistFoldIns.get()
-    val drv0 = graft.core.Ops.rekeyRetractFoldIns.get()
+    val dist0 = graft.core.Ops.distributedFoldIns.get()
+    val drv0 = graft.core.Ops.driverFoldIns.get()
     run("REFRESH MATERIALIZED VIEW scatter_rd")
-    val dist = graft.core.Ops.rekeyRetractDistFoldIns.get() - dist0
-    val drv = graft.core.Ops.rekeyRetractFoldIns.get() - drv0
+    val dist = graft.core.Ops.distributedFoldIns.get() - dist0
+    val drv = graft.core.Ops.driverFoldIns.get() - drv0
     require(dist + drv > 0,
       "DELETE-refresh did not take a retraction route")
     // at bench scale the changed chunks are over the driver caps: only

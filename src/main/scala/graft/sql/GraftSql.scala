@@ -548,20 +548,20 @@ object GraftSql {
           else (if (ops.routes.pointDml)
               parseKeyPoints(spark, schema, entry.keyCols, cond) else None)
             .filter(ks => ks.nonEmpty && ks.lengthCompare(1000) <= 0)
-            .flatMap(ks =>
-              pointUpdate(spark, ops, schema, entry, name, ref, ks, sets))
+            .flatMap(ks => updateDriver(spark, ops, schema, entry, name,
+              ref, ops.readKeysDriver(ref, ks), sets))
             .getOrElse(parseKeyRange(spark, schema, entry.keyCols, cond) match {
             case Some((lo, hi)) =>
-              // ZERO-JOB range UPDATE first (pointUpdate generalized to
-              // key ranges): byte-admitted range rows read driver-side,
+              // ZERO-JOB range UPDATE first (the point update's
+              // driver route over a key range): byte-admitted range rows read driver-side,
               // SET evaluated on a LocalRelation, spliced through the
               // patch — no rangeFilter materialization, no collect job.
               // None (over-cap range, non-row-local
               // SET, any read surprise) falls through to the
               // range-scan + delta-patch chain below.
               (if (ops.routes.pointDml)
-                rangeUpdateDriver(spark, ops, schema, entry, name, ref,
-                  lo, hi, sets)
+                updateDriver(spark, ops, schema, entry, name, ref,
+                  ops.readRangeDriver(ref, lo, hi), sets)
               else None).getOrElse(try {
                 val rf = ops.rangeFilter(ref, lo, hi)
                 val rows = ops.scan(rf)
@@ -1340,49 +1340,24 @@ object GraftSql {
     }
   }
 
-  /** ZERO-JOB point UPDATE: read the addressed rows driver-side
-    * ([[graft.core.Ops.readKeysDriver]]), evaluate the SET projection
-    * over a LocalRelation (a local plan collects without a Spark job),
-    * and splice the updated rows back through the point patch. None —
-    * caller falls back to the range/transform/rebuild chain — on a
-    * non-driver-readable schema, a SET expression needing more than
-    * row-local columns, or any read surprise. */
-  private def pointUpdate(spark: SparkSession, ops: Ops,
+  /** ZERO-JOB UPDATE of driver-read rows: `read` fetches the addressed
+    * rows driver-side — the point keys ([[graft.core.Ops.readKeysDriver]])
+    * or a leading-key range ([[graft.core.Ops.readRangeDriver]]: chunk
+    * intersection + byte-encoded bound filter, no rangeFilter
+    * materialization) — the SET projection is evaluated over a
+    * LocalRelation (a local plan collects without a Spark job), and the
+    * updated rows splice back through the patch. None — caller falls
+    * back to the range-scan/transform/rebuild chain — when `read`
+    * declines (a non-driver-readable schema, a range over the driver
+    * row/byte caps), the SET needs more than row-local columns, or on
+    * any surprise. */
+  private def updateDriver(spark: SparkSession, ops: Ops,
       schema: StructType, entry: graft.core.CatalogEntry, name: String,
-      ref: graft.core.TableRef, keys: Seq[Seq[Any]],
+      ref: graft.core.TableRef, read: => Option[Seq[Row]],
       sets: Map[String, String]): Option[graft.core.TableRef] =
     graft.core.Ops.routeOr(Option.empty[graft.core.TableRef]) {
-      val current = ops.readKeysDriver(ref, keys).getOrElse(return None)
+      val current = read.getOrElse(return None)
       if (current.isEmpty) return Some(ref) // nothing addressed: no-op
-      import scala.jdk.CollectionConverters._
-      val local = spark.createDataFrame(current.asJava, schema)
-      val updated = local.selectExpr(schema.fieldNames.map { f =>
-        sets.get(f)
-          .map(e => s"CAST(($e) AS ${schema(f).dataType.sql}) AS `$f`")
-          .getOrElse(s"`$f`")
-      }.toIndexedSeq: _*)
-      val rows = guardNotNull(updated, entry, name).collect().toSeq
-      Some(ops.patchTable(ref, rows, Nil))
-    }
-
-  /** ZERO-JOB range UPDATE — [[pointUpdate]] generalized to leading-key
-    * ranges: read the range's rows driver-side
-    * ([[graft.core.Ops.readRangeDriver]] — chunk intersection + byte-
-    * encoded bound filter, no rangeFilter materialization), evaluate
-    * the SET projection over a LocalRelation (no job), splice through
-    * the patch. The sql_txn/sql_changes statement flows' range UPDATEs
-    * were paying one interpreted collect job each for exactly this row
-    * set. None — caller takes the range-scan + delta-patch chain — when
-    * the range is over the driver row/byte caps, the SET needs more
-    * than row-local columns, or on any surprise. */
-  private def rangeUpdateDriver(spark: SparkSession, ops: Ops,
-      schema: StructType, entry: graft.core.CatalogEntry, name: String,
-      ref: graft.core.TableRef, lo: Option[graft.core.Bound],
-      hi: Option[graft.core.Bound],
-      sets: Map[String, String]): Option[graft.core.TableRef] =
-    graft.core.Ops.routeOr(Option.empty[graft.core.TableRef]) {
-      val current = ops.readRangeDriver(ref, lo, hi).getOrElse(return None)
-      if (current.isEmpty) return Some(ref) // empty range: no-op
       import scala.jdk.CollectionConverters._
       val local = spark.createDataFrame(current.asJava, schema)
       val updated = local.selectExpr(schema.fieldNames.map { f =>

@@ -233,6 +233,100 @@ class IncrementalTransformSpec extends AnyFunSuite {
       "fold-in route diverged from the mini-merge route")
   }
 
+  /** `body`'s result plus the Spark jobs it launched. */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private val rekeyCntSum = ColTransform("rekey_cnt_sum_v1", Seq("g"),
+    Seq(concat(lit("g"), reverse(substring(col("k"), 2, 4))).as("g"),
+      lit(1L).as("cnt"), col("v")),
+    nonNull = Set("v"))
+  private val foldCntSum = FoldSpec.FoldByColumn(Seq(
+    "cnt" -> FoldSpec.FoldSum, "v" -> FoldSpec.FoldSum))
+
+  test("an INSERT into existing groups folds in on the driver with at most one Spark job, hash-equals from-scratch") {
+    // an append is a retraction with nothing to retract: the driver
+    // fold-in folds the touched groups' previous rows with the inserted
+    // contributions and splices them onto the previous result (zero-job
+    // patch) — no delta table is materialized and merged in
+    val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai-"))
+    val ops = new Ops(spark, store, 64)
+    // every key ending in 7 is missing, so each inserted key lands in
+    // the existing group of its nine siblings; the inserted keys share
+    // their third and fourth digits, so their groups (digit-reversed)
+    // are adjacent: one or two result chunks, inside the splice bound
+    val rows = (0 until 20000).filter(_ % 10 != 7).map(i => f"k$i%05d" -> i.toLong)
+    val base = ops.fromDataFrame(df(rows), Seq("k"))
+    val v1 = ops.transform(base, rekeyCntSum, foldCntSum)
+    val delta = (0 until 20).map(a => f"k$a%02d127" -> 5L)
+    val merged = ops.upsert(base, ops.fromDataFrame(df(delta), Seq("k")))
+    val drv0 = Ops.driverFoldIns.get()
+    val (v2, jobs) = withJobs(
+      ops.transform(merged, rekeyCntSum, foldCntSum, prev = Some(v1)))
+    assert(Ops.driverFoldIns.get() == drv0 + 1,
+      "the INSERT refresh did not take the driver fold-in")
+    assert(jobs <= 1, s"the INSERT refresh launched $jobs Spark jobs")
+    val ops2 = new Ops(spark,
+      new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai2-")), 64)
+    val scratch = ops2.transform(
+      ops2.fromDataFrame(df(rows ++ delta), Seq("k")), rekeyCntSum, foldCntSum)
+    assert(v2.hash == scratch.hash,
+      "the driver fold-in of an INSERT must hash-equal the from-scratch build")
+  }
+
+  test("a driver-admitted DELETE touching more result chunks than the splice bound takes the distributed fold-in, not the mini walk") {
+    // the changed source chunks fit the driver caps, but the deleted
+    // keys' groups scatter over most result chunks, past
+    // patchTableBounded's bound: the driver fold-in hands its delta to
+    // the distributed fold-in (region merge + liveness filter) instead
+    // of declining to the per-chunk mini walk
+    val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyds-"))
+    val ops = new Ops(spark, store, 64)
+    val rows = (0 until 20000).map(i => f"k$i%05d" -> i.toLong)
+    val base = ops.fromDataFrame(df(rows), Seq("k"))
+    val v1 = ops.transform(base, rekeyCntSum, foldCntSum)
+    // 80 keys whose groups scatter (their third and fourth digits, the
+    // group's leading ones, vary); plus all ten keys of group g3210
+    // (group death)
+    val delKeys = ((0 until 80).map(i => f"k${i * 239}%05d") ++
+      (0 until 10).map(i => f"k0123$i")).distinct
+    val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
+    val (drv0, dist0) = (Ops.driverFoldIns.get(), Ops.distributedFoldIns.get())
+    store.stats.reset()
+    val v2 = ops.transform(merged, rekeyCntSum, foldCntSum, prev = Some(v1))
+    val snap = store.stats.snapshot
+    // the splice bound declines the driver fold-in
+    assert((Ops.driverFoldIns.get() - drv0,
+      Ops.distributedFoldIns.get() - dist0) == (0L, 1L),
+      s"the scattered DELETE did not take the distributed fold-in alone " +
+        s"(result chunks ${ops.meta(v1).chunks.length}, memo $snap)")
+    // the mini walk does one memoGet per source chunk (~300 here)
+    assert(snap("memoHits") + snap("memoMisses") <= 150,
+      s"the scattered DELETE refresh walked the mini memos: $snap")
+    val ops2 = new Ops(spark,
+      new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyds2-")), 64)
+    val dead = delKeys.toSet
+    val scratch = ops2.transform(
+      ops2.fromDataFrame(df(rows.filterNot(r => dead(r._1))), Seq("k")),
+      rekeyCntSum, foldCntSum)
+    assert(v2.hash == scratch.hash,
+      "the distributed fold-in must hash-equal the from-scratch build")
+    assert(ops.scan(v2).where("g = 'g3210'").isEmpty,
+      "a fully-deleted group must vanish")
+  }
+
   test("delete-delta aggregate refresh RETRACTS into the previous result: O(delta), group death, hash-equals every route") {
     // VERDICT r11 #2: a DELETE-then-REFRESH over an invertible fold
     // (SUM/COUNT) with a liveness column must take the retraction
@@ -268,10 +362,10 @@ class IncrementalTransformSpec extends AnyFunSuite {
       Nil, delKeys.map(Seq(_)))
 
     store.stats.reset()
-    val retracts0 = Ops.rekeyRetractFoldIns.get()
+    val retracts0 = Ops.driverFoldIns.get()
     val v2 = ops.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
-    assert(Ops.rekeyRetractFoldIns.get() == retracts0 + 1,
+    assert(Ops.driverFoldIns.get() == retracts0 + 1,
       "delete-delta refresh did not take the retraction route")
     // O(delta): no per-chunk mini walk (~300 memoGets here), few writes
     assert(snap("memoHits") + snap("memoMisses") <= 60,
@@ -323,9 +417,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
         base: TableRef): (TableRef, Long) = {
       val v1 = ops.transform(base, t, fold)
       val merged = ops.patchTable(base, Nil, Seq(Seq("k00007")))
-      val r0 = Ops.rekeyRetractFoldIns.get()
+      val r0 = Ops.driverFoldIns.get()
       val v2 = ops.transform(merged, t, fold, prev = Some(v1))
-      (v2, Ops.rekeyRetractFoldIns.get() - r0)
+      (v2, Ops.driverFoldIns.get() - r0)
     }
 
     // 1. nullable SUM contribution: retracting the last non-null row of
@@ -433,7 +527,8 @@ class IncrementalTransformSpec extends AnyFunSuite {
       val base = ops.fromDataFrame(fpDf(rows), Seq("k"))
       val v1 = ops.transform(base, rekeySum, FoldSpec.FoldSum)
       val merged = ops.upsert(base, ops.fromDataFrame(fpDf(delta), Seq("k")))
-      val foldIns0 = Ops.rekeyAppendFoldIns.get()
+      def foldIns = Ops.driverFoldIns.get() + Ops.distributedFoldIns.get()
+      val foldIns0 = foldIns
       store.stats.reset()
       val v2 = ops.transform(merged, rekeySum, FoldSpec.FoldSum,
         prev = Some(v1))
@@ -441,7 +536,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       // the mini path does one memoGet per source chunk (~190 here)
       assert(snap("memoHits") + snap("memoMisses") <= 150,
         s"$routes: fp-source append refresh walked the mini memos: $snap")
-      assert(Ops.rekeyAppendFoldIns.get() > foldIns0,
+      assert(foldIns > foldIns0,
         s"$routes: fp-source append refresh did not fold in")
       assert(v2.hash == scratch.hash,
         s"$routes: fp-source fold-in must hash-equal the from-scratch build")
@@ -471,9 +566,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged = ops.patchTable(base, Nil, delKeys.toSeq.sorted.map(Seq(_)))
     // a byte budget of 1 forces the over-cap distributed path
     val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.rekeyRetractDistFoldIns.get()
+    val dist0 = Ops.distributedFoldIns.get()
     val v2 = bytes1.transform(merged, rekeyConst, fold, prev = Some(v1))
-    assert(Ops.rekeyRetractDistFoldIns.get() == dist0 + 1,
+    assert(Ops.distributedFoldIns.get() == dist0 + 1,
       "purge did not take the distributed retraction")
     val got = ops.scan(v2).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -517,9 +612,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
     // a byte budget of 1 forces past the driver routes
     val bytes1 = new Ops(spark, store, 512, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.rekeyRetractDistFoldIns.get()
+    val dist0 = Ops.distributedFoldIns.get()
     val v2 = bytes1.transform(merged, rekeyConst, foldXor, prev = Some(v1))
-    assert(Ops.rekeyRetractDistFoldIns.get() == dist0,
+    assert(Ops.distributedFoldIns.get() == dist0,
       "over-cap non-linear purge must DECLINE the distributed retraction")
     // the fallback is exact: group a (k < k70000) is fully purged and
     // must die; group b (5000 untouched rows) survives — compare the
@@ -569,14 +664,14 @@ class IncrementalTransformSpec extends AnyFunSuite {
 
     // a byte budget of 1 forces the over-cap path
     val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.rekeyRetractDistFoldIns.get()
-    val drv0 = Ops.rekeyRetractFoldIns.get()
+    val dist0 = Ops.distributedFoldIns.get()
+    val drv0 = Ops.driverFoldIns.get()
     store.stats.reset()
     val v2 = bytes1.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
-    assert(Ops.rekeyRetractDistFoldIns.get() == dist0 + 1,
+    assert(Ops.distributedFoldIns.get() == dist0 + 1,
       "over-cap delete delta did not take the DISTRIBUTED retraction")
-    assert(Ops.rekeyRetractFoldIns.get() == drv0,
+    assert(Ops.driverFoldIns.get() == drv0,
       "over-cap delta must not reach the driver retraction route")
     // no per-chunk mini walk (~300 memoGets here): the route consults
     // the reverse/whole-op memos plus mergeRetract's region memos
@@ -618,9 +713,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged4 = ops4.patchTable(
       ops4.upsert(base4, ops4.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
-    val drv40 = Ops.rekeyRetractFoldIns.get()
+    val drv40 = Ops.driverFoldIns.get()
     val v24 = ops4.transform(merged4, rekeyAgg, fold, prev = Some(v14))
-    assert(Ops.rekeyRetractFoldIns.get() == drv40 + 1,
+    assert(Ops.driverFoldIns.get() == drv40 + 1,
       "control flow: the same delta under default caps takes the driver route")
     assert(v24.hash == v2.hash,
       "distributed retraction diverged from the driver retraction route")

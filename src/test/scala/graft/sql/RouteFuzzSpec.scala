@@ -23,8 +23,8 @@ class RouteFuzzSpec extends AnyFunSuite {
   /** ~45 statements over t(k PK, g NOT NULL, v nullable, d float8
     * nullable): point and range and non-key DML, self-referencing
     * inserts with collisions, IN-lists, NULL values through every route
-    * — interleaved with MATERIALIZED VIEW refreshes over an invertible
-    * aggregate, so the inter-refresh delta shape (append-only / mixed /
+    * — interleaved with MATERIALIZED VIEW refreshes over invertible and
+    * non-invertible (MIN/MAX) aggregates, so the inter-refresh delta shape (append-only / mixed /
     * delete-heavy) randomly drives the fold-in, RETRACTION, mini, and
     * rebuild refresh routes (round 12) — and with sign flips and NaNs
     * in `d`, which a secondary index on `d` keys on: -0.0 and 0.0 are
@@ -46,6 +46,9 @@ class RouteFuzzSpec extends AnyFunSuite {
     // apply the rowFilter before diffing (a deleted row the filter
     // drops retracts nothing)
     out += "CREATE MATERIALIZED VIEW mvw AS SELECT g, SUM(k) AS sk, COUNT(*) AS n FROM t WHERE v IS NOT NULL AND k % 3 != 1 GROUP BY g"
+    // NON-invertible members (MIN/MAX): appends fold in (an append has
+    // nothing to retract), deletes and updates take the mini path
+    out += "CREATE MATERIALIZED VIEW mvm AS SELECT g, MIN(k) AS mn, MAX(k) AS mx, COUNT(*) AS n FROM t GROUP BY g"
     out += "CREATE INDEX t_d ON t (d)"
     (1 to 36).foreach { i =>
       if (i % 4 == 0) out += (fpRng.nextInt(3) match {
@@ -107,7 +110,8 @@ class RouteFuzzSpec extends AnyFunSuite {
   }
 
   private def viewHashes(cat: Catalog): String =
-    Seq("mv", "mvw", "t_d").map(n => cat.get(n).get.hash).mkString(":")
+    Seq("mv", "mvw", "mvm", "t_d").map(n => cat.get(n).get.hash)
+      .mkString(":")
 
   test("seeded DML programs hash-converge across every route config") {
     Seq(11L, 23L).foreach { seed =>
@@ -115,9 +119,9 @@ class RouteFuzzSpec extends AnyFunSuite {
       // (pointDml, driverPatch, driverMaterialize, byte-budget-1): the
       // byte-budget-1 config keeps every route flag
       // ON but declines every byte-admitted driver route, so DML takes
-      // the job paths and refreshes exercise the DISTRIBUTED fold-in and
-      // the DISTRIBUTED retraction (round-13 mergeRetract) across the
-      // whole seeded program
+      // the job paths and refreshes exercise the DISTRIBUTED fold-in
+      // (appends through the region merge, deletes through
+      // mergeRetract) across the whole seeded program
       val configs = Seq(
         (true, true, true, false), (true, false, true, false),
         (false, true, true, false), (true, true, false, false),
@@ -127,12 +131,12 @@ class RouteFuzzSpec extends AnyFunSuite {
         val routes = Routes(pointDml = viaPatch, driverPatch = driverPatch,
           driverMaterialize = driverMat,
           driverMaxBytes = if (bytes1) 1L else Routes.Default.driverMaxBytes)
-        val dist0 = Ops.rekeyRetractDistFoldIns.get()
+        val dist0 = Ops.distributedFoldIns.get()
         val r = runProgram(stmts, routes)
         if (bytes1) {
-          assert(Ops.rekeyRetractDistFoldIns.get() > dist0,
+          assert(Ops.distributedFoldIns.get() > dist0,
             s"seed $seed: byte-budget-1 config never took the " +
-              "distributed retraction")
+              "distributed fold-in")
         }
         r
       }
@@ -163,6 +167,9 @@ class RouteFuzzSpec extends AnyFunSuite {
       GraftSql.execute(spark, ops2, cat2,
         "CREATE MATERIALIZED VIEW mvw AS SELECT g, SUM(k) AS sk, " +
           "COUNT(*) AS n FROM t WHERE v IS NOT NULL AND k % 3 != 1 GROUP BY g")
+      GraftSql.execute(spark, ops2, cat2,
+        "CREATE MATERIALIZED VIEW mvm AS SELECT g, MIN(k) AS mn, " +
+          "MAX(k) AS mx, COUNT(*) AS n FROM t GROUP BY g")
       GraftSql.execute(spark, ops2, cat2, "CREATE INDEX t_d ON t (d)")
       assert(viewHashes(cat2) == results.head._3,
         s"seed $seed: incrementally-refreshed views or index are not canonical")

@@ -450,11 +450,11 @@ class SqlAndSourcesSpec extends AnyFunSuite {
         // route-agnostic assert: the retraction CONTRACT is "either
         // retraction variant fired" — which one runs is the row/byte
         // caps' call, pinned by the byte-budget test below
-        val r0 = graft.core.Ops.rekeyRetractFoldIns.get() +
-          graft.core.Ops.rekeyRetractDistFoldIns.get()
+        val r0 = graft.core.Ops.driverFoldIns.get() +
+          graft.core.Ops.distributedFoldIns.get()
         run("REFRESH MATERIALIZED VIEW rtv")
-        assert(graft.core.Ops.rekeyRetractFoldIns.get() +
-          graft.core.Ops.rekeyRetractDistFoldIns.get() > r0,
+        assert(graft.core.Ops.driverFoldIns.get() +
+          graft.core.Ops.distributedFoldIns.get() > r0,
           "SQL DELETE-refresh did not take a retraction route")
       } else {
         run("INSERT INTO rt SELECT id, id % 97, id * 3 FROM range(0, 20000) " +
@@ -483,11 +483,11 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run("CREATE MATERIALIZED VIEW rkv AS SELECT g, KMV_DISTINCT(v) AS d, " +
       "COUNT(*) AS n FROM rk GROUP BY g")
     run("DELETE FROM rk WHERE v >= 200")
-    val r0 = graft.core.Ops.rekeyRetractFoldIns.get() +
-      graft.core.Ops.rekeyRetractDistFoldIns.get()
+    val r0 = graft.core.Ops.driverFoldIns.get() +
+      graft.core.Ops.distributedFoldIns.get()
     run("REFRESH MATERIALIZED VIEW rkv")
-    assert(graft.core.Ops.rekeyRetractFoldIns.get() +
-      graft.core.Ops.rekeyRetractDistFoldIns.get() == r0,
+    assert(graft.core.Ops.driverFoldIns.get() +
+      graft.core.Ops.distributedFoldIns.get() == r0,
       "a KMV view must decline BOTH retraction routes")
     val Left(df) = run("SELECT g, d, n FROM rkv ORDER BY g"): @unchecked
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -510,11 +510,11 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run3("CREATE MATERIALIZED VIEW rcv AS SELECT g, SUM(v) AS sv, " +
       "COUNT(v) AS n FROM rc GROUP BY g")
     run3("DELETE FROM rc WHERE k % 10 = 2")
-    val rc0 = graft.core.Ops.rekeyRetractFoldIns.get() +
-      graft.core.Ops.rekeyRetractDistFoldIns.get()
+    val rc0 = graft.core.Ops.driverFoldIns.get() +
+      graft.core.Ops.distributedFoldIns.get()
     run3("REFRESH MATERIALIZED VIEW rcv")
-    assert(graft.core.Ops.rekeyRetractFoldIns.get() +
-      graft.core.Ops.rekeyRetractDistFoldIns.get() > rc0,
+    assert(graft.core.Ops.driverFoldIns.get() +
+      graft.core.Ops.distributedFoldIns.get() > rc0,
       "COUNT(not-null col) must act as the liveness column")
     val Left(df3) = run3("SELECT g, sv, n FROM rcv ORDER BY g"): @unchecked
     val want3 = (0L until 6000L).filterNot(_ % 10 == 2).groupBy(_ % 5)
@@ -536,15 +536,15 @@ class SqlAndSourcesSpec extends AnyFunSuite {
       "COUNT(*) AS n FROM gd GROUP BY g")
     run("DELETE FROM gd WHERE k % 37 = 3")           // kill group 3
     run("DELETE FROM gd WHERE k % 37 = 5 AND k % 2 = 0") // thin group 5
-    val drv0 = graft.core.Ops.rekeyRetractFoldIns.get()
-    val dist0 = graft.core.Ops.rekeyRetractDistFoldIns.get()
+    val drv0 = graft.core.Ops.driverFoldIns.get()
+    val dist0 = graft.core.Ops.distributedFoldIns.get()
     GraftSql.execute(spark, new Ops(spark, ops.store, ops.chunkTargetRows,
       routes = Routes(driverMaxBytes = 1L)), cat,
       "REFRESH MATERIALIZED VIEW gdv")
-    assert(graft.core.Ops.rekeyRetractDistFoldIns.get() > dist0,
+    assert(graft.core.Ops.distributedFoldIns.get() > dist0,
       "a byte-declined driver route must reroute the DELETE-refresh to " +
         "the distributed retraction")
-    assert(graft.core.Ops.rekeyRetractFoldIns.get() == drv0,
+    assert(graft.core.Ops.driverFoldIns.get() == drv0,
       "a declined driver route must not also count a driver retraction")
     val Left(df) = run("SELECT g, sv, n FROM gdv ORDER BY g"): @unchecked
     val want = (0L until 20000L)
