@@ -437,27 +437,30 @@ object Canonical {
       routes.driverMaterialize && DriverChunks.supported(dataSchema)
     val driverOk = bytesOk ||
       driverMaterializeOk(routes, rowBound, chunkTargetRows, dataSchema)
-    // ZERO-JOB route: a driver-admitted input whose plan FOLDED to a
-    // LocalRelation (ConvertToLocalRelation consumes deterministic
-    // Project/Filter over driver-resident rows — the per-chunk
-    // transform's driver-read source, the driver-read range edge
-    // rewrite and a small CTAS take exactly this shape) collects without
-    // any job, and the key bytes encode on the driver with the same
-    // arithmetic the withKeyBytes encoder applies — the kbDf plan below
-    // can never fold (typed mapPartitions), so going through it costs a
-    // parallelize-and-scan job for rows we already hold. The leaf
-    // pre-check on the ANALYZED plan (computed anyway for the
-    // transplant) keeps the extra optimizer pass off non-local inputs.
-    if (driverOk &&
-        df.queryExecution.analyzed.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
-        df.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-      Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
-        val schema = normalizeSchema(df.schema, keyCols)
-        val rows = df.collect().map(keyBytesAppender(schema, keyCols))
-        driverWrite(rows, schema.add(StructField(KB, BinaryType, nullable = false)))
-      }.foreach(return _)
+    // ZERO-JOB route: a driver-admitted input whose plan FOLDS to a
+    // LocalRelation on the engine clone (ConvertToLocalRelation
+    // consumes Project/Filter over driver-resident rows, LocalAggregate
+    // the Aggregates and Unions — every batched per-chunk or per-region
+    // job over byte-admitted chunks (Ops.chunkFrame: transforms, minis,
+    // merge regions and pieces, aligned join regions), the driver-read
+    // range edge rewrite and a small CTAS take exactly this shape)
+    // collects without any job, and the key bytes encode on the driver
+    // with the same arithmetic the withKeyBytes encoder applies — the
+    // kbDf plan below can never fold (typed mapPartitions), so going
+    // through it costs a parallelize-and-scan job for rows we already
+    // hold. The leaf pre-check on the ANALYZED plan (computed anyway for
+    // the transplant) keeps the extra optimizer pass off non-local
+    // inputs.
+    if (driverOk && df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])) {
+      val (_, local) = onEngine(spark, df, smallShuffle = true)
+      if (local.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
+          val schema = normalizeSchema(df.schema, keyCols)
+          val rows = local.collect().map(keyBytesAppender(schema, keyCols))
+          driverWrite(rows, schema.add(StructField(KB, BinaryType, nullable = false)))
+        }.foreach(return _)
     }
     val kbDf0 = withKeyBytes(df, keyCols)
     // no persist when a driver route will be attempted: its one collect

@@ -43,7 +43,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   // metadata-only COUNT/MIN/MAX/SUM (MetaAgg) and ordered-limit chunk
   // pruning (LimitPrune) over graft scans: registered through the stock
   // extension point for library optimizer rules; idempotent under
-  // repeated Ops construction on one session
+  // repeated Ops construction on one session. (The driver-resident
+  // folds that make the byte-admitted refresh routes zero-job —
+  // LocalAggregate with ConvertToLocalRelation — live on the engine
+  // clone only, GraftBridge.engineSession: user plans over local rows
+  // keep Spark's own plan shapes.)
   Seq(MetaAgg, LimitPrune).foreach { r =>
     if (!spark.experimental.extraOptimizations.contains(r))
       spark.experimental.extraOptimizations =
@@ -199,6 +203,74 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     org.apache.spark.sql.GraftBridge.fileIndexScan(spark,
       new GraftFileIndex(spark, store, sub),
       Canonical.withFieldIds(sub.schema))
+  }
+
+  /** The rows of `chunks` (a table of `schema` keyed on `keyCols`) with a
+    * per-row tag in column [[Ops.TagCol]]: each chunk's own tag, or the
+    * tag of the key-bytes range its key falls in (rows in no range drop
+    * out) — the input of every batched per-chunk or per-region job.
+    *
+    * Byte-admitted chunks are read on the driver into a LocalRelation:
+    * Catalyst's ConvertToLocalRelation then folds the Filters and
+    * Projects above it, and [[org.apache.spark.sql.LocalAggregate]] the
+    * Aggregates and Unions, so a grouped materialization over them
+    * collects without any job (the driver point-UPDATE mechanism,
+    * generalized). Zero-job crossover (VERDICT r13 #3, measured): the
+    * fold runs interpreted on one driver thread — unbeatable for point
+    * DML, but at ~230k rows it loses ~20% to the one-job parquet-scan
+    * shape, whose expressions run codegen'd across the cores; above
+    * [[Ops.DriverZeroJobMaxRows]] (and at scale, above the byte budget)
+    * the chunks take the scan, tagged by input file. Row content is
+    * byte-identical either way (DriverChunks round-trip, pinned in
+    * PatchTableSpec), and any driver-read surprise falls back to the
+    * scan. */
+  private def chunkFrame(schema0: StructType, keyCols: Seq[String],
+      target: Long, chunks0: Seq[ChunkMeta], tag: Ops.RowTag): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val schema = Canonical.normalizeSchema(schema0, keyCols)
+    val chunks = chunks0.distinctBy(_.hash)
+    val rows = chunks.iterator.map(_.rows).sum
+    val driverOk = routes.driverPatch && DriverChunks.supported(schema) &&
+      rows <= Ops.DriverZeroJobMaxRows &&
+      rows <= Ops.adaptiveRowCap(schema, Ops.PatchMaxDeltaRows) &&
+      chunkBytes(chunks).exists(_ <= routes.driverMaxBytes)
+    def driverRead: Option[DataFrame] = Ops.routeOr(Option.empty[DataFrame]) {
+      lazy val kb = KeyCodec.rowEncoder(schema, keyCols)
+      val tagged = Canonical.parIo(chunks) { c =>
+        val rs = DriverChunks.readRows(
+          java.nio.file.Paths.get(store.chunkPath(c.hash)), schema)
+        val tagOf: Row => String = tag match {
+          case Ops.RowTag.PerChunk(of) => val t = of(c.hash); _ => t
+          case Ops.RowTag.PerRange(of) => val rg = of(c.hash); r => rg.tagOf(kb(r))
+        }
+        rs.flatMap(r => Option(tagOf(r)).map(t => Row.fromSeq(r.toSeq :+ t)))
+      }.flatten
+      Some(spark.createDataFrame(tagged.asJava, schema.add(
+        Ops.TagCol, org.apache.spark.sql.types.StringType, nullable = false)))
+    }
+    def scanRead: DataFrame = {
+      val scanned = scanChunkSubset(schema.json, keyCols, target, chunks)
+      tag match {
+        case Ops.RowTag.PerChunk(of) =>
+          scanned.withColumn(Ops.TagCol, Canonical.fileTagUdf(spark,
+            chunks.map(c => store.chunkPath(c.hash) -> of(c.hash)).toMap)(
+            input_file_name()))
+        case Ops.RowTag.PerRange(of) =>
+          val ranges = spark.sparkContext.broadcast(of)
+          val rangeTag = udf { (h: String, kb: Array[Byte]) =>
+            ranges.value(h).tagOf(kb)
+          }
+          val byChunk = scanned.withColumn(Ops.TagCol, Canonical.fileTagUdf(
+            spark, chunks.map(c => store.chunkPath(c.hash) -> c.hash).toMap)(
+            input_file_name()))
+          Canonical.withKeyBytes(byChunk, keyCols)
+            .withColumn(Ops.TagCol,
+              rangeTag(col(Ops.TagCol), col(Canonical.KB)))
+            .where(col(Ops.TagCol).isNotNull)
+            .drop(Canonical.KB)
+      }
+    }
+    (if (driverOk) driverRead else None).getOrElse(scanRead)
   }
 
   def scanOrdered(ref: TableRef): DataFrame = {
@@ -372,26 +444,19 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val splitComputed: Map[(String, String), TableMeta] =
       if (toSplit.isEmpty) Map.empty
       else {
-        val grp = "_graft_grp"
-        // chunkHash -> decoded interior cut keys (the region los after
-        // the first); local piece index = count of cuts <= key
-        val cuts: Map[String, Array[Array[Byte]]] = toSplit.map { c =>
-          c.hash -> piecesByChunk(c.hash).drop(1).map(b => Hashing.unhex(b._1)).toArray
+        // per chunk, its pieces as key ranges: the interior cut keys (the
+        // region los after the first) bound them, the outer two are open
+        val pieceRanges: Map[String, Ops.KeyRanges] = toSplit.map { c =>
+          val cuts = piecesByChunk(c.hash).drop(1).map(b => Hashing.unhex(b._1))
+          c.hash -> new Ops.KeyRanges((Array.empty[Byte] +: cuts).toArray,
+            (cuts :+ null).toArray, cuts.indices.appended(cuts.length)
+              .map(i => s"${c.hash}-$i").toArray)
         }.toMap
-        val bcCuts = spark.sparkContext.broadcast(cuts)
-        val fileToHash = Canonical.fileTagUdf(spark,
-          toSplit.map(c => store.chunkPath(c.hash) -> c.hash).toMap)
-        val pieceIdx = udf { (h: String, kb: Array[Byte]) =>
-          Canonical.boundaryIndex(bcCuts.value(h), kb)
-        }
-        val src = scanChunkSubset(schemaJson, keyCols, target, toSplit)
-          .withColumn(grp, fileToHash(input_file_name()))
-        val tagged = Canonical.withKeyBytes(src, keyCols)
-          .withColumn(grp,
-            concat_ws("-", col(grp), pieceIdx(col(grp), col(Canonical.KB))))
-          .drop(Canonical.KB)
+        val tagged = chunkFrame(schema, keyCols, target, toSplit,
+          Ops.RowTag.PerRange(pieceRanges))
         Canonical.materialize(spark, store, routes, tagged, keyCols, target,
-          groupCol = Some(grp), rowBound = Some(toSplit.map(_.rows).sum))
+          groupCol = Some(Ops.TagCol), rowBound = Some(toSplit.map(_.rows).sum),
+          byteBound = chunkBytes(toSplit))
           .map { case (g, m) =>
             val i = g.lastIndexOf('-')
             val h = g.substring(0, i)
@@ -467,10 +532,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val computed: Map[String, TableMeta] =
       if (miss.isEmpty) Map.empty
       else {
-        val grp = "_graft_grp"
-        // map chunk file path -> regionOp per src; regions have disjoint
-        // key ranges so a (src, path) pair belongs to exactly one region,
-        // and per-src reads keep duplicate-table srcs separate
+        val grp = Ops.TagCol
+        // chunk -> regionOp per src; regions have disjoint key ranges so a
+        // (src, chunk) pair belongs to exactly one region, and per-src
+        // reads keep duplicate-table srcs separate
         val bySrc: Map[Int, Seq[(ChunkMeta, String)]] = miss
           .flatMap { case (ps, op) =>
             ps.map { case (s, c) => (s, c, op) }
@@ -478,11 +543,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .groupBy(_._1)
           .view.mapValues(_.map(t => (t._2, t._3))).toMap
         val srcParts = bySrc.toSeq.sortBy(_._1).map { case (src, files) =>
-          val fileToOp = Canonical.fileTagUdf(spark,
-            files.map { case (c, op) => store.chunkPath(c.hash) -> op }.toMap)
-          scanChunkSubset(schemaJson, keyCols, target, files.map(_._1))
+          chunkFrame(schema, keyCols, target, files.map(_._1),
+              Ops.RowTag.PerChunk(files.map { case (c, op) => c.hash -> op }.toMap))
             .withColumn(SRC, lit(src.toLong))
-            .withColumn(grp, fileToOp(input_file_name()))
         }
         val union = srcParts.reduce(_.unionByName(_))
         val folded0 = union.groupBy(col(grp) +: keyCols.map(col): _*)
@@ -629,39 +692,23 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // key intervals, so ops are unique per region)
     val resolved = scala.collection.mutable.HashMap.empty[String, Seq[ChunkMeta]]
     if (miss.nonEmpty) {
-      val grp = "_graft_grp"
+      val grp = Ops.TagCol
       // missed-region membership ranges: disjoint, lo-sorted. A row read
       // from a shared (spanning) chunk that belongs to a memo-HIT region
       // maps to no range and drops out — the piece-splitting of the
-      // identity merge path, done with a broadcast binary search instead
-      // of materialized piece files. Broadcast size is O(missed regions)
-      // = O(delta) on refresh, never O(table).
-      val ranges: Array[(Array[Byte], Array[Byte], String)] = miss.map {
-        case (rec, op) =>
-          val lo = if (rec.loHex == "-inf") Array.empty[Byte]
-            else Hashing.unhex(rec.loHex)
-          val hi = if (rec.hiHex == "+inf") null else Hashing.unhex(rec.hiHex)
-          (lo, hi, op)
-      }.toArray
-      val bcRanges = spark.sparkContext.broadcast(ranges)
-      val opOf = udf { (kb: Array[Byte]) =>
-        val rs = bcRanges.value
-        // rightmost region with lo <= kb (boundary keys open regions)
-        var l = 0; var h = rs.length - 1; var found = -1
-        while (l <= h) {
-          val m = (l + h) >>> 1
-          if (Hashing.compareBytes(rs(m)._1, kb) <= 0) { found = m; l = m + 1 }
-          else h = m - 1
-        }
-        if (found < 0) null
-        else {
-          val r = rs(found)
-          if (r._2 == null || Hashing.compareBytes(kb, r._2) < 0) r._3
-          else null
-        }
-      }
+      // identity merge path, done with a binary search instead of
+      // materialized piece files. The ranges are O(missed regions) =
+      // O(delta) on refresh, never O(table).
+      val ranges = new Ops.KeyRanges(
+        miss.map(m => if (m._1.loHex == "-inf") Array.empty[Byte]
+          else Hashing.unhex(m._1.loHex)).toArray,
+        miss.map(m => if (m._1.hiHex == "+inf") null
+          else Hashing.unhex(m._1.hiHex)).toArray,
+        miss.map(_._2).toArray)
       // per-input read of ONLY the chunks participating in missed
       // regions, each aligned into the joint schema by its projection
+      // (key columns pass through it unchanged, so rows are tagged by
+      // their source key bytes)
       var readRows = 0L
       val bySrc: Map[Int, Seq[ChunkMeta]] = miss
         .flatMap { case (rec, _) => rec.parts.map(p => (p.src, p.chunk)) }
@@ -669,16 +716,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val srcParts = bySrc.toSeq.sortBy(_._1).map { case (src, chunks) =>
         chunks.foreach(c => readRows += c.rows)
         val (ai, srcSchema) = ins(src)
-        scanChunkSubset(Canonical.normalizeSchema(srcSchema, keyCols).json,
-            keyCols, target, chunks)
-          .select(ai.projection: _*)
+        chunkFrame(srcSchema, keyCols, target, chunks,
+            Ops.RowTag.PerRange(chunks.map(_.hash -> ranges).toMap))
+          .select(ai.projection :+ col(grp): _*)
           .withColumn(SRC, lit(src.toLong))
       }
-      val union = srcParts.reduce(_.unionByName(_))
-      val tagged = Canonical.withKeyBytes(union, keyCols)
-        .withColumn(grp, opOf(col(Canonical.KB)))
-        .where(col(grp).isNotNull)
-        .drop(Canonical.KB)
+      val tagged = srcParts.reduce(_.unionByName(_))
       val folded = tagged.groupBy(col(grp) +: keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
       val subMetas = Canonical.materialize(spark, store, routes,
@@ -1411,13 +1454,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val computed0: Map[String, TableMeta] =
       if (missing.isEmpty) Map.empty
       else {
-        val grp = "_graft_grp"
-        val fileToHash = Canonical.fileTagUdf(spark,
-          missing.map(c => store.chunkPath(c.hash) -> c.hash).toMap)
-        val df0 = scanChunkSubset(
-            Canonical.normalizeSchema(schema, srcKeyCols).json,
-            srcKeyCols, target, missing)
-          .withColumn(grp, fileToHash(input_file_name()))
+        val grp = Ops.TagCol
+        val df0 = chunkFrame(schema, srcKeyCols, target, missing,
+          Ops.RowTag.PerChunk(missing.map(c => c.hash -> c.hash).toMap))
         val df = t.rowFilter.map(df0.where).getOrElse(df0)
         val projected = df.select(t.columns :+ col(grp): _*)
         val valueCols = projected.columns.filterNot(t.outKeyCols.contains)
@@ -1798,16 +1837,18 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
         .flatten.filter(r => touched(keyId(r)))
       if (anyNull(prevRows)) return None
-      // invert the deleted contributions (fold-declared, per column)
-      val delInv = retract.fold(Seq.empty[Row])(r => collectDriverBounded(
-        spark.createDataFrame(delT.asJava, pm.schema)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(n =>
-            r.inverts.getOrElse(n, col(n))): _*)).toSeq)
+      // ONE local fold plan: previous partials ∪ inserted ∪ the deleted
+      // contributions inverted (fold-declared, per column) — the Union
+      // and Aggregate over driver rows fold on the driver
+      // (LocalAggregate), so the collect below launches no job
+      def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, pm.schema)
+      val kept = local(prevRows ++ insT)
+      val contribs = retract.fold(kept)(r => kept.union(local(delT).select(
+        pm.schema.fieldNames.toIndexedSeq.map(n =>
+          r.inverts.getOrElse(n, col(n)).as(n)): _*)))
       val valueCols = pm.schema.fieldNames.toSeq
         .filterNot(pm.keyCols.contains)
-      val folded = spark.createDataFrame(
-        (prevRows ++ insT ++ delInv).asJava, pm.schema)
-        .groupBy(pm.keyCols.map(col): _*)
+      val folded = contribs.groupBy(pm.keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
       val newRows = collectDriverBounded(
         castValues(folded, pm.schema, valueCols)
@@ -2017,52 +2058,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val computed0: Map[String, TableMeta] =
       if (missing.isEmpty) Map.empty
       else {
-        val grp = "_graft_grp"
-        // ZERO-JOB route for byte-admitted per-chunk transforms (the
-        // zone-map DML shape): read the missing chunks driver-side and
-        // present them as a LocalRelation — Catalyst's
-        // ConvertToLocalRelation then folds the filter + projection +
-        // key-byte encode INTO the relation at optimization time, so
-        // the grouped materialization's collect never launches a job
-        // (the driver point-UPDATE mechanism, generalized). Row content is
-        // byte-identical to the parquet scan (DriverChunks round-trip
-        // pinned in PatchTableSpec), so sub-result hashes are unchanged.
-        // Any surprise falls back to the scan; at scale the byte budget
-        // rejects first.
-        val missingRows = missing.iterator.map(_.rows).sum
-        val driverDf: Option[DataFrame] =
-          if (!routes.driverPatch || !DriverChunks.supported(m.schema) ||
-              // zero-job crossover (VERDICT r13 #3, measured): the
-              // LocalRelation fold runs the filter + projection + key
-              // encode INTERPRETED on one driver thread — unbeatable for
-              // point DML (no job), but at ~230k rows it loses ~20% to
-              // the one-job parquet-scan shape below, whose filter runs
-              // codegen'd across the cores and whose grouped write is
-              // parallel either way. Above the threshold, read via the
-              // scan job; the byte budget still admits the driver-side
-              // grouped materialization.
-              missingRows > Ops.DriverZeroJobMaxRows ||
-              missingRows >
-                Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !chunkBytes(missing).exists(_ <= routes.driverMaxBytes))
-            None
-          else Ops.routeOr(Option.empty[DataFrame]) {
-            import scala.jdk.CollectionConverters._
-            val rows = Canonical.parIo(missing) { c =>
-              DriverChunks.readRows(java.nio.file.Paths.get(
-                store.chunkPath(c.hash)), m.schema)
-                .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c.hash))
-            }.flatten
-            val schemaG = m.schema.add(org.apache.spark.sql.types.StructField(
-              grp, org.apache.spark.sql.types.StringType, nullable = false))
-            Some(spark.createDataFrame(rows.asJava, schemaG))
-          }
-        val df0 = driverDf.getOrElse {
-          val fileToHash = Canonical.fileTagUdf(spark,
-            missing.map(c => store.chunkPath(c.hash) -> c.hash).toMap)
-          scanChunkSubset(m.schemaJson, m.keyCols, m.chunkTargetRows, missing)
-            .withColumn(grp, fileToHash(input_file_name()))
-        }
+        val grp = Ops.TagCol
+        // byte-admitted missing chunks (the zone-map DML shape) read on
+        // the driver: the filter + projection + grouped materialization
+        // then run without a job
+        val df0 = chunkFrame(m.schema, m.keyCols, m.chunkTargetRows, missing,
+          Ops.RowTag.PerChunk(missing.map(c => c.hash -> c.hash).toMap))
         val df = t.rowFilter.map(df0.where).getOrElse(df0)
         val projected = df.select(t.columns :+ col(grp): _*)
         val metas = Canonical.materialize(spark, store, routes, projected,
@@ -2642,15 +2643,42 @@ object Ops {
     * identical algorithm distributed. */
   val DriverPatchMaxRows: Long = 1L << 17
 
-  /** Zero-job crossover for the per-chunk TRANSFORM's driver read
-    * (VERDICT r13 #3): under it, missing chunks read driver-side and
-    * fold as a LocalRelation (no job at all — the point-DML latency
-    * story); above it, the interpreted single-thread fold loses to the
-    * one-job parquet scan whose filter is codegen'd across the cores
-    * (measured at sf0.1: 1.39 s vs 1.16 s for a 230k-row scattered
-    * DELETE), so the read routes to the scan job while the grouped
-    * materialization stays driver-side under the byte budget. */
+  /** Zero-job crossover for driver chunk reads ([[Ops.chunkFrame]]) and
+    * driver-side aggregate folds ([[org.apache.spark.sql.LocalAggregate]])
+    * (VERDICT r13 #3): under it, chunks read driver-side and fold as a
+    * LocalRelation (no job at all — the point-DML latency story); above
+    * it, the interpreted single-thread fold loses to the one-job parquet
+    * scan whose filter is codegen'd across the cores (measured at sf0.1:
+    * 1.39 s vs 1.16 s for a 230k-row scattered DELETE), so the read
+    * routes to the scan job while the grouped materialization stays
+    * driver-side under the byte budget. */
   val DriverZeroJobMaxRows: Long = 1L << 16
+
+  /** The per-row tag column of [[Ops.chunkFrame]]. */
+  private[core] val TagCol = "_graft_grp"
+
+  /** How [[Ops.chunkFrame]] tags a row: with its chunk's tag, or with the
+    * tag of the key-bytes range (of its chunk's [[KeyRanges]]) its key
+    * falls in. Both map by chunk hash. */
+  private[core] sealed trait RowTag
+  private[core] object RowTag {
+    final case class PerChunk(of: Map[String, String]) extends RowTag
+    final case class PerRange(of: Map[String, KeyRanges]) extends RowTag
+  }
+
+  /** Disjoint key-bytes ranges `[lo, hi)`, sorted by `lo` (`hi` null:
+    * unbounded), each with a tag. */
+  private[core] final class KeyRanges(los: Array[Array[Byte]],
+      his: Array[Array[Byte]], tags: Array[String]) extends Serializable {
+    /** The tag of the range holding `kb` (the rightmost range with
+      * lo <= kb: boundary keys open ranges), or null. */
+    def tagOf(kb: Array[Byte]): String = {
+      val i = Canonical.boundaryIndex(los, kb) - 1
+      if (i >= 0 && (his(i) == null || Hashing.compareBytes(kb, his(i)) < 0))
+        tags(i)
+      else null
+    }
+  }
 
   /** Source-rows guard for the probeFold bet ([[Canonical.materialize]]):
     * an aggregate output is the GROUP count — usually metadata-sized —

@@ -15,9 +15,10 @@ package graft.core
   * @param pointDml point DML (VALUES inserts, full-PK deletes and
   *   updates, range updates, byte-admitted INSERT…SELECT deltas) splices
   *   through the driver patch instead of the scan/merge paths.
-  * @param driverPatch [[Ops.patchTableBounded]] and the per-chunk
-  *   transform may read, splice and write touched chunk runs on the
-  *   driver (zero Spark jobs).
+  * @param driverPatch [[Ops.patchTableBounded]] may read, splice and
+  *   write touched chunk runs on the driver, and the batched per-chunk
+  *   and per-region jobs (transforms, minis, merge and join regions) may
+  *   read byte-admitted chunks on the driver (zero Spark jobs).
   * @param driverMaterialize [[Canonical.materialize]] may collect a
   *   metadata-sized input once and write its chunks on the driver. Also
   *   the switch of the re-key refreshes' source-row delta: off, an

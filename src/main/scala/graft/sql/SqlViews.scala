@@ -74,7 +74,7 @@ object SqlViews {
     * rekey path as SUM/COUNT/MIN/MAX. This is the mergeable-sketch
     * property every serious sketch library ships, expressed as a graft
     * fold. */
-  private def kmvFold: FoldSpec = FoldSpec.CombinableFold(
+  private[graft] def kmvFold: FoldSpec = FoldSpec.CombinableFold(
     s"fold_kmv${KmvK}_v1",
     c => slice(array_sort(array_distinct(flatten(collect_list(c)))),
       1, KmvK),
@@ -109,7 +109,7 @@ object SqlViews {
     * trade (the fixed-bin contract of `agg_approx_quantiles`,
     * queries.Sketches), constant in row count like any serious quantile
     * sketch. */
-  private def histFold: FoldSpec = FoldSpec.CombinableFold(
+  private[graft] def histFold: FoldSpec = FoldSpec.CombinableFold(
     "fold_hist_v1",
     // sketches are INTERLEAVED long arrays [k1,v1,k2,v2,…] (key-sorted)
     // — ARRAY<BIGINT> keeps the aggregate stage on the zero/one-job

@@ -216,13 +216,21 @@ object GraftBridge {
     * zone, ANSI mode, and shuffle partitions all carry into the engine
     * plan. Cost: one lazy SessionState clone per materialization —
     * ~1.4 ms measured (mean of 50 clones at local[4]) against a
-    * multi-job statement flow. */
+    * multi-job statement flow. The clone also folds Aggregates and
+    * Unions over driver-resident rows ([[LocalAggregate]], with
+    * `ConvertToLocalRelation` beside it so the Projects above fold in
+    * the same fixed-point batch) — the zero-job shape of the
+    * byte-admitted engine routes — while user plans keep Spark's own
+    * optimizer (the clone's rule list is its own copy). */
   def engineSession(spark: SparkSession): SparkSession = {
     val es = spark.asInstanceOf[classic.SparkSession].cloneSession()
     es.conf.set("spark.sql.adaptive.enabled", "false")
     // engine limit probes want ALL partitions in the first pass (one
     // job), not incremental-limit's partition doubling
     es.conf.set("spark.sql.limit.initialNumPartitions", "1000000")
+    es.experimental.extraOptimizations ++= Seq(LocalAggregate,
+        catalyst.optimizer.ConvertToLocalRelation)
+      .filterNot(es.experimental.extraOptimizations.contains)
     es
   }
 

@@ -256,11 +256,12 @@ class IncrementalTransformSpec extends AnyFunSuite {
   private val foldCntSum = FoldSpec.FoldByColumn(Seq(
     "cnt" -> FoldSpec.FoldSum, "v" -> FoldSpec.FoldSum))
 
-  test("an INSERT into existing groups folds in on the driver with at most one Spark job, hash-equals from-scratch") {
+  test("an INSERT into existing groups folds in on the driver with zero Spark jobs, hash-equals from-scratch") {
     // an append is a retraction with nothing to retract: the driver
     // fold-in folds the touched groups' previous rows with the inserted
-    // contributions and splices them onto the previous result (zero-job
-    // patch) — no delta table is materialized and merged in
+    // contributions on the driver (LocalAggregate) and splices them onto
+    // the previous result (zero-job patch) — no delta table is
+    // materialized and merged in, and no job runs
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai-"))
     val ops = new Ops(spark, store, 64)
     // every key ending in 7 is missing, so each inserted key lands in
@@ -277,7 +278,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       ops.transform(merged, rekeyCntSum, foldCntSum, prev = Some(v1)))
     assert(Ops.driverFoldIns.get() == drv0 + 1,
       "the INSERT refresh did not take the driver fold-in")
-    assert(jobs <= 1, s"the INSERT refresh launched $jobs Spark jobs")
+    assert(jobs == 0, s"the INSERT refresh launched $jobs Spark jobs")
     val ops2 = new Ops(spark,
       new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai2-")), 64)
     val scratch = ops2.transform(
