@@ -398,11 +398,11 @@ object Canonical {
     * shuffle overhead. `byteBound`: the input's observed compressed
     * size, when it is known chunk files. `rowProbe` / `probeFold`: the
     * optimistic driver-route bets for unknown output sizes (below).
-    * `routes`: the calling [[Ops]]'s route switches and driver byte
-    * budget. Routes, splits and widths only shape tasks: chunk content
-    * is a pure function of the key set, so hashes are identical either
-    * way. */
-  def materialize(spark: SparkSession, store: GraftStore, routes: Routes,
+    * `engine` and `routes`: the calling [[Ops]]'s engine-session clones
+    * ([[onEngine]]), route switches and driver byte budget. Routes,
+    * splits and widths only shape tasks: chunk content is a pure
+    * function of the key set, so hashes are identical either way. */
+  def materialize(engine: EngineSessions, store: GraftStore, routes: Routes,
       df0: DataFrame, keyCols: Seq[String], chunkTargetRows: Long,
       groupCol: Option[String] = None,
       rowBound: Option[Long] = None,
@@ -453,14 +453,14 @@ object Canonical {
     // inputs.
     if (driverOk && df.queryExecution.analyzed.collectLeaves().forall(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])) {
-      val (_, local) = onEngine(spark, df, smallShuffle = true)
-      if (local.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val (_, local) = onEngine(engine, df, smallShuffle = true)
+      org.apache.spark.sql.GraftBridge.localRelationRows(local).foreach { folded =>
         Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
           val schema = normalizeSchema(df.schema, keyCols)
-          val rows = local.collect().map(keyBytesAppender(schema, keyCols))
+          val rows = folded.map(keyBytesAppender(schema, keyCols))
           driverWrite(rows, schema.add(StructField(KB, BinaryType, nullable = false)))
         }.foreach(return _)
+      }
     }
     val kbDf0 = withKeyBytes(df, keyCols)
     // no persist when a driver route will be attempted: its one collect
@@ -471,7 +471,7 @@ object Canonical {
       // DRIVER route: one collect for ALL groups (none for a row bound
       // of 0, which asserts the input is empty), then per-group
       // sort/split/write on the driver; any surprise falls through
-      val (es, ekb) = onEngine(spark, kbDf, smallShuffle = true,
+      val (es, ekb) = onEngine(engine, kbDf, smallShuffle = true,
         interpretedOk = interpretedCollectOk(routes, rowBound, dataSchema))
       val rows: Option[Array[Row]] =
         if (rowBound.contains(0L)) Some(Array.empty)
@@ -500,16 +500,16 @@ object Canonical {
       val cap = Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)
       val probed: Option[Array[Row]] =
         Ops.routeOr(Option.empty[Array[Row]])(
-          Some(withJobDesc(spark, s"graft:probe$label") {
+          Some(withJobDesc(engine.user, s"graft:probe$label") {
             val (_, ekb) =
-              onEngine(spark, kbDf, smallShuffle = true, interpretedOk = false)
+              onEngine(engine, kbDf, smallShuffle = true, interpretedOk = false)
             ekb.limit(cap.toInt + 1).collect()
           }))
       probed.filter(_.length <= cap)
         .foreach(rs => driverWrite(rs, kbDf.schema).foreach(return _))
     }
     try {
-      val (es, ekb) = onEngine(spark, kbDf)
+      val (es, ekb) = onEngine(engine, kbDf)
       // 1. range SPLITS: an intrinsic subsample of the (group, boundary
       //    key) pairs. hash(kb) % (target·sub) == 0 implies
       //    hash(kb) % target == 0, so every split is a boundary key and
@@ -524,7 +524,7 @@ object Canonical {
       // materializes the persisted frame for the write pass below)
       val sampled =
         if (small) Array.empty[(String, Array[Byte])]
-        else withJobDesc(spark, s"graft:sample$label")(
+        else withJobDesc(engine.user, s"graft:sample$label")(
           sampleSplits(ekb, groupCol, target, nPart)._2)
       val splits: Map[String, Array[Array[Byte]]] = sampled
         .groupBy(_._1)
@@ -611,7 +611,7 @@ object Canonical {
       // positional field ids with EXPLICIT metadata: inherited metadata
       // (e.g. stale ids riding a projection from a chunk read) must
       // never reach the files — the id IS the position in THIS schema
-      withJobDesc(spark, s"graft:write$label") {
+      withJobDesc(engine.user, s"graft:write$label") {
         tagged.select(cols.zipWithIndex.map { case (c, i) =>
             col(c).as(c, new MetadataBuilder().putLong(FieldIdKey, i.toLong).build())
           } ++ groupCols :+ col(CHUNK): _*)
@@ -685,8 +685,9 @@ object Canonical {
     * Scale-safe: AQE never coalesces an explicit repartition(n) and no
     * joins run inside these plans.
     *
-    * Engine conf lives on a THROWAWAY SESSION CLONE
-    * ([[GraftBridge.engineSession]]), never on the user's session: a
+    * Engine conf lives on SESSION CLONES ([[EngineSessions]], built by
+    * [[GraftBridge.engineSession]] once per `Ops` and configuration),
+    * never on the user's session: a
     * thread-scoped `SQLConf.withExistingConf` override does not survive
     * the hop to Spark's async command-execution thread pool (the write
     * commands run under `SQLExecution.withThreadLocalCaptured`, which
@@ -696,36 +697,18 @@ object Canonical {
     * frame is rebound to the clone ([[GraftBridge.transplant]]), so its
     * write commands read the clone's conf wherever they execute; the
     * user session's conf is never touched (pinned two-threaded in
-    * EngineConfIsolationSpec). */
-  private[core] def onEngine(spark: SparkSession, df: DataFrame,
+    * EngineConfIsolationSpec). Each clone is configured when built and
+    * never mutated afterwards; a user conf change rebuilds them.
+    * `smallShuffle` picks a narrow-shuffle clone for byte-admitted
+    * routes, interpreted unless `interpretedOk` is false (see
+    * [[EngineSessions]]). (A thread-local override instead of a clone
+    * was tried and measured WORSE: the conf does not survive into job
+    * execution — AQE re-enabled and split every driver-route collect
+    * into 2-4 jobs.) */
+  private[core] def onEngine(engine: EngineSessions, df: DataFrame,
       smallShuffle: Boolean = false, interpretedOk: Boolean = true)
       : (SparkSession, DataFrame) = {
-    val es = org.apache.spark.sql.GraftBridge.engineSession(spark)
-    // byte-admitted driver routes collect a PROVABLY small frame; any
-    // fold exchange inside it needs a handful of partitions, not the
-    // session's full width — 30+ near-empty shuffle tasks were most of
-    // those jobs' wall time. Plan shape only: partial aggregates
-    // combine identically at any partition count, and the driver
-    // writer re-sorts collected rows by key bytes. (A thread-local
-    // override instead of the clone was tried and measured WORSE: the
-    // conf does not survive into job execution — AQE re-enabled and
-    // split every driver-route collect into 2-4 jobs.)
-    if (smallShuffle) {
-      val cur = es.sessionState.conf.numShufflePartitions
-      es.conf.set("spark.sql.shuffle.partitions", math.min(cur, 8).toString)
-      // a byte-admitted plan touches at most the driver budget of
-      // data: interpreted expressions beat paying janino compilation
-      // per plan (semantics identical — interpreted mode IS Spark's
-      // codegen fallback path). NOT for optimistic PROBES
-      // (interpretedOk = false): a probe's OUTPUT size is unknown —
-      // that is why it probes — and generator fan-out runs real
-      // expression work per output row (measured: the shingle-index
-      // probe doubled interpreted), so probes keep codegen.
-      if (interpretedOk) {
-        es.conf.set("spark.sql.codegen.wholeStage", "false")
-        es.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      }
-    }
+    val es = engine(smallShuffle, interpretedOk)
     (es, org.apache.spark.sql.GraftBridge.transplant(es, df))
   }
 

@@ -28,9 +28,15 @@ final case class Bound(prefix: Seq[Any], inclusive: Boolean)
 final class Ops(val spark: SparkSession, val store: GraftStore,
     val chunkTargetRows: Long = Ops.DefaultChunkTargetRows,
     val registry: FuncRegistry = new FuncRegistry,
-    private[graft] val routes: Routes = Routes.Default) {
+    private[graft] val routes: Routes = Routes.Default,
+    sharedEngine: Option[EngineSessions] = None) {
 
   import FoldSpec.SRC
+
+  /** The engine-session clones this Ops materializes on — its own, or
+    * (for a transaction's Ops) its session's. */
+  private[graft] val engine: EngineSessions =
+    sharedEngine.getOrElse(new EngineSessions(spark))
 
   // chunk files carry positional parquet field ids and every chunk read
   // requests them (Canonical.withFieldIds) — column renames are then
@@ -70,10 +76,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** Collect a BYTE-ADMITTED frame under the engine's driver-route
     * discipline: AQE off, narrow shuffle, interpreted expressions (a
     * provably tiny frame's data work is dwarfed by janino compilation
-    * per distinct plan shape) — on the throwaway engine clone, never
+    * per distinct plan shape) — on this Ops's engine clone, never
     * touching the user session's conf. For callers like the DML
     * delta-patch route whose collect would otherwise pay full adaptive
-    * codegen planning per statement. */
+    * codegen planning per statement. A frame that folds to a
+    * LocalRelation on the clone returns its rows without a Spark job
+    * or a physical plan. */
   def collectDriverBounded(df: DataFrame,
       rowBound: Option[Long] = None): Array[org.apache.spark.sql.Row] = {
     // interpreted only under the measured crossover: a byte-admitted
@@ -81,10 +89,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // where interpreted evaluation of the delta plan loses to one
     // codegen compile. Unknown bounds keep the interpreted default —
     // every such caller is metadata-sized by construction.
-    val (es, bound) = Canonical.onEngine(spark, df, smallShuffle = true,
+    val (es, bound) = Canonical.onEngine(engine, df, smallShuffle = true,
       interpretedOk = Canonical.interpretedCollectOk(routes, rowBound,
         df.schema))
-    Canonical.withJobDesc(es, "graft:collect")(bound.collect())
+    org.apache.spark.sql.GraftBridge.localRelationRows(bound).getOrElse(
+      Canonical.withJobDesc(es, "graft:collect")(bound.collect()))
   }
 
   /** [[fromDataFrame]] with caller-known size bounds: a row-local
@@ -109,7 +118,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val folded = df.withColumn(SRC, monotonically_increasing_id())
       .groupBy(keyCols.map(col): _*)
       .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-    val meta = Canonical.materialize(spark, store, routes,
+    val meta = Canonical.materialize(engine, store, routes,
       castValues(folded, df.schema, valueCols), keyCols, chunkTargetRows,
       rowBound = rb, byteBound = bb)(Canonical.Ungrouped)
     TableRef(meta.tableHash)
@@ -145,7 +154,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   def emptyTable(schema: StructType, keyCols: Seq[String]): TableRef = {
     val df = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val meta = Canonical.materialize(spark, store, routes, df, keyCols,
+    val meta = Canonical.materialize(engine, store, routes, df, keyCols,
       chunkTargetRows, rowBound = Some(0L))(Canonical.Ungrouped)
     TableRef(meta.tableHash)
   }
@@ -408,7 +417,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // counter reaches 0 has no remaining source rows — drop it
       val folded = dropDeadOn.map(l => folded0.where(col(l) =!= 0L))
         .getOrElse(folded0)
-      return Canonical.materialize(spark, store, routes,
+      return Canonical.materialize(engine, store, routes,
         castValues(folded, schema, valueCols), keyCols, target,
         rowBound = Some(flatRows),
         byteBound = chunkBytes(refs.flatMap(r =>
@@ -454,7 +463,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         }.toMap
         val tagged = chunkFrame(schema, keyCols, target, toSplit,
           Ops.RowTag.PerRange(pieceRanges))
-        Canonical.materialize(spark, store, routes, tagged, keyCols, target,
+        Canonical.materialize(engine, store, routes, tagged, keyCols, target,
           groupCol = Some(Ops.TagCol), rowBound = Some(toSplit.map(_.rows).sum),
           byteBound = chunkBytes(toSplit))
           .map { case (g, m) =>
@@ -556,7 +565,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // empty table below so refreshes reuse the death too
         val folded = dropDeadOn.map(l => folded0.where(col(l) =!= 0L))
           .getOrElse(folded0)
-        val subMetas = Canonical.materialize(spark, store, routes,
+        val subMetas = Canonical.materialize(engine, store, routes,
           castValues(folded, schema, valueCols), keyCols, target,
           groupCol = Some(grp),
           rowBound = Some(miss.flatMap(_._1).map(_._2.rows).sum),
@@ -724,7 +733,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val tagged = srcParts.reduce(_.unionByName(_))
       val folded = tagged.groupBy(col(grp) +: keyCols.map(col): _*)
         .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-      val subMetas = Canonical.materialize(spark, store, routes,
+      val subMetas = Canonical.materialize(engine, store, routes,
         castValues(folded, schema, valueCols), keyCols, target,
         groupCol = Some(grp),
         rowBound = Some(readRows),
@@ -802,7 +811,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       if (upserts.isEmpty) return Some(prev)
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(upserts.toSeq), m.schema)
-      return Some(TableRef(Canonical.materialize(spark, store, routes, df,
+      return Some(TableRef(Canonical.materialize(engine, store, routes, df,
         m.keyCols, m.chunkTargetRows, rowBound = Some(upserts.length.toLong))(
         Canonical.Ungrouped).tableHash))
     }
@@ -881,7 +890,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       spark.sparkContext.parallelize(upRows.toSeq), upSchema)
     val patched = kept.unionByName(upDf)
     val runMetas: Map[String, TableMeta] = Canonical.materialize(
-      spark, store, routes, patched, m.keyCols, m.chunkTargetRows,
+      engine, store, routes, patched, m.keyCols, m.chunkTargetRows,
       groupCol = Some(grp),
       rowBound = Some(touched.iterator.map(i => m.chunks(i).rows).sum +
         upserts.length),
@@ -1100,7 +1109,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         val df = scanChunkSubset(schemaJson, keyCols, target,
             runList.flatten.map(i => chunks(i)))
           .withColumn(grp, fileToRun(input_file_name()))
-        val metas = Canonical.materialize(spark, store, routes, df, keyCols,
+        val metas = Canonical.materialize(engine, store, routes, df, keyCols,
           target, groupCol = Some(grp), rowBound = Some(runRows))
         runList.map(idxs => idxs.head -> metas(s"r${idxs.head}").chunks).toMap
       }
@@ -1293,7 +1302,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val aggProbe = !t.uniqueKeys && !t.generator &&
       !Canonical.smallJob(Some(srcRows), target) &&
       srcRows <= Ops.ProbeFoldMaxSourceRows
-    Canonical.materialize(spark, store, routes, out,
+    Canonical.materialize(engine, store, routes, out,
       t.outKeyCols, target,
       // generator transforms can exceed the source row count — size
       // gating must treat their output as unknown; a TINY source still
@@ -1467,7 +1476,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
         val casted = castValues(folded,
           StructType(projected.schema.filterNot(_.name == grp)), valueCols)
-        val metas = Canonical.materialize(spark, store, routes, casted,
+        val metas = Canonical.materialize(engine, store, routes, casted,
           t.outKeyCols, target,
           groupCol = Some(grp),
           rowBound = if (t.generator) None
@@ -1619,7 +1628,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       if (del.nonEmpty || !resultSmaller) None
       else Ops.routeOr(Option.empty[String]) {
         import scala.jdk.CollectionConverters._
-        val deltaMeta = Canonical.materialize(spark, store, routes,
+        val deltaMeta = Canonical.materialize(engine, store, routes,
           spark.createDataFrame(ins.asJava, pm.schema),
           pm.keyCols, pm.chunkTargetRows,
           rowBound = Some(ins.length.toLong))(Canonical.Ungrouped)
@@ -1979,7 +1988,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         val deltaProbe =
           !Canonical.smallJob(Some(changedRows), pm.chunkTargetRows) &&
           changedRows <= Ops.ProbeFoldMaxSourceRows
-        val deltaMeta = Canonical.materialize(spark, store, routes,
+        val deltaMeta = Canonical.materialize(engine, store, routes,
           castValues(folded, pm.schema, valueCols), pm.keyCols,
           pm.chunkTargetRows,
           rowBound = if (deltaProbe || t.generator) None else Some(changedRows),
@@ -2066,7 +2075,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           Ops.RowTag.PerChunk(missing.map(c => c.hash -> c.hash).toMap))
         val df = t.rowFilter.map(df0.where).getOrElse(df0)
         val projected = df.select(t.columns :+ col(grp): _*)
-        val metas = Canonical.materialize(spark, store, routes, projected,
+        val metas = Canonical.materialize(engine, store, routes, projected,
           t.outKeyCols, m.chunkTargetRows,
           groupCol = Some(grp),
           rowBound = Some(missing.map(_.rows).sum),
@@ -2230,7 +2239,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
         // edge rewrite keeps the TABLE's chunk granularity (passthrough
         // chunks are cut at it; a mixed-granularity meta would break the
         // boundary assumptions of later merges)
-        Canonical.materialize(spark, store, routes, df, m.keyCols,
+        Canonical.materialize(engine, store, routes, df, m.keyCols,
           m.chunkTargetRows, rowBound = Some(edgeRows),
           byteBound = driverRows.flatMap(_ => edgeBytes))(Canonical.Ungrouped).chunks
       }

@@ -312,16 +312,15 @@ object GraftSql {
 
   private def executeImpl(spark: SparkSession, ops: Ops, catalog: Catalog,
       sqlText: String): Either[DataFrame, String] = {
-    def registerViews(): Unit = {
-      val root = catalog.root // ONE root load+parse, not one per table
-      root.foreach { case (name, entry) =>
-        ops.scan(graft.core.TableRef(entry.tableHash))
-          .createOrReplaceTempView(name)
-      }
-    }
+    // temp views for only the catalog tables `text` names
+    def registerViews(text: String): Unit =
+      registerTableViews(spark, ops, catalog, namedIdentifiers(text))
+    // the DML target alone: its predicate's tables are registered already
+    def registerTarget(name: String): Unit =
+      registerTableViews(spark, ops, catalog, Some(Set(name)))
     sqlText.trim.stripSuffix(";") match {
       case ctasRe(rawName, keys, query) =>
-        registerViews()
+        registerViews(query)
         val name = unquote(rawName)
         val keyCols = keys.split(",").map(k => unquote(k.trim)).toSeq
         val df = spark.sql(rewriteReads(spark, ops, catalog, query))
@@ -338,7 +337,7 @@ object GraftSql {
           graft.core.FoldSpec.FoldLast, rb, bb),
           declared = Some(df.columns.toSeq)))
       case insertRe(rawName, colList, query) =>
-        registerViews()
+        registerViews(query)
         val name = unquote(rawName)
         val entry = catalog.root.getOrElse(name,
           throw new SqlException(s"no such table: $name"))
@@ -403,7 +402,8 @@ object GraftSql {
           query.trim.toLowerCase.startsWith("values")
         val merged =
           if (isValues) {
-            val rows = guarded.collect().toSeq
+            val rows = org.apache.spark.sql.GraftBridge.localRelationRows(guarded)
+              .getOrElse(guarded.collect()).toSeq
             if (rows.length <= graft.core.Ops.PatchMaxDeltaRows) {
               val kEnc = graft.core.KeyCodec.rowEncoder(schema, entry.keyCols)
               val lastWins = rows.zipWithIndex
@@ -445,6 +445,8 @@ object GraftSql {
           throw new SqlException(s"no such table: $name"))
         val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
         val ref = graft.core.TableRef(entry.tableHash)
+        // a subquery in the predicate reads its tables' current versions
+        registerViews(cond)
         // POINT deletes (full-PK equality, or a PK IN-list): literal
         // keys need no expression evaluation, so they splice through
         // the zero-job driver patch — millisecond point-DML latency.
@@ -476,7 +478,7 @@ object GraftSql {
             // deterministic fall back to filter-and-rebuild.
             deleteByTransform(spark, ops, schema, entry.keyCols, ref, cond)
               .getOrElse {
-                registerViews()
+                registerTarget(name)
                 val keep = spark.sql(
                   s"SELECT * FROM `$name` WHERE NOT coalesce(($cond), false)")
                 ops.fromDataFrame(keep, entry.keyCols)
@@ -501,6 +503,8 @@ object GraftSql {
           throw new SqlException(s"no such table: $name"))
         val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
         val ref = graft.core.TableRef(entry.tableHash)
+        // a subquery in SET or WHERE reads its tables' current versions
+        registerViews(setTail)
         val whereParts = splitOnKeyword(setTail, "where")
         val setList = whereParts.head
         val cond: String =
@@ -523,7 +527,7 @@ object GraftSql {
           entry.keyCols.exists(_.equalsIgnoreCase(c)) }
         def qid(c: String) = s"`$c`"
         def rebuild(): graft.core.TableRef = {
-          registerViews()
+          registerTarget(name)
           val whereSql = Option(cond).getOrElse("true")
           val proj = schema.fields.map { f =>
             sets.get(f.name) match {
@@ -593,7 +597,7 @@ object GraftSql {
               } catch {
                 // SET expression needs more than row-local columns
                 // (subquery, other table): the rebuild path registers
-                // every catalog view and handles it
+                // the views the statement names and handles it
                 case _: org.apache.spark.sql.AnalysisException => rebuild()
               })
             case None =>
@@ -965,7 +969,7 @@ object GraftSql {
         catalog.checkout(rootHash)
         Right(rootHash)
       case t if Merge.matches(t) =>
-        Merge.execute(spark, ops, catalog, t, () => registerViews())
+        Merge.execute(spark, ops, catalog, t, () => registerViews(t))
       case t if t.toLowerCase.startsWith("create table") =>
         val ct = parseCreateTable(sqlText)
         val ref = ops.emptyTable(ct.schema, ct.keyCols)
@@ -978,10 +982,121 @@ object GraftSql {
         Right(catalog.put(ct.name, ref,
           declared = Some(ct.schema.fieldNames.toSeq), notNull = Some(nn)))
       case _ =>
-        registerViews()
+        registerViews(sqlText)
         Left(spark.sql(rewriteIndexedFrom(spark, ops, catalog,
           rewriteReads(spark, ops, catalog, sqlText))))
     }
+  }
+
+  /** Make the catalog tables a statement names readable by Spark SQL.
+    * `names` are the identifiers of its text ([[namedIdentifiers]]),
+    * widened through each user SQL-text temp view they name to the
+    * identifiers of that view's text, since Spark reads the view's
+    * tables without the statement naming them. Each root table among
+    * them (case-insensitively) is registered as a temp view over its
+    * chunk scan. For a name that is no longer a root table (a dropped
+    * table or view, or a table of another catalog on the same
+    * SparkSession) the SQL layer's stale view is dropped, so Spark
+    * reports the table as not found instead of reading an old version;
+    * user temp views are never dropped. The widened set is a superset of
+    * what the statement reads, so every read sees its table's current
+    * version, as when the whole root was registered. None, a text that
+    * does not lex to its end, registers the whole root. */
+  private def registerTableViews(spark: SparkSession, ops: Ops,
+      catalog: Catalog, names: Option[Set[String]]): Unit = {
+    import org.apache.spark.sql.GraftBridge
+    val root = catalog.root // ONE root load+parse, not one per table
+    val rootLower = root.keySet.map(_.toLowerCase)
+    val named = scala.collection.mutable.Map.empty[String, String]
+    var all = false
+    def visit(ns: Option[Set[String]]): Unit = ns match {
+      case None => all = true
+      case Some(s) => s.foreach { n =>
+        val l = n.toLowerCase
+        if (!all && !named.contains(l)) {
+          named(l) = n
+          if (!rootLower.contains(l) && !n.forall(_.isDigit))
+            GraftBridge.userViewText(spark, n).foreach(t =>
+              visit(namedIdentifiers(t)))
+        }
+      }
+    }
+    visit(names)
+    root.foreach { case (name, entry) =>
+      if (all || named.contains(name.toLowerCase))
+        GraftBridge.registerTableView(spark, name,
+          ops.scan(graft.core.TableRef(entry.tableHash)))
+    }
+    if (!all) named.foreach { case (l, n) =>
+      if (!rootLower.contains(l) && !n.forall(_.isDigit))
+        GraftBridge.dropTableView(spark, n)
+    }
+  }
+
+  /** The names a statement's text can reference a table by, lexed as
+    * Spark's SQL lexer lexes it: each maximal run of word characters
+    * outside string literals and comments, plus the whole content of
+    * each backtick- or double-quoted token. `'…'` and `"…"` take
+    * backslash escapes (the raw `r'…'` and `r"…"` none), a backtick
+    * identifier doubles its backtick, `--` runs to the end of the line
+    * (a backslash before the newline continues it), `/* … */` nests,
+    * and a `/*+ … */` hint is read as text. Keywords, columns and
+    * aliases ride along; a superset of the table names is all the
+    * caller needs. None when a quote or comment is left open, since the
+    * lexing may then have hidden a name. */
+  private[sql] def namedIdentifiers(text: String): Option[Set[String]] = {
+    val out = Set.newBuilder[String]
+    val cur = new StringBuilder
+    def flush(): Unit = if (cur.nonEmpty) { out += cur.toString; cur.clear() }
+    def at(i: Int, s: String): Boolean = text.startsWith(s, i)
+    def comment(i: Int): Boolean = at(i, "/*") && !at(i, "/*+")
+    val n = text.length
+    var open = false
+    var i = 0
+    while (i < n && !open) {
+      val c = text.charAt(i)
+      if (c == '\'' || c == '"') { // string literal or "identifier"
+        val raw = cur.toString.equalsIgnoreCase("r") // r'…': the r is no name
+        if (raw) cur.clear() else flush()
+        i += 1
+        while (i < n && text.charAt(i) != c) {
+          if (!raw && text.charAt(i) == '\\') i += 1
+          if (i < n) { if (c == '"') cur += text.charAt(i); i += 1 }
+        }
+        open = i >= n
+        i += 1
+        flush()
+      } else if (c == '`') { // quoted identifier: one name
+        flush()
+        i += 1
+        while (i < n && (text.charAt(i) != '`' || at(i + 1, "`"))) {
+          if (text.charAt(i) == '`') i += 1 // `` is one `
+          cur += text.charAt(i)
+          i += 1
+        }
+        open = i >= n
+        i += 1
+        flush()
+      } else if (at(i, "--")) {
+        flush()
+        while (i < n && text.charAt(i) != '\n' && text.charAt(i) != '\r')
+          i += (if (at(i, "\\\n")) 2 else 1)
+      } else if (comment(i)) {
+        flush()
+        var depth = 0
+        do {
+          if (comment(i)) { depth += 1; i += 2 }
+          else if (at(i, "*/")) { depth -= 1; i += 2 }
+          else i += 1
+        } while (i < n && depth > 0)
+        open = depth > 0
+      } else {
+        if (c.isLetterOrDigit || c == '_') cur += c else flush()
+        i += 1
+      }
+    }
+    flush()
+    if (open) None else Some(out.result())
   }
 
   /** Index acceleration for the plain-SELECT shape `… FROM t WHERE
@@ -1224,6 +1339,14 @@ object GraftSql {
   private val cmpRe = """(?s)^("?\w+"?)\s*(<=|>=|=|<|>)\s*(.+)$""".r
   private val inListRe = """(?is)^\s*("?\w+"?)\s+in\s*\((.+)\)\s*$""".r
 
+  /** Deterministic and reading no other table (no subquery): what a
+    * memoized per-chunk DML transform keyed by its expression text may
+    * evaluate. */
+  private def rowLocalExpr(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+    e.deterministic &&
+      !org.apache.spark.sql.catalyst.expressions.SubqueryExpression.hasSubquery(e)
+
   /** Non-key DELETE as a key-preserving filtered transform, when the
     * predicate is row-local and deterministic: per-chunk memoized, and
     * chunks whose zone-map stats prove no row matches pass through
@@ -1238,13 +1361,13 @@ object GraftSql {
       import org.apache.spark.sql.functions.{col, expr}
       val keep = expr(s"NOT coalesce(($cond), false)")
       val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      // resolves ONLY against this table's columns (no catalog views
-      // registered on purpose — a predicate needing them isn't row-local)
-      val det = empty.where(keep).queryExecution.analyzed.collectFirst {
+      // row-local only: a subquery reads other tables, whose versions
+      // the memoized transform's key (the predicate text) cannot see
+      val rowLocal = empty.where(keep).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.deterministic
+          rowLocalExpr(f.condition)
       }
-      if (!det.contains(true)) None
+      if (!rowLocal.contains(true)) None
       else Some(ops.transform(ref, graft.core.ColTransform(
         s"sql-delete-v1:${cond.trim}", keyCols,
         schema.fieldNames.toSeq.map(col(_)),
@@ -1282,7 +1405,7 @@ object GraftSql {
       }.toSeq
       val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       val analyzed = empty.select(cols: _*).queryExecution.analyzed
-      if (!analyzed.expressions.forall(_.deterministic)) None
+      if (!analyzed.expressions.forall(rowLocalExpr)) None
       else {
         val setKey = sets.toSeq.sortBy(_._1)
           .map { case (c, e) => s"$c=${e.trim}" }.mkString(",")
@@ -1365,7 +1488,9 @@ object GraftSql {
           .map(e => s"CAST(($e) AS ${schema(f).dataType.sql}) AS `$f`")
           .getOrElse(s"`$f`")
       }.toIndexedSeq: _*)
-      val rows = guardNotNull(updated, entry, name).collect().toSeq
+      val guarded = guardNotNull(updated, entry, name)
+      val rows = org.apache.spark.sql.GraftBridge.localRelationRows(guarded)
+        .getOrElse(guarded.collect()).toSeq
       Some(ops.patchTable(ref, rows, Nil))
     }
 

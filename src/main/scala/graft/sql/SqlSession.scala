@@ -46,7 +46,7 @@ final class SqlSession(spark: SparkSession, baseOps: Ops, val catalog: Catalog) 
         val ts = Txn.begin(baseOps.store)
         txn = Some((ts,
           new Ops(spark, ts, baseOps.chunkTargetRows, baseOps.registry,
-            baseOps.routes),
+            baseOps.routes, Some(baseOps.engine)),
           new Catalog(ts)))
         Right(ts.startPtr.getOrElse(""))
       }

@@ -204,7 +204,7 @@ object GraftBridge {
       Some(total)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** A THROWAWAY engine-session clone: same SparkContext, shared cache
+  /** An engine-session clone: same SparkContext, shared cache
     * manager / external catalog / store of cached data, but an ISOLATED
     * SQLConf snapshot — engine-internal conf (AQE off for the fixed
     * scan→repartition(n)→sort→write materialization shapes, the
@@ -214,9 +214,10 @@ object GraftBridge {
     * value under interleaving — impossible now, nothing is restored).
     * Cloning snapshots the user conf at call time, so session time
     * zone, ANSI mode, and shuffle partitions all carry into the engine
-    * plan. Cost: one lazy SessionState clone per materialization —
-    * ~1.4 ms measured (mean of 50 clones at local[4]) against a
-    * multi-job statement flow. The clone also folds Aggregates and
+    * plan. Each [[graft.core.Ops]] keeps its clones
+    * ([[graft.core.EngineSessions]]) and rebuilds them only when the
+    * user conf changes — not one clone per materialization. The clone
+    * also folds Aggregates and
     * Unions over driver-resident rows ([[LocalAggregate]], with
     * `ConvertToLocalRelation` beside it so the Projects above fold in
     * the same fixed-point batch) — the zero-job shape of the
@@ -232,6 +233,113 @@ object GraftBridge {
         catalyst.optimizer.ConvertToLocalRelation)
       .filterNot(es.experimental.extraOptimizations.contains)
     es
+  }
+
+  /** The rows of a frame whose optimized plan FOLDED to a
+    * LocalRelation (VALUES lists and projections over them, the engine
+    * clone's driver-resident folds), read straight from the relation:
+    * no physical plan, no SQL execution or listener events, and no Row
+    * encoder — each column converts through one converter built per
+    * call. The rows equal `collect()`'s, value classes included:
+    * scalars convert through Spark's `CatalystTypeConverters`, built
+    * under the frame's own session conf, so dates and timestamps come
+    * back as `java.sql` or `java.time` values per
+    * `spark.sql.datetime.java8API.enabled`; arrays are converted here,
+    * because that converter returns an immutable `ArraySeq` where the
+    * Row encoder builds a `mutable.ArraySeq`; binary values are copied,
+    * as the encoder copies them. None for any other plan, for column
+    * types beyond scalars and arrays of them, or when the relation's
+    * column types differ from the frame's; the caller then collects. */
+  def localRelationRows(df: DataFrame): Option[Array[Row]] = {
+    import types._
+    def external(dt: DataType): Option[Any => Any] = dt match {
+      case ArrayType(et, _) => external(et).map { elem => (v: Any) =>
+        if (v == null) null else {
+          val a = v.asInstanceOf[catalyst.util.ArrayData]
+          val out = new Array[Any](a.numElements())
+          var i = 0
+          while (i < out.length) {
+            if (!a.isNullAt(i)) out(i) = elem(a.get(i, et))
+            i += 1
+          }
+          scala.collection.mutable.ArraySeq.make(out)
+        }
+      }
+      case BinaryType => Some(v => if (v == null) null
+        else v.asInstanceOf[Array[Byte]].clone())
+      case _: NumericType | BooleanType | _: StringType | DateType |
+           TimestampType | TimestampNTZType =>
+        Some(catalyst.CatalystTypeConverters.createToScalaConverter(dt))
+      case _ => None
+    }
+    val schema = df.schema
+    val dts = schema.fields.map(_.dataType)
+    df.queryExecution.optimizedPlan match {
+      case lr: catalyst.plans.logical.LocalRelation if !lr.isStreaming &&
+          lr.schema.length == schema.length &&
+          lr.schema.zip(schema).forall { case (a, b) =>
+            DataType.equalsIgnoreNullability(a.dataType, b.dataType) } =>
+        val convs = internal.SQLConf.withExistingConf(
+          df.sparkSession.sessionState.conf)(dts.map(external))
+        if (convs.exists(_.isEmpty)) None
+        else {
+          val conv = convs.map(_.get)
+          Some(lr.data.iterator.map { r =>
+            val vals = new Array[Any](dts.length)
+            var i = 0
+            while (i < dts.length) {
+              if (!r.isNullAt(i)) vals(i) = conv(i)(r.get(i, dts(i)))
+              i += 1
+            }
+            new catalyst.expressions.GenericRowWithSchema(vals, schema): Row
+          }.toArray)
+        }
+      case _ => None
+    }
+  }
+
+  /** Catalog property that marks a temp view as one the graft SQL layer
+    * registered over a catalog table ([[registerTableView]]). */
+  private val TableViewProperty = "graft.sql.tableView"
+
+  /** Register `df` as the session temp view `name`, replacing any view
+    * of that name, and mark it as the SQL layer's table view. Stores
+    * what `createOrReplaceTempView` stores for a DataFrame — its
+    * analyzed plan, through Spark's own `createTemporaryViewRelation`
+    * (cyclic-reference check, uncache of a replaced cached view) — but
+    * without running a `CreateViewCommand` as a query execution. */
+  def registerTableView(spark: SparkSession, name: String,
+      df: DataFrame): Unit = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val catalog = cs.sessionState.catalog
+    val plan = df.queryExecution.analyzed
+    val rel = execution.command.ViewHelper.createTemporaryViewRelation(
+      catalyst.TableIdentifier(name), cs, true, catalog.getRawTempView,
+      None, plan, plan, Nil)
+    catalog.createTempView(name, rel.copy(tableMeta = rel.tableMeta.copy(
+      properties = rel.tableMeta.properties + (TableViewProperty -> "true"))),
+      overrideIfExists = true)
+  }
+
+  /** Drop the temp view `name` when [[registerTableView]] registered it
+    * (a catalog table's view that may now be stale); any other temp
+    * view of that name — a user's — is left alone. */
+  def dropTableView(spark: SparkSession, name: String): Unit = {
+    val catalog = spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+    if (catalog.getRawTempView(name)
+        .exists(_.tableMeta.properties.contains(TableViewProperty)))
+      spark.catalog.dropTempView(name)
+  }
+
+  /** The SQL text of the temp view `name`, session-local or global,
+    * when it was created from SQL text, which Spark resolves again on
+    * every read. None for a view [[registerTableView]] registered, for a
+    * DataFrame view (its plan is fixed) and for no view. */
+  def userViewText(spark: SparkSession, name: String): Option[String] = {
+    val catalog = spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+    catalog.getRawTempView(name).orElse(catalog.getRawGlobalTempView(name))
+      .filterNot(_.tableMeta.properties.contains(TableViewProperty))
+      .flatMap(_.tableMeta.viewText)
   }
 
   /** Run `body` on `exec` with the CALLING thread's Spark thread state

@@ -43,8 +43,8 @@ class CanonicalGoldenSpec extends AnyFunSuite {
 
   private def materialize(df: DataFrame, keyCols: Seq[String], target: Long,
       groupCol: Option[String], rowBound: Option[Long]): Map[String, TableMeta] =
-    Canonical.materialize(spark, newStore(), Routes.Default, df, keyCols,
-      target, groupCol = groupCol, rowBound = rowBound)
+    Canonical.materialize(new EngineSessions(spark), newStore(), Routes.Default,
+      df, keyCols, target, groupCol = groupCol, rowBound = rowBound)
 
   /** Canonical text of every chunk's stats, hashed. */
   private def statsDigest(m: TableMeta): String = Hashing.sha256Hex(

@@ -89,8 +89,9 @@ class EdgeCaseSpec extends AnyFunSuite {
       if (t == null) Nil else t +: causes(t.getCause)
     Seq(("zero-job", local, Some(3L)), ("collect", distributed, Some(3L)),
         ("job", distributed, None)).foreach { case (route, df, bound) =>
-      val e = intercept[Exception](Canonical.materialize(spark, store,
-        Routes.Default, df, Seq("k"), 8, groupCol = Some("g"),
+      val e = intercept[Exception](Canonical.materialize(
+        new EngineSessions(spark), store, Routes.Default, df, Seq("k"), 8,
+        groupCol = Some("g"),
         rowBound = bound))
       assert(causes(e).exists(c =>
         Option(c.getMessage).exists(_.contains("null key in key column"))),

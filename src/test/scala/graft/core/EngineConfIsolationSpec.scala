@@ -11,10 +11,13 @@ import graft.TestSpark
   * `spark.sql.adaptive.enabled` on the SHARED session — a concurrent
   * query on another thread silently ran with AQE off, and interleaved
   * restores could leave a stale value behind. Engine conf now lives on
-  * a throwaway session CLONE (GraftBridge.engineSession) and the frame
-  * is transplanted onto it; this spec drives a materialization on one
-  * thread while another thread continuously asserts the user session's
-  * conf is untouched — and that the result is the same table. */
+  * session CLONES (GraftBridge.engineSession), built once per Ops and
+  * configuration ([[EngineSessions]]) and never mutated afterwards, and
+  * the frame is transplanted onto one; this spec drives a
+  * materialization on one thread while another thread continuously
+  * asserts the user session's conf is untouched — and that the result
+  * is the same table. It also pins that the clones are reused across
+  * statements and rebuilt when the user conf changes. */
 class EngineConfIsolationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -79,5 +82,43 @@ class EngineConfIsolationSpec extends AnyFunSuite {
       ops.fromDataFrame(df(5000), Seq("k")).hash
     }
     assert(build() == build())
+  }
+
+  test("one Ops reuses its engine clones and follows a user conf change") {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    val ops = new Ops(spark,
+      new FsStore(graft.core.FsUtil.tempStoreDir("graft-econf-ansi-")), 64)
+    val cat = new Catalog(ops.store)
+    def run(sql: String) = graft.sql.GraftSql.execute(spark, ops, cat, sql)
+    def clone() = ops.engine(smallShuffle = true, interpretedOk = true)
+    def overflow(e: Throwable): Boolean = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).exists(c => Option(c.getMessage)
+        .exists(_.contains("ARITHMETIC_OVERFLOW")))
+    try {
+      spark.conf.set(key, "false")
+      run("CREATE TABLE ov (k bigint PRIMARY KEY, g bigint, v bigint)")
+      run(s"INSERT INTO ov VALUES (1, 1, ${Long.MaxValue}), (2, 1, 1), (3, 2, 5)")
+      // a driver-admitted SUM view: the overflow wraps with ANSI off
+      run("CREATE MATERIALIZED VIEW ov_a AS SELECT g, SUM(v) AS s FROM ov GROUP BY g")
+      val sums = ops.scan(cat.get("ov_a").get).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(sums == Map(1L -> Long.MinValue, 2L -> 5L))
+      val c0 = clone()
+      run("INSERT INTO ov VALUES (4, 2, 7)")
+      assert(clone() eq c0, "an unchanged user conf rebuilt the clone")
+      assert(c0.conf.get(key) == "false")
+      // the same statement shape on the same Ops follows the new value
+      spark.conf.set(key, "true")
+      val e = intercept[Throwable](run(
+        "CREATE MATERIALIZED VIEW ov_b AS SELECT g, SUM(v) AS s FROM ov GROUP BY g"))
+      assert(overflow(e), s"wanted the ANSI overflow error, got: $e")
+      assert(!(clone() eq c0))
+      assert(clone().conf.get(key) == "true")
+      assert(c0.conf.get(key) == "false", "a built clone was mutated")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

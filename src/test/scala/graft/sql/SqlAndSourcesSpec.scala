@@ -1823,4 +1823,146 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     val ct = GraftSql.parseCreateTable(got)
     assert(ct.keyCols == Seq("id"))
   }
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("a dropped table or view is not readable through its stale temp view") {
+    val (ops, cat) = newOps()
+    def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+    def notFound(sql: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](run(sql))
+      assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+    }
+    run("CREATE TABLE stale_t (k bigint PRIMARY KEY, v bigint)")
+    run("INSERT INTO stale_t VALUES (1, 10), (2, 20)")
+    val Left(before) = run("SELECT * FROM stale_t"): @unchecked
+    assert(before.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      .toSeq == Seq((1L, 10L), (2L, 20L)))
+    run("DROP TABLE stale_t")
+    notFound("SELECT * FROM stale_t")
+    assert(!tempViews().contains("stale_t"))
+    // a dropped materialized view
+    run("CREATE TABLE stale_b (k bigint PRIMARY KEY, v bigint)")
+    run("INSERT INTO stale_b VALUES (1, 10)")
+    run("CREATE MATERIALIZED VIEW stale_mv AS SELECT k, v FROM stale_b WHERE v > 0")
+    val Left(mv) = run("SELECT * FROM stale_mv"): @unchecked
+    assert(mv.count() == 1)
+    run("DROP MATERIALIZED VIEW stale_mv")
+    notFound("SELECT * FROM stale_mv")
+    // a second catalog on the same SparkSession cannot read the first's
+    val (ops2, cat2) = newOps()
+    val Left(b) = run("SELECT * FROM stale_b"): @unchecked
+    assert(b.count() == 1)
+    intercept[org.apache.spark.sql.AnalysisException](
+      GraftSql.execute(spark, ops2, cat2, "SELECT * FROM stale_b"))
+    // a user temp view of a name the catalog lacks is the user's: read,
+    // never dropped
+    spark.range(3).toDF("k").createOrReplaceTempView("stale_user")
+    val Left(u) = run("SELECT * FROM stale_user"): @unchecked
+    assert(u.count() == 3)
+    assert(tempViews().contains("stale_user"))
+    spark.catalog.dropTempView("stale_user")
+  }
+
+  test("statements register only the tables they name, each at its current version") {
+    val (ops, cat) = newOps()
+    def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+    def one(sql: String): Long = {
+      val Left(df) = run(sql): @unchecked
+      df.collect().head.getLong(0)
+    }
+    run("CREATE TABLE ns_src (k bigint PRIMARY KEY, v bigint)")
+    run("CREATE TABLE ns_dst (k bigint PRIMARY KEY, v bigint)")
+    run("INSERT INTO ns_src VALUES (1, 10)")
+    assert(one("SELECT SUM(v) FROM ns_src") == 10L) // registers ns_src
+    // an INSERT … VALUES registers no temp view
+    val views = tempViews()
+    run("INSERT INTO ns_src VALUES (2, 20)")
+    assert(tempViews() == views)
+    // named only inside a scalar subquery of an INSERT (Spark rejects
+    // scalar subqueries inside VALUES, so the row is a SELECT list)
+    run("INSERT INTO ns_dst SELECT 1, (SELECT SUM(v) FROM ns_src)")
+    assert(one("SELECT v FROM ns_dst WHERE k = 1") == 30L)
+    // named only inside a CTE
+    run("INSERT INTO ns_src VALUES (3, 30)")
+    assert(one("WITH x AS (SELECT v FROM ns_src) SELECT SUM(v) FROM x") == 60L)
+    // named only inside a MERGE source
+    run("INSERT INTO ns_src VALUES (4, 40)")
+    run("""MERGE INTO ns_dst AS t USING (SELECT k, v FROM ns_src) AS s
+      ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+    assert(one("SELECT SUM(v) FROM ns_dst") == 100L)
+    // a backtick-quoted name
+    run("INSERT INTO ns_src VALUES (5, 50)")
+    assert(one("SELECT SUM(v) FROM `ns_src`") == 150L)
+    // a differently-cased name
+    run("INSERT INTO ns_src VALUES (6, 60)")
+    assert(one("SELECT SUM(v) FROM NS_Src") == 210L)
+    // named only inside a subquery of an UPDATE's SET and a DELETE's
+    // WHERE (both take driver or per-chunk routes, not the rebuild)
+    run("INSERT INTO ns_src VALUES (7, 70)")
+    run("UPDATE ns_dst SET v = (SELECT SUM(v) FROM ns_src) WHERE k = 1")
+    assert(one("SELECT v FROM ns_dst WHERE k = 1") == 280L)
+    run("INSERT INTO ns_src VALUES (8, 80)")
+    run("DELETE FROM ns_dst WHERE v < (SELECT MAX(v) FROM ns_src) - 30")
+    assert(one("SELECT COUNT(*) FROM ns_dst") == 1L)
+    // the same DELETE text again after the subquery's table changed: it
+    // must not be served from a memo keyed by the predicate text
+    run("DELETE FROM ns_dst WHERE v < (SELECT MAX(v) FROM ns_src) - 30")
+    assert(one("SELECT COUNT(*) FROM ns_dst") == 1L) // 280 ≥ 50: kept
+    run("INSERT INTO ns_src VALUES (9, 400)")
+    run("DELETE FROM ns_dst WHERE v < (SELECT MAX(v) FROM ns_src) - 30")
+    assert(one("SELECT COUNT(*) FROM ns_dst") == 0L)
+    // an apostrophe inside a comment opens no string literal
+    run("INSERT INTO ns_src VALUES (10, 1)")
+    assert(one("SELECT /* it's */ SUM(v) FROM ns_src /* it's */") == 761L)
+    run("INSERT INTO ns_src VALUES (11, 1)")
+    assert(one("SELECT SUM(v) -- don't\nFROM ns_src -- don't") == 762L)
+    // a backslash-escaped quote inside "…" ends no string literal
+    run("INSERT INTO ns_dst VALUES (12, 5)")
+    run("INSERT INTO ns_src VALUES (12, 1)")
+    assert(one("""SELECT COUNT(*) FROM ns_dst WHERE "a\"b" = 'x'
+      OR k IN (SELECT k FROM ns_src) OR 'q' = "r\"s"""") == 1L)
+    assert(GraftSql.namedIdentifiers(
+      "SELECT `a``b`, \"c d\" FROM t WHERE s = 'x \\' y' AND u1 = 2") ==
+      Some(Set("SELECT", "a`b", "c d", "FROM", "t", "WHERE", "s", "AND", "u1", "2")))
+    assert(GraftSql.namedIdentifiers(
+      "SELECT /* it's /* nested */ t0 */ a -- it's \\\n t1\nFROM r'\\' t2") ==
+      Some(Set("SELECT", "a", "FROM", "t2")))
+    assert(GraftSql.namedIdentifiers("SELECT /*+ BROADCAST(t) */ a") ==
+      Some(Set("SELECT", "BROADCAST", "t", "a")))
+    // an open quote or comment may hide a name: the caller registers all
+    assert(GraftSql.namedIdentifiers("SELECT 'a FROM t").isEmpty)
+    assert(GraftSql.namedIdentifiers("SELECT a /* FROM t").isEmpty)
+  }
+
+  test("a user's SQL-text temp view over a catalog table reads its current version") {
+    val (ops, cat) = newOps()
+    def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
+    def one(sql: String): Long = {
+      val Left(df) = run(sql): @unchecked
+      df.collect().head.getLong(0)
+    }
+    run("CREATE TABLE uv_t (k bigint PRIMARY KEY, v bigint)")
+    run("INSERT INTO uv_t VALUES (1, 10)")
+    try {
+      run("CREATE OR REPLACE TEMP VIEW uv_a AS SELECT * FROM uv_t")
+      // a view over a view, and a global one over both
+      spark.sql("CREATE OR REPLACE TEMP VIEW uv_b AS SELECT k, v FROM uv_a")
+      spark.sql("CREATE OR REPLACE GLOBAL TEMP VIEW uv_g AS SELECT * FROM uv_b")
+      assert(one("SELECT SUM(v) FROM uv_a") == 10L)
+      run("INSERT INTO uv_t VALUES (2, 20)")
+      assert(one("SELECT SUM(v) FROM uv_a") == 30L)
+      run("INSERT INTO uv_t VALUES (3, 30)")
+      assert(one("SELECT SUM(v) FROM uv_b") == 60L)
+      run("INSERT INTO uv_t VALUES (4, 40)")
+      assert(one("SELECT SUM(v) FROM global_temp.uv_g") == 100L)
+    } finally {
+      spark.catalog.dropTempView("uv_a")
+      spark.catalog.dropTempView("uv_b")
+      spark.catalog.dropGlobalTempView("uv_g")
+    }
+  }
 }
