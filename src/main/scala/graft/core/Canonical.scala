@@ -437,24 +437,19 @@ object Canonical {
       routes.driverMaterialize && DriverChunks.supported(dataSchema)
     val driverOk = bytesOk ||
       driverMaterializeOk(routes, rowBound, chunkTargetRows, dataSchema)
-    // ZERO-JOB route: a driver-admitted input whose plan FOLDS to a
-    // LocalRelation on the engine clone (ConvertToLocalRelation
-    // consumes Project/Filter over driver-resident rows, LocalAggregate
-    // the Aggregates and Unions — every batched per-chunk or per-region
-    // job over byte-admitted chunks (Ops.chunkFrame: transforms, minis,
-    // merge regions and pieces, aligned join regions), the driver-read
-    // range edge rewrite and a small CTAS take exactly this shape)
-    // collects without any job, and the key bytes encode on the driver
-    // with the same arithmetic the withKeyBytes encoder applies — the
-    // kbDf plan below can never fold (typed mapPartitions), so going
+    // ZERO-JOB route: a driver-admitted input over driver-resident rows
+    // — every batched per-chunk or per-region job over byte-admitted
+    // chunks (Ops.chunkFrame: transforms, minis, merge regions and
+    // pieces, aligned join regions), the driver-read range edge rewrite
+    // and a small CTAS take this shape — evaluates on the driver
+    // (GraftBridge.localRelationRows: Project/Filter chains, Aggregates
+    // and Unions, no optimizer pass) and the key bytes encode on the
+    // driver with the same arithmetic the withKeyBytes encoder applies.
+    // The kbDf plan below can never fold (typed mapPartitions), so going
     // through it costs a parallelize-and-scan job for rows we already
-    // hold. The leaf pre-check on the ANALYZED plan (computed anyway for
-    // the transplant) keeps the extra optimizer pass off non-local
-    // inputs.
-    if (driverOk && df.queryExecution.analyzed.collectLeaves().forall(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])) {
-      val (_, local) = onEngine(engine, df, smallShuffle = true)
-      org.apache.spark.sql.GraftBridge.localRelationRows(local).foreach { folded =>
+    // hold.
+    if (driverOk) {
+      org.apache.spark.sql.GraftBridge.localRelationRows(df).foreach { folded =>
         Ops.routeOr(Option.empty[Map[String, TableMeta]]) {
           val schema = normalizeSchema(df.schema, keyCols)
           val rows = folded.map(keyBytesAppender(schema, keyCols))
@@ -475,7 +470,7 @@ object Canonical {
         interpretedOk = interpretedCollectOk(routes, rowBound, dataSchema))
       val rows: Option[Array[Row]] =
         if (rowBound.contains(0L)) Some(Array.empty)
-        else Ops.routeOr(Option.empty[Array[Row]])(
+        else Ops.exactRouteOr(Option.empty[Array[Row]])(
           Some(withJobDesc(es, s"graft:collect$label")(ekb.collect())))
       rows.flatMap(driverWrite(_, kbDf.schema)).foreach(return _)
     } else if (rowBound.isEmpty && routes.driverMaterialize &&

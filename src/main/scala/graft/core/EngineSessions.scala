@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * materializations on (see [[Canonical.onEngine]]), one per engine
   * configuration:
   *  - default: [[org.apache.spark.sql.GraftBridge.engineSession]] as is
-  *    (AQE off, one-pass limit probes, the driver-resident folds);
+  *    (AQE off, one-pass limit probes);
   *  - small shuffle, interpreted: at most 8 shuffle partitions and no
   *    code generation, for byte-admitted collects;
   *  - small shuffle, codegen: at most 8 shuffle partitions, for the
@@ -23,7 +23,10 @@ import org.apache.spark.sql.SparkSession
   * clone copies (temp views, functions, extra optimizer rules) is not
   * compared: engine plans are transplanted ANALYZED plans, and the
   * library's own rules are registered by the `Ops` constructor before
-  * the first clone is built.
+  * the first clone is built. Frames over driver-resident rows do not
+  * plan on a clone at all: [[org.apache.spark.sql.LocalFold]] evaluates
+  * them under the user session's own conf, so a user conf change
+  * reaches them on the next statement too.
   *
   * Owned by its `Ops` and handed to a transaction's `Ops` with the
   * routes and the registry. */

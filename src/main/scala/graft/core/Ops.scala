@@ -50,10 +50,9 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   // pruning (LimitPrune) over graft scans: registered through the stock
   // extension point for library optimizer rules; idempotent under
   // repeated Ops construction on one session. (The driver-resident
-  // folds that make the byte-admitted refresh routes zero-job —
-  // LocalAggregate with ConvertToLocalRelation — live on the engine
-  // clone only, GraftBridge.engineSession: user plans over local rows
-  // keep Spark's own plan shapes.)
+  // folds that make the byte-admitted refresh routes zero-job are no
+  // optimizer rule: LocalFold evaluates those frames directly, so user
+  // plans over local rows keep Spark's own plan shapes.)
   Seq(MetaAgg, LimitPrune).foreach { r =>
     if (!spark.experimental.extraOptimizations.contains(r))
       spark.experimental.extraOptimizations =
@@ -79,22 +78,22 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * per distinct plan shape) — on this Ops's engine clone, never
     * touching the user session's conf. For callers like the DML
     * delta-patch route whose collect would otherwise pay full adaptive
-    * codegen planning per statement. A frame that folds to a
-    * LocalRelation on the clone returns its rows without a Spark job
-    * or a physical plan. */
+    * codegen planning per statement. A frame over driver-resident rows
+    * returns its rows without a Spark job, an optimizer pass or a
+    * physical plan ([[org.apache.spark.sql.GraftBridge.localRelationRows]]). */
   def collectDriverBounded(df: DataFrame,
-      rowBound: Option[Long] = None): Array[org.apache.spark.sql.Row] = {
-    // interpreted only under the measured crossover: a byte-admitted
-    // delta can reach ~262k rows on a narrow schema (adaptiveRowCap),
-    // where interpreted evaluation of the delta plan loses to one
-    // codegen compile. Unknown bounds keep the interpreted default —
-    // every such caller is metadata-sized by construction.
-    val (es, bound) = Canonical.onEngine(engine, df, smallShuffle = true,
-      interpretedOk = Canonical.interpretedCollectOk(routes, rowBound,
-        df.schema))
-    org.apache.spark.sql.GraftBridge.localRelationRows(bound).getOrElse(
-      Canonical.withJobDesc(es, "graft:collect")(bound.collect()))
-  }
+      rowBound: Option[Long] = None): Array[org.apache.spark.sql.Row] =
+    org.apache.spark.sql.GraftBridge.localRelationRows(df).getOrElse {
+      // interpreted only under the measured crossover: a byte-admitted
+      // delta can reach ~262k rows on a narrow schema (adaptiveRowCap),
+      // where interpreted evaluation of the delta plan loses to one
+      // codegen compile. Unknown bounds keep the interpreted default —
+      // every such caller is metadata-sized by construction.
+      val (es, bound) = Canonical.onEngine(engine, df, smallShuffle = true,
+        interpretedOk = Canonical.interpretedCollectOk(routes, rowBound,
+          df.schema))
+      Canonical.withJobDesc(es, "graft:collect")(bound.collect())
+    }
 
   /** [[fromDataFrame]] with caller-known size bounds: a row-local
     * projection over a chunk-backed scan (the range-UPDATE delta) knows
@@ -220,12 +219,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * out) — the input of every batched per-chunk or per-region job.
     *
     * Byte-admitted chunks are read on the driver into a LocalRelation:
-    * Catalyst's ConvertToLocalRelation then folds the Filters and
-    * Projects above it, and [[org.apache.spark.sql.LocalAggregate]] the
-    * Aggregates and Unions, so a grouped materialization over them
-    * collects without any job (the driver point-UPDATE mechanism,
-    * generalized). Zero-job crossover (VERDICT r13 #3, measured): the
-    * fold runs interpreted on one driver thread — unbeatable for point
+    * [[org.apache.spark.sql.LocalFold]] then evaluates the Filters,
+    * Projects, Aggregates and Unions above it on the driver, so a
+    * grouped materialization over them collects without any job (the
+    * driver point-UPDATE mechanism, generalized). Zero-job crossover
+    * (VERDICT r13 #3, measured): the fold runs interpreted on one
+    * driver thread — unbeatable for point
     * DML, but at ~230k rows it loses ~20% to the one-job parquet-scan
     * shape, whose expressions run codegen'd across the cores; above
     * [[Ops.DriverZeroJobMaxRows]] (and at scale, above the byte budget)
@@ -1545,8 +1544,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * and spliced onto the previous result ([[spliceUnique]]) — no mini
     * tables are computed or written. The delta comes from the driver
     * when the changed chunks are byte-admitted ([[sourceRowDelta]]: no
-    * Spark job for non-generator transforms, since the delta plan folds
-    * to a LocalRelation), otherwise from one distributed net
+    * Spark job for non-generator transforms, since LocalFold evaluates
+    * the delta plan on the driver), otherwise from one distributed net
     * ([[Ops.rowNet]]) over the changed chunks' contributions; either
     * way at most [[Ops.PatchMaxDeltaRows]] (width-adapted) rows per side
     * reach the driver. A small row delta scattered over MANY chunks — a
@@ -1849,7 +1848,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // ONE local fold plan: previous partials ∪ inserted ∪ the deleted
       // contributions inverted (fold-declared, per column) — the Union
       // and Aggregate over driver rows fold on the driver
-      // (LocalAggregate), so the collect below launches no job
+      // (LocalFold), so the collect below launches no job
       def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, pm.schema)
       val kept = local(prevRows ++ insT)
       val contribs = retract.fold(kept)(r => kept.union(local(delT).select(
@@ -1885,16 +1884,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
 
   /** [[contributions]] of driver-resident source rows (schema of `m`),
     * collected over a LocalRelation — no job for non-generator
-    * transforms — and LIMIT-guarded: a generator's fan-out is unbounded
-    * by the source delta, so the cap rejects before the rows land. None
-    * above `cap` rows. */
+    * transforms, whose output is at most the source rows — and, for a
+    * generator, LIMIT-guarded: its fan-out is unbounded by the source
+    * delta, so the cap rejects before the rows land. None above `cap`
+    * rows. */
   private def driverContributions(t: ColTransform, m: TableMeta,
       pm: TableMeta, rs: Seq[Row], cap: Int): Option[Seq[Row]] =
     if (rs.isEmpty) Some(Nil)
     else {
       import scala.jdk.CollectionConverters._
-      val out = collectDriverBounded(contributions(t, pm,
-        spark.createDataFrame(rs.asJava, m.schema)).limit(cap + 1))
+      val df = contributions(t, pm, spark.createDataFrame(rs.asJava, m.schema))
+      val out = collectDriverBounded(if (t.generator) df.limit(cap + 1) else df)
       if (out.length > cap) None else Some(out.toSeq)
     }
 
@@ -2653,7 +2653,7 @@ object Ops {
   val DriverPatchMaxRows: Long = 1L << 17
 
   /** Zero-job crossover for driver chunk reads ([[Ops.chunkFrame]]) and
-    * driver-side aggregate folds ([[org.apache.spark.sql.LocalAggregate]])
+    * driver-side aggregate folds ([[org.apache.spark.sql.LocalFold]])
     * (VERDICT r13 #3): under it, chunks read driver-side and fold as a
     * LocalRelation (no job at all — the point-DML latency story); above
     * it, the interpreted single-thread fold loses to the one-job parquet
@@ -2788,10 +2788,27 @@ object Ops {
     * message). A USER error raised by the input itself — a null key, a
     * NOT NULL violation — is not a route failure: it propagates,
     * unwrapped from the task failure that carried it, since every other
-    * route would only raise it again. */
+    * route would only raise it again. A data exception (an ANSI
+    * overflow, …) does fall back here: an incremental route computes in
+    * its own order — a fold-in adds the inserted contributions to the
+    * previous partials before it retracts the deleted ones — so it can
+    * overflow where the exact paths do not ([[exactRouteOr]]). */
   private[graft] def routeOr[T](fallback: => T)(route: => T): T =
+    orFallback(fallback, dataErrors = false)(route)
+
+  /** [[routeOr]] for a route that evaluates the job path's own plan over
+    * the same rows (the driver route's one collect of
+    * [[Canonical.materialize]]): a Spark data exception it raises —
+    * SQLSTATE class 22: `ARITHMETIC_OVERFLOW`, `DIVIDE_BY_ZERO`,
+    * `CAST_INVALID_INPUT`, … — is the job path's too, so it propagates
+    * as a user error instead of re-running there. */
+  private[graft] def exactRouteOr[T](fallback: => T)(route: => T): T =
+    orFallback(fallback, dataErrors = true)(route)
+
+  private def orFallback[T](fallback: => T, dataErrors: Boolean)(
+      route: => T): T =
     try route catch { case scala.util.control.NonFatal(e) =>
-      userError(e).foreach(throw _)
+      userError(e, dataErrors).foreach(throw _)
       val sig = e.getClass.getName + ":" + String.valueOf(e.getMessage)
       if (warnedRouteCauses.add(sig))
         System.err.println(
@@ -2802,14 +2819,16 @@ object Ops {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The user error in `e`'s cause chain, if any: the null-key
-    * rejection of [[Canonical.withKeyBytes]] or a `raise_error` (the SQL
-    * layer's NOT NULL guard). */
-  private def userError(e: Throwable): Option[Throwable] =
+    * rejection of [[Canonical.withKeyBytes]], a `raise_error` (the SQL
+    * layer's NOT NULL guard) and, with `dataErrors`, a Spark data
+    * exception (SQLSTATE class 22). */
+  private def userError(e: Throwable, dataErrors: Boolean): Option[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).find {
       case i: IllegalArgumentException =>
         Option(i.getMessage).exists(_.startsWith(Canonical.NullKeyError))
       case s: org.apache.spark.SparkThrowable =>
-        s.getCondition == "USER_RAISED_EXCEPTION"
+        s.getCondition == "USER_RAISED_EXCEPTION" ||
+          dataErrors && Option(s.getSqlState).exists(_.startsWith("22"))
       case _ => false
     }
 }

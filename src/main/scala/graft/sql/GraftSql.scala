@@ -302,13 +302,28 @@ object GraftSql {
   def execute(spark: SparkSession, ops: Ops, catalog: Catalog,
       sqlText: String): Either[DataFrame, String] = {
     val probe = stmtProbe
-    if (probe.isEmpty) executeImpl(spark, ops, catalog, sqlText)
-    else {
-      val t0 = System.nanoTime()
-      try executeImpl(spark, ops, catalog, sqlText)
-      finally probe.foreach(_(sqlText, (System.nanoTime() - t0) / 1e9))
+    statementLock(spark).synchronized {
+      if (probe.isEmpty) executeImpl(spark, ops, catalog, sqlText)
+      else {
+        val t0 = System.nanoTime()
+        try executeImpl(spark, ops, catalog, sqlText)
+        finally probe.foreach(_(sqlText, (System.nanoTime() - t0) / 1e9))
+      }
     }
   }
+
+  /** One statement at a time per SparkSession. A statement registers
+    * the tables it names as temp views of its SparkSession, which every
+    * thread on that session shares, and resolves them as it analyzes
+    * its plans; a concurrent statement re-registering a name in between
+    * — another transaction's branch, at another version — would make it
+    * read that version (a lost update under optimistic transactions).
+    * A SELECT's frame is analyzed, its views resolved, before the lock
+    * is released; it runs outside it. */
+  private def statementLock(spark: SparkSession): AnyRef =
+    statementLocks.computeIfAbsent(spark, _ => new AnyRef)
+  private val statementLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, AnyRef]())
 
   private def executeImpl(spark: SparkSession, ops: Ops, catalog: Catalog,
       sqlText: String): Either[DataFrame, String] = {

@@ -216,40 +216,37 @@ object GraftBridge {
     * zone, ANSI mode, and shuffle partitions all carry into the engine
     * plan. Each [[graft.core.Ops]] keeps its clones
     * ([[graft.core.EngineSessions]]) and rebuilds them only when the
-    * user conf changes — not one clone per materialization. The clone
-    * also folds Aggregates and
-    * Unions over driver-resident rows ([[LocalAggregate]], with
-    * `ConvertToLocalRelation` beside it so the Projects above fold in
-    * the same fixed-point batch) — the zero-job shape of the
-    * byte-admitted engine routes — while user plans keep Spark's own
-    * optimizer (the clone's rule list is its own copy). */
+    * user conf changes — not one clone per materialization. Frames
+    * over driver-resident rows never plan here: [[localRelationRows]]
+    * evaluates them without an optimizer pass. */
   def engineSession(spark: SparkSession): SparkSession = {
     val es = spark.asInstanceOf[classic.SparkSession].cloneSession()
     es.conf.set("spark.sql.adaptive.enabled", "false")
     // engine limit probes want ALL partitions in the first pass (one
     // job), not incremental-limit's partition doubling
     es.conf.set("spark.sql.limit.initialNumPartitions", "1000000")
-    es.experimental.extraOptimizations ++= Seq(LocalAggregate,
-        catalyst.optimizer.ConvertToLocalRelation)
-      .filterNot(es.experimental.extraOptimizations.contains)
     es
   }
 
-  /** The rows of a frame whose optimized plan FOLDED to a
-    * LocalRelation (VALUES lists and projections over them, the engine
-    * clone's driver-resident folds), read straight from the relation:
-    * no physical plan, no SQL execution or listener events, and no Row
+  /** The rows of a frame over driver-resident rows (VALUES lists and
+    * projections over them, the byte-admitted engine routes' folds),
+    * evaluated on the driver by [[LocalFold]]: no optimizer pass, no
+    * physical plan, no SQL execution or listener events, and no Row
     * encoder — each column converts through one converter built per
-    * call. The rows equal `collect()`'s, value classes included:
-    * scalars convert through Spark's `CatalystTypeConverters`, built
-    * under the frame's own session conf, so dates and timestamps come
+    * call. The one entry point of the zero-job reads:
+    * `Canonical.materialize`'s zero-job branch,
+    * `Ops.collectDriverBounded` and the point-DML collects. The rows
+    * equal `collect()`'s, value classes included: scalars convert
+    * through Spark's `CatalystTypeConverters`, built under the frame's
+    * own session conf, so dates and timestamps come
     * back as `java.sql` or `java.time` values per
     * `spark.sql.datetime.java8API.enabled`; arrays are converted here,
     * because that converter returns an immutable `ArraySeq` where the
     * Row encoder builds a `mutable.ArraySeq`; binary values are copied,
     * as the encoder copies them. None for any other plan, for column
     * types beyond scalars and arrays of them, or when the relation's
-    * column types differ from the frame's; the caller then collects. */
+    * column types differ from the frame's; the caller then collects,
+    * which also raises any error the fold met. */
   def localRelationRows(df: DataFrame): Option[Array[Row]] = {
     import types._
     def external(dt: DataType): Option[Any => Any] = dt match {
@@ -274,11 +271,10 @@ object GraftBridge {
     }
     val schema = df.schema
     val dts = schema.fields.map(_.dataType)
-    df.queryExecution.optimizedPlan match {
-      case lr: catalyst.plans.logical.LocalRelation if !lr.isStreaming &&
-          lr.schema.length == schema.length &&
-          lr.schema.zip(schema).forall { case (a, b) =>
-            DataType.equalsIgnoreNullability(a.dataType, b.dataType) } =>
+    LocalFold(df).filter(lr => lr.schema.length == schema.length &&
+        lr.schema.zip(schema).forall { case (a, b) =>
+          DataType.equalsIgnoreNullability(a.dataType, b.dataType) })
+      .flatMap { lr =>
         val convs = internal.SQLConf.withExistingConf(
           df.sparkSession.sessionState.conf)(dts.map(external))
         if (convs.exists(_.isEmpty)) None
@@ -294,8 +290,7 @@ object GraftBridge {
             new catalyst.expressions.GenericRowWithSchema(vals, schema): Row
           }.toArray)
         }
-      case _ => None
-    }
+      }
   }
 
   /** Catalog property that marks a temp view as one the graft SQL layer

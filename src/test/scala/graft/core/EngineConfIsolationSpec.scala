@@ -17,7 +17,9 @@ import graft.TestSpark
   * materialization on one thread while another thread continuously
   * asserts the user session's conf is untouched — and that the result
   * is the same table. It also pins that the clones are reused across
-  * statements and rebuilt when the user conf changes. */
+  * statements and rebuilt when the user conf changes, and that the
+  * driver-side fold of local frames ([[org.apache.spark.sql.LocalFold]],
+  * which plans on no clone) follows a user conf change too. */
 class EngineConfIsolationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -119,6 +121,59 @@ class EngineConfIsolationSpec extends AnyFunSuite {
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a user conf change (ANSI, session time zone) reaches LocalFold on the next statement") {
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.session.timeZone")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    val ops = new Ops(spark,
+      new FsStore(graft.core.FsUtil.tempStoreDir("graft-econf-fold-")), 64)
+    val ts = StructType(Seq(StructField("t", TimestampType),
+      StructField("v", LongType)))
+    val at = java.sql.Timestamp.from(java.time.Instant.parse("2021-06-01T12:00:00Z"))
+    // one statement: an hour-of-day SUM over driver-resident rows whose
+    // sum overflows a long
+    def statement(): (Array[Row], Int) = {
+      import scala.jdk.CollectionConverters._
+      val df = spark.createDataFrame(
+        Seq(Row(at, Long.MaxValue), Row(at, 1L)).asJava, ts)
+        .groupBy(org.apache.spark.sql.functions.hour(
+          org.apache.spark.sql.functions.col("t")).as("h"))
+        .agg(org.apache.spark.sql.functions.sum("v").as("s"))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val out = ops.collectDriverBounded(df)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+        (out, jobs.get)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    try {
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), "UTC")
+      val (utc, j1) = statement()
+      assert(utc.map(r => r.getInt(0) -> r.getLong(1)).toSeq ==
+        Seq(12 -> Long.MinValue))
+      assert(j1 == 0, s"the driver fold launched $j1 Spark jobs")
+      spark.conf.set(keys(1), "America/Los_Angeles")
+      val (la, j2) = statement()
+      assert(la.map(r => r.getInt(0) -> r.getLong(1)).toSeq ==
+        Seq(5 -> Long.MinValue))
+      assert(j2 == 0, s"the driver fold launched $j2 Spark jobs")
+      spark.conf.set(keys(0), "true")
+      val e = intercept[Throwable](statement())
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+        Option(c.getMessage).exists(_.contains("ARITHMETIC_OVERFLOW"))),
+        s"wanted the ANSI overflow error, got: $e")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

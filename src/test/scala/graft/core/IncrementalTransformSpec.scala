@@ -259,7 +259,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
   test("an INSERT into existing groups folds in on the driver with zero Spark jobs, hash-equals from-scratch") {
     // an append is a retraction with nothing to retract: the driver
     // fold-in folds the touched groups' previous rows with the inserted
-    // contributions on the driver (LocalAggregate) and splices them onto
+    // contributions on the driver (LocalFold) and splices them onto
     // the previous result (zero-job patch) — no delta table is
     // materialized and merged in, and no job runs
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai-"))

@@ -1,23 +1,21 @@
 package graft.core
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, LocalFold, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** [[org.apache.spark.sql.LocalAggregate]]: an Aggregate over
-  * driver-resident rows folds on the driver into a LocalRelation — no
-  * Spark job — with exactly the rows the job path computes; and it
-  * leaves every plan it cannot fold exactly to the job path. */
+/** The aggregate fold of [[org.apache.spark.sql.LocalFold]], through
+  * the zero-job entry point
+  * ([[org.apache.spark.sql.GraftBridge.localRelationRows]]): an
+  * Aggregate over driver-resident rows folds on the driver — no Spark
+  * job — with exactly the rows the job path computes; and every plan it
+  * cannot fold is left exactly to the job path. */
 class LocalAggregateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  // the rule lives on the engine clone, where the engine's driver-route
-  // collects plan
-  private lazy val engine =
-    org.apache.spark.sql.GraftBridge.engineSession(spark)
 
   private def withJobs[T](s: SparkSession)(body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -42,19 +40,18 @@ class LocalAggregateSpec extends AnyFunSuite {
   private def distributed(s: SparkSession, schema: StructType, rows: Seq[Row]) =
     s.createDataFrame(s.sparkContext.parallelize(rows, 3), schema)
 
-  private def folded(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-  private def hasAggregate(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Aggregate])
+  private def folded(df: DataFrame): Boolean = LocalFold(df).isDefined
+  private def driverRows(df: DataFrame): Seq[Row] =
+    org.apache.spark.sql.GraftBridge.localRelationRows(df)
+      .getOrElse(fail(s"not folded:\n${df.queryExecution.analyzed}")).toSeq
   private def sorted(rs: Seq[Row]): Seq[Row] = rs.sortBy(_.toString)
 
   /** `q` over the rows folds on the driver, launches no job, and returns
     * the job path's rows. */
   private def assertFoldsLikeJob(schema: StructType, rows: Seq[Row])(
       q: DataFrame => DataFrame): Seq[Row] = {
-    val drv = q(local(engine, schema, rows))
-    assert(folded(drv), s"not folded:\n${drv.queryExecution.optimizedPlan}")
-    val (got, jobs) = withJobs(engine)(drv.collect().toSeq)
+    val drv = q(local(spark, schema, rows))
+    val (got, jobs) = withJobs(spark)(driverRows(drv))
     assert(jobs == 0, s"the driver fold launched $jobs Spark jobs")
     val want = q(distributed(spark, schema, rows)).collect().toSeq
     assert(sorted(got) == sorted(want))
@@ -146,9 +143,8 @@ class LocalAggregateSpec extends AnyFunSuite {
       foldOver(FoldSpec.FoldSum, "v")(mk(longRows.take(100)).union(
         mk(longRows.drop(100)).select(col("k"), col(SRC),
           (-col("v")).as("v"), col("w"))))
-    val drv = q(local(engine, longSchema, _))
-    assert(folded(drv), s"not folded:\n${drv.queryExecution.optimizedPlan}")
-    val (got, jobs) = withJobs(engine)(drv.collect().toSeq)
+    val drv = q(local(spark, longSchema, _))
+    val (got, jobs) = withJobs(spark)(driverRows(drv))
     assert(jobs == 0, s"the driver fold launched $jobs Spark jobs")
     assert(sorted(got) ==
       sorted(q(distributed(spark, longSchema, _)).collect().toSeq))
@@ -160,8 +156,8 @@ class LocalAggregateSpec extends AnyFunSuite {
       "filter" -> (_.groupBy("k").agg(expr("count(v) FILTER (WHERE v > 3)"))))
     queries.foreach { case (name, q) =>
       withClue(name) {
-        val drv = q(local(engine, longSchema, longRows))
-        assert(hasAggregate(drv), "the aggregate was folded")
+        val drv = q(local(spark, longSchema, longRows))
+        assert(!folded(drv), "the aggregate was folded")
         assert(sorted(drv.collect().toSeq) == sorted(
           q(distributed(spark, longSchema, longRows)).collect().toSeq))
       }
@@ -173,23 +169,22 @@ class LocalAggregateSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Sum}
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
       .toAttributes(longSchema)
-    val rows = local(engine, longSchema, longRows).queryExecution
-      .optimizedPlan.asInstanceOf[LocalRelation].data
+    val rows = LocalFold(local(spark, longSchema, longRows)).get.data
     // (the analyzer pulls a nondeterministic argument out into a Project,
-    // so the rule is applied to the plan directly)
+    // so the fold is applied to the plan directly)
     val nondet = Aggregate(Nil,
       Seq(Alias(Sum(Rand(Literal(7L))).toAggregateExpression(), "s")()),
       LocalRelation(attrs, rows))
-    assert(org.apache.spark.sql.LocalAggregate(nondet) eq nondet)
+    assert(LocalFold.evaluate(nondet).isEmpty)
     val streaming = Aggregate(Nil,
       Seq(Alias(Count(Literal(1)).toAggregateExpression(), "n")()),
       LocalRelation(attrs, Nil, isStreaming = true))
-    assert(org.apache.spark.sql.LocalAggregate(streaming) eq streaming)
+    assert(LocalFold.evaluate(streaming).isEmpty)
     val over = (0L to Ops.DriverZeroJobMaxRows).map(i =>
       Row(s"g${i % 5}", i, i, null))
-    val big = local(engine, longSchema, over).groupBy("k").agg(sum("v"))
-    assert(hasAggregate(big), "an over-cap input was folded")
-    val atCap = local(engine, longSchema, over.tail)
+    val big = local(spark, longSchema, over).groupBy("k").agg(sum("v"))
+    assert(!folded(big), "an over-cap input was folded")
+    val atCap = local(spark, longSchema, over.tail)
       .groupBy("k").agg(sum("v"))
     assert(folded(atCap), "an input at the cap was not folded")
   }
@@ -205,7 +200,7 @@ class LocalAggregateSpec extends AnyFunSuite {
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
     }
     val drv = local(s, schema, rows).groupBy("k").agg(sum("v"))
-    assert(hasAggregate(drv), "the overflowing aggregate was folded")
+    assert(!folded(drv), "the overflowing aggregate was folded")
     val (got, want) = (error(local(s, schema, rows)),
       error(distributed(s, schema, rows)))
     assert(got.getClass == want.getClass)

@@ -69,7 +69,7 @@ class LocalRelationRowsSpec extends AnyFunSuite {
         val rows = (0 until 5).map(i => row(i, java8, nulls = false)) :+
           row(0, java8, nulls = true)
         val base = spark.createDataFrame(rows.asJava, schema)
-        // a projection over the VALUES rows folds (ConvertToLocalRelation)
+        // a projection over the VALUES rows folds on the driver (LocalFold)
         val df: DataFrame = base.select(
           base.columns.map(col).toSeq :+ (col("c0") + 1).as("extra"): _*)
           .where(col("c1").isNull || col("c1") >= 0)

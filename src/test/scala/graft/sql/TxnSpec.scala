@@ -210,6 +210,31 @@ class TxnSpec extends AnyFunSuite {
     assert(cat.log(Int.MaxValue).length == rootsBefore + threads * perThread)
   }
 
+  test("concurrent statements on one SparkSession each read their own snapshot") {
+    // every statement registers the tables it names as temp views of the
+    // SparkSession, which all its threads share: a statement of another
+    // thread must not swap a view between its registration and its read
+    val (sess, ops, cat) = newSession()
+    sess.execute("CREATE TABLE snap (id bigint PRIMARY KEY, n bigint NOT NULL)")
+    sess.execute("INSERT INTO snap VALUES (1, 0)")
+    val stale = new SqlSession(spark, ops, cat)
+    stale.execute("BEGIN")
+    sess.execute("UPDATE snap SET n = 1 WHERE id = 1")
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val readers = Seq(stale -> 0L, sess -> 1L).map { case (s, want) =>
+      new Thread(() =>
+        try (0 until 150).foreach { _ =>
+          val Left(df) = s.execute("SELECT n FROM snap WHERE id = 1"): @unchecked
+          val got = df.collect().head.getLong(0)
+          if (got != want) wrong.add(s"read $got, wanted $want"): Unit
+        } catch { case t: Throwable => wrong.add(t.toString): Unit })
+    }
+    readers.foreach(_.start()); readers.foreach(_.join(300000))
+    stale.execute("ROLLBACK")
+    assert(wrong.isEmpty, s"${wrong.size} reads saw another statement's " +
+      s"snapshot: ${wrong.peek()}")
+  }
+
   test("materialized view defined inside a transaction survives the commit") {
     val (sess, ops, cat) = newSession()
     sess.execute("CREATE TABLE src (k bigint PRIMARY KEY, v bigint NOT NULL)")
