@@ -255,15 +255,15 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long, String)]
     var stmtJobsMark = 0L
     // per-statement ROUTE-ADMISSION deltas (VERDICT r13 #5): which
-    // variant of the counting-IVM fold-in each statement or query took
-    // — driver or distributed — so a silent route downgrade (to the
-    // mini path or a rebuild) is visible in every bench artifact
+    // sink of the counting-IVM fold-in each statement or query took
+    // — splice or merge — so a silent route downgrade (to the mini
+    // path or a rebuild) is visible in every bench artifact
     def foldInCounters(): Array[Long] = Array(
-      graft.core.Ops.driverFoldIns.get(),
-      graft.core.Ops.distributedFoldIns.get())
+      graft.core.Ops.splicedFoldIns.get(),
+      graft.core.Ops.mergedFoldIns.get())
     def foldInFields(since: Array[Long],
         now: Array[Long] = foldInCounters()): Seq[(String, String)] =
-      Seq("fold_in_drv", "fold_in_dist").zip(now).zip(since)
+      Seq("fold_in_splice", "fold_in_merge").zip(now).zip(since)
         .map { case ((k, v), v0) => k -> (v - v0).toString }
     var stmtRouteMark: Array[Long] = foldInCounters()
     graft.sql.GraftSql.stmtProbe = Some { (sql, sec) =>

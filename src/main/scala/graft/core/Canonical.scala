@@ -467,7 +467,7 @@ object Canonical {
       // of 0, which asserts the input is empty), then per-group
       // sort/split/write on the driver; any surprise falls through
       val (es, ekb) = onEngine(engine, kbDf, smallShuffle = true,
-        interpretedOk = interpretedCollectOk(routes, rowBound, dataSchema))
+        interpretedOk = interpretedCollectOk(rowBound, dataSchema))
       val rows: Option[Array[Row]] =
         if (rowBound.contains(0L)) Some(Array.empty)
         else Ops.exactRouteOr(Option.empty[Array[Row]])(
@@ -488,9 +488,9 @@ object Canonical {
       // one-job limit — lives on the engine clone, see
       // GraftBridge.engineSession.) `probeFold` is the caller's
       // OPPOSITE-direction bet: the input is a grouped FOLD whose output
-      // collapses to the group count (a retraction's net delta at result
-      // granularity — VERDICT r13 #3: the sample + write job pair cost
-      // ~570 ms for a 512-row delta). Over the cap, the same bounded
+      // collapses to the group count (an aggregate build — VERDICT r13
+      // #3: the sample + write job pair cost ~570 ms for a 512-row
+      // delta). Over the cap, the same bounded
       // fallback applies.
       val cap = Ops.adaptiveRowCap(dataSchema, Ops.DriverPatchMaxRows)
       val probed: Option[Array[Row]] =
@@ -783,9 +783,9 @@ object Canonical {
 
 
   /** The byte-admitted collect sites' interpreted admission: estimated
-    * row bytes (row bound × schema width) at or under
-    * [[Routes.interpretedCollectMaxBytes]]. The interpreted discipline
-    * (see [[onEngine]]) exists because a metadata-sized frame's data
+    * row bytes (row bound × schema width) at or under 16 MB, one value
+    * for every `Ops`. The interpreted discipline (see [[onEngine]])
+    * exists because a metadata-sized frame's data
     * work is dwarfed by janino compilation per plan shape — but the
     * byte budget admits up to [[Ops.DriverPatchHardRowCap]] (1M) rows,
     * and above ~64Ki rows the interpreted evaluation of the collect's
@@ -801,10 +801,9 @@ object Canonical {
     * 16 MB of estimated row bytes sits between the two measured points.
     * Unknown bounds stay interpreted — every such caller is
     * metadata-sized by construction. */
-  private[graft] def interpretedCollectOk(routes: Routes,
-      rowBound: Option[Long], schema: StructType): Boolean =
-    rowBound.forall(r => r * math.max(16, schema.defaultSize) <=
-      routes.interpretedCollectMaxBytes)
+  private[graft] def interpretedCollectOk(rowBound: Option[Long],
+      schema: StructType): Boolean =
+    rowBound.forall(r => r * math.max(16, schema.defaultSize) <= (16L << 20))
 
   /** A small materialization whose schema the driver writer handles and
     * whose caller-known row bound fits the driver cap takes the DRIVER

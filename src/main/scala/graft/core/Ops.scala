@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, LocalFold, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -90,8 +91,7 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       // codegen compile. Unknown bounds keep the interpreted default —
       // every such caller is metadata-sized by construction.
       val (es, bound) = Canonical.onEngine(engine, df, smallShuffle = true,
-        interpretedOk = Canonical.interpretedCollectOk(routes, rowBound,
-          df.schema))
+        interpretedOk = Canonical.interpretedCollectOk(rowBound, df.schema))
       Canonical.withJobDesc(es, "graft:collect")(bound.collect())
     }
 
@@ -134,10 +134,11 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** Folds widen types (sum(int)=long, sum(decimal(p,s))=decimal(p+10,s));
     * the canonical format keeps the declared column types, so fold
     * outputs are cast back before materialization — otherwise chunk
-    * parquet types drift from the stamped schemaJson. */
+    * parquet types drift from the stamped schemaJson. The columns come
+    * out in `order` (default: `df`'s own). */
   private def castValues(df: DataFrame, declared: StructType,
-      valueCols: Seq[String]): DataFrame =
-    df.select(df.columns.toSeq.map { c =>
+      valueCols: Seq[String], order: Option[Seq[String]] = None): DataFrame =
+    df.select(order.getOrElse(df.columns.toSeq).map { c =>
       // cast only on a REAL type difference: types equal up to
       // nullability flags (array containsNull, struct field nullable)
       // are the same canonical type, and Catalyst rejects such "casts"
@@ -216,7 +217,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** The rows of `chunks` (a table of `schema` keyed on `keyCols`) with a
     * per-row tag in column [[Ops.TagCol]]: each chunk's own tag, or the
     * tag of the key-bytes range its key falls in (rows in no range drop
-    * out) — the input of every batched per-chunk or per-region job.
+    * out) — the input of every batched per-chunk or per-region job — or
+    * with no tag column ([[Ops.RowTag.Untagged]]).
     *
     * Byte-admitted chunks are read on the driver into a LocalRelation:
     * [[org.apache.spark.sql.LocalFold]] then evaluates the Filters,
@@ -236,7 +238,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       target: Long, chunks0: Seq[ChunkMeta], tag: Ops.RowTag): DataFrame = {
     import scala.jdk.CollectionConverters._
     val schema = Canonical.normalizeSchema(schema0, keyCols)
+    val outSchema = if (tag == Ops.RowTag.Untagged) schema
+      else schema.add(Ops.TagCol, org.apache.spark.sql.types.StringType,
+        nullable = false)
     val chunks = chunks0.distinctBy(_.hash)
+    if (chunks.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row], outSchema)
     val rows = chunks.iterator.map(_.rows).sum
     val driverOk = routes.driverPatch && DriverChunks.supported(schema) &&
       rows <= Ops.DriverZeroJobMaxRows &&
@@ -247,18 +254,24 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       val tagged = Canonical.parIo(chunks) { c =>
         val rs = DriverChunks.readRows(
           java.nio.file.Paths.get(store.chunkPath(c.hash)), schema)
-        val tagOf: Row => String = tag match {
-          case Ops.RowTag.PerChunk(of) => val t = of(c.hash); _ => t
-          case Ops.RowTag.PerRange(of) => val rg = of(c.hash); r => rg.tagOf(kb(r))
+        tag match {
+          case Ops.RowTag.Untagged => rs
+          case Ops.RowTag.PerChunk(of) =>
+            val t = of(c.hash)
+            rs.map(r => Row.fromSeq(r.toSeq :+ t))
+          case Ops.RowTag.PerRange(of) =>
+            val rg = of(c.hash)
+            rs.flatMap(r => Option(rg.tagOf(kb(r))).map(t => Row.fromSeq(r.toSeq :+ t)))
         }
-        rs.flatMap(r => Option(tagOf(r)).map(t => Row.fromSeq(r.toSeq :+ t)))
       }.flatten
-      Some(spark.createDataFrame(tagged.asJava, schema.add(
-        Ops.TagCol, org.apache.spark.sql.types.StringType, nullable = false)))
+      Some(spark.createDataFrame(tagged.asJava, outSchema))
     }
     def scanRead: DataFrame = {
       val scanned = scanChunkSubset(schema.json, keyCols, target, chunks)
       tag match {
+        case Ops.RowTag.Untagged =>
+          scanned.select(schema.fieldNames.map(n => col(n)
+            .as(n, org.apache.spark.sql.types.Metadata.empty)): _*)
         case Ops.RowTag.PerChunk(of) =>
           scanned.withColumn(Ops.TagCol, Canonical.fileTagUdf(spark,
             chunks.map(c => store.chunkPath(c.hash) -> of(c.hash)).toMap)(
@@ -280,6 +293,13 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     }
     (if (driverOk) driverRead else None).getOrElse(scanRead)
   }
+
+  /** The rows of table version `m`'s chunks `cs`, in its own schema and
+    * untagged, under [[chunkFrame]]'s admission: driver-resident when
+    * byte-admitted, a scan otherwise — the leaves of every incremental
+    * refresh plan. */
+  private def chunkRows(m: TableMeta, cs: Seq[ChunkMeta]): DataFrame =
+    chunkFrame(m.schema, m.keyCols, m.chunkTargetRows, cs, Ops.RowTag.Untagged)
 
   def scanOrdered(ref: TableRef): DataFrame = {
     val m = meta(ref)
@@ -1375,8 +1395,8 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     // 2b. Counting-IVM fold-in (non-unique re-keys — aggregate views):
     //     the row-level source delta folds into the previous result —
     //     inserted contributions as they are, deleted ones negated,
-    //     liveness-0 groups deleted — on the driver when the changed
-    //     chunks are byte-admitted, else distributed. An append has
+    //     liveness-0 groups deleted — one plan, on the driver when the
+    //     changed chunks are byte-admitted, else as jobs. An append has
     //     nothing to retract, so any combinable fold takes it; deletes
     //     need an invertible, linear fold with a liveness column (see
     //     retractionSpec). Cost O(delta + touched result regions), NOT
@@ -1395,10 +1415,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     //     and the n-way mini merge of a first build degenerates to the
     //     flat shuffle anyway (every mini spans the whole group space).
     //     Refreshes keep their O(delta) contract WITHOUT the mini
-    //     substrate: appends, deletes and updates take the fold-in
-    //     (driver or distributed) — the routes that never touch minis
-    //     — and the rare declines (a NULL-contract trip, a delta over
-    //     both variants' caps) fall to the mini path, which computes
+    //     substrate: appends, deletes and updates take the fold-in —
+    //     the route that never touches minis — and the rare declines
+    //     (a NULL-contract trip, a repeated contribution of a member
+    //     neither linear nor idempotent) fall to the mini path, which computes
     //     missing minis on demand in one batched job and memoizes them
     //     (the cost moves from EVERY build to the first refresh that
     //     actually needs the substrate). Non-invertible views (MIN/MAX/
@@ -1542,15 +1562,17 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
   /** O(delta) refresh of a uniqueKeys re-key: the row-level delta of
     * the changed source chunks, mapped through the row-local transform
     * and spliced onto the previous result ([[spliceUnique]]) — no mini
-    * tables are computed or written. The delta comes from the driver
-    * when the changed chunks are byte-admitted ([[sourceRowDelta]]: no
-    * Spark job for non-generator transforms, since LocalFold evaluates
-    * the delta plan on the driver), otherwise from one distributed net
-    * ([[Ops.rowNet]]) over the changed chunks' contributions; either
-    * way at most [[Ops.PatchMaxDeltaRows]] (width-adapted) rows per side
-    * reach the driver. A small row delta scattered over MANY chunks — a
-    * one-row-per-chunk DML changes every chunk hash while leaving almost
-    * every row identical — therefore splices instead of rebuilding.
+    * tables are computed or written. The delta is one plan: the net
+    * ([[Ops.rowNet]]) of the changed chunks' contributions, whose leaves
+    * ([[chunkRows]]) decide where it runs — byte-admitted chunks are
+    * driver rows, and LocalFold evaluates the net over them with no
+    * Spark job; scanned chunks net in one shuffle. Either way at most
+    * [[Ops.PatchMaxDeltaRows]] (width-adapted) rows per side reach the
+    * driver, and a source update the transform is insensitive to (a
+    * price change under a custkey index) splices nothing. A small row
+    * delta scattered over MANY chunks — a one-row-per-chunk DML changes
+    * every chunk hash while leaving almost every row identical —
+    * therefore splices instead of rebuilding.
     * None — the caller rebuilds — when no previous version applies, too
     * many chunks changed, the delta is wide or over the caps, or the
     * splice does not pay. Exactness: transform∘diff == diff∘transform
@@ -1566,40 +1588,26 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       if (changed.isEmpty) Some(prev.hash)
       else if (changed.length > Ops.PatchMaxChangedChunks) None
       else {
-        val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
-        // driver: the source-row delta through the transform, re-diffed:
-        // a source update the transform is insensitive to (a price
-        // change under a custkey index) splices nothing
-        def viaDriver: Option[Ops.RowDelta] =
-          sourceRowDelta(m, pv.removed, pv.added).flatMap {
-            case (insSrc, delSrc) => Ops.routeOr(Option.empty[Ops.RowDelta]) {
-              for {
-                ins <- driverContributions(t, m, pm, insSrc, cap)
-                del <- driverContributions(t, m, pm, delSrc, cap)
-              } yield Ops.multisetRowDiff(pm.schema, ins, del)
-            }
-          }
-        // distributed: behind the wide-delta guard — above a quarter of
-        // the source rows the single-pass rebuild reads and writes less.
-        // Result rows are unique (the uniqueKeys contract), so every net
-        // is ±1 and its sign alone says which side a row is on.
-        def viaNet: Option[Ops.RowDelta] =
-          if (4 * changed.iterator.map(_.rows).sum >
+        val (added, removed) = (chunkRows(m, pv.added), chunkRows(m, pv.removed))
+        // scanned leaves sit behind the wide-delta guard: above a quarter
+        // of the source rows the single-pass rebuild reads and writes less
+        if (!(LocalFold.resident(added) && LocalFold.resident(removed)) &&
+            4 * changed.iterator.map(_.rows).sum >
               m.chunks.iterator.map(_.rows).sum) None
-          else Ops.routeOr(Option.empty[Ops.RowDelta]) {
-            val n = pm.schema.length
-            val net = Ops.rowNet(
-              contributions(t, pm, readSourceChunks(m, pv.added)),
-              contributions(t, pm, readSourceChunks(m, pv.removed)))
-              .limit(2 * cap + 1).collect()
-            val (ins, del) = net.toSeq.partition(_.getLong(n) > 0L)
-            if (ins.length > cap || del.length > cap) None
-            else Some((ins.map(r => Row.fromSeq(r.toSeq.take(n))),
+        else Ops.routeOr(Option.empty[(Seq[Row], Seq[Row])]) {
+          val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
+          val n = pm.schema.length
+          val net = Ops.rowNet(contributions(t, pm, added),
+            contributions(t, pm, removed))
+          // result rows are unique (the uniqueKeys contract), so every
+          // net is ±1 and its sign alone says which side a row is on
+          val (ins, del) = GraftBridge.localRelationRows(net)
+            .getOrElse(net.limit(2 * cap + 1).collect()).toSeq
+            .partition(_.getLong(n) > 0L)
+          Option.when(ins.length <= cap && del.length <= cap)(
+            (ins.map(r => Row.fromSeq(r.toSeq.take(n))),
               del.map(r => Row.fromSeq(r.toSeq.take(n)))))
-          }
-        viaDriver.orElse(viaNet).flatMap { case (ins, del) =>
-          spliceUnique(m, fold, prev, pm, ins, del)
-        }
+        }.flatMap { case (ins, del) => spliceUnique(m, fold, prev, pm, ins, del) }
       }
     }
 
@@ -1633,35 +1641,10 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           rowBound = Some(ins.length.toLong))(Canonical.Ungrouped)
         if (deltaMeta.schemaJson != pm.schemaJson) None
         else {
-          Ops.distributedFoldIns.incrementAndGet()
+          Ops.mergedFoldIns.incrementAndGet()
           Some(merge(Seq(prev, TableRef(deltaMeta.tableHash)), fold).hash)
         }
       }
-    }
-  }
-
-  /** Byte-admitted SOURCE-row delta between two table versions' changed
-    * chunks, read driver-side and diffed under the canonical row
-    * identity ([[Ops.multisetRowDiff]]): Some((inserted, deleted)) when
-    * the changed chunks fit the row/byte caps and the reads succeed —
-    * None otherwise (callers fall back to their distributed paths).
-    * Shared by the uniqueKeys splice and the aggregate fold-in. */
-  private def sourceRowDelta(m: TableMeta, removed: Seq[ChunkMeta],
-      added: Seq[ChunkMeta]): Option[Ops.RowDelta] = {
-    if (!routes.driverMaterialize) return None
-    val changed = removed ++ added
-    val rows = changed.iterator.map(_.rows).sum
-    if (rows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-        !chunkBytes(changed).exists(_ <= routes.driverMaxBytes) ||
-        !DriverChunks.supported(m.schema)) {
-      return None
-    }
-    Ops.routeOr(Option.empty[Ops.RowDelta]) {
-      def rowsOf(cs: Seq[ChunkMeta]): Seq[Row] =
-        Canonical.parIo(cs)(c => DriverChunks.readRows(
-          java.nio.file.Paths.get(store.chunkPath(c.hash)), m.schema))
-          .flatten
-      Some(Ops.multisetRowDiff(m.schema, rowsOf(added), rowsOf(removed)))
     }
   }
 
@@ -1679,16 +1662,40 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     * decomposition a pure function of the key set (pinned by the
     * incremental == from-scratch hash specs).
     *
-    * One rule, two variants, tried in order: the DRIVER fold-in
-    * ([[foldInDriver]]) when the changed source chunks are
-    * byte-admitted, then the DISTRIBUTED fold-in ([[foldInDistributed]]),
-    * which reuses the driver's delta when the driver already read it.
-    * Cost is O(delta + result regions the delta keys touch), not the
-    * O(groups × chunks) mini re-merge a group-scattered delta forces:
-    * at 100 TB aggregate maintenance is priced by the RESULT table, not
-    * the fact table. None (the mini path) when no previous version
-    * applies, the delta is inadmissible, or a variant declines for
-    * good. */
+    * One plan, whose leaves decide where it runs: the changed chunks'
+    * contributions net in one step ([[Ops.rowNet]]; a per-row transform
+    * commutes with multiset diff, so value-insensitive updates cancel),
+    * evaluated once — on the driver by LocalFold when the leaves are
+    * byte-admitted chunk rows ([[chunkRows]]), else cached for the
+    * jobs below. ONE probe over the net answers insert-only vs
+    * delete-bearing, the NULL belt of a retraction's delta
+    * contributions, and whether any net row stands for more than one
+    * contribution. Each net row then folds ONCE — scaled by its
+    * multiplicity in a LINEAR member ([[FoldSpec.scaleContrib]]), as it
+    * is in an idempotent one; a member that is neither (a user XOR)
+    * declines a repeated contribution — the deleted side through the
+    * fold-declared inversion, into the folded delta: one row per
+    * touched group.
+    *
+    * One sink choice, by the folded delta's size. A bounded collect (no
+    * job over driver-resident leaves) brings up to the driver row cap
+    * home; the touched groups' PREVIOUS rows, read from the key-pruned
+    * result chunks under the same caps, then fold with it on the driver
+    * and splice onto `prev` ([[patchTableBounded]], zero jobs under the
+    * driver caps), deleting the groups whose liveness reached 0. A
+    * delta over the cap, or touching more previous rows or chunks than
+    * the splice admits, is materialized as a delta table and folded in
+    * by the region merge ([[merge]], or [[mergeRetract]] for a delta
+    * with deletes, which also drops liveness-0 groups), rewriting only
+    * dirty regions. Cost is O(delta + result regions the delta keys
+    * touch), not the O(groups × chunks) mini re-merge a group-scattered
+    * delta forces: at 100 TB aggregate maintenance is priced by the
+    * RESULT table, not the fact table. None (the mini path) when no
+    * previous version applies, the delta is inadmissible, or a NULL the
+    * non-null contract rules out shows in the delta or the spliced
+    * previous rows (previous partials outside the splice ride the
+    * caller's non-null contract, which the SQL layer enforces at write
+    * time — guardNotNull). */
   private def rekeyDeltaFoldIn(m: TableMeta, t: ColTransform,
       fold: FoldSpec, prev: TableRef, target: Long): Option[String] =
     previousVersion(m, t, fold, prev, target).flatMap { pv =>
@@ -1704,24 +1711,124 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
           // it equal, deletes shrink it), so a fold that cannot retract
           // declines here for free instead of paying the reads and diff
           (addedRows <= removedRows && retractPlan.isEmpty) ||
-          // routes.driverMaterialize doubles as the route-matrix master
-          // switch (specs force it off to exercise the reference mini
-          // path): honored by both variants, though the distributed one
-          // never touches driver memory
+          // the route-matrix master switch (specs force it off to
+          // exercise the reference mini path)
           !routes.driverMaterialize) None
-      else {
-        val delta = sourceRowDelta(m, removed, added)
-        def distributed: Option[String] = {
-          import scala.jdk.CollectionConverters._
-          def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, m.schema)
-          foldInDistributed(retractPlan, t, fold, prev, pm,
-            delta.fold(readSourceChunks(m, added))(d => local(d._1)),
-            delta.fold(readSourceChunks(m, removed))(d => local(d._2)),
-            delta.fold(addedRows + removedRows)(d =>
-              (d._1.length + d._2.length).toLong))
+      else Ops.routeOr(Option.empty[String]) {
+        val tag = Ops.NetCol
+        val allCols = pm.schema.fieldNames.toIndexedSeq
+        val valueCols = allCols.filterNot(pm.keyCols.contains)
+        val net0 = Ops.rowNet(contributions(t, pm, chunkRows(m, added)),
+          contributions(t, pm, chunkRows(m, removed)))
+        val local = GraftBridge.localFrame(net0)
+        val net = local.getOrElse(net0.persist())
+        try {
+          val invNull = retractPlan.toSeq.flatMap(_.inverts.keys)
+            .map(col(_).isNull).foldLeft(lit(false))(_ || _)
+          val probe = net.agg(
+            max(when(invNull, 1L).otherwise(0L)).as("nulls"),
+            max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels"),
+            max(abs(col(tag))).as("mult"))
+          val probeRow = GraftBridge.localRelationRows(probe).map(_.head)
+            .getOrElse(Canonical.withJobDesc(spark, "graft:retract-net")(
+              probe.head()))
+          // an empty net: the view's contributions did not change
+          if (probeRow.isNullAt(2)) return Some(prev.hash)
+          val hasDeletes = probeRow.getLong(1) == 1L
+          val retract = retractPlan.filter(_ => hasDeletes)
+          if (hasDeletes && (retract.isEmpty || probeRow.getLong(0) == 1L))
+            return None
+          // |net| is the number of IDENTICAL contribution rows a net row
+          // stands for — for a count-shaped view every contribution in a
+          // group is the same (g, 1) row, so a retention purge of M rows
+          // nets to ONE row with multiplicity M, folded as one scaled
+          // contribution: O(distinct groups), not O(deleted rows)
+          val scaled = allCols.map(n =>
+            if (pm.keyCols.contains(n)) Some(col(n))
+            else fold.scaleContrib(n, abs(col(tag)))
+              .orElse(Option.when(Ops.idempotentMember(fold, n))(col(n))))
+          if (probeRow.getLong(2) > 1L && scaled.contains(None)) return None
+          val proj = scaled.zip(allCols).map { case (c, n) => c.getOrElse(col(n)) }
+          val insT = net.where(col(tag) > 0L).select(proj: _*)
+          // the folded rows in the result's column order and types
+          def foldRows(df: DataFrame): DataFrame = castValues(
+            df.groupBy(pm.keyCols.map(col): _*)
+              .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*),
+            pm.schema, valueCols, Some(allCols))
+          // inversion first (a per-row projection), then the same scaling
+          // by |net| — the linear folds commute the two
+          val folded = foldRows(retract.fold(insT)(r => insT.union(
+            net.where(col(tag) < 0L)
+              .select(allCols.map(n => r.inverts.getOrElse(n, col(n)).as(n)) :+
+                col(tag): _*)
+              .select(proj: _*))))
+          // the bounded collect: no job over driver-resident leaves; over
+          // scanned ones a bet that the delta collapses to the touched
+          // GROUP count, placed only on moderate source deltas
+          val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
+          val changedRows = addedRows + removedRows
+          val deltaRows: Option[Seq[Row]] =
+            GraftBridge.localRelationRows(folded).orElse(
+              Option.when(changedRows <= Ops.ProbeFoldMaxSourceRows)(
+                Canonical.withJobDesc(spark, "graft:fold-in")(
+                  folded.limit(cap + 1).collect())))
+              .map(_.toSeq).filter(_.length <= cap)
+          val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
+          val invIdx = retract.toSeq.flatMap(_.inverts.keys)
+            .map(pm.schema.fieldIndex).toArray
+          // SPLICE sink: the touched groups' previous rows under the
+          // driver caps; a splice over more than half the result's chunks
+          // does not pay (each hit chunk is a chunk the splice rewrites,
+          // so this is checked before any read)
+          val maxTouched = math.max(8, pm.chunks.length / 2)
+          val spliced: Option[TableRef] = deltaRows.flatMap { d =>
+            val hit = chunksForKeys(pm, d.map(r => kIdx.map(r.get)))
+            if (hit.length > maxTouched || hit.iterator.map(_.rows).sum > cap ||
+                !chunkBytes(hit).exists(_ <= routes.driverMaxBytes)) None
+            else {
+              val keyId = Ops.rowIdentity(pm.schema, pm.keyCols)
+              val touched = d.iterator.map(keyId).toSet
+              val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
+                java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
+                .flatten.filter(r => touched(keyId(r)))
+              if (prevRows.exists(r => invIdx.exists(r.isNullAt))) return None
+              import scala.jdk.CollectionConverters._
+              val newRows = collectDriverBounded(foldRows(
+                spark.createDataFrame((prevRows ++ d).asJava, pm.schema))).toSeq
+            val (live, dead) = retract.fold((newRows, Seq.empty[Row])) { r =>
+                val liveIdx = pm.schema.fieldIndex(r.livenessCol)
+                newRows.partition(_.getLong(liveIdx) != 0L)
+              }
+              patchTableBounded(prev, live, dead.map(r => kIdx.map(r.get)),
+                Some(maxTouched))
+            }
+          }
+          spliced match {
+            case Some(out) =>
+              Ops.splicedFoldIns.incrementAndGet()
+              Some(out.hash)
+            case None =>
+              // MERGE sink: the folded delta as a table at result
+              // granularity, folded in by the region merge
+              import scala.jdk.CollectionConverters._
+              val deltaMeta = Canonical.materialize(engine, store, routes,
+                deltaRows.fold(folded)(d =>
+                  spark.createDataFrame(d.asJava, pm.schema)),
+                pm.keyCols, pm.chunkTargetRows,
+                rowBound = deltaRows.map(_.length.toLong).orElse(
+                  Option.when(!t.generator)(changedRows)))(Canonical.Ungrouped)
+              if (deltaMeta.schemaJson != pm.schemaJson) None
+              else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
+              else {
+                Ops.mergedFoldIns.incrementAndGet()
+                val delta = TableRef(deltaMeta.tableHash)
+                Some(retract.fold(merge(Seq(prev, delta), fold))(r =>
+                  mergeRetract(prev, delta, fold, r.livenessCol)).hash)
+              }
+          }
+        } finally {
+          if (local.isEmpty) net.unpersist(): Unit
         }
-        delta.fold(distributed)(d =>
-          foldInDriver(retractPlan, m, t, fold, prev, pm, d)(distributed))
       }
     }
 
@@ -1784,96 +1891,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       }
     }
 
-  /** DRIVER variant of the counting-IVM fold-in ([[rekeyDeltaFoldIn]]):
-    * the byte-admitted source delta `src` maps to contributions and
-    * re-diffs on the driver, the touched groups' PREVIOUS rows are read
-    * from the key-pruned result chunks, and ONE small fold over
-    * {previous partials} ∪ {inserted} ∪ {inverted deleted} — the
-    * previous rows participate as the partial folds they are (the
-    * combinable contract) — splices onto `prev` through
-    * [[patchTableBounded]] (zero jobs under the driver caps), deleting
-    * the groups whose liveness reached 0. A decline the distributed
-    * variant can still take — contributions, touched result rows or
-    * touched result chunks over the driver caps, any failure — hands
-    * over to `orDistributed`; deletes without the retraction admission
-    * `rp`, or a NULL the non-null contract rules out, decline for good
-    * (None: the exact mini path). */
-  private def foldInDriver(rp: Option[Ops.RetractPlan], m: TableMeta,
-      t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      src: Ops.RowDelta)(orDistributed: => Option[String]): Option[String] =
-    Ops.routeOr(orDistributed) {
-      import scala.jdk.CollectionConverters._
-      val cap = Ops.adaptiveRowCap(pm.schema, Ops.PatchMaxDeltaRows).toInt
-      val insT0 = driverContributions(t, m, pm, src._1, cap)
-        .getOrElse(return orDistributed)
-      val delT0 = driverContributions(t, m, pm, src._2, cap)
-        .getOrElse(return orDistributed)
-      // re-diff at the contribution level: an update the view is
-      // insensitive to cancels out entirely
-      val (insT, delT) = Ops.multisetRowDiff(pm.schema, insT0, delT0)
-      if (insT.isEmpty && delT.isEmpty) return Some(prev.hash)
-      val retract = if (delT.isEmpty) None else Some(rp.getOrElse(return None))
-      // belt for the caller-declared non-null contract of a retraction:
-      // a NULL observed in any inverted column (delta or previous
-      // partials) means the declaration lied somewhere — decline to the
-      // exact paths rather than compute wrong NULL semantics (this
-      // cannot catch a historical NULL outside the touched rows, which
-      // is exactly why the declaration is a contract)
-      val invIdx = retract.toSeq.flatMap(_.inverts.keys)
-        .map(pm.schema.fieldIndex).toArray
-      def anyNull(rs: Iterable[Row]): Boolean =
-        rs.exists(r => invIdx.exists(r.isNullAt))
-      if (anyNull(insT) || anyNull(delT)) return None
-      // groups are identified by their canonical key bytes
-      val kIdx = pm.keyCols.map(pm.schema.fieldIndex)
-      val keyId = Ops.rowIdentity(pm.schema, pm.keyCols)
-      val touchedRows = (insT.iterator ++ delT.iterator).toSeq
-        .distinctBy(keyId)
-      // the touched groups' PREVIOUS rows, read driver-side from the
-      // key-pruned result chunks under the usual row/byte caps; a splice
-      // over more than half the result's chunks does not pay (each hit
-      // chunk is a chunk the splice rewrites, so this is checked before
-      // any read)
-      val hit = chunksForKeys(pm, touchedRows.map(r => kIdx.map(r.get)))
-      val maxTouched = math.max(8, pm.chunks.length / 2)
-      if (hit.length > maxTouched || hit.iterator.map(_.rows).sum > cap ||
-          !chunkBytes(hit).exists(_ <= routes.driverMaxBytes)) {
-        return orDistributed
-      }
-      val touched = touchedRows.iterator.map(keyId).toSet
-      val prevRows = Canonical.parIo(hit)(c => DriverChunks.readRows(
-        java.nio.file.Paths.get(store.chunkPath(c.hash)), pm.schema))
-        .flatten.filter(r => touched(keyId(r)))
-      if (anyNull(prevRows)) return None
-      // ONE local fold plan: previous partials ∪ inserted ∪ the deleted
-      // contributions inverted (fold-declared, per column) — the Union
-      // and Aggregate over driver rows fold on the driver
-      // (LocalFold), so the collect below launches no job
-      def local(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, pm.schema)
-      val kept = local(prevRows ++ insT)
-      val contribs = retract.fold(kept)(r => kept.union(local(delT).select(
-        pm.schema.fieldNames.toIndexedSeq.map(n =>
-          r.inverts.getOrElse(n, col(n)).as(n)): _*)))
-      val valueCols = pm.schema.fieldNames.toSeq
-        .filterNot(pm.keyCols.contains)
-      val folded = contribs.groupBy(pm.keyCols.map(col): _*)
-        .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-      val newRows = collectDriverBounded(
-        castValues(folded, pm.schema, valueCols)
-          .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)).toSeq
-      val (live, dead) = retract.fold((newRows, Seq.empty[Row])) { r =>
-        val liveIdx = pm.schema.fieldIndex(r.livenessCol)
-        newRows.partition(_.getLong(liveIdx) != 0L)
-      }
-      patchTableBounded(prev, live, dead.map(r => kIdx.map(r.get)),
-        Some(maxTouched)) match {
-        case Some(out) =>
-          Ops.driverFoldIns.incrementAndGet()
-          Some(out.hash)
-        case None => orDistributed
-      }
-    }
-
   /** A re-key's per-row CONTRIBUTIONS to its result `pm`: `t`'s
     * rowFilter and projection over source rows, in the result's column
     * order — the rows every refresh diff compares. */
@@ -1881,131 +1898,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       df: DataFrame): DataFrame =
     t.rowFilter.map(df.where).getOrElse(df).select(t.columns: _*)
       .select(pm.schema.fieldNames.toIndexedSeq.map(col): _*)
-
-  /** [[contributions]] of driver-resident source rows (schema of `m`),
-    * collected over a LocalRelation — no job for non-generator
-    * transforms, whose output is at most the source rows — and, for a
-    * generator, LIMIT-guarded: its fan-out is unbounded by the source
-    * delta, so the cap rejects before the rows land. None above `cap`
-    * rows. */
-  private def driverContributions(t: ColTransform, m: TableMeta,
-      pm: TableMeta, rs: Seq[Row], cap: Int): Option[Seq[Row]] =
-    if (rs.isEmpty) Some(Nil)
-    else {
-      import scala.jdk.CollectionConverters._
-      val df = contributions(t, pm, spark.createDataFrame(rs.asJava, m.schema))
-      val out = collectDriverBounded(if (t.generator) df.limit(cap + 1) else df)
-      if (out.length > cap) None else Some(out.toSeq)
-    }
-
-  /** A table version's changed chunks as a frame in the table's own
-    * schema (field-id read metadata stripped) — the input of the
-    * distributed fold-in when the driver holds no delta. */
-  private def readSourceChunks(m: TableMeta, cs: Seq[ChunkMeta]): DataFrame =
-    if (cs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], m.schema)
-    else scanChunkSubset(m.schemaJson, m.keyCols, m.chunkTargetRows, cs)
-      .select(m.schema.fieldNames.map(nm => col(nm)
-        .as(nm, org.apache.spark.sql.types.Metadata.empty)): _*)
-
-  /** DISTRIBUTED variant of the counting-IVM fold-in
-    * ([[rekeyDeltaFoldIn]]), for deltas over the driver caps: the
-    * contributions of the added and removed source rows net in one
-    * shuffle ([[Ops.rowNet]]; a per-row transform commutes with
-    * multiset diff, so value-insensitive updates cancel as on the
-    * driver), each net row folds ONCE — scaled by its multiplicity in
-    * a LINEAR member ([[FoldSpec.scaleContrib]]), as it is in an
-    * idempotent one — the deleted side through the fold-declared
-    * inversion, one shuffle builds the net delta table at result
-    * granularity, and the region merge folds it into `prev` rewriting
-    * only dirty regions ([[mergeRetract]] for a delta with deletes,
-    * which also drops liveness-0 groups). ONE probe job over the net
-    * answers insert-only vs delete-bearing, the NULL belt of a
-    * retraction's delta contributions (previous partials ride the
-    * caller's non-null contract, which the SQL layer enforces at write
-    * time — guardNotNull) and whether any net row stands for more than
-    * one contribution, which a member neither linear nor idempotent
-    * (XOR) cannot fold: it declines then. Cost: O(changed source rows +
-    * dirty result regions), with no driver-resident rows the driver
-    * variant did not already hold. */
-  private def foldInDistributed(rp: Option[Ops.RetractPlan],
-      t: ColTransform, fold: FoldSpec, prev: TableRef, pm: TableMeta,
-      addedDf: => DataFrame, removedDf: => DataFrame,
-      changedRows: Long): Option[String] =
-    Ops.routeOr(Option.empty[String]) {
-      val tag = Ops.NetCol
-      val allCols = pm.schema.fieldNames.toIndexedSeq
-      val net = Ops.rowNet(contributions(t, pm, addedDf),
-        contributions(t, pm, removedDf)).persist()
-      try {
-        val invNull = rp.toSeq.flatMap(_.inverts.keys)
-          .map(col(_).isNull).foldLeft(lit(false))(_ || _)
-        val probeRow = Canonical.withJobDesc(spark, "graft:retract-net")(
-          net.agg(
-            max(when(invNull, 1L).otherwise(0L)).as("nulls"),
-            max(when(col(tag) < 0L, 1L).otherwise(0L)).as("dels"),
-            max(abs(col(tag))).as("mult")).head())
-        // an empty net: the view's contributions did not change
-        if (probeRow.isNullAt(2)) return Some(prev.hash)
-        val hasDeletes = probeRow.getLong(1) == 1L
-        val retract = rp.filter(_ => hasDeletes)
-        if (hasDeletes && (retract.isEmpty || probeRow.getLong(0) == 1L))
-          return None
-        // |net| is the number of IDENTICAL contribution rows a net row
-        // stands for — for a count-shaped view every contribution in a
-        // group is the same (g, 1) row, so a retention purge of M rows
-        // nets to ONE row with multiplicity M, folded as one scaled
-        // contribution: O(distinct groups), not O(deleted rows)
-        val mult = "_graft_mult"
-        val scaled = allCols.map(n =>
-          if (pm.keyCols.contains(n)) Some(col(n))
-          else fold.scaleContrib(n, col(mult))
-            .orElse(Option.when(Ops.idempotentMember(fold, n))(col(n))))
-        if (probeRow.getLong(2) > 1L && scaled.contains(None)) return None
-        val proj = scaled.zip(allCols).map { case (c, n) => c.getOrElse(col(n)) }
-        val insT = net.where(col(tag) > 0L)
-          .withColumnRenamed(tag, mult).select(proj: _*)
-        // inversion first (a per-row projection), then the same scaling
-        // by |net| — the linear folds commute the two
-        val valueCols = allCols.filterNot(pm.keyCols.contains)
-        val folded = retract.fold(insT)(r => insT.union(
-          net.where(col(tag) < 0L)
-            .select(allCols.map(n => r.inverts.getOrElse(n, col(n)).as(n)) :+
-              (-col(tag)).as(mult): _*)
-            .select(proj: _*)))
-          .groupBy(pm.keyCols.map(col): _*)
-          .agg(fold.aggs(valueCols).head, fold.aggs(valueCols).tail: _*)
-        // probeFold: the delta collapses to the touched GROUP count —
-        // usually metadata-sized even when changedRows is large (a
-        // group-scattered purge nets to ~|groups| rows), so bet on one
-        // limit-guarded collect + driver write over the sample + write
-        // job pair. A failed probe re-runs the fold shuffle (the net is
-        // cached, so the re-run is the shuffle alone) — the source-rows
-        // guard keeps that bounded waste off genuinely huge deltas, and
-        // a small-job-qualified bound keeps its cheaper ONE-job path
-        // (same crossover as the direct build). A generator's output is
-        // not bounded by its source rows: it bets on the tiny input.
-        val deltaProbe =
-          !Canonical.smallJob(Some(changedRows), pm.chunkTargetRows) &&
-          changedRows <= Ops.ProbeFoldMaxSourceRows
-        val deltaMeta = Canonical.materialize(engine, store, routes,
-          castValues(folded, pm.schema, valueCols), pm.keyCols,
-          pm.chunkTargetRows,
-          rowBound = if (deltaProbe || t.generator) None else Some(changedRows),
-          rowProbe = Option.when(t.generator)(changedRows),
-          probeFold = deltaProbe)(Canonical.Ungrouped)
-        if (deltaMeta.schemaJson != pm.schemaJson) None
-        else if (deltaMeta.chunks.isEmpty) Some(prev.hash)
-        else {
-          Ops.distributedFoldIns.incrementAndGet()
-          val delta = TableRef(deltaMeta.tableHash)
-          Some(retract.fold(merge(Seq(prev, delta), fold))(r =>
-            mergeRetract(prev, delta, fold, r.livenessCol)).hash)
-        }
-      } finally {
-        net.unpersist(): Unit
-      }
-    }
 
   /** Chunk-level transform: per-chunk memo lookups, one batched Spark job
     * for all missing chunks, results spliced in key order (keys are
@@ -2179,12 +2071,12 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
       hiB.map(b => Hashing.hex(b._1) + b._2).getOrElse("+inf"),
       ref.hash))
     TableRef(store.memoized(opHash) {
-      computeRange(m, lower, upper, loB, hiB).tableHash
+      computeRange(m, loB, hiB).tableHash
     })
   }
 
-  private def computeRange(m: TableMeta, lower: Option[Bound], upper: Option[Bound],
-      loB: Option[(Array[Byte], Boolean)], hiB: Option[(Array[Byte], Boolean)]): TableMeta = {
+  private def computeRange(m: TableMeta, loB: Option[(Array[Byte], Boolean)],
+      hiB: Option[(Array[Byte], Boolean)]): TableMeta = {
     def passesLow(kb: Array[Byte]): Boolean = RangeBounds.passesLow(kb, loB)
     def passesHigh(kb: Array[Byte]): Boolean = RangeBounds.passesHigh(kb, hiB)
     // in / out / intersects — the keyPrefixRangeRelation analogue
@@ -2202,46 +2094,23 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
     val recomputed: Seq[ChunkMeta] =
       if (edgeChunks.isEmpty) Nil
       else {
-        val edgeRows = edgeChunks.map(_.rows).sum
-        val edgeBytes = chunkBytes(edgeChunks)
-        // ZERO-JOB edge rewrite: at most two edge chunks per range — when
-        // byte-admitted, read them driver-side ([[DriverChunks]]), filter
-        // by the SAME byte-encoded bound tests that classified them, and
-        // hand materialize a LocalRelation (its driver route then writes
-        // the chunks without a Spark job). Row content is bit-identical
-        // to the parquet scan + rangePredicate pair (DriverChunks
-        // round-trip pinned; KeyCodec byte order IS the typed key order).
-        val driverRows: Option[Seq[org.apache.spark.sql.Row]] =
-          if (!routes.driverMaterialize ||
-              !DriverChunks.supported(m.schema) ||
-              edgeRows > Ops.adaptiveRowCap(m.schema, Ops.PatchMaxDeltaRows) ||
-              !edgeBytes.exists(_ <= routes.driverMaxBytes)) None
-          else Ops.routeOr(Option.empty[Seq[Row]]) {
-            val kEnc = KeyCodec.rowEncoder(m.schema, m.keyCols)
-            Some(Canonical.parIo(edgeChunks) { c =>
-              DriverChunks.readRows(java.nio.file.Paths.get(
-                store.chunkPath(c.hash)), m.schema)
-                .filter { r =>
-                  val kb = kEnc(r)
-                  passesLow(kb) && passesHigh(kb)
-                }
-            }.flatten)
-          }
-        val df = driverRows match {
-          case Some(rows) =>
-            import scala.jdk.CollectionConverters._
-            spark.createDataFrame(rows.asJava, m.schema)
-          case None =>
-            scanChunkSubset(m.schemaJson, m.keyCols, m.chunkTargetRows,
-                edgeChunks)
-              .where(rangePredicate(m.keyCols, lower, upper))
-        }
+        // at most two edge chunks per range, read through the refresh
+        // plans' leaf (driver rows when byte-admitted, so materialize
+        // writes them without a Spark job) and filtered by the SAME
+        // key-bytes bound test that classified them — never a typed
+        // comparison, which would equate -0.0 and 0.0 where key bytes
+        // (and table hashes) keep them apart
+        val inRange = udf((kb: Array[Byte]) =>
+          RangeBounds.passesLow(kb, loB) && RangeBounds.passesHigh(kb, hiB))
         // edge rewrite keeps the TABLE's chunk granularity (passthrough
         // chunks are cut at it; a mixed-granularity meta would break the
         // boundary assumptions of later merges)
-        Canonical.materialize(engine, store, routes, df, m.keyCols,
-          m.chunkTargetRows, rowBound = Some(edgeRows),
-          byteBound = driverRows.flatMap(_ => edgeBytes))(Canonical.Ungrouped).chunks
+        Canonical.materialize(engine, store, routes,
+          chunkRows(m, edgeChunks).where(
+            inRange(Ops.canonicalBytes(m.schema, m.keyCols))),
+          m.keyCols, m.chunkTargetRows,
+          rowBound = Some(edgeChunks.map(_.rows).sum),
+          byteBound = chunkBytes(edgeChunks))(Canonical.Ungrouped).chunks
       }
     // canonical-form repair: an edge rewrite can remove the boundary
     // key that started the chunk AFTER the cut — fuse (see
@@ -2550,34 +2419,6 @@ final class Ops(val spark: SparkSession, val store: GraftStore,
 
   private def boundBytes(schema: StructType, keyCols: Seq[String], b: Bound): Array[Byte] =
     RangeBounds.boundBytes(schema, keyCols, b)
-
-  /** Lexicographic tuple-prefix predicate over typed key columns. */
-  def rangePredicate(keyCols: Seq[String], lower: Option[Bound],
-      upper: Option[Bound]): Column = {
-    def cmp(vals: Seq[Any], strict: Boolean, gt: Boolean): Column = {
-      // gt: key > prefix (or >= if !strict); !gt: key < prefix (or <=)
-      val n = vals.length
-      def rec(i: Int): Column =
-        if (i == n - 1) {
-          val c = col(keyCols(i)); val v = lit(vals(i))
-          if (gt) { if (strict) c > v else c >= v }
-          else { if (strict) c < v else c <= v }
-        } else {
-          val c = col(keyCols(i)); val v = lit(vals(i))
-          val head = if (gt) c > v else c < v
-          head || (c === v && rec(i + 1))
-        }
-      rec(0)
-    }
-    val lo = lower.map(b => cmp(b.prefix, strict = !b.inclusive, gt = true))
-    val hi = upper.map(b => cmp(b.prefix, strict = !b.inclusive, gt = false))
-    (lo, hi) match {
-      case (Some(l), Some(h)) => l && h
-      case (Some(l), None) => l
-      case (None, Some(h)) => h
-      case (None, None) => lit(true)
-    }
-  }
 }
 
 object Ops {
@@ -2625,16 +2466,14 @@ object Ops {
   private[core] val retractCache =
     new Lru[(String, String, String), Option[RetractPlan]](512)
 
-  /** Observability counters, one per variant of the counting-IVM
-    * fold-in ([[Ops.rekeyDeltaFoldIn]]): aggregate-view deltas the
-    * DRIVER variant spliced, and deltas the DISTRIBUTED variant merged
-    * in as a table — which also counts a uniqueKeys index's insert-only
-    * delta merged in when its splice does not pay
-    * ([[Ops.spliceUnique]]). Specs pin the route a refresh took;
-    * graft.Bench reports them per query and statement. */
-  private[graft] val driverFoldIns = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val distributedFoldIns =
-    new java.util.concurrent.atomic.AtomicLong
+  /** Observability counters, one per sink of the counting-IVM fold-in
+    * ([[Ops.rekeyDeltaFoldIn]]): aggregate-view deltas SPLICED onto the
+    * previous result, and deltas MERGED in as a table — which also
+    * counts a uniqueKeys index's insert-only delta merged in when its
+    * splice does not pay ([[Ops.spliceUnique]]). Specs pin the sink a
+    * refresh took; graft.Bench reports them per query and statement. */
+  private[graft] val splicedFoldIns = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val mergedFoldIns = new java.util.concurrent.atomic.AtomicLong
 
   /** Whether value column `name` folds under an IDEMPOTENT member
     * (fold(n copies of x) == x): MIN, MAX, KMV, bitwise OR/AND. */
@@ -2666,11 +2505,12 @@ object Ops {
   /** The per-row tag column of [[Ops.chunkFrame]]. */
   private[core] val TagCol = "_graft_grp"
 
-  /** How [[Ops.chunkFrame]] tags a row: with its chunk's tag, or with the
-    * tag of the key-bytes range (of its chunk's [[KeyRanges]]) its key
-    * falls in. Both map by chunk hash. */
+  /** How [[Ops.chunkFrame]] tags a row: not at all, with its chunk's
+    * tag, or with the tag of the key-bytes range (of its chunk's
+    * [[KeyRanges]]) its key falls in. The last two map by chunk hash. */
   private[core] sealed trait RowTag
   private[core] object RowTag {
+    case object Untagged extends RowTag
     final case class PerChunk(of: Map[String, String]) extends RowTag
     final case class PerRange(of: Map[String, KeyRanges]) extends RowTag
   }
@@ -2689,10 +2529,11 @@ object Ops {
     }
   }
 
-  /** Source-rows guard for the probeFold bet ([[Canonical.materialize]]):
-    * an aggregate output is the GROUP count — usually metadata-sized —
-    * but a failed probe re-runs the fold shuffle, so the bet is only
-    * placed when the pre-fold input is moderate. 4M rows ≈ a sub-second
+  /** Source-rows guard for the probeFold bet ([[Canonical.materialize]])
+    * and the fold-in's bounded collect ([[Ops.rekeyDeltaFoldIn]]): an
+    * aggregate output is the GROUP count — usually metadata-sized — but
+    * a failed probe re-runs the fold shuffle, so the bet is only placed
+    * when the pre-fold input is moderate. 4M rows ≈ a sub-second
     * shuffle at local[32]; at 100 TB the gate keeps builds on the
     * straight job path. */
   val ProbeFoldMaxSourceRows: Long = 1L << 22
@@ -2713,52 +2554,55 @@ object Ops {
     r => java.nio.ByteBuffer.wrap(enc(r))
   }
 
-  /** Rows added and rows removed. */
-  private[core] type RowDelta = (Seq[Row], Seq[Row])
-
-  /** Multiset delta of two row collections of `schema` under
-    * [[rowIdentity]]: (`added` ∖ `removed`, `removed` ∖ `added`), each
-    * occurrence cancelling one identical row of the other side. */
-  private[core] def multisetRowDiff(schema: StructType, added: Seq[Row],
-      removed: Seq[Row]): RowDelta = {
-    val id = rowIdentity(schema, schema.fieldNames.toIndexedSeq)
-    val net = scala.collection.mutable.LinkedHashMap
-      .empty[java.nio.ByteBuffer, (Row, Int)]
-    def count(rs: Seq[Row], d: Int): Unit = rs.foreach { r =>
-      val k = id(r)
-      net.update(k, net.get(k).fold((r, d)) { case (r0, n) => (r0, n + d) })
-    }
-    count(added, 1); count(removed, -1)
-    def side(sign: Int): Seq[Row] = net.valuesIterator
-      .flatMap { case (r, n) => Iterator.fill(sign * n)(r) }.toVector
-    (side(1), side(-1))
-  }
-
   /** The signed-multiplicity column of [[rowNet]]. */
   private[core] val NetCol = "_graft_net"
 
-  /** Distributed [[multisetRowDiff]]: two frames of one schema netted
-    * under [[rowIdentity]] in ONE shuffle — each row tagged +1 (added)
-    * or −1 (removed) and grouped on its canonical bytes, zero nets
-    * dropped. Returns the schema's columns plus [[NetCol]]: > 0 for
-    * rows added, < 0 for rows removed, |net| copies each. */
+  /** The multiset delta of two frames of one schema under
+    * [[rowIdentity]]: each row tagged +1 (added) or −1 (removed),
+    * grouped on its identity, zero nets dropped. Returns the schema's
+    * columns plus [[NetCol]]: > 0 for rows added, < 0 for rows removed,
+    * |net| copies each. One plan for both placements: over
+    * driver-resident frames LocalFold evaluates it on the driver,
+    * otherwise it nets in one shuffle. Spark's own equality is the row
+    * identity for every type but floating point (where -0.0 = 0.0 and
+    * grouping normalizes values), so rows group on their values unless
+    * a column holds floats; those group on their canonical bytes (a
+    * UDF projection), the row carried as one struct. */
   private[core] def rowNet(added: DataFrame, removed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{BinaryType, LongType, StructField}
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+      FloatType, MapType}
     val schema = StructType(added.schema.fields.map(_.copy(nullable = true)))
     val cols = schema.fieldNames.toIndexedSeq
-    val rb = "_graft_rb"
-    val enc = KeyCodec.rowEncoder(schema, cols)
-    val tagged = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
-      schema.add(StructField(rb, BinaryType, nullable = false))
-        .add(StructField(NetCol, LongType, nullable = false)))
-    def tag(df: DataFrame, sign: Long): DataFrame =
-      df.mapPartitions(_.map(r => Row.fromSeq(r.toSeq :+ enc(r) :+ sign)))(
-        tagged)
-    tag(added, 1L).union(tag(removed, -1L))
-      .groupBy(col(rb))
-      .agg(sum(col(NetCol)).as(NetCol), cols.map(c => first(col(c)).as(c)): _*)
-      .where(col(NetCol) =!= 0L)
-      .select(cols.map(col) :+ col(NetCol): _*)
+    def floating(dt: DataType): Boolean = dt match {
+      case FloatType | DoubleType => true
+      case ArrayType(et, _) => floating(et)
+      case MapType(kt, vt, _) => floating(kt) || floating(vt)
+      case st: StructType => st.fields.exists(f => floating(f.dataType))
+      case _ => false
+    }
+    val byBytes = schema.fields.exists(f => floating(f.dataType))
+    val (rb, row) = ("_graft_rb", "_graft_row")
+    def tag(df: DataFrame, sign: Long): DataFrame = df.select(cols.map(col) ++
+      Option.when(byBytes)(canonicalBytes(schema, cols).as(rb)) :+
+      lit(sign).as(NetCol): _*)
+    val both = tag(added, 1L).union(tag(removed, -1L))
+    val netted =
+      if (!byBytes) both.groupBy(cols.map(col): _*)
+        .agg(sum(col(NetCol)).as(NetCol))
+      else both.groupBy(col(rb))
+        .agg(sum(col(NetCol)).as(NetCol),
+          first(struct(cols.map(col): _*)).as(row))
+        .select(cols.map(c => col(row).getField(c).as(c)) :+ col(NetCol): _*)
+    netted.where(col(NetCol) =!= 0L)
+  }
+
+  /** The canonical bytes of `cols` of a frame of `schema` — the
+    * encoding of [[rowIdentity]] — as a column: a UDF over their
+    * struct, which LocalFold evaluates on the driver. */
+  private[core] def canonicalBytes(schema: StructType,
+      cols: Seq[String]): Column = {
+    val enc = KeyCodec.rowEncoder(StructType(cols.map(schema(_))), cols)
+    udf((r: Row) => enc(r)).apply(struct(cols.map(col): _*))
   }
 
   /** Width-adaptive row cap for sites that know only a row count (no

@@ -21,29 +21,24 @@ package graft.core
   *   read byte-admitted chunks on the driver (zero Spark jobs).
   * @param driverMaterialize [[Canonical.materialize]] may collect a
   *   metadata-sized input once and write its chunks on the driver. Also
-  *   the switch of the re-key refreshes' source-row delta: off, an
-  *   aggregate view refresh takes neither variant of the counting-IVM
-  *   fold-in — the driver one nor the distributed one — and re-merges
-  *   per-chunk minis (the reference route), and an index refresh
-  *   splices the delta of the distributed row net ([[Ops.rowNet]])
-  *   instead of the driver's.
+  *   the master switch of the counting-IVM fold-in of aggregate views
+  *   ([[Ops.rekeyDeltaFoldIn]]): off, an aggregate view refresh re-merges
+  *   per-chunk minis (the reference route) instead. Where a fold-in or
+  *   index splice runs is not a switch: its one plan runs on the driver
+  *   when its leaves, the changed chunks, are byte-admitted driver rows
+  *   (`driverPatch`, `driverMaxBytes`), and as Spark jobs otherwise.
   * @param driverMaxBytes compressed-byte budget of every driver-side
   *   chunk read, splice and collect — the cap that bounds driver
   *   memory (the row caps bound per-row object overhead). 64 MB
-  *   compressed is a few hundred MB of row objects at typical codecs.
-  * @param interpretedCollectMaxBytes crossover for the byte-admitted
-  *   collects: estimated row bytes (row bound × schema width) at or
-  *   under it run with interpreted expressions, above it with codegen
-  *   (see [[Canonical.interpretedCollectOk]]). */
+  *   compressed is a few hundred MB of row objects at typical codecs. */
 private[graft] final case class Routes(
     pointDml: Boolean = true,
     driverPatch: Boolean = true,
     driverMaterialize: Boolean = true,
-    driverMaxBytes: Long = 64L << 20,
-    interpretedCollectMaxBytes: Long = 16L << 20)
+    driverMaxBytes: Long = 64L << 20)
 
 private[graft] object Routes {
   /** The production routes: every driver route on, 64 MB driver byte
-    * budget, 16 MB interpreted-collect crossover. */
+    * budget. */
   val Default: Routes = Routes()
 }

@@ -293,6 +293,14 @@ object GraftBridge {
       }
   }
 
+  /** `df` evaluated once on the driver by [[LocalFold]], as a frame
+    * over the resulting `LocalRelation`: the frames built over it
+    * evaluate from those rows, not from `df`'s plan. None where
+    * LocalFold declines. */
+  def localFrame(df: DataFrame): Option[DataFrame] =
+    LocalFold(df).map(lr => classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[classic.SparkSession], lr))
+
   /** Catalog property that marks a temp view as one the graft SQL layer
     * registered over a catalog table ([[registerTableView]]). */
   private val TableViewProperty = "graft.sql.tableView"

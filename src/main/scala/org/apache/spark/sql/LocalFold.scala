@@ -26,7 +26,8 @@ import org.apache.spark.sql.internal.SQLConf
   * The analyzed plan goes through the optimizer's non-excludable
   * `FinishAnalysis` rule (view and alias elimination,
   * `ReplaceExpressions`, `ComputeCurrentTime`, …) and is then evaluated
-  * under the frame's session conf, interpreted:
+  * under the frame's session conf, interpreted and without
+  * subexpression elimination:
   *  - each maximal Project/Filter chain in one streaming pass, each
   *    stage an `InterpretedMutableProjection` or interpreted predicate
   *    initialized at partition 0 (as `ConvertToLocalRelation` does),
@@ -45,17 +46,26 @@ object LocalFold {
 
   def apply(df: DataFrame): Option[LocalRelation] = {
     val analyzed = df.queryExecution.analyzed
-    if (!analyzed.collectLeaves().forall(local(_).isDefined)) None
+    if (!resident(df)) None
     else {
       val state = df.sparkSession.sessionState
       val conf = state.conf.clone()
       conf.setConfString(SQLConf.CODEGEN_FACTORY_MODE.key, "NO_CODEGEN")
+      // an interpreted projection's subexpression cache is reset per
+      // row, which costs more than the few repeats it saves here
+      conf.setConfString(SQLConf.SUBEXPRESSION_ELIMINATION_ENABLED.key, "false")
       SQLConf.withExistingConf(conf) {
         try evaluate(state.optimizer.FinishAnalysis(analyzed))
         catch { case NonFatal(_) => None }
       }
     }
   }
+
+  /** Whether every leaf of `df`'s analyzed plan is a non-streaming
+    * `LocalRelation`: rows the driver holds, the frames [[apply]] may
+    * evaluate. */
+  def resident(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(local(_).isDefined)
 
   /** The rows of `plan`, an analyzed plan already through
     * `FinishAnalysis`, under the current conf; None where [[apply]]

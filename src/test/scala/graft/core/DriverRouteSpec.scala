@@ -72,15 +72,79 @@ class DriverRouteSpec extends AnyFunSuite {
     }
   }
 
+  test("rangeFilter on a DOUBLE key: signed-zero bounds select the same rows and hash on the driver and job routes") {
+    import spark.implicits._
+    // -0.0 and 0.0 are two keys (their key bytes differ, -0.0 first):
+    // every bound is one key-bytes test, on every route and in
+    // readRangeDriver, never a typed comparison that equates them
+    val jobRoutes = Routes(driverPatch = false, driverMaterialize = false)
+    def build(routes: Routes): (Ops, TableRef) = {
+      val ops = new Ops(spark, new FsStore(
+        graft.core.FsUtil.tempStoreDir("graft-range-zero-")), 2, routes = routes)
+      val ks = Seq(-9.0, -5.5, -3.0, -2.0, -1.0, -0.5, 0.0, 0.25, 1.0, 2.0,
+        3.5, 5.0, 7.0, 9.0)
+      val base = ops.fromDataFrame(ks.zipWithIndex
+        .map { case (k, i) => (k, i.toLong) }.toDF("k", "v"), Seq("k"))
+      (ops, ops.patchTable(base, Seq(org.apache.spark.sql.Row(-0.0, 99L)), Nil))
+    }
+    val (drvOps, drvRef) = build(Routes.Default)
+    val (jobOps, jobRef) = build(jobRoutes)
+    assert(drvRef == jobRef, "the routes built different base tables")
+    assert(drvOps.rowCount(drvRef) == 15L, "-0.0 and 0.0 must be two keys")
+    def bits(rows: Seq[org.apache.spark.sql.Row]): Seq[Long] =
+      rows.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).sorted
+    val negZero = java.lang.Double.doubleToRawLongBits(-0.0)
+    val posZero = java.lang.Double.doubleToRawLongBits(0.0)
+    // (lower, upper) -> (holds -0.0, holds 0.0)
+    val cases: Seq[((Option[Bound], Option[Bound]), (Boolean, Boolean))] = Seq(
+      (Some(Bound(Seq(-0.0), inclusive = false)), None) -> (false, true),
+      (None, Some(Bound(Seq(-0.0), inclusive = true))) -> (true, false),
+      (Some(Bound(Seq(0.0), inclusive = true)), None) -> (false, true),
+      (None, Some(Bound(Seq(0.0), inclusive = false))) -> (true, false))
+    cases.foreach { case ((lo, hi), (neg, pos)) =>
+      val d = drvOps.rangeFilter(drvRef, lo, hi)
+      val j = jobOps.rangeFilter(jobRef, lo, hi)
+      val got = bits(drvOps.scan(d).collect().toSeq)
+      assert(got == bits(jobOps.scan(j).collect().toSeq),
+        s"driver and job routes selected different rows for ($lo, $hi)")
+      assert(d == j, s"driver and job routes hash differently for ($lo, $hi)")
+      assert((got.contains(negZero), got.contains(posZero)) == ((neg, pos)),
+        s"($lo, $hi) selected the wrong zero")
+      assert(bits(drvOps.readRangeDriver(drvRef, lo, hi).getOrElse(
+        fail(s"driver range read declined for ($lo, $hi)"))) == got,
+        s"readRangeDriver disagrees with rangeFilter for ($lo, $hi)")
+    }
+  }
+
   test("byte-admitted collect: interpreted and codegen modes hash-identically") {
     // the width-scaled interpreted-vs-codegen crossover (round 14) picks
-    // a PLAN EXECUTION MODE, never a result: the same bulk flow
-    // materialized entirely interpreted (threshold = MaxValue) and
-    // entirely codegen (threshold = 0) must produce the same table hash
-    val interp =
-      runFlow(spark, Routes(interpretedCollectMaxBytes = Long.MaxValue))
-    val codegen = runFlow(spark, Routes(interpretedCollectMaxBytes = 0L))
-    assert(interp === codegen,
+    // a PLAN EXECUTION MODE, never a result: the same byte-admitted
+    // collect — a keyed ingest fold over mixed types, with its key
+    // bytes — through the interpreted and the codegen engine clone must
+    // return the same rows, byte for byte
+    import org.apache.spark.sql.functions._
+    val ops = new Ops(spark, new FsStore(
+      graft.core.FsUtil.tempStoreDir("graft-collect-modes-")), 64)
+    val src = spark.range(0, 4000).select(
+      (col("id") % 700).as("k"),
+      when(col("id") % 11 === 0, lit(-0.0)).when(col("id") % 13 === 0,
+        lit(Double.NaN)).otherwise(col("id") / 7.0).as("d"),
+      (col("id") * 3).cast("decimal(12,2)").as("m"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(
+        concat(lit("s"), col("id"))).as("s"),
+      col("id").as("v"))
+    val folded = src.groupBy("k").agg(sum("v").as("v"), max("m").as("m"),
+      min("d").as("d"), max("s").as("s"), count(lit(1)).as("n"))
+    val kb = Canonical.withKeyBytes(folded, Seq("k"))
+    val enc = KeyCodec.rowEncoder(kb.schema, kb.schema.fieldNames.toSeq)
+    def rows(interpreted: Boolean): Seq[String] = {
+      val (_, bound) = Canonical.onEngine(ops.engine, kb, smallShuffle = true,
+        interpretedOk = interpreted)
+      bound.collect().toSeq.map(r => Hashing.hex(enc(r))).sorted
+    }
+    val interp = rows(interpreted = true)
+    assert(interp.length == 700)
+    assert(interp == rows(interpreted = false),
       "interpreted vs codegen byte-admitted collects diverged")
   }
 }

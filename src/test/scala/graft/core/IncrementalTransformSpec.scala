@@ -257,11 +257,11 @@ class IncrementalTransformSpec extends AnyFunSuite {
     "cnt" -> FoldSpec.FoldSum, "v" -> FoldSpec.FoldSum))
 
   test("an INSERT into existing groups folds in on the driver with zero Spark jobs, hash-equals from-scratch") {
-    // an append is a retraction with nothing to retract: the driver
-    // fold-in folds the touched groups' previous rows with the inserted
-    // contributions on the driver (LocalFold) and splices them onto
-    // the previous result (zero-job patch) — no delta table is
-    // materialized and merged in, and no job runs
+    // an append is a retraction with nothing to retract: over
+    // byte-admitted chunks the fold-in's plan runs on the driver
+    // (LocalFold), folds the touched groups' previous rows with the
+    // delta and splices them onto the previous result (zero-job patch)
+    // — no delta table is materialized and merged in, and no job runs
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai-"))
     val ops = new Ops(spark, store, 64)
     // every key ending in 7 is missing, so each inserted key lands in
@@ -273,26 +273,26 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val v1 = ops.transform(base, rekeyCntSum, foldCntSum)
     val delta = (0 until 20).map(a => f"k$a%02d127" -> 5L)
     val merged = ops.upsert(base, ops.fromDataFrame(df(delta), Seq("k")))
-    val drv0 = Ops.driverFoldIns.get()
+    val spliced0 = Ops.splicedFoldIns.get()
     val (v2, jobs) = withJobs(
       ops.transform(merged, rekeyCntSum, foldCntSum, prev = Some(v1)))
-    assert(Ops.driverFoldIns.get() == drv0 + 1,
-      "the INSERT refresh did not take the driver fold-in")
+    assert(Ops.splicedFoldIns.get() == spliced0 + 1,
+      "the INSERT refresh did not splice its fold-in")
     assert(jobs == 0, s"the INSERT refresh launched $jobs Spark jobs")
     val ops2 = new Ops(spark,
       new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyai2-")), 64)
     val scratch = ops2.transform(
       ops2.fromDataFrame(df(rows ++ delta), Seq("k")), rekeyCntSum, foldCntSum)
     assert(v2.hash == scratch.hash,
-      "the driver fold-in of an INSERT must hash-equal the from-scratch build")
+      "the spliced fold-in of an INSERT must hash-equal the from-scratch build")
   }
 
   test("a driver-admitted DELETE touching more result chunks than the splice bound takes the distributed fold-in, not the mini walk") {
     // the changed source chunks fit the driver caps, but the deleted
     // keys' groups scatter over most result chunks, past
-    // patchTableBounded's bound: the driver fold-in hands its delta to
-    // the distributed fold-in (region merge + liveness filter) instead
-    // of declining to the per-chunk mini walk
+    // patchTableBounded's bound: the fold-in merges its delta in as a
+    // table (region merge + liveness filter) instead of declining to
+    // the per-chunk mini walk
     val store = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyds-"))
     val ops = new Ops(spark, store, 64)
     val rows = (0 until 20000).map(i => f"k$i%05d" -> i.toLong)
@@ -304,14 +304,14 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val delKeys = ((0 until 80).map(i => f"k${i * 239}%05d") ++
       (0 until 10).map(i => f"k0123$i")).distinct
     val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
-    val (drv0, dist0) = (Ops.driverFoldIns.get(), Ops.distributedFoldIns.get())
+    val (spliced0, merged0) = (Ops.splicedFoldIns.get(), Ops.mergedFoldIns.get())
     store.stats.reset()
     val v2 = ops.transform(merged, rekeyCntSum, foldCntSum, prev = Some(v1))
     val snap = store.stats.snapshot
-    // the splice bound declines the driver fold-in
-    assert((Ops.driverFoldIns.get() - drv0,
-      Ops.distributedFoldIns.get() - dist0) == (0L, 1L),
-      s"the scattered DELETE did not take the distributed fold-in alone " +
+    // the splice bound declines the splice sink
+    assert((Ops.splicedFoldIns.get() - spliced0,
+      Ops.mergedFoldIns.get() - merged0) == (0L, 1L),
+      s"the scattered DELETE did not merge its fold-in delta alone " +
         s"(result chunks ${ops.meta(v1).chunks.length}, memo $snap)")
     // the mini walk does one memoGet per source chunk (~300 here)
     assert(snap("memoHits") + snap("memoMisses") <= 150,
@@ -323,7 +323,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       ops2.fromDataFrame(df(rows.filterNot(r => dead(r._1))), Seq("k")),
       rekeyCntSum, foldCntSum)
     assert(v2.hash == scratch.hash,
-      "the distributed fold-in must hash-equal the from-scratch build")
+      "the merged fold-in must hash-equal the from-scratch build")
     assert(ops.scan(v2).where("g = 'g3210'").isEmpty,
       "a fully-deleted group must vanish")
   }
@@ -363,10 +363,10 @@ class IncrementalTransformSpec extends AnyFunSuite {
       Nil, delKeys.map(Seq(_)))
 
     store.stats.reset()
-    val retracts0 = Ops.driverFoldIns.get()
+    val retracts0 = Ops.splicedFoldIns.get()
     val v2 = ops.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
-    assert(Ops.driverFoldIns.get() == retracts0 + 1,
+    assert(Ops.splicedFoldIns.get() == retracts0 + 1,
       "delete-delta refresh did not take the retraction route")
     // O(delta): no per-chunk mini walk (~300 memoGets here), few writes
     assert(snap("memoHits") + snap("memoMisses") <= 60,
@@ -418,9 +418,9 @@ class IncrementalTransformSpec extends AnyFunSuite {
         base: TableRef): (TableRef, Long) = {
       val v1 = ops.transform(base, t, fold)
       val merged = ops.patchTable(base, Nil, Seq(Seq("k00007")))
-      val r0 = Ops.driverFoldIns.get()
+      val r0 = Ops.splicedFoldIns.get()
       val v2 = ops.transform(merged, t, fold, prev = Some(v1))
-      (v2, Ops.driverFoldIns.get() - r0)
+      (v2, Ops.splicedFoldIns.get() - r0)
     }
 
     // 1. nullable SUM contribution: retracting the last non-null row of
@@ -528,7 +528,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       val base = ops.fromDataFrame(fpDf(rows), Seq("k"))
       val v1 = ops.transform(base, rekeySum, FoldSpec.FoldSum)
       val merged = ops.upsert(base, ops.fromDataFrame(fpDf(delta), Seq("k")))
-      def foldIns = Ops.driverFoldIns.get() + Ops.distributedFoldIns.get()
+      def foldIns = Ops.splicedFoldIns.get() + Ops.mergedFoldIns.get()
       val foldIns0 = foldIns
       store.stats.reset()
       val v2 = ops.transform(merged, rekeySum, FoldSpec.FoldSum,
@@ -567,10 +567,10 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged = ops.patchTable(base, Nil, delKeys.toSeq.sorted.map(Seq(_)))
     // a byte budget of 1 forces the over-cap distributed path
     val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.distributedFoldIns.get()
+    val merged0 = Ops.mergedFoldIns.get()
     val v2 = bytes1.transform(merged, rekeyConst, fold, prev = Some(v1))
-    assert(Ops.distributedFoldIns.get() == dist0 + 1,
-      "purge did not take the distributed retraction")
+    assert(Ops.mergedFoldIns.get() == merged0 + 1,
+      "purge did not merge its retraction delta")
     val got = ops.scan(v2).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set(("a", 10000L, 70000L)),
@@ -613,10 +613,10 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged = ops.patchTable(base, Nil, delKeys.map(Seq(_)))
     // a byte budget of 1 forces past the driver routes
     val bytes1 = new Ops(spark, store, 512, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.distributedFoldIns.get()
+    val merged0 = Ops.mergedFoldIns.get()
     val v2 = bytes1.transform(merged, rekeyConst, foldXor, prev = Some(v1))
-    assert(Ops.distributedFoldIns.get() == dist0,
-      "over-cap non-linear purge must DECLINE the distributed retraction")
+    assert(Ops.mergedFoldIns.get() == merged0,
+      "over-cap non-linear purge must DECLINE the retraction fold-in")
     // the fallback is exact: group a (k < k70000) is fully purged and
     // must die; group b (5000 untouched rows) survives — compare the
     // whole result against a from-scratch build of the surviving rows
@@ -631,6 +631,21 @@ class IncrementalTransformSpec extends AnyFunSuite {
     assert(got == want, s"fallback result wrong: $got vs $want")
     assert(v2.hash == scratch.hash,
       "declined retraction's fallback must hash-equal the from-scratch build")
+    // a small, byte-admitted APPEND of three identical (b, 1, 7)
+    // contributions nets to one row of multiplicity 3: XOR can neither
+    // scale it nor fold it once, so the fold-in declines to the exact
+    // mini path under default routes too — neither sink runs
+    val ins = (75001 until 75004).map(i => f"k$i%05d" -> i.toLong)
+    val appended = ops.upsert(base, ops.fromDataFrame(df(ins), Seq("k")))
+    val (spliced0, merged1) = (Ops.splicedFoldIns.get(), Ops.mergedFoldIns.get())
+    val v3 = ops.transform(appended, rekeyConst, foldXor, prev = Some(v1))
+    assert((Ops.splicedFoldIns.get(), Ops.mergedFoldIns.get()) ==
+      ((spliced0, merged1)),
+      "a repeated XOR contribution must DECLINE the fold-in")
+    val scratch3 = ops2.transform(ops2.fromDataFrame(df(rows ++ ins), Seq("k")),
+      rekeyConst, foldXor)
+    assert(v3.hash == scratch3.hash,
+      "declined XOR append's fallback must hash-equal the from-scratch build")
   }
 
   test("distributed retraction: over-cap delete delta folds in as frames, group death, three-route hash equality") {
@@ -665,15 +680,15 @@ class IncrementalTransformSpec extends AnyFunSuite {
 
     // a byte budget of 1 forces the over-cap path
     val bytes1 = new Ops(spark, store, 64, routes = Routes(driverMaxBytes = 1L))
-    val dist0 = Ops.distributedFoldIns.get()
-    val drv0 = Ops.driverFoldIns.get()
+    val merged0 = Ops.mergedFoldIns.get()
+    val spliced0 = Ops.splicedFoldIns.get()
     store.stats.reset()
     val v2 = bytes1.transform(merged, rekeyAgg, fold, prev = Some(v1))
     val snap = store.stats.snapshot
-    assert(Ops.distributedFoldIns.get() == dist0 + 1,
-      "over-cap delete delta did not take the DISTRIBUTED retraction")
-    assert(Ops.driverFoldIns.get() == drv0,
-      "over-cap delta must not reach the driver retraction route")
+    assert(Ops.mergedFoldIns.get() == merged0 + 1,
+      "over-cap delete delta did not merge its retraction delta")
+    assert(Ops.splicedFoldIns.get() == spliced0,
+      "over-cap delta must not reach the splice sink")
     // no per-chunk mini walk (~300 memoGets here): the route consults
     // the reverse/whole-op memos plus mergeRetract's region memos
     assert(snap("memoHits") + snap("memoMisses") <= 150,
@@ -706,7 +721,7 @@ class IncrementalTransformSpec extends AnyFunSuite {
       .transform(merged3, rekeyAgg, fold, prev = Some(v13))
     assert(v23.hash == v2.hash,
       "distributed retraction diverged from the mini-merge route")
-    // ... and the driver retraction route (same inputs, default caps)
+    // ... and the spliced retraction (same inputs, default caps)
     val store4 = new FsStore(graft.core.FsUtil.tempStoreDir("graft-rekeyrd4-"))
     val ops4 = new Ops(spark, store4, 64)
     val base4 = ops4.fromDataFrame(df(rows), Seq("k"))
@@ -714,12 +729,12 @@ class IncrementalTransformSpec extends AnyFunSuite {
     val merged4 = ops4.patchTable(
       ops4.upsert(base4, ops4.fromDataFrame(df(upserts), Seq("k"))),
       Nil, delKeys.map(Seq(_)))
-    val drv40 = Ops.driverFoldIns.get()
+    val spliced40 = Ops.splicedFoldIns.get()
     val v24 = ops4.transform(merged4, rekeyAgg, fold, prev = Some(v14))
-    assert(Ops.driverFoldIns.get() == drv40 + 1,
-      "control flow: the same delta under default caps takes the driver route")
+    assert(Ops.splicedFoldIns.get() == spliced40 + 1,
+      "control flow: the same delta under default caps splices")
     assert(v24.hash == v2.hash,
-      "distributed retraction diverged from the driver retraction route")
+      "distributed retraction diverged from the spliced retraction")
   }
 
   test("gc sweeps mini/piece caches; the next refresh self-heals and stays correct") {

@@ -250,6 +250,53 @@ class LocalFoldSpec extends AnyFunSuite {
     }
   }
 
+  test("Ops.rowNet of two driver-resident frames folds with no job and equals the job-path net") {
+    val ns = StructType(Seq(StructField("k", DoubleType),
+      StructField("v", LongType), StructField("w", StringType)))
+    // -0.0 and 0.0 are two rows; NaN payloads are one row, so the NaN
+    // rows cancel, as do the NULL rows; duplicates net to multiplicities
+    val added = Seq(Row(-0.0, 1L, "a"), Row(0.0, 1L, "a"), Row(nan2, 2L, null),
+      Row(null, 3L, "b"), Row(1.5, 4L, "c"), Row(1.5, 4L, "c"),
+      Row(1.5, 4L, "c"))
+    val removed = Seq(Row(0.0, 1L, "a"), Row(Double.NaN, 2L, null),
+      Row(null, 3L, "b"), Row(1.5, 4L, "c"), Row(2.0, 5L, null),
+      Row(2.0, 5L, null))
+    def sorted(rs: Seq[Row]) = canonRows(rs).sortBy(_.toString)
+    val net = Ops.rowNet(local(spark, ns, added), local(spark, ns, removed))
+    assert(LocalFold(net).isDefined, s"rowNet did not fold:\n${net.queryExecution.analyzed}")
+    val (got, jobs) = withJobs(
+      org.apache.spark.sql.GraftBridge.localRelationRows(net).map(_.toSeq))
+    assert(jobs == 0, s"the folded net launched $jobs Spark jobs")
+    def scanned(rs: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 2), ns)
+    val viaJob = Ops.rowNet(scanned(added), scanned(removed)).collect().toSeq
+    assert(sorted(got.getOrElse(fail("rowNet rows did not fold"))) == sorted(viaJob))
+    assert(sorted(viaJob) == sorted(Seq(Row(-0.0, 1L, "a", 1L),
+      Row(1.5, 4L, "c", 2L), Row(2.0, 5L, null, -2L))))
+    // with no floating-point column the rows group on their values
+    val ls = StructType(Seq(StructField("v", LongType), StructField("w", StringType),
+      StructField("a", ArrayType(LongType))))
+    val ladded = Seq(Row(1L, "a", Seq(1L)), Row(null, "b", null),
+      Row(4L, null, Seq(2L, 3L)), Row(4L, null, Seq(2L, 3L)))
+    val lremoved = Seq(Row(1L, "a", Seq(1L)), Row(null, "b", Seq.empty[Long]),
+      Row(5L, "c", Seq(2L)))
+    val lnet = Ops.rowNet(local(spark, ls, ladded), local(spark, ls, lremoved))
+    val (lgot, ljobs) = withJobs(
+      org.apache.spark.sql.GraftBridge.localRelationRows(lnet).map(_.toSeq))
+    assert(ljobs == 0, s"the folded net launched $ljobs Spark jobs")
+    def lscanned(rs: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 2), ls)
+    val lviaJob = Ops.rowNet(lscanned(ladded), lscanned(lremoved)).collect().toSeq
+    assert(sorted(lgot.getOrElse(fail("rowNet rows did not fold"))) == sorted(lviaJob))
+    def plain(rs: Seq[Row]) = rs.map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case v => v
+    }).sortBy(_.toString)
+    assert(plain(lviaJob) == plain(Seq(
+      Row(null, "b", null, 1L), Row(null, "b", Seq.empty[Long], -1L),
+      Row(4L, null, Seq(2L, 3L), 2L), Row(5L, "c", Seq(2L), -1L))))
+  }
+
   test("a scan leaf, a join, a generator, a window, a limit and a scalar subquery decline") {
     val df = local(spark, schema, rows)
     val dir = java.nio.file.Files.createTempDirectory("graft-localfold-")

@@ -251,10 +251,10 @@ class IndexSpec extends AnyFunSuite {
     (4000L until 4300L).map(i => (i, i * 6101 % 4000, "p" * 120))
       .toDF("id", "grp", "pad").createOrReplaceTempView("idx_delta5")
     sess.execute("INSERT INTO t SELECT * FROM idx_delta5")
-    val foldIns0 = Ops.distributedFoldIns.get()
+    val foldIns0 = Ops.mergedFoldIns.get()
     val Left(df) =
       sess.execute("SELECT id FROM t WHERE grp = 13 ORDER BY id"): @unchecked
-    assert(Ops.distributedFoldIns.get() > foldIns0,
+    assert(Ops.mergedFoldIns.get() > foldIns0,
       "scattered narrow-index append refresh did not take the fold-in")
     val want = ((0L until 4000L).filter(i => i * 7919 % 4000 == 13) ++
       (4000L until 4300L).filter(i => i * 6101 % 4000 == 13)).sorted

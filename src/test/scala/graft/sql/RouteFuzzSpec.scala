@@ -131,12 +131,12 @@ class RouteFuzzSpec extends AnyFunSuite {
         val routes = Routes(pointDml = viaPatch, driverPatch = driverPatch,
           driverMaterialize = driverMat,
           driverMaxBytes = if (bytes1) 1L else Routes.Default.driverMaxBytes)
-        val dist0 = Ops.distributedFoldIns.get()
+        val merged0 = Ops.mergedFoldIns.get()
         val r = runProgram(stmts, routes)
         if (bytes1) {
-          assert(Ops.distributedFoldIns.get() > dist0,
-            s"seed $seed: byte-budget-1 config never took the " +
-              "distributed fold-in")
+          assert(Ops.mergedFoldIns.get() > merged0,
+            s"seed $seed: byte-budget-1 config never merged a " +
+              "fold-in delta")
         }
         r
       }

@@ -447,14 +447,14 @@ class SqlAndSourcesSpec extends AnyFunSuite {
         // kill group 7 outright (every k ≡ 7 mod 97), thin group 11
         run("DELETE FROM rt WHERE k % 97 = 7")
         run("DELETE FROM rt WHERE k % 97 = 11 AND k % 2 = 0")
-        // route-agnostic assert: the retraction CONTRACT is "either
-        // retraction variant fired" — which one runs is the row/byte
-        // caps' call, pinned by the byte-budget test below
-        val r0 = graft.core.Ops.driverFoldIns.get() +
-          graft.core.Ops.distributedFoldIns.get()
+        // sink-agnostic assert: the retraction CONTRACT is "a fold-in
+        // ran" — splice or merge is the row/byte caps' call, pinned by
+        // the byte-budget test below
+        val r0 = graft.core.Ops.splicedFoldIns.get() +
+          graft.core.Ops.mergedFoldIns.get()
         run("REFRESH MATERIALIZED VIEW rtv")
-        assert(graft.core.Ops.driverFoldIns.get() +
-          graft.core.Ops.distributedFoldIns.get() > r0,
+        assert(graft.core.Ops.splicedFoldIns.get() +
+          graft.core.Ops.mergedFoldIns.get() > r0,
           "SQL DELETE-refresh did not take a retraction route")
       } else {
         run("INSERT INTO rt SELECT id, id % 97, id * 3 FROM range(0, 20000) " +
@@ -483,12 +483,12 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run("CREATE MATERIALIZED VIEW rkv AS SELECT g, KMV_DISTINCT(v) AS d, " +
       "COUNT(*) AS n FROM rk GROUP BY g")
     run("DELETE FROM rk WHERE v >= 200")
-    val r0 = graft.core.Ops.driverFoldIns.get() +
-      graft.core.Ops.distributedFoldIns.get()
+    val r0 = graft.core.Ops.splicedFoldIns.get() +
+      graft.core.Ops.mergedFoldIns.get()
     run("REFRESH MATERIALIZED VIEW rkv")
-    assert(graft.core.Ops.driverFoldIns.get() +
-      graft.core.Ops.distributedFoldIns.get() == r0,
-      "a KMV view must decline BOTH retraction routes")
+    assert(graft.core.Ops.splicedFoldIns.get() +
+      graft.core.Ops.mergedFoldIns.get() == r0,
+      "a KMV view must decline the retraction fold-in")
     val Left(df) = run("SELECT g, d, n FROM rkv ORDER BY g"): @unchecked
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // exact branch below k=256: d is the true distinct count of v < 400
@@ -510,11 +510,11 @@ class SqlAndSourcesSpec extends AnyFunSuite {
     run3("CREATE MATERIALIZED VIEW rcv AS SELECT g, SUM(v) AS sv, " +
       "COUNT(v) AS n FROM rc GROUP BY g")
     run3("DELETE FROM rc WHERE k % 10 = 2")
-    val rc0 = graft.core.Ops.driverFoldIns.get() +
-      graft.core.Ops.distributedFoldIns.get()
+    val rc0 = graft.core.Ops.splicedFoldIns.get() +
+      graft.core.Ops.mergedFoldIns.get()
     run3("REFRESH MATERIALIZED VIEW rcv")
-    assert(graft.core.Ops.driverFoldIns.get() +
-      graft.core.Ops.distributedFoldIns.get() > rc0,
+    assert(graft.core.Ops.splicedFoldIns.get() +
+      graft.core.Ops.mergedFoldIns.get() > rc0,
       "COUNT(not-null col) must act as the liveness column")
     val Left(df3) = run3("SELECT g, sv, n FROM rcv ORDER BY g"): @unchecked
     val want3 = (0L until 6000L).filterNot(_ % 10 == 2).groupBy(_ % 5)
@@ -524,9 +524,10 @@ class SqlAndSourcesSpec extends AnyFunSuite {
   }
 
   test("DELETE-refresh over the driver byte budget reroutes to the DISTRIBUTED retraction") {
-    // a byte budget of 1 declines the DRIVER retraction; the refresh
-    // must reroute to the distributed retraction — not silently fall to
-    // a rebuild — and the view must stay exact, group death included.
+    // a byte budget of 1 keeps the fold-in off the driver: its plan
+    // runs as jobs over scanned chunks and the delta cannot splice, so
+    // it merges in as a table — not silently falling to a rebuild — and
+    // the view must stay exact, group death included.
     val (ops, cat) = newOps()
     def run(sql: String) = GraftSql.execute(spark, ops, cat, sql)
     run("CREATE TABLE gd (k bigint PRIMARY KEY, g bigint NOT NULL, " +
@@ -536,16 +537,15 @@ class SqlAndSourcesSpec extends AnyFunSuite {
       "COUNT(*) AS n FROM gd GROUP BY g")
     run("DELETE FROM gd WHERE k % 37 = 3")           // kill group 3
     run("DELETE FROM gd WHERE k % 37 = 5 AND k % 2 = 0") // thin group 5
-    val drv0 = graft.core.Ops.driverFoldIns.get()
-    val dist0 = graft.core.Ops.distributedFoldIns.get()
+    val spliced0 = graft.core.Ops.splicedFoldIns.get()
+    val merged0 = graft.core.Ops.mergedFoldIns.get()
     GraftSql.execute(spark, new Ops(spark, ops.store, ops.chunkTargetRows,
       routes = Routes(driverMaxBytes = 1L)), cat,
       "REFRESH MATERIALIZED VIEW gdv")
-    assert(graft.core.Ops.distributedFoldIns.get() > dist0,
-      "a byte-declined driver route must reroute the DELETE-refresh to " +
-        "the distributed retraction")
-    assert(graft.core.Ops.driverFoldIns.get() == drv0,
-      "a declined driver route must not also count a driver retraction")
+    assert(graft.core.Ops.mergedFoldIns.get() > merged0,
+      "a byte-declined DELETE-refresh must merge its fold-in delta")
+    assert(graft.core.Ops.splicedFoldIns.get() == spliced0,
+      "a byte-declined DELETE-refresh must not also splice")
     val Left(df) = run("SELECT g, sv, n FROM gdv ORDER BY g"): @unchecked
     val want = (0L until 20000L)
       .filterNot(k => k % 37 == 3 || (k % 37 == 5 && k % 2 == 0))
